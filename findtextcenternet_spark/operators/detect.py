@@ -36,6 +36,7 @@ from ..config import (
     SCALE,
     STRIDE,
 )
+from .textline import mask_cells
 
 STRIDE_CELLS = STRIDE // SCALE        # 115
 TILE_CELLS = HM                        # 192
@@ -294,6 +295,9 @@ def contrast_score(w: float, h: float, contrast: float) -> float:
     return _contrast_score_cached(n, ink)
 
 
+NMS_CHUNK = 256  # candidates per pairwise block: memory stays O(chunk * n)
+
+
 def greedy_nms(boxes: np.ndarray, hists: np.ndarray | None = None,
                th_hist: float = -1.0) -> np.ndarray:
     """Greedy IoU NMS in descending-score order (T3,
@@ -302,34 +306,44 @@ def greedy_nms(boxes: np.ndarray, hists: np.ndarray | None = None,
     interleave the P6 contrast filter exactly where the reference applies
     it — inside the loop, before the overlap checks
     (process_ocr_base.py:574-575). Returns keep mask aligned with the
-    (already score-sorted) input (n,5)=(p,cx,cy,w,h)."""
+    (already score-sorted) input (n,5)=(p,cx,cy,w,h).
+
+    Candidates go in chunks: one block computes each chunk member's
+    intersection and IoU with every box accepted before the chunk and
+    with the chunk itself; the greedy pass then reads its rows, summing
+    the fill in acceptance order. A candidate overlapping none of them
+    (and of non-negative area) passes every test."""
     n = boxes.shape[0]
     keep = np.zeros(n, dtype=bool)
-    if n == 0:
-        return keep
     x1 = boxes[:, 1] - boxes[:, 3] / 2
     x2 = boxes[:, 1] + boxes[:, 3] / 2
     y1 = boxes[:, 2] - boxes[:, 4] / 2
     y2 = boxes[:, 2] + boxes[:, 4] / 2
     area = boxes[:, 3] * boxes[:, 4]
     acc: list[int] = []
-    for i in range(n):
-        if hists is not None and hists[i] < th_hist:
-            continue
-        if acc:
-            a = np.array(acc)
-            ix = np.minimum(x2[i], x2[a]) - np.maximum(x1[i], x1[a])
-            iy = np.minimum(y2[i], y2[a]) - np.maximum(y1[i], y1[a])
-            inter = np.clip(ix, 0, None) * np.clip(iy, 0, None)
-            iou = inter / (area[i] + area[a] - inter)
-            if (iou > NMS_IOU).any():
+    for s in range(0, n, NMS_CHUNK):
+        c = np.arange(s, min(n, s + NMS_CHUNK))
+        cols = np.concatenate([np.asarray(acc, dtype=np.int64), c])
+        r = c[:, None]
+        ix = np.minimum(x2[r], x2[cols]) - np.maximum(x1[r], x1[cols])
+        iy = np.minimum(y2[r], y2[cols]) - np.maximum(y1[r], y1[cols])
+        inter = np.clip(ix, 0, None) * np.clip(iy, 0, None)
+        iou = inter / (area[r] + area[cols] - inter)
+        hit = (iou > NMS_IOU) | (inter > NMS_INTER * area[r])
+        alone = (~(inter > 0).any(axis=1) & (area[c] >= 0)).tolist()
+        pos = list(range(len(acc)))
+        for k, i in enumerate(c.tolist()):
+            if hists is not None and hists[i] < th_hist:
                 continue
-            if (inter > NMS_INTER * area[i]).any():
-                continue
-            if inter.sum() > NMS_FILL * area[i]:
-                continue
-        keep[i] = True
-        acc.append(i)
+            if pos and not alone[k]:
+                row = np.asarray(pos)
+                if hit[k, row].any():
+                    continue
+                if inter[k, row].sum() > NMS_FILL * area[i]:
+                    continue
+            keep[i] = True
+            acc.append(i)
+            pos.append(len(cols) - len(c) + k)
     return keep
 
 
@@ -353,7 +367,7 @@ def detect_page(layout: dict, model=None
     p = sigmoid(page[CH_KEY])
     pooled = maxpool3x3(p)
     peak_mask = (p >= pooled) & (p >= CUT_OFF)
-    ys, xs = np.nonzero(peak_mask)
+    ys, xs = mask_cells(peak_mask)
     pv = p[ys, xs]
 
     # W4 peak ranking: score desc, then (y, x) asc for determinism
@@ -441,30 +455,26 @@ def _runs_df(line_vals: np.ndarray, sep_vals: np.ndarray) -> pd.DataFrame:
     real-model paths)."""
     from ..config import LINE_VALUETH, SEP_RUN_FLOOR
 
-    runs_rows = []
-    for name, vals, th in (("line", line_vals, LINE_VALUETH),
-                           ("sep", sep_vals, SEP_RUN_FLOOR)):
+    parts = []
+    for vals, th in ((line_vals, LINE_VALUETH), (sep_vals, SEP_RUN_FLOOR)):
         mask = vals > th
-        for y in range(mask.shape[0]):
-            row = mask[y]
-            if not row.any():
-                continue
-            # split runs on mask edges AND value changes (quantized)
-            q = np.where(row, np.round(vals[y], 6), 0.0)
-            change = np.nonzero(np.diff(q) != 0)[0] + 1
-            bounds = np.concatenate([[0], change, [len(row)]])
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                if row[s]:
-                    runs_rows.append((name, y, int(s), int(e) - 1,
-                                      float(q[s])))
-    runs = pd.DataFrame(runs_rows, columns=["channel", "y", "x1", "x2", "v"])
-    if runs.empty:
-        runs = pd.DataFrame({"channel": pd.Series([], dtype=str),
-                             "y": pd.Series([], dtype=np.int64),
-                             "x1": pd.Series([], dtype=np.int64),
-                             "x2": pd.Series([], dtype=np.int64),
-                             "v": pd.Series([], dtype=np.float64)})
-    return runs
+        # split runs on mask edges AND value changes (quantized): a
+        # segment starts at each row's first cell and at each change
+        q = np.where(mask, np.round(vals, 6), 0.0)
+        start = np.ones(q.shape, dtype=bool)
+        start[:, 1:] = q[:, 1:] != q[:, :-1]
+        ys, xs = mask_cells(start)
+        same_row = np.append(ys[1:] == ys[:-1], False)
+        ends = np.where(same_row, np.append(xs[1:], 0) - 1, q.shape[1] - 1)
+        on = mask[ys, xs]
+        parts.append((ys[on], xs[on], ends[on], q[ys[on], xs[on]]))
+    return pd.DataFrame({
+        "channel": np.repeat(np.array(["line", "sep"], dtype=object),
+                             [len(part[0]) for part in parts]),
+        "y": np.concatenate([part[0] for part in parts]).astype(np.int64),
+        "x1": np.concatenate([part[1] for part in parts]).astype(np.int64),
+        "x2": np.concatenate([part[2] for part in parts]).astype(np.int64),
+        "v": np.concatenate([part[3] for part in parts]).astype(np.float64)})
 
 
 def detect_page_real(layout: dict, model) -> tuple[pd.DataFrame, pd.DataFrame]:
@@ -514,7 +524,7 @@ def detect_page_real(layout: dict, model) -> tuple[pd.DataFrame, pd.DataFrame]:
     # channels: 0 keymap, 1 NMS'd peak, 2 szx, 3 szy, 4 line, 5 sep, 6-9
     # codes (CenterNetDetector ordering)
     p = sigmoid(np.nan_to_num(page[1], neginf=-30.0))
-    ys, xs = np.nonzero(p >= CUT_OFF)
+    ys, xs = mask_cells(p >= CUT_OFF)
     pv = p[ys, xs]
     order = np.lexsort((xs, ys, -pv))
     ys, xs, pv = ys[order], xs[order], pv[order]

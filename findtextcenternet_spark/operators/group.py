@@ -8,9 +8,12 @@ cluster-prune + hysteresis, textline CC, box→line spatial attach,
 chain-merge fixpoint, unbound-box directional attach, warichu split,
 space chains, ruby band attach + interleave, next-line edges, block DFS,
 section (multi-column) reading order, warichu reorder, and the
-duplicate/lost space checks. This module is the DataFrame adapter: it runs
-as one ``applyInPandas(url)`` group, so pages never cross executors and
-the stage scales linearly with page count regardless of cluster size.
+duplicate/lost space checks. This module is the DataFrame adapter, called
+once per page: in the default plan inside the one kind-dispatching
+``mapInPandas`` (``pipeline._unified_impl`` →
+``golden.extract_raster_page``), in the staged plan per url group of an
+``applyInPandas``. Pages never cross executors, so the stage scales
+linearly with page count regardless of cluster size.
 """
 
 from __future__ import annotations
@@ -35,33 +38,25 @@ def group_page(boxes: pd.DataFrame, runs: pd.DataFrame) -> pd.DataFrame:
     like the reference output filter (make_block.cpp:1739-1745)."""
     if boxes.empty:
         return pd.DataFrame(columns=OUT_COLS)
-    b = boxes.reset_index(drop=True)
-
-    lr = runs[runs["channel"] == "line"]
-    line_runs = (lr[["y", "x1", "x2"]].to_numpy(dtype=np.int64)
-                 if len(lr) else np.zeros((0, 3), dtype=np.int64))
-    sr = runs[runs["channel"] == "sep"]
-    sep_runs = (sr[["y", "x1", "x2"]].to_numpy(dtype=np.int64)
-                if len(sr) else np.zeros((0, 3), dtype=np.int64))
-    if "v" in runs.columns and len(sr):
-        sep_vals = sr["v"].to_numpy(dtype=np.float64)
+    channel = runs["channel"].to_numpy()
+    cells = np.column_stack([runs[c].to_numpy(dtype=np.int64)
+                             for c in ("y", "x1", "x2")])
+    sep = channel == "sep"
+    if "v" in runs.columns and sep.any():
+        sep_vals = runs["v"].to_numpy(dtype=np.float64)[sep]
     else:
-        sep_vals = np.full(len(sep_runs), 0.982)
+        sep_vals = np.full(int(sep.sum()), 0.982)
+    col = {c: boxes[c].to_numpy() for c in boxes.columns}
+    P, order = run_textline_detect(col, cells[channel == "line"], cells[sep],
+                                   sep_vals)
 
-    P, order = run_textline_detect(
-        {"cx": b["cx"].to_numpy(), "cy": b["cy"].to_numpy(),
-         "w": b["w"].to_numpy(), "h": b["h"].to_numpy(),
-         "code1": b["code1"].to_numpy(), "code2": b["code2"].to_numpy(),
-         "code4": b["code4"].to_numpy(), "code8": b["code8"].to_numpy()},
-        line_runs, sep_runs, sep_vals)
-
-    box_id = b["box_id"].to_numpy()
-    p_a = b["p"].to_numpy()
-    feat = b["feature"].tolist()
-    rows = [(int(box_id[i]), float(p_a[i]),
-             float(P.cx[i]), float(P.cy[i]), float(P.w[i]), float(P.h[i]),
-             feat[i],
-             int(P.block[i]), int(P.idx[i]), int(P.subidx[i]),
-             int(P.subtype[i]))
-            for i in order]
-    return pd.DataFrame(rows, columns=OUT_COLS)
+    if not order:
+        return pd.DataFrame([], columns=OUT_COLS)
+    o = np.asarray(order, dtype=np.int64)
+    return pd.DataFrame({
+        "box_id": col["box_id"][o].astype(np.int64),
+        "p": col["p"][o].astype(np.float64),
+        "cx": P.cx[o], "cy": P.cy[o], "w": P.w[o], "h": P.h[o],
+        "feature": col["feature"][o],
+        "block": P.block[o], "idx": P.idx[o], "subidx": P.subidx[o],
+        "subtype": P.subtype[o]})

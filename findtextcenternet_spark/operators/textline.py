@@ -29,13 +29,20 @@ Documented divergences (each deliberate, none observable on clean pages):
   re-expressed as transitive interval-overlap column clustering plus the
   geometric chain reorder — identical observable reading order for
   rectangular column layouts; the reference's table-vs-columns heuristic
-  (:906-980) is ported as ``_table_interleave`` (below, ~:2028): groups
+  (:906-980) is ported as ``_table_interleave`` (in ``renumber_id``): groups
   whose row bands interleave are read row-major like a table instead of
   column-major.
 
-Scale note: this runs inside ``applyInPandas(url)`` — one page per group,
-pages never cross executors, so the stage is embarrassingly parallel and
-its cost is O(page) regardless of corpus size.
+Scale note: the default plan runs this once per page inside the one
+kind-dispatching ``mapInPandas`` (``pipeline._unified_impl`` →
+``golden.extract_raster_page`` → ``group.group_page``; the staged plan
+runs it per url group of an ``applyInPandas``). Pages never cross
+executors, so the stage is embarrassingly parallel and its cost is
+O(page) regardless of corpus size. Within a page the cost is Python
+interpretation, not arithmetic: a median page grid is about 200x200 cells
+with about 80 boxes, so the hot loops are written as a few whole-array
+NumPy passes per page, and the scalar walks that remain read box geometry
+from Python lists (``Page.lcx`` ...), not NumPy scalars.
 """
 
 from __future__ import annotations
@@ -83,6 +90,11 @@ class Page:
         self.cy = np.asarray(boxes["cy"], dtype=np.float64)
         self.w = np.asarray(boxes["w"], dtype=np.float64)
         self.h = np.asarray(boxes["h"], dtype=np.float64)
+        # the same fixed geometry as lists: the scalar loops below read it
+        # thousands of times a page, and a list read is far cheaper than
+        # a NumPy scalar read
+        self.lcx, self.lcy = self.cx.tolist(), self.cy.tolist()
+        self.lw, self.lh = self.w.tolist(), self.h.tolist()
         # subtype init from code cutoffs (main.cpp:132-147): ruby sets BOTH
         # bits 2+4 on code1 alone; rubybase sets bit 2 on code2
         st = np.zeros(n, dtype=np.int64)
@@ -124,29 +136,27 @@ class Page:
         self.lineblocker = np.zeros((self.H, self.W), dtype=bool)
 
     def is_ruby(self, i: int) -> bool:
-        return (self.subtype[i] & 6) == 6
+        return (self.subtype.item(i) & 6) == 6
 
     def size(self, i: int) -> float:
         return max(self.w[i], self.h[i])
 
 
+def mask_cells(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Row-major (y, x) of a 2-D mask's true cells: ``np.nonzero``'s
+    result, through the flat index (np.nonzero is several times slower
+    on page-sized 2-D grids)."""
+    return np.divmod(np.flatnonzero(mask), mask.shape[1])
+
+
 def _runs_of_mask(mask: np.ndarray) -> list[tuple[int, int, int]]:
     """Row-major RLE of a boolean mask: (y, x1, x2) inclusive."""
-    out = []
-    for y in range(mask.shape[0]):
-        row = mask[y]
-        if not row.any():
-            continue
-        d = np.diff(row.astype(np.int8))
-        starts = np.nonzero(d == 1)[0] + 1
-        ends = np.nonzero(d == -1)[0]
-        if row[0]:
-            starts = np.concatenate([[0], starts])
-        if row[-1]:
-            ends = np.concatenate([ends, [len(row) - 1]])
-        for s, e in zip(starts, ends):
-            out.append((y, int(s), int(e)))
-    return out
+    padded = np.zeros((mask.shape[0], mask.shape[1] + 2), dtype=np.int8)
+    padded[:, 1:-1] = mask
+    ys, xs = mask_cells(np.diff(padded, axis=1))
+    # edges alternate start, end+1 within each row, in row-major order
+    return list(zip(ys[::2].tolist(), xs[::2].tolist(),
+                    (xs[1::2] - 1).tolist()))
 
 
 class _UnionFind:
@@ -207,11 +217,12 @@ def prepare_id_image(P: Page) -> tuple[np.ndarray, np.ndarray]:
     idimage_main skips ruby glyphs; later box ids overwrite earlier."""
     idimage = np.full((P.H, P.W), -1, dtype=np.int32)
     idimage_main = np.full((P.H, P.W), -1, dtype=np.int32)
+    cx, cy, bw, bh = P.lcx, P.lcy, P.lw, P.lh
     for i in range(P.n):
-        left = int((P.cx[i] - P.w[i] / 2) / SCALE)
-        right = int((P.cx[i] + P.w[i] / 2) / SCALE) + 1
-        top = int((P.cy[i] - P.h[i] / 2) / SCALE)
-        bottom = int((P.cy[i] + P.h[i] / 2) / SCALE) + 1
+        left = int((cx[i] - bw[i] / 2) / SCALE)
+        right = int((cx[i] + bw[i] / 2) / SCALE) + 1
+        top = int((cy[i] - bh[i] / 2) / SCALE)
+        bottom = int((cy[i] + bh[i] / 2) / SCALE) + 1
         if left < 0 or right >= P.W:
             continue
         if top < 0 or bottom >= P.H:
@@ -237,11 +248,20 @@ def make_lineblocker(P: Page) -> None:
         blocker[on & light[np.clip(labels, 0, None)]] = False
 
     # hysteresis grow (prepare.cpp:135-169): seeds in row-major order,
-    # 8-neighborhood stack walk down to 0.1 * seed value
-    seeds = np.nonzero(blocker)
+    # 8-neighborhood stack walk down to 0.1 * seed value. Blocker cells
+    # only ever get added, so a seed none of whose neighbours is free and
+    # above its threshold at the start never grows: only the others walk.
+    ys, xs = mask_cells(blocker)
     sep = P.sepimage
     H, W = P.H, P.W
-    for y0, x0 in zip(seeds[0].tolist(), seeds[1].tolist()):
+    th = sep[ys, xs].astype(np.float64) * 0.1
+    free = np.pad(~blocker, 1)
+    vals = np.pad(sep, 1).astype(np.float64)
+    grows = np.zeros(len(ys), dtype=bool)
+    for dy in (0, 1, 2):
+        for dx in (0, 1, 2):
+            grows |= free[ys + dy, xs + dx] & (vals[ys + dy, xs + dx] >= th)
+    for y0, x0 in zip(ys[grows].tolist(), xs[grows].tolist()):
         value_th = sep.item(y0, x0) * 0.1
         stack = [(y0, x0)]
         while stack:
@@ -253,7 +273,7 @@ def make_lineblocker(P: Page) -> None:
                 for xx in range(x - 1, x + 2):
                     if xx < 0 or xx >= W or yy < 0 or yy >= H:
                         continue
-                    if blocker[yy, xx]:
+                    if blocker.item(yy, xx):
                         continue
                     if sep.item(yy, xx) < value_th:
                         continue
@@ -380,28 +400,33 @@ def set_angle(P: Page, lineid_map: np.ndarray, lineid_count: int
     taller-than-wide components take the top->bottom extreme-point angle,
     wider take left->right. Extreme-point ties are broken by (y, x)
     lexicographic order (canonicalizes the flood-fill-order dependence of
-    the C++ p1/p2 scan)."""
+    the C++ p1/p2 scan). Empty ids are dropped and the rest renumbered
+    densely."""
     angle_map = np.full((P.H, P.W), np.nan, dtype=np.float32)
     new_map = np.full((P.H, P.W), -1, dtype=np.int32)
-    new_count = 0
-    for lid in range(lineid_count):
-        ys, xs = np.nonzero(lineid_map == lid)
-        if len(ys) == 0:
-            continue
-        if xs.max() - xs.min() < ys.max() - ys.min():
-            # vertical: topmost -> bottommost
-            k1 = np.lexsort((xs, ys))[0]
-            k2 = np.lexsort((xs, -ys))[0]
-            angle = math.atan2(float(ys[k2] - ys[k1]), float(xs[k2] - xs[k1]))
-        else:
-            # horizontal: leftmost -> rightmost
-            k1 = np.lexsort((ys, xs))[0]
-            k2 = np.lexsort((ys, -xs))[0]
-            angle = math.atan2(float(ys[k2] - ys[k1]), float(xs[k2] - xs[k1]))
-        angle_map[ys, xs] = angle
-        new_map[ys, xs] = new_count
-        new_count += 1
-    return angle_map, new_map, new_count
+    ys, xs = mask_cells((lineid_map >= 0) & (lineid_map < lineid_count))
+    if not len(ys):
+        return angle_map, new_map, 0
+    lid = lineid_map[ys, xs]
+    present, inv = np.unique(lid, return_inverse=True)
+
+    def extreme(*keys):
+        # first cell of each id in (id, *keys) order
+        order = np.lexsort(keys[::-1] + (lid,))
+        return order[np.searchsorted(lid[order], present)]
+    top = extreme(ys, xs)
+    bottom = extreme(-ys, xs)
+    left = extreme(xs, ys)
+    right = extreme(-xs, ys)
+    vert = xs[right] - xs[left] < ys[bottom] - ys[top]
+    k1 = np.where(vert, top, left)
+    k2 = np.where(vert, bottom, right)
+    angle = np.array([math.atan2(float(dy), float(dx)) for dy, dx in
+                      zip((ys[k2] - ys[k1]).tolist(),
+                          (xs[k2] - xs[k1]).tolist())])
+    angle_map[ys, xs] = angle[inv]
+    new_map[ys, xs] = inv
+    return angle_map, new_map, len(present)
 
 
 def chain_boxes(P: Page, lineid_count: int, angle_map: np.ndarray,
@@ -415,9 +440,10 @@ def chain_boxes(P: Page, lineid_count: int, angle_map: np.ndarray,
     for boxid in range(P.n):
         if P.is_ruby(boxid):
             continue
-        cx, cy = P.cx[boxid], P.cy[boxid]
+        cx, cy = P.lcx[boxid], P.lcy[boxid]
         found = False
-        for di in range(0, int(max(P.w[boxid], P.h[boxid]) / 2) + 1, SCALE):
+        for di in range(0, int(max(P.lw[boxid], P.lh[boxid]) / 2) + 1,
+                        SCALE):
             for xi, yi in ((cx - di, cy), (cx + di, cy),
                            (cx, cy - di), (cx, cy + di)):
                 x, y = int(xi / SCALE), int(yi / SCALE)
@@ -440,46 +466,79 @@ def line_grow(P: Page, lineid_count: int, angle_map: np.ndarray,
     """Thicken each line by its chained boxes' max size so a second
     chain_boxes pass catches boxes the thin skeleton missed
     (line_grow hough_linefind.cpp:123-198). Horizontal lines grow upward
-    by max height; vertical grow sideways by max width/2."""
+    by max height; vertical grow sideways by max width/2.
+
+    The reference visits line cells in row-major order and writes only
+    free cells, so each grown cell keeps the first source reaching it and
+    each line cell its own id: all grows are painted at once. A vertical
+    source visited earlier can grow right onto a line cell and rewrite
+    its angle, which that cell's own grow then follows; the paint repeats
+    while such an inherited angle flips a source between horizontal and
+    vertical (one pass on most pages)."""
+    d, bw, bh = P.direction.tolist(), P.lw, P.lh
     line_width = np.zeros(lineid_count)
     for lid in range(lineid_count):
         mw = 0.0
         for boxid in chains[lid]:
-            if abs(P.direction[boxid]) < M_PI_4:
-                mw = max(mw, P.h[boxid])
+            if abs(d[boxid]) < M_PI_4:
+                mw = max(mw, bh[boxid])
             else:
-                mw = max(mw, P.w[boxid], P.h[boxid])
+                mw = max(mw, bw[boxid], bh[boxid])
         line_width[lid] = mw / SCALE
     H, W = P.H, P.W
+    blocker = P.lineblocker
     map2 = np.full((H, W), -1, dtype=np.int32)
-    ys, xs = np.nonzero(lineid_map >= 0)
-    for y, x in zip(ys.tolist(), xs.tolist()):
-        if P.lineblocker[y, x]:
-            continue
-        lid = lineid_map.item(y, x)
-        map2[y, x] = lid
-        direction = angle_map.item(y, x)
-        mw = int(line_width[lid])
-        if abs(direction) < M_PI_4:
-            for y2 in range(y, max(-1, y - mw - 1), -1):
-                if P.lineblocker[y2, x]:
-                    break
-                if map2.item(y2, x) < 0:
-                    map2[y2, x] = lid
-                    angle_map[y2, x] = direction
-        else:
-            for x2 in range(x, max(-1, x - mw // 2 - 1), -1):
-                if P.lineblocker[y, x2]:
-                    break
-                if map2.item(y, x2) < 0:
-                    map2[y, x2] = lid
-                    angle_map[y, x2] = direction
-            for x2 in range(x, min(W, x + mw // 2 + 1)):
-                if P.lineblocker[y, x2]:
-                    break
-                if map2.item(y, x2) < 0:
-                    map2[y, x2] = lid
-                    angle_map[y, x2] = direction
+    ys, xs = mask_cells((lineid_map >= 0) & ~blocker)
+    n = len(ys)
+    if not n:
+        return map2
+    lid = lineid_map[ys, xs]
+    map2[ys, xs] = lid
+    mw = line_width[lid].astype(np.int64)
+    own = np.full(H * W, n, dtype=np.int64)
+    own[ys * W + xs] = np.arange(n)
+    orig = angle_map[ys, xs]
+    hz = np.abs(orig.astype(np.float64)) < M_PI_4
+    seg_dy = np.tile([-1, 0, 0], n)
+    seg_dx = np.tile([0, -1, 1], n)
+    while True:
+        # per source: up, left, right grow lengths (one family is empty)
+        lens = np.stack([np.where(hz, np.minimum(mw, ys), 0),
+                         np.where(hz, 0, np.minimum(mw // 2, xs)),
+                         np.where(hz, 0, np.minimum(mw // 2, W - 1 - xs))],
+                        axis=1).ravel()
+        seg_start = np.cumsum(lens) - lens
+        k = np.arange(int(lens.sum())) - np.repeat(seg_start, lens) + 1
+        src = np.repeat(np.arange(3 * n) // 3, lens)
+        ty = ys[src] + np.repeat(seg_dy, lens) * k
+        tx = xs[src] + np.repeat(seg_dx, lens) * k
+        # a grow stops at its first blocker cell
+        hit = np.cumsum(blocker[ty, tx])
+        before = np.concatenate([[0], hit])[seg_start]
+        alive = hit == np.repeat(before, lens)
+        cells, first = np.unique((ty * W + tx)[alive], return_index=True)
+        win = src[alive][first]
+        earlier = win < own[cells]
+        # a line cell reached first by an earlier source takes its angle:
+        # follow those links (always to an earlier source) to their roots
+        line_cell = earlier & (own[cells] < n)
+        root = np.arange(n)
+        root[own[cells[line_cell]]] = win[line_cell]
+        while True:
+            up = root[root]
+            if np.array_equal(up, root):
+                break
+            root = up
+        ang = orig[root]
+        # the grows above assumed each source's orientation: redo them if
+        # an inherited angle flipped one
+        flipped = np.abs(ang.astype(np.float64)) < M_PI_4
+        if np.array_equal(flipped, hz):
+            break
+        hz = flipped
+    np.put(angle_map, cells[earlier], ang[win[earlier]])
+    grown = own[cells] == n
+    np.put(map2, cells[grown], lid[win[grown]])
     return map2
 
 
@@ -500,31 +559,26 @@ def linefind(P: Page) -> list[list[int]]:
 def sort_chain(chain: list[int], P: Page) -> None:
     """W1 in-chain reading sort (sort_chain search_loop.cpp:12-65): sort by
     the line axis; runs of boxes overlapping the group head's span re-sort
-    by the cross axis (e.g. stacked punctuation in horizontal text)."""
+    by the cross axis (e.g. stacked punctuation in horizontal text). Ties
+    keep box-id order (sort by id, then stably by the key)."""
     if not chain:
         return
-    if abs(P.direction[chain[0]]) < M_PI_4:
-        chain.sort(key=lambda a: (P.cx[a], a))
-        i = 0
-        while i < len(chain):
-            j = i + 1
-            while j < len(chain) and \
-                    P.cx[chain[i]] + P.w[chain[i]] / 2 > P.cx[chain[j]]:
-                j += 1
-            if j - i > 1:
-                chain[i:j] = sorted(chain[i:j], key=lambda a: (P.cy[a], a))
-            i = j
+    if abs(P.direction.item(chain[0])) < M_PI_4:
+        along, cross, size = P.lcx, P.lcy, P.lw
     else:
-        chain.sort(key=lambda a: (P.cy[a], a))
-        i = 0
-        while i < len(chain):
-            j = i + 1
-            while j < len(chain) and \
-                    P.cy[chain[i]] + P.h[chain[i]] / 2 > P.cy[chain[j]]:
-                j += 1
-            if j - i > 1:
-                chain[i:j] = sorted(chain[i:j], key=lambda a: (P.cx[a], a))
-            i = j
+        along, cross, size = P.lcy, P.lcx, P.lh
+    chain.sort()
+    chain.sort(key=along.__getitem__)
+    i = 0
+    n = len(chain)
+    while i < n:
+        j = i + 1
+        reach = along[chain[i]] + size[chain[i]] / 2
+        while j < n and reach > along[chain[j]]:
+            j += 1
+        if j - i > 1:
+            chain[i:j] = sorted(sorted(chain[i:j]), key=cross.__getitem__)
+        i = j
 
 
 def fix_chain_info(P: Page, chains: list[list[int]]) -> None:
@@ -536,72 +590,89 @@ def fix_chain_info(P: Page, chains: list[list[int]]) -> None:
         sort_chain(chain, P)
 
 
-def search_chain(P: Page, chain: list[int]):
-    """A5 weighted endpoint anchors (search_chain search_loop.cpp:87-177):
-    start/end transverse anchor = positional-decay weighted mean of the
-    non-ruby, non-warichu boxes; direction re-derived from the anchors."""
-    nonruby = [i for i in chain
-               if not P.is_ruby(i) and P.double_line[i] == 0]
+def _track_knots(P: Page, chain: list[int]):
+    """Knots of a chain's center track polyline (search_chain,
+    find_linecenter_id and the knot walk of make_track_line,
+    search_loop.cpp:87-449). A5 weighted endpoint anchors of the non-ruby,
+    non-warichu boxes re-derive the direction; the big-enough boxes within
+    half a line-size of the center fit line steer the track. Returns
+    ``(horizontal, p, q, direction, w, h)`` with knots along the line axis
+    ``p`` and across it ``q`` (x, y for horizontal chains; y, x for
+    vertical), or None when no box steers the track."""
+    sti, dli = P.subtype.item, P.double_line.item
+    nonruby = [i for i in chain if (sti(i) & 6) != 6 and dli(i) == 0]
     if not nonruby:
-        return 0.0, 0.0, 0.0, -1.0, -1.0, -1.0, -1.0
-    w = max(P.w[i] for i in nonruby)
-    h = max(P.h[i] for i in nonruby)
-    direction = P.direction[nonruby[0]]
+        return None
+    cx, cy, bw, bh = P.lcx, P.lcy, P.lw, P.lh
+    w = max([bw[i] for i in nonruby])
+    h = max([bh[i] for i in nonruby])
     n = len(nonruby)
-    if abs(direction) < M_PI_4:
-        wt1 = np.array([P.w[i] * P.h[i] / (k + 1) for k, i in enumerate(nonruby)])
-        wt2 = np.array([P.w[i] * P.h[i] / (n - k) for k, i in enumerate(nonruby)])
-        cys = np.array([P.cy[i] for i in nonruby])
+    a = np.array(nonruby)
+    wh = P.w[a] * P.h[a]
+    wt1 = wh / np.arange(1, n + 1)
+    wt2 = wh / np.arange(n, 0, -1)
+    if abs(P.direction.item(nonruby[0])) < M_PI_4:
+        cys = P.cy[a]
         start_cy = float((cys * wt1).sum() / wt1.sum())
         end_cy = float((cys * wt2).sum() / wt2.sum())
-        start_cx = float(P.cx[nonruby[0]])
-        end_cx = float(P.cx[nonruby[-1]])
-        direction = math.atan2(end_cy - start_cy, end_cx - start_cx)
+        direction = math.atan2(end_cy - start_cy,
+                               cx[nonruby[-1]] - cx[nonruby[0]])
         if direction > M_PI_2:
             direction -= M_PI
     else:
-        wt1 = np.array([P.w[i] * P.h[i] / (k + 1) for k, i in enumerate(nonruby)])
-        wt2 = np.array([P.w[i] * P.h[i] / (n - k) for k, i in enumerate(nonruby)])
-        cxs = np.array([P.cx[i] for i in nonruby])
+        cxs = P.cx[a]
         start_cx = float((cxs * wt1).sum() / wt1.sum())
         end_cx = float((cxs * wt2).sum() / wt2.sum())
-        start_cy = float(P.cy[nonruby[0]])
-        end_cy = float(P.cy[nonruby[-1]])
-        direction = math.atan2(end_cy - start_cy, end_cx - start_cx)
-    return direction, w, h, start_cx, start_cy, end_cx, end_cy
-
-
-def find_linecenter_id(P: Page, chains: list[list[int]], chainid: int):
-    """Boxes tracking the line center (find_linecenter_id
-    search_loop.cpp:180-236): big-enough non-ruby boxes within half a
-    line-size of the center fit line."""
-    direction, w, h, s_cx, s_cy, e_cx, e_cy = search_chain(P, chains[chainid])
-    sel: list[int] = []
-    cand = [i for i in chains[chainid]
-            if not P.is_ruby(i) and P.double_line[i] == 0
-            and (max(P.w[i], P.h[i]) / max(w, h) >= 0.4 if max(w, h) > 0 else False)]
+        direction = math.atan2(cy[nonruby[-1]] - cy[nonruby[0]],
+                               end_cx - start_cx)
+    s = max(w, h)
+    if s <= 0:
+        return None
+    cand = [i for i in nonruby if max(bw[i], bh[i]) / s >= 0.4]
     if not cand:
-        return sel, direction, w, h, s_cx, s_cy, e_cx, e_cy
-    center_x = sum(P.cx[i] for i in cand) / len(cand)
-    center_y = sum(P.cy[i] for i in cand) / len(cand)
-    if abs(direction) < M_PI_4:
-        for i in cand:
-            yi = math.tan(direction) * (P.cx[i] - center_x) + center_y
-            if abs(yi - P.cy[i]) < max(w, h) / 2:
-                sel.append(i)
+        return None
+    sx = sy = 0.0
+    for i in cand:
+        sx += cx[i]
+        sy += cy[i]
+    center_x, center_y = sx / len(cand), sy / len(cand)
+    horizontal = abs(direction) < M_PI_4
+    if horizontal:
+        t = math.tan(direction)
+        sel = [i for i in cand
+               if abs(t * (cx[i] - center_x) + center_y - cy[i]) < s / 2]
+        along, across, half = cx, cy, bw
     else:
-        for i in cand:
-            xi = math.tan(M_PI_2 - direction) * (P.cy[i] - center_y) + center_x
-            if abs(xi - P.cx[i]) < max(w, h) / 2:
-                sel.append(i)
-    return sel, direction, w, h, s_cx, s_cy, e_cx, e_cy
+        t = math.tan(M_PI_2 - direction)
+        sel = [i for i in cand
+               if abs(t * (cy[i] - center_y) + center_x - cx[i]) < s / 2]
+        along, across, half = cy, cx, bh
+    if not sel:
+        return None
+    sel_set = set(sel)
+    j = sel[0]
+    track = across[j]
+    p = [along[j] - half[j] / 2]
+    q = [track]
+    for boxid in chain:
+        if (sti(boxid) & 6) == 6:
+            continue
+        if boxid in sel_set:
+            track = (track + across[boxid]) / 2
+        p.append(along[boxid])
+        q.append(track)
+    j = sel[-1]
+    p.append(along[j] + half[j] / 2)
+    q.append(across[j])
+    return horizontal, p, q, direction, w, h
 
 
 def _interp_samples(p1, q1, p2, q2):
     """Vectorized polyline sampling — exact equivalent of the scalar
     per-segment walk ``xp = int(p1); while xp < p2: emit (xp,
     int((xp - p1) * a + q1)); xp += SCALE`` over all segments at once
-    (same truncation-toward-zero semantics via astype(int64))."""
+    (same truncation-toward-zero semantics via astype(int64)). Returns
+    int64 arrays (p, q) and the sample count of each segment."""
     p1 = np.asarray(p1, dtype=np.float64)
     q1 = np.asarray(q1, dtype=np.float64)
     p2 = np.asarray(p2, dtype=np.float64)
@@ -611,14 +682,37 @@ def _interp_samples(p1, q1, p2, q2):
     ip1 = p1.astype(np.int64)
     n = np.ceil((p2 - ip1) / SCALE).astype(np.int64)
     n = np.where(valid, np.maximum(n, 0), 0)
-    total = int(n.sum())
-    if total == 0:
-        return [], []
-    k_idx = np.arange(total) - np.repeat(np.cumsum(n) - n, n)
+    k_idx = np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n, n)
     p_all = np.repeat(ip1, n) + SCALE * k_idx
     q_all = ((p_all - np.repeat(p1, n)) * np.repeat(a, n)
              + np.repeat(q1, n)).astype(np.int64)
-    return p_all.tolist(), q_all.tolist()
+    return p_all, q_all, n
+
+
+def _track_extension(P: Page, horizontal: bool, p1: float, q1: float,
+                     p2: float, q2: float, reach: float,
+                     step: int) -> tuple[list[int], list[int]]:
+    """Probe samples past one end of a track line along its end segment
+    (p1, q1)-(p2, q2): from p1 backward (``step`` < 0) or from p2
+    forward, ``reach`` px or up to the first blocker cell
+    (make_track_line's ruby-probe extension)."""
+    a = (q2 - q1) / (p2 - p1) if p2 != p1 else 0.0
+    blk = P.lineblocker.item
+    ps: list[int] = []
+    qs: list[int] = []
+    limit = p1 - reach if step < 0 else p2 + reach
+    pp = int(p1 if step < 0 else p2)
+    while (pp > limit) if step < 0 else (pp < limit):
+        qq = int((pp - p1) * a + q1)
+        xp1, yp1 = ((pp, qq) if horizontal else (qq, pp))
+        xp1, yp1 = xp1 // SCALE, yp1 // SCALE
+        if 0 <= xp1 < P.W and 0 <= yp1 < P.H:
+            if blk(yp1, xp1):
+                break
+            ps.append(pp)
+            qs.append(qq)
+        pp += step
+    return ps, qs
 
 
 def make_track_line(P: Page, chains: list[list[int]], chainid: int,
@@ -626,178 +720,82 @@ def make_track_line(P: Page, chains: list[list[int]], chainid: int,
     """Center track polyline of a chain, sampled every SCALE px
     (make_track_line search_loop.cpp:239-449). Returns (xs, ys, direction,
     w, h) in pixel coords; extra_len extends past both ends (ruby probe)."""
-    sel, direction, w, h, s_cx, s_cy, e_cx, e_cy = \
-        find_linecenter_id(P, chains, chainid)
-    sel_set = set(sel)
-    xs: list[int] = []
-    ys: list[int] = []
-    if abs(direction) < M_PI_4:
-        xi: list[float] = []
-        yi: list[float] = []
-        if sel:
-            j = sel[0]
-            track = P.cy[j]
-            xi.append(P.cx[j] - P.w[j] / 2)
-            yi.append(track)
-        else:
-            return xs, ys, direction, w, h
-        for boxid in chains[chainid]:
-            if P.is_ruby(boxid):
-                continue
-            if boxid in sel_set:
-                track = (track + P.cy[boxid]) / 2
-            xi.append(P.cx[boxid])
-            yi.append(track)
-        j = sel[-1]
-        track = P.cy[j]
-        xi.append(P.cx[j] + P.w[j] / 2)
-        yi.append(track)
-
-        if extra_len > 0 and len(xi) >= 2:
-            x1, y1, x2, y2 = xi[0], yi[0], xi[1], yi[1]
-            a = (y2 - y1) / (x2 - x1) if x2 != x1 else 0.0
-            head_x: list[int] = []
-            head_y: list[int] = []
-            xp = int(x1)
-            while xp > x1 - extra_len * w * 2:
-                yp = int((xp - x1) * a + y1)
-                xp1, yp1 = xp // SCALE, yp // SCALE
-                if 0 <= xp1 < P.W and 0 <= yp1 < P.H:
-                    if P.lineblocker[yp1, xp1]:
-                        break
-                    head_x.append(xp)
-                    head_y.append(yp)
-                xp -= SCALE
-            xs.extend(reversed(head_x))
-            ys.extend(reversed(head_y))
-
-        px, py = _interp_samples(xi[:-1], yi[:-1], xi[1:], yi[1:])
-        xs.extend(px)
-        ys.extend(py)
-
-        if extra_len > 0 and len(xi) >= 2:
-            x1, y1 = xi[-2], yi[-2]
-            x2, y2 = xi[-1], yi[-1]
-            a = (y2 - y1) / (x2 - x1) if x2 != x1 else 0.0
-            xp = int(x2)
-            while xp < x2 + extra_len * w * 2:
-                yp = int((xp - x1) * a + y1)
-                xp1, yp1 = xp // SCALE, yp // SCALE
-                if 0 <= xp1 < P.W and 0 <= yp1 < P.H:
-                    if P.lineblocker[yp1, xp1]:
-                        break
-                    xs.append(xp)
-                    ys.append(yp)
-                xp += SCALE
-    else:
-        xi = []
-        yi = []
-        if sel:
-            j = sel[0]
-            track = P.cx[j]
-            xi.append(track)
-            yi.append(P.cy[j] - P.h[j] / 2)
-        else:
-            return xs, ys, direction, w, h
-        for boxid in chains[chainid]:
-            if P.is_ruby(boxid):
-                continue
-            if boxid in sel_set:
-                track = (track + P.cx[boxid]) / 2
-            xi.append(track)
-            yi.append(P.cy[boxid])
-        j = sel[-1]
-        track = P.cx[j]
-        xi.append(track)
-        yi.append(P.cy[j] + P.h[j] / 2)
-
-        if extra_len > 0 and len(yi) >= 2:
-            x1, y1, x2, y2 = xi[0], yi[0], xi[1], yi[1]
-            a = (x2 - x1) / (y2 - y1) if y2 != y1 else 0.0
-            head_x = []
-            head_y = []
-            yp = int(y1)
-            while yp > y1 - extra_len * h * 2:
-                xp = int((yp - y1) * a + x1)
-                xp1, yp1 = xp // SCALE, yp // SCALE
-                if 0 <= xp1 < P.W and 0 <= yp1 < P.H:
-                    if P.lineblocker[yp1, xp1]:
-                        break
-                    head_x.append(xp)
-                    head_y.append(yp)
-                yp -= SCALE
-            xs.extend(reversed(head_x))
-            ys.extend(reversed(head_y))
-
-        py, px = _interp_samples(yi[:-1], xi[:-1], yi[1:], xi[1:])
-        xs.extend(px)
-        ys.extend(py)
-
-        if extra_len > 0 and len(yi) >= 2:
-            x1, y1 = xi[-2], yi[-2]
-            x2, y2 = xi[-1], yi[-1]
-            a = (x2 - x1) / (y2 - y1) if y2 != y1 else 0.0
-            yp = int(y2)
-            while yp < y2 + extra_len * h * 2:
-                xp = int((yp - y1) * a + x1)
-                xp1, yp1 = xp // SCALE, yp // SCALE
-                if 0 <= xp1 < P.W and 0 <= yp1 < P.H:
-                    if P.lineblocker[yp1, xp1]:
-                        break
-                    xs.append(xp)
-                    ys.append(yp)
-                yp += SCALE
-    return xs, ys, direction, w, h
+    knots = _track_knots(P, chains[chainid])
+    if knots is None:
+        return [], [], 0.0, 0.0, 0.0
+    horizontal, p, q, direction, w, h = knots
+    pa, qa, _ = _interp_samples(p[:-1], q[:-1], p[1:], q[1:])
+    ps, qs = pa.tolist(), qa.tolist()
+    if extra_len > 0:
+        reach = extra_len * (w if horizontal else h) * 2
+        hp, hq = _track_extension(P, horizontal, p[0], q[0], p[1], q[1],
+                                  reach, -SCALE)
+        tp, tq = _track_extension(P, horizontal, p[-2], q[-2], p[-1], q[-1],
+                                  reach, SCALE)
+        ps = hp[::-1] + ps + tp
+        qs = hq[::-1] + qs + tq
+    if horizontal:
+        return ps, qs, direction, w, h
+    return qs, ps, direction, w, h
 
 
-def create_chainid_map(P: Page, chains: list[list[int]], ratio: float = 1.0,
-                       extra_len: int = 0) -> np.ndarray:
+def _first_writer(cmap: np.ndarray, flat: np.ndarray,
+                  ids: np.ndarray) -> None:
+    """Paint ``ids`` into the free cells of flat ``cmap`` in list order:
+    where a cell repeats, its first entry wins."""
+    free = cmap[flat] < 0
+    cells, first = np.unique(flat[free], return_index=True)
+    cmap[cells] = ids[free][first]
+
+
+def create_chainid_map(P: Page, chains: list[list[int]]) -> np.ndarray:
     """Chain-id raster: the spatial index that turns every probe join into
     an O(1) lookup (create_chainid_map search_loop.cpp:451-522). Track
-    lines are stamped with a transverse band of size/3*ratio, then each
-    chained non-ruby box's rectangle is stamped."""
-    cmap = np.full((P.H, P.W), -1, dtype=np.int32)
+    lines are stamped with a transverse band of size/3, then each
+    chained non-ruby box's rectangle is stamped.
+
+    Every stamp writes only free cells, so a cell keeps the first chain
+    (in chain order) whose band covers it, else the first box rectangle
+    (chain order, then box order) covering it: both stages are painted
+    at once over all chains."""
+    H, W = P.H, P.W
+    cmap = np.full(H * W, -1, dtype=np.int32)
+    seg: list[list[float]] = [[], [], [], []]
+    seg_info: list[tuple[int, bool, int, int]] = []
     for chainid, chain in enumerate(chains):
         if not chain:
             continue
-        xs, ys, direction, w, h = make_track_line(P, chains, chainid,
-                                                  extra_len)
-        if not xs:
+        knots = _track_knots(P, chain)
+        if knots is None:
             continue
-        s_s = max(w, h)
-        band = int(s_s / 3 / SCALE * ratio)
-        # vectorized band fill: one fancy assignment per band offset
-        # (duplicate indices within one chain write the same value, so
-        # last-wins fancy indexing is equivalent to the scalar loop)
-        xa = np.asarray(xs, dtype=np.int64) // SCALE
-        ya = np.asarray(ys, dtype=np.int64) // SCALE
-        inb = (xa >= 0) & (xa < P.W) & (ya >= 0) & (ya < P.H)
-        xa, ya = xa[inb], ya[inb]
-        if abs(direction) < M_PI_4:
-            for dy in range(-band, band):
-                yy = ya + dy
-                m = (yy >= 0) & (yy < P.H)
-                sel_y, sel_x = yy[m], xa[m]
-                free = cmap[sel_y, sel_x] < 0
-                cmap[sel_y[free], sel_x[free]] = chainid
-        else:
-            for dx in range(-band, band):
-                xx = xa + dx
-                m = (xx >= 0) & (xx < P.W)
-                sel_y, sel_x = ya[m], xx[m]
-                free = cmap[sel_y, sel_x] < 0
-                cmap[sel_y[free], sel_x[free]] = chainid
-    # box-rect stamping: bounds computed vectorized over all chained
-    # non-ruby boxes (the per-box slice write itself stays — rects vary)
-    all_b: list[int] = []
-    all_c: list[int] = []
-    for chainid, chain in enumerate(chains):
-        for boxid in chain:
-            all_b.append(boxid)
-            all_c.append(chainid)
-    if all_b:
-        bb = np.asarray(all_b, dtype=np.int64)
-        cc_ids = np.asarray(all_c, dtype=np.int64)
+        horizontal, p, q, _direction, w, h = knots
+        for lst, v in zip(seg, (p[:-1], q[:-1], p[1:], q[1:])):
+            lst.extend(v)
+        seg_info.append((chainid, horizontal, len(p) - 1,
+                         int(max(w, h) / 3 / SCALE)))
+    if seg_info:
+        cid, hor, nseg, band = (np.array(v) for v in zip(*seg_info))
+        pa, qa, n = _interp_samples(*seg)
+        per = np.repeat(np.repeat(np.arange(len(cid)), nseg), n)
+        hor = hor[per]
+        xa = np.where(hor, pa, qa) // SCALE
+        ya = np.where(hor, qa, pa) // SCALE
+        inb = (xa >= 0) & (xa < W) & (ya >= 0) & (ya < H)
+        xa, ya, per, hor = xa[inb], ya[inb], per[inb], hor[inb]
+        reps = 2 * band[per]
+        off = (np.arange(int(reps.sum())) - np.repeat(np.cumsum(reps) - reps,
+                                                      reps)
+               - np.repeat(band[per], reps))
+        hor = np.repeat(hor, reps)
+        xx = np.repeat(xa, reps) + np.where(hor, 0, off)
+        yy = np.repeat(ya, reps) + np.where(hor, off, 0)
+        ok = (xx >= 0) & (xx < W) & (yy >= 0) & (yy < H)
+        _first_writer(cmap, yy[ok] * W + xx[ok],
+                      np.repeat(cid[per], reps)[ok])
+    bb = [b for chain in chains for b in chain]
+    if bb:
+        cc_ids = np.repeat(np.arange(len(chains)), [len(c) for c in chains])
+        bb = np.asarray(bb, dtype=np.int64)
         keep = (P.subtype[bb] & 6) != 6
         bb, cc_ids = bb[keep], cc_ids[keep]
         left = np.maximum(
@@ -808,52 +806,51 @@ def create_chainid_map(P: Page, chains: list[list[int]], ratio: float = 1.0,
             ((P.cy[bb] - P.h[bb] / 2) / SCALE).astype(np.int64), 0)
         bottom = np.minimum(
             ((P.cy[bb] + P.h[bb] / 2) / SCALE).astype(np.int64), P.H)
-        for li, ri, ti, bi, ci in zip(left.tolist(), right.tolist(),
-                                      top.tolist(), bottom.tolist(),
-                                      cc_ids.tolist()):
-            if li >= ri or ti >= bi:
-                continue
-            view = cmap[ti:bi, li:ri]
-            view[view < 0] = ci
-    return cmap
+        rw = np.maximum(right - left, 0)
+        area = rw * np.maximum(bottom - top, 0)
+        k = np.arange(int(area.sum())) - np.repeat(np.cumsum(area) - area,
+                                                   area)
+        rw = np.repeat(rw, area)
+        _first_writer(cmap, (np.repeat(top, area) + k // rw) * W
+                      + np.repeat(left, area) + k % rw,
+                      np.repeat(cc_ids, area))
+    return cmap.reshape(H, W)
 
 
 # ---------------------------------------------------------------- search_loop
 
 def _chain_max_wh(P: Page, chain: list[int]) -> tuple[float, float]:
     """A4 per-chain extrema (transform_reduce search_loop.cpp:594-605)."""
-    w = max((P.w[i] for i in chain), default=0.0)
-    h = max((P.h[i] for i in chain), default=0.0)
+    w = max((P.lw[i] for i in chain), default=0.0)
+    h = max((P.lh[i] for i in chain), default=0.0)
     return w, h
 
 
-def _ema_toward_front(P: Page, chain: list[int], axis: np.ndarray) -> float:
+def _ema_toward_front(chain: list[int], axis: list[float]) -> float:
     """A6 EMA scan folded back-to-front: anchor for the chain start
     (combine_chains search_loop.cpp:607-613)."""
-    v = float(axis[chain[-1]])
+    v = axis[chain[-1]]
     for boxid in reversed(chain):
-        v = 0.25 * v + 0.75 * float(axis[boxid])
+        v = 0.25 * v + 0.75 * axis[boxid]
     return v
 
 
-def _ema_toward_back(P: Page, chain: list[int], axis: np.ndarray) -> float:
+def _ema_toward_back(chain: list[int], axis: list[float]) -> float:
     """A6 EMA scan folded front-to-back: anchor for the chain end
     (combine_chains search_loop.cpp:615-619)."""
-    v = float(axis[chain[0]])
+    v = axis[chain[0]]
     for boxid in chain:
-        v = 0.25 * v + 0.75 * float(axis[boxid])
+        v = 0.25 * v + 0.75 * axis[boxid]
     return v
 
 
 def _mean_gap(P: Page, chain: list[int], horizontal: bool) -> float:
     """A7 mean positive inter-box gap along the chain axis
     (combine_chains search_loop.cpp:621-632)."""
+    axis, size = (P.lcx, P.lw) if horizontal else (P.lcy, P.lh)
     total = 0.0
     for a, b in zip(chain, chain[1:]):
-        if horizontal:
-            g = (P.cx[b] - P.w[b] / 2) - (P.cx[a] + P.w[a] / 2)
-        else:
-            g = (P.cy[b] - P.h[b] / 2) - (P.cy[a] + P.h[a] / 2)
+        g = (axis[b] - size[b] / 2) - (axis[a] + size[a] / 2)
         if g > 0:
             total += g
     return max(0.0, total / (len(chain) - 1)) if len(chain) > 1 else 0.0
@@ -901,14 +898,66 @@ def process_merge(chains: list[list[int]], merge_chain: list[int]) -> None:
         chains[i] = sorted(set(chains[i]))
 
 
+def _probe_end(P: Page, chains: list[list[int]], cmap: np.ndarray,
+               chainid: int, horizontal: bool, head: bool,
+               pcells: np.ndarray, qcells: np.ndarray, anchor: float,
+               size: float, own_dl: int, done: list[int]) -> list[int]:
+    """One end probe of combine_chains: step along the chain axis
+    (``pcells``) over the 11-point transverse band (``qcells``), column by
+    column; a blocker cell clears the candidates and stops, and the probe
+    stops after the first column that rejected a chain. Returns the
+    candidate chains. A column holding neither a blocker nor a foreign
+    chain changes nothing, so only the columns holding one are walked
+    cell by cell; when ``done`` (shared by both ends) is already
+    non-empty, the first in-page column ends the probe."""
+    pn, qn = (P.W, P.H) if horizontal else (P.H, P.W)
+    pc = pcells[(pcells >= 0) & (pcells < pn)]
+    qc = qcells[(qcells >= 0) & (qcells < qn)]
+    others: list[int] = []
+    if not len(pc) or not len(qc):
+        return others
+    rows, cols = ((qc[:, None], pc[None, :]) if horizontal
+                  else (pc[None, :], qc[:, None]))
+    blk = P.lineblocker[rows, cols]
+    oc = cmap[rows, cols]
+    event = (blk | ((oc >= 0) & (oc != chainid))).any(axis=0)
+    visit = np.nonzero(event[:1] if done else event)[0].tolist()
+    d, dl = P.direction.item, P.double_line.item
+    cross, csize = (P.lcy, P.lh) if horizontal else (P.lcx, P.lw)
+    ema = _ema_toward_back if head else _ema_toward_front
+    for c in visit:
+        blocked = False
+        for b, o in zip(blk[:, c].tolist(), oc[:, c].tolist()):
+            if b:
+                others = []
+                blocked = True
+                break
+            if o < 0 or o == chainid or o in done or o in others:
+                continue
+            och = chains[o]
+            if och and (abs(d(och[-1])) < M_PI_4 if horizontal
+                        else abs(d(och[-1])) > M_PI_4) \
+                    and dl(och[-1] if head else och[0]) == own_dl:
+                s1 = max(csize[i] for i in och)
+                if abs(anchor - ema(och, cross)) < max(size, s1):
+                    others.append(o)
+                    if horizontal and head:
+                        continue
+            done.append(o)
+        if blocked or done:
+            break
+    return others
+
+
 def combine_chains(P: Page, chains: list[list[int]]) -> None:
     """J2 chain-merge fixpoint (combine_chains search_loop.cpp:576-891):
     each chain probes (maxsize+meangap)*3 along its axis from both ends,
     in an 11-point transverse band around the EMA anchor (A6); a unique
     same-direction same-double_line hit whose EMA anchor is within
-    max(h, h_other) merges. Iterates (via process_merge) to fixpoint."""
-    blocker = P.lineblocker
-    H, W = P.H, P.W
+    max(h, h_other) merges. Iterates (via process_merge) to fixpoint.
+    Only the head probe of a horizontal chain keeps walking past an
+    accepted chain without marking it done (search_loop.cpp:640-690)."""
+    band = np.arange(-5, 6, dtype=np.float64)
     while True:
         fix_chain_info(P, chains)
         cmap = create_chainid_map(P, chains)
@@ -919,142 +968,31 @@ def combine_chains(P: Page, chains: list[list[int]]) -> None:
             boxid1 = chain[0]
             boxid2 = chain[-1]
             w, h = _chain_max_wh(P, chain)
-            if abs(P.direction[boxid1]) < M_PI_4:
-                start_cy0 = _ema_toward_front(P, chain, P.cy)
-                end_cy0 = _ema_toward_back(P, chain, P.cy)
-                space = _mean_gap(P, chain, True)
-
-                # head: search left (search_loop.cpp:640-690)
-                other1: list[int] = []
-                done: list[int] = []
-                blocked = False
-                for xs in range(0, int((w + space) * 3.0), SCALE):
-                    x = int((P.cx[boxid1] - w / 2 - xs) / SCALE)
-                    if x < 0 or x >= W:
-                        continue
-                    for yk in range(-5, 6):
-                        y = int((start_cy0 + h / 8.0 * yk / 5) / SCALE)
-                        if y < 0 or y >= H:
-                            continue
-                        if blocker[y, x]:
-                            other1 = []
-                            blocked = True
-                            break
-                        oc = cmap.item(y, x)
-                        if oc >= 0 and oc != chainid and oc not in done \
-                                and oc not in other1:
-                            och = chains[oc]
-                            if och and abs(P.direction[och[-1]]) < M_PI_4 \
-                                    and P.double_line[och[-1]] == P.double_line[boxid1]:
-                                h1 = max(P.h[i] for i in och)
-                                end_cy1 = _ema_toward_back(P, och, P.cy)
-                                if abs(start_cy0 - end_cy1) < max(h, h1):
-                                    other1.append(oc)
-                                    continue
-                            done.append(oc)
-                    if blocked or done:
-                        break
-                if len(other1) == 1:
-                    merge_chain[chainid] = other1[0]
-
-                # tail: search right (search_loop.cpp:693-745)
-                other2: list[int] = []
-                blocked = False
-                for xs in range(0, int((w + space) * 3.0), SCALE):
-                    x = int((P.cx[boxid2] + w / 2 + xs) / SCALE)
-                    if x < 0 or x >= W:
-                        continue
-                    for yk in range(-5, 6):
-                        y = int((end_cy0 + h / 8.0 * yk / 5) / SCALE)
-                        if y < 0 or y >= H:
-                            continue
-                        if blocker[y, x]:
-                            other2 = []
-                            blocked = True
-                            break
-                        oc = cmap.item(y, x)
-                        if oc >= 0 and oc != chainid and oc not in done \
-                                and oc not in other2:
-                            och = chains[oc]
-                            if och and abs(P.direction[och[-1]]) < M_PI_4 \
-                                    and P.double_line[och[0]] == P.double_line[boxid2]:
-                                h1 = max(P.h[i] for i in och)
-                                start_cy1 = _ema_toward_front(P, och, P.cy)
-                                if abs(end_cy0 - start_cy1) < max(h, h1):
-                                    other2.append(oc)
-                            done.append(oc)
-                    if blocked or done:
-                        break
-                if len(other2) == 1:
-                    merge_chain[other2[0]] = chainid
+            horizontal = abs(P.direction.item(boxid1)) < M_PI_4
+            if horizontal:
+                along, cross, half, size = P.lcx, P.lcy, w, h
             else:
-                start_cx0 = _ema_toward_front(P, chain, P.cx)
-                end_cx0 = _ema_toward_back(P, chain, P.cx)
-                space = _mean_gap(P, chain, False)
-
-                # head: search up (search_loop.cpp:779-828)
-                other1 = []
-                done = []
-                blocked = False
-                for ys in range(0, int((h + space) * 3.0), SCALE):
-                    y = int((P.cy[boxid1] - h / 2 - ys) / SCALE)
-                    if y < 0 or y >= H:
-                        continue
-                    for xk in range(-5, 6):
-                        x = int((start_cx0 + w / 8.0 * xk / 5) / SCALE)
-                        if x < 0 or x >= W:
-                            continue
-                        if blocker[y, x]:
-                            other1 = []
-                            blocked = True
-                            break
-                        oc = cmap.item(y, x)
-                        if oc >= 0 and oc != chainid and oc not in done \
-                                and oc not in other1:
-                            och = chains[oc]
-                            if och and abs(P.direction[och[-1]]) > M_PI_4 \
-                                    and P.double_line[och[-1]] == P.double_line[boxid1]:
-                                w1 = max(P.w[i] for i in och)
-                                end_cx1 = _ema_toward_back(P, och, P.cx)
-                                if abs(start_cx0 - end_cx1) < max(w, w1):
-                                    other1.append(oc)
-                            done.append(oc)
-                    if blocked or done:
-                        break
-                if len(other1) == 1:
-                    merge_chain[chainid] = other1[0]
-
-                # tail: search down (search_loop.cpp:831-875)
-                other2 = []
-                blocked = False
-                for ys in range(0, int((h + space) * 3.0), SCALE):
-                    y = int((P.cy[boxid2] + h / 2 + ys) / SCALE)
-                    if y < 0 or y >= H:
-                        continue
-                    for xk in range(-5, 6):
-                        x = int((end_cx0 + w / 8.0 * xk / 5) / SCALE)
-                        if x < 0 or x >= W:
-                            continue
-                        if blocker[y, x]:
-                            other2 = []
-                            blocked = True
-                            break
-                        oc = cmap.item(y, x)
-                        if oc >= 0 and oc != chainid and oc not in done \
-                                and oc not in other2:
-                            och = chains[oc]
-                            if och and abs(P.direction[och[-1]]) > M_PI_4 \
-                                    and P.double_line[och[0]] == P.double_line[boxid2]:
-                                w1 = max(P.w[i] for i in och)
-                                start_cx1 = _ema_toward_front(P, och, P.cx)
-                                if abs(end_cx0 - start_cx1) < max(w, w1):
-                                    other2.append(oc)
-                            done.append(oc)
-                    if blocked or done:
-                        break
-                if len(other2) == 1:
-                    merge_chain[other2[0]] = chainid
-
+                along, cross, half, size = P.lcy, P.lcx, h, w
+            start = _ema_toward_front(chain, cross)
+            end = _ema_toward_back(chain, cross)
+            space = _mean_gap(P, chain, horizontal)
+            steps = np.arange(0, int((half + space) * 3.0), SCALE)
+            done: list[int] = []
+            dl = P.double_line.item
+            other1 = _probe_end(
+                P, chains, cmap, chainid, horizontal, True,
+                ((along[boxid1] - half / 2 - steps) / SCALE).astype(np.int64),
+                ((start + size / 8.0 * band / 5) / SCALE).astype(np.int64),
+                start, size, dl(boxid1), done)
+            if len(other1) == 1:
+                merge_chain[chainid] = other1[0]
+            other2 = _probe_end(
+                P, chains, cmap, chainid, horizontal, False,
+                ((along[boxid2] + half / 2 + steps) / SCALE).astype(np.int64),
+                ((end + size / 8.0 * band / 5) / SCALE).astype(np.int64),
+                end, size, dl(boxid2), done)
+            if len(other2) == 1:
+                merge_chain[other2[0]] = chainid
         if all(m == -1 for m in merge_chain):
             break
         process_merge(chains, merge_chain)
@@ -1508,11 +1446,9 @@ def register_chainid(P: Page, chains: list[list[int]]) -> None:
 def renumber_chain(P: Page) -> int:
     """A14 dense renumber of surviving chain ids in first-appearance order
     then sorted (renumber_chain after_search.cpp:62-79)."""
-    used = sorted({int(i) for i in P.idx if i >= 0})
-    remap = {old: new for new, old in enumerate(used)}
-    for i in range(P.n):
-        if P.idx[i] >= 0:
-            P.idx[i] = remap[int(P.idx[i])]
+    bound = P.idx >= 0
+    used = np.unique(P.idx[bound])
+    P.idx[bound] = np.searchsorted(used, P.idx[bound])
     return len(used)
 
 
@@ -1533,11 +1469,10 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
             continue
         sort_chain(chain, P)
         xs, ys, direction, w, h = make_track_line(P, chains, chainid, 1)
-        # vectorized band probe: per track point the walk climbs k =
-        # 1..K-1 transverse cells, stopping at the first blocker or
-        # foreign-chain cell — a per-column prefix-AND over the (K, n)
-        # cell grid; candidate extraction preserves the scalar loop's
-        # (point, k) discovery order exactly
+        # band probe over a (K-1, n) grid: per track point the walk climbs
+        # k = 1..K-1 transverse cells and stops at the first blocker or
+        # foreign-chain cell — a prefix AND down the grid; candidates come
+        # out in the scalar loop's (point, k) discovery order
         horizontal = abs(direction) < M_PI_4
         K = max(1, int((h if horizontal else w) * 1.25 / SCALE))
         xa = np.asarray(xs, dtype=np.int64) // SCALE
@@ -1546,38 +1481,26 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
         xa, ya = xa[inb], ya[inb]
         ruby_boxid: list[int] = []
         if len(xa) and K > 1:
-            alive = np.ones(len(xa), dtype=bool)
-            cand: list[tuple[int, int, int]] = []  # (point, k, oid)
-            for k in range(1, K):
-                if horizontal:
-                    rq, cq = ya - k, xa
-                    ok = rq >= 0
-                else:
-                    rq, cq = ya, xa + k
-                    ok = cq < P.W
-                alive = alive & ok
-                if not alive.any():
-                    break
-                rr = np.where(alive, rq, 0)
-                cc = np.where(alive, cq, 0)
-                barrier = P.lineblocker[rr, cc]
-                oc = cmap[rr, cc]
-                barrier |= (oc >= 0) & (oc != chainid)
-                alive = alive & ~barrier
-                oid = idimage[rr, cc]
-                hit = alive & (oid >= 0)
-                if hit.any():
-                    ids = oid[hit].astype(np.int64)
-                    good = (((P.subtype[ids] & 6) == 6)
-                            & (P.idx[ids] < 0))
-                    for pt, o in zip(np.nonzero(hit)[0][good].tolist(),
-                                     ids[good].tolist()):
-                        cand.append((pt, k, o))
-            seen: set[int] = set()
-            for _pt, _k, o in sorted(cand):
-                if o not in seen:
-                    seen.add(o)
-                    ruby_boxid.append(o)
+            depth = np.arange(1, K)[:, None]
+            if horizontal:
+                rr = ya - depth
+                cc = np.broadcast_to(xa, rr.shape)
+                inside = rr >= 0
+            else:
+                cc = xa + depth
+                rr = np.broadcast_to(ya, cc.shape)
+                inside = cc < P.W
+            rr = np.where(inside, rr, 0)
+            cc = np.where(inside, cc, 0)
+            oc = cmap[rr, cc]
+            open_ = inside & ~P.lineblocker[rr, cc] & ~((oc >= 0)
+                                                        & (oc != chainid))
+            oid = idimage[rr, cc].astype(np.int64)
+            hit = np.logical_and.accumulate(open_, axis=0) & (oid >= 0)
+            ids = np.where(hit, oid, 0)
+            hit &= ((P.subtype[ids] & 6) == 6) & (P.idx[ids] < 0)
+            pt, kk = np.nonzero(hit.T)
+            ruby_boxid = list(dict.fromkeys(oid[kk, pt].tolist()))
         for rid in ruby_boxid:
             if P.idx[rid] >= 0:
                 if rid in chains[P.idx[rid]]:
@@ -1601,16 +1524,17 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
                 P.subidx[b] = subidx
             continue
 
-        horizontal = abs(P.direction[chain[0]]) < M_PI_4
-        axis = P.cx if horizontal else P.cy
-        size = P.w if horizontal else P.h
-        rubyid.sort(key=lambda b: (axis[b], b))
+        horizontal = abs(P.direction.item(chain[0])) < M_PI_4
+        axis = P.lcx if horizontal else P.lcy
+        size = P.lw if horizontal else P.lh
+        rubyid.sort()
+        rubyid.sort(key=axis.__getitem__)
 
         # rubybase runs within the base sequence (ruby_search.cpp:151-167)
         rubybase_block: list[list[int]] = []
         tmp: list[int] = []
         for b in baseid:
-            if (P.subtype[b] & RUBY_BITS) == SUBTYPE_RUBYBASE:
+            if (P.subtype.item(b) & RUBY_BITS) == SUBTYPE_RUBYBASE:
                 tmp.append(b)
             else:
                 if tmp:
@@ -1706,11 +1630,11 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
                 ruby_count[r] += 1
         for i, rid in enumerate(rubyid):
             if ruby_to_base[i] < 0:
-                if max(P.w[rid], P.h[rid]) < 13:
+                if max(P.lw[rid], P.lh[rid]) < 13:
                     P.subtype[rid] |= SUBTYPE_ALONE_RUBY
                     P.idx[rid] = -1
             elif ruby_count[ruby_to_base[i]] < 2:
-                if max(P.w[rid], P.h[rid]) < 13:
+                if max(P.lw[rid], P.lh[rid]) < 13:
                     P.subtype[rid] |= SUBTYPE_ALONE_RUBY
                     P.idx[rid] = -1
                     for b in rubybase_block[ruby_to_base[i]]:
@@ -1764,9 +1688,7 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
 
     # rubies that never joined a line lose the ruby marking
     # (ruby_search.cpp:707-712)
-    for i in range(P.n):
-        if P.idx[i] < 0:
-            P.subtype[i] &= ~RUBY_BITS
+    P.subtype[P.idx < 0] &= ~RUBY_BITS
 
 
 def number_unbind(P: Page, idimage: np.ndarray, next_id: int) -> int:
@@ -2001,23 +1923,25 @@ def renumber_id(P: Page, id_max: int) -> int:
     params: dict[int, _LineParam] = {}
     chain_ids: list[int] = []
     major_direction = 0
+    cx, cy, bw, bh = P.lcx, P.lcy, P.lw, P.lh
+    idx, st = P.idx.tolist(), P.subtype.tolist()
     for i in range(P.n):
-        if P.idx[i] < 0:
+        cid = idx[i]
+        if cid < 0:
             continue
-        cid = int(P.idx[i])
         if cid not in params:
             params[cid] = _LineParam()
             chain_ids.append(cid)
-        if P.is_ruby(i) or (P.subtype[i] & SUBTYPE_ALONE_RUBY):
+        if (st[i] & 6) == 6 or (st[i] & SUBTYPE_ALONE_RUBY):
             continue
         lp = params[cid]
-        lp.d = 0 if (P.subtype[i] & SUBTYPE_VERTICAL) == 0 else 1
+        lp.d = 0 if (st[i] & SUBTYPE_VERTICAL) == 0 else 1
         major_direction += 1 if lp.d == 0 else -1
-        lp.cx1 = min(lp.cx1, P.cx[i] - P.w[i] / 2)
-        lp.cy1 = min(lp.cy1, P.cy[i] - P.h[i] / 2)
-        lp.cx2 = max(lp.cx2, P.cx[i] + P.w[i] / 2)
-        lp.cy2 = max(lp.cy2, P.cy[i] + P.h[i] / 2)
-        lp.size = max(lp.size, P.w[i], P.h[i])
+        lp.cx1 = min(lp.cx1, cx[i] - bw[i] / 2)
+        lp.cy1 = min(lp.cy1, cy[i] - bh[i] / 2)
+        lp.cx2 = max(lp.cx2, cx[i] + bw[i] / 2)
+        lp.cy2 = max(lp.cy2, cy[i] + bh[i] / 2)
+        lp.size = max(lp.size, bw[i], bh[i])
         lp.count += 1
     for lp in params.values():
         if lp.count <= 1:
@@ -2134,12 +2058,9 @@ def renumber_id(P: Page, id_max: int) -> int:
     ordered = horiz + vert + [c for c in chain_ids
                               if params[c].count == 0]
     remap = {old: new for new, old in enumerate(ordered)}
-    for i in range(P.n):
-        if P.idx[i] < 0:
-            continue
-        old = int(P.idx[i])
-        P.idx[i] = remap[old]
-        P.section[i] = params[old].section
+    bound = P.idx >= 0
+    P.idx[bound] = [remap[old] for old in P.idx[bound].tolist()]
+    P.section[bound] = [params[old].section for old in idx if old >= 0]
     return len(chain_ids)
 
 
@@ -2158,16 +2079,17 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
     chain_prev: list[list[int]] = [[] for _ in range(id_max)]
     dvals = np.array([lp.d for lp in lineparams], dtype=np.int64)
     sizes = np.array([lp.size for lp in lineparams], dtype=np.float64)
+    blocker = P.lineblocker
 
     def _scan(chainid: int, steps: np.ndarray, a: float, c1: float,
               t1: float, horizontal: bool, K: int, lp_size: float) -> None:
-        """One scan direction, vectorized: the transverse walk per outer
-        cell is a prefix-alive pass over a (K, n) grid — barriers
-        (blocker, perpendicular line) pre-compute; accept-candidates are
-        then replayed scalar-side in exact (outer, depth) order, because
-        whether an acceptance breaks the walk depends on the mutable
-        dedup state (a seen chain lets the reference keep walking).
-        Cell-stride note: the reference steps per PIXEL
+        """One scan direction over a (K, n) grid: depth k of an outer cell
+        is probed while every shallower cell was in the page and neither
+        blocker nor perpendicular line — a prefix AND down the grid.
+        Accept-candidates are then replayed in exact (outer, depth)
+        order, because whether an acceptance breaks the walk depends on
+        the mutable dedup state (a seen chain lets the reference keep
+        walking). Cell-stride note: the reference steps per PIXEL
         (make_block.cpp:67,91) but every probe is a cell lookup, so
         SCALE-strided steps visit the identical cell sequence."""
         if len(steps) == 0 or K <= 0:
@@ -2180,57 +2102,41 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
             xi = (t / SCALE).astype(np.int64)
             yi = (steps / SCALE).astype(np.int64)
         inb = (xi >= 0) & (xi < P.W) & (yi >= 0) & (yi < P.H)
-        xs_s = np.where(inb, xi, 0)
-        ys_s = np.where(inb, yi, 0)
-        blocked = inb & P.lineblocker[ys_s, xs_s]
+        blocked = inb & blocker[np.where(inb, yi, 0), np.where(inb, xi, 0)]
         nz = np.nonzero(blocked)[0]
-        cut = int(nz[0]) if len(nz) else len(steps)
-        walk = inb[:cut]
-        if not walk.any():
+        walk = np.nonzero(inb[:int(nz[0]) if len(nz) else len(steps)])[0]
+        if not len(walk):
             return
-        cols = xi[:cut][walk]
-        rows = yi[:cut][walk]
-        jidx = np.nonzero(walk)[0]
-        perp_d = 1 if horizontal else 2
-        alive = np.ones(len(cols), dtype=bool)
-        events: list[tuple[int, int, int]] = []
-        for k in range(K):
-            if horizontal:
-                rr, cc = rows + k, cols
-                alive = alive & (rr < P.H)
-            else:
-                rr, cc = rows, cols - k
-                alive = alive & (cc >= 0)
-            if not alive.any():
-                break
-            rr_s = np.where(alive, rr, 0)
-            cc_s = np.where(alive, cc, 0)
-            blk = alive & P.lineblocker[rr_s, cc_s]
-            oc = cmap[rr_s, cc_s]
-            foreign = alive & ~blk & (oc >= 0) & (oc != chainid)
-            if not foreign.any():
-                alive = alive & ~blk
-                continue
-            fj = np.nonzero(foreign)[0]
-            oc_f = oc[fj].astype(np.int64)
-            perp_f = dvals[oc_f] == perp_d
-            osz = sizes[oc_f]
-            denom = (np.minimum(lp_size, osz) if horizontal
-                     else np.maximum(lp_size, osz))
-            ratio = np.where(denom > 0,
-                             np.abs(osz - lp_size)
-                             / np.where(denom > 0, denom, 1.0), np.inf)
-            accept_f = ~perp_f & (ratio <= ALLOW_SIZEDIFF)
-            alive = alive & ~blk
-            if perp_f.any():
-                alive[fj[perp_f]] = False
-            for j, o in zip(fj[accept_f].tolist(),
-                            oc_f[accept_f].tolist()):
-                events.append((int(jidx[j]), k, int(o)))
-            # an acceptance only ends the walk when the chain is NEW —
-            # resolved below; deeper candidates stay collected
+        depth = np.arange(K)[:, None]
+        if horizontal:
+            rr = yi[walk] + depth
+            cc = np.broadcast_to(xi[walk], rr.shape)
+            inside = rr < P.H
+        else:
+            cc = xi[walk] - depth
+            rr = np.broadcast_to(yi[walk], cc.shape)
+            inside = cc >= 0
+        rr = np.where(inside, rr, 0)
+        cc = np.where(inside, cc, 0)
+        blk = blocker[rr, cc]
+        oc = cmap[rr, cc].astype(np.int64)
+        foreign = inside & ~blk & (oc >= 0) & (oc != chainid)
+        oc_s = np.where(foreign, oc, 0)
+        perp = foreign & (dvals[oc_s] == (1 if horizontal else 2))
+        osz = sizes[oc_s]
+        denom = (np.minimum(lp_size, osz) if horizontal
+                 else np.maximum(lp_size, osz))
+        ratio = np.where(denom > 0,
+                         np.abs(osz - lp_size)
+                         / np.where(denom > 0, denom, 1.0), np.inf)
+        ok = inside & ~blk & ~perp
+        alive = inside.copy()
+        alive[1:] &= np.logical_and.accumulate(ok[:-1], axis=0)
+        accept = alive & foreign & ~perp & (ratio <= ALLOW_SIZEDIFF)
+        jj, kk = np.nonzero(accept.T)
         done_depth: dict[int, int] = {}
-        for j, k, oc_v in sorted(events):
+        for j, k, oc_v in zip(jj.tolist(), kk.tolist(),
+                              oc[kk, jj].tolist()):
             if j in done_depth and k > done_depth[j]:
                 continue
             if oc_v not in chain_next[chainid]:
@@ -2238,25 +2144,29 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
                 chain_prev[oc_v].append(chainid)
                 done_depth[j] = k
 
+    cx, cy, bw, bh = P.lcx, P.lcy, P.lw, P.lh
+    sti, dli = P.subtype.item, P.double_line.item
     for chainid in range(id_max):
         chain = chains[chainid]
         if not chain:
             continue
         lp = lineparams[chainid]
+        if lp.d not in (1, 2):
+            continue
+        c = np.array(chain)
+        sz = np.maximum(P.w[c], P.h[c])
+        s_s = sz.max()
+        far = (np.abs(sz - s_s) / np.minimum(sz, s_s) > 0.5).tolist()
+        base = [b for b, f in zip(chain, far)
+                if not f and (sti(b) & 6) != 6 and dli(b) <= 0]
+        cx1 = cy1 = cx2 = cy2 = -1.0
         if lp.d == 2:
-            s_s = max(max(P.w[b], P.h[b]) for b in chain)
-            cx1 = cy1 = cx2 = cy2 = -1.0
-            for b in chain:
-                s = max(P.w[b], P.h[b])
-                if abs(s - s_s) / min(s, s_s) > 0.5:
-                    continue
-                if P.is_ruby(b) or P.double_line[b] > 0:
-                    continue
+            for b in base:
                 if cx1 < 0 and cy1 < 0:
-                    cx1 = P.cx[b] - P.w[b] / 2
-                    cy1 = P.cy[b]
-                cx2 = P.cx[b] + P.w[b] / 2
-                cy2 = P.cy[b]
+                    cx1 = cx[b] - bw[b] / 2
+                    cy1 = cy[b]
+                cx2 = cx[b] + bw[b] / 2
+                cy2 = cy[b]
             if cx2 - cx1 < SCALE:
                 continue
             a = (cy2 - cy1) / (cx2 - cx1)
@@ -2266,20 +2176,13 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
             bwd = np.arange(mid, int(cx1 - s_s), -SCALE, dtype=np.float64)
             _scan(chainid, fwd, a, cx1, cy1, True, K, lp.size)
             _scan(chainid, bwd, a, cx1, cy1, True, K, lp.size)
-        elif lp.d == 1:
-            s_s = max(max(P.w[b], P.h[b]) for b in chain)
-            cx1 = cy1 = cx2 = cy2 = -1.0
-            for b in chain:
-                s = max(P.w[b], P.h[b])
-                if abs(s - s_s) / min(s, s_s) > 0.5:
-                    continue
-                if P.is_ruby(b) or P.double_line[b] > 0:
-                    continue
+        else:
+            for b in base:
                 if cx1 < 0 and cy1 < 0:
-                    cx1 = P.cx[b]
-                    cy1 = P.cy[b] - P.h[b] / 2
-                cx2 = P.cx[b]
-                cy2 = P.cy[b] + P.h[b] / 2
+                    cx1 = cx[b]
+                    cy1 = cy[b] - bh[b] / 2
+                cx2 = cx[b]
+                cy2 = cy[b] + bh[b] / 2
             if cy2 - cy1 < SCALE:
                 continue
             a = (cx2 - cx1) / (cy2 - cy1)
@@ -2422,22 +2325,25 @@ def make_block(P: Page) -> None:
 
         chains: list[list[int]] = [[] for _ in range(id_max)]
         lineparams = [_LineParam() for _ in range(id_max)]
+        idx, st, sub = P.idx.tolist(), P.subtype.tolist(), P.subidx.tolist()
+        dl = P.double_line.tolist()
         for i in range(P.n):
-            if P.idx[i] < 0:
+            cid = idx[i]
+            if cid < 0:
                 continue
-            if P.is_ruby(i) or (P.subtype[i] & SUBTYPE_ALONE_RUBY):
+            if (st[i] & 6) == 6 or (st[i] & SUBTYPE_ALONE_RUBY):
                 continue
-            cid = int(P.idx[i])
             chains[cid].append(i)
             lp = lineparams[cid]
-            lp.size = max(lp.size, P.w[i], P.h[i])
+            lp.size = max(lp.size, P.lw[i], P.lh[i])
             lp.count += 1
-            if (P.subtype[i] & SUBTYPE_VERTICAL) == 0:
+            if (st[i] & SUBTYPE_VERTICAL) == 0:
                 lp.d = 2 if len(chains[cid]) > 1 else 0
             else:
                 lp.d = 1 if len(chains[cid]) > 1 else 0
+        # chains are built in box-id order: a stable sort keeps id on ties
         for chain in chains:
-            chain.sort(key=lambda b: (P.subidx[b], b))
+            chain.sort(key=sub.__getitem__)
 
         # warichu (double-line) run count per line (make_block.cpp:1417-1443)
         for chain in chains:
@@ -2446,31 +2352,30 @@ def make_block(P: Page) -> None:
             count = count1 = count2 = 0
             cid = -1
             for b in chain:
-                cid = int(P.idx[b])
-                if P.double_line[b] == 0:
+                cid = idx[b]
+                if dl[b] == 0:
                     if count1 > 1 or count2 > 1:
                         count += 1
                     count1 = count2 = 0
-                elif P.double_line[b] == 1:
+                elif dl[b] == 1:
                     count1 += 1
-                elif P.double_line[b] == 2:
+                elif dl[b] == 2:
                     count2 += 1
             if count1 > 1 or count2 > 1:
                 count += 1
             if cid >= 0:
                 lineparams[cid].doubleline = count
 
-        cmap = create_chainid_map(P, chains, 1.0, 0)
+        cmap = create_chainid_map(P, chains)
         chain_next, chain_prev = process_line(P, id_max, chains,
                                               lineparams, cmap)
 
         full_chains: list[list[int]] = [[] for _ in range(id_max)]
         for i in range(P.n):
-            if P.idx[i] < 0:
-                continue
-            full_chains[int(P.idx[i])].append(i)
+            if idx[i] >= 0:
+                full_chains[idx[i]].append(i)
         for chain in full_chains:
-            chain.sort(key=lambda b: (P.subidx[b], b))
+            chain.sort(key=sub.__getitem__)
 
         if rechain_search(P, full_chains, chain_next, chain_prev):
             break
@@ -2505,21 +2410,23 @@ def make_block(P: Page) -> None:
     for bi, chains_in in enumerate(blocks):
         for c in chains_in:
             block_of_chain[c] = bi
+    cx, cy, bw, bh = P.lcx, P.lcy, P.lw, P.lh
+    idx, st, sec = P.idx.tolist(), P.subtype.tolist(), P.section.tolist()
     for i in range(P.n):
-        if P.idx[i] < 0 or (P.subtype[i] & SUBTYPE_ALONE_RUBY):
+        if idx[i] < 0 or (st[i] & SUBTYPE_ALONE_RUBY):
             continue
-        bi = block_of_chain[int(P.idx[i])]
+        bi = block_of_chain[idx[i]]
         if bi < 0:
             continue
         bp = bparams[bi]
-        bp.d = 0 if (P.subtype[i] & SUBTYPE_VERTICAL) == 0 else 1
+        bp.d = 0 if (st[i] & SUBTYPE_VERTICAL) == 0 else 1
         bp.count += 1
-        bp.size = max(bp.size, P.w[i], P.h[i])
-        bp.sec = int(P.section[i])
-        bp.x_min = min(bp.x_min, P.cx[i] - P.w[i] / 2)
-        bp.y_min = min(bp.y_min, P.cy[i] - P.h[i] / 2)
-        bp.x_max = max(bp.x_max, P.cx[i] + P.w[i] / 2)
-        bp.y_max = max(bp.y_max, P.cy[i] + P.h[i] / 2)
+        bp.size = max(bp.size, bw[i], bh[i])
+        bp.sec = sec[i]
+        bp.x_min = min(bp.x_min, cx[i] - bw[i] / 2)
+        bp.y_min = min(bp.y_min, cy[i] - bh[i] / 2)
+        bp.x_max = max(bp.x_max, cx[i] + bw[i] / 2)
+        bp.y_max = max(bp.y_max, cy[i] + bh[i] / 2)
     for bp in bparams:
         if bp.x_min > bp.x_max:
             bp.x_min, bp.x_max = bp.x_max, bp.x_min
@@ -2574,30 +2481,26 @@ def make_block(P: Page) -> None:
         st = ed
 
     # assign block numbers (make_block.cpp:1696-1715)
-    chain_remap = [-1] * id_max
-    chain_page = [0] * id_max
+    chain_remap = np.full(id_max, -1, dtype=np.int64)
+    chain_page = np.zeros(id_max, dtype=np.int64)
     for renum, bi in enumerate(block_idx):
         for c in blocks[bi]:
             chain_remap[c] = renum
             chain_page[c] = bparams[bi].p
-    for i in range(P.n):
-        if P.idx[i] < 0:
-            continue
-        P.block[i] = chain_remap[int(P.idx[i])]
-        P.page[i] = chain_page[int(P.idx[i])]
+    bound = P.idx >= 0
+    P.block[bound] = chain_remap[P.idx[bound]]
+    P.page[bound] = chain_page[P.idx[bound]]
 
     # A14 dense per-block line renumber (make_block.cpp:1717-1737)
-    idx_in_block: dict[int, list[int]] = {}
+    idx, blk = P.idx.tolist(), P.block.tolist()
+    idx_in_block: dict[int, set[int]] = {}
     for i in range(P.n):
-        if P.idx[i] < 0 or P.block[i] < 0:
-            continue
-        idx_in_block.setdefault(int(P.block[i]), []).append(int(P.idx[i]))
-    for bi in idx_in_block:
-        idx_in_block[bi] = sorted(set(idx_in_block[bi]))
-    for i in range(P.n):
-        if P.idx[i] < 0 or P.block[i] < 0:
-            continue
-        P.idx[i] = idx_in_block[int(P.block[i])].index(int(P.idx[i]))
+        if idx[i] >= 0 and blk[i] >= 0:
+            idx_in_block.setdefault(blk[i], set()).add(idx[i])
+    rank = {b: {c: r for r, c in enumerate(sorted(v))}
+            for b, v in idx_in_block.items()}
+    P.idx[:] = [rank[blk[i]][idx[i]] if idx[i] >= 0 and blk[i] >= 0
+                else idx[i] for i in range(P.n)]
 
 
 def warichu_reorder(P: Page, order: list[int]) -> None:
@@ -2896,6 +2799,13 @@ def find_lostspace(P: Page, order: list[int]) -> None:
 
 # ---------------------------------------------------------------- public API
 
+def _reading_sort(P: Page, order: list[int]) -> None:
+    """W2 final sort (main.cpp:156-161): block, idx, subidx, subtype, id."""
+    keys = list(zip(P.block.tolist(), P.idx.tolist(), P.subidx.tolist(),
+                    P.subtype.tolist(), range(P.n)))
+    order.sort(key=keys.__getitem__)
+
+
 def run_textline_detect(boxes: dict, line_runs: np.ndarray,
                         sep_runs: np.ndarray, sep_vals: np.ndarray):
     """Full group stage for one page (process.cpp:46-67 + main.cpp:156-161
@@ -2918,11 +2828,9 @@ def run_textline_detect(boxes: dict, line_runs: np.ndarray,
     make_block(P)
 
     order = [i for i in range(P.n) if P.block[i] >= 0 and P.idx[i] >= 0]
-    order.sort(key=lambda i: (P.block[i], P.idx[i], P.subidx[i],
-                              P.subtype[i], i))
+    _reading_sort(P, order)
     warichu_reorder(P, order)
-    order.sort(key=lambda i: (P.block[i], P.idx[i], P.subidx[i],
-                              P.subtype[i], i))
+    _reading_sort(P, order)
     remove_dupspace(P, order)
     find_lostspace(P, order)
     return P, order

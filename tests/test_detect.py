@@ -1,9 +1,18 @@
 """Detect-stage tests (FIXTURES.md §6: NMS table; peak recovery)."""
 
 import numpy as np
+import pandas as pd
 
+from findtextcenternet_spark.config import (
+    LINE_VALUETH,
+    NMS_FILL,
+    NMS_INTER,
+    NMS_IOU,
+    SEP_RUN_FLOOR,
+)
 from findtextcenternet_spark.corpus import generate_pages, make_layout
 from findtextcenternet_spark.operators.detect import (
+    _runs_df,
     detect_page,
     greedy_nms,
     maxpool3x3,
@@ -66,6 +75,93 @@ def test_greedy_nms_rules():
         [0.7, 0, 100, 10, 10],
     ], dtype=np.float64)
     assert greedy_nms(boxes).all()
+
+
+def _greedy_nms_loop(boxes, hists=None, th_hist=-1.0):
+    """Reference: one candidate at a time against the accepted list."""
+    n = boxes.shape[0]
+    keep = np.zeros(n, dtype=bool)
+    x1 = boxes[:, 1] - boxes[:, 3] / 2
+    x2 = boxes[:, 1] + boxes[:, 3] / 2
+    y1 = boxes[:, 2] - boxes[:, 4] / 2
+    y2 = boxes[:, 2] + boxes[:, 4] / 2
+    area = boxes[:, 3] * boxes[:, 4]
+    acc = []
+    for i in range(n):
+        if hists is not None and hists[i] < th_hist:
+            continue
+        if acc:
+            a = np.array(acc)
+            ix = np.minimum(x2[i], x2[a]) - np.maximum(x1[i], x1[a])
+            iy = np.minimum(y2[i], y2[a]) - np.maximum(y1[i], y1[a])
+            inter = np.clip(ix, 0, None) * np.clip(iy, 0, None)
+            iou = inter / (area[i] + area[a] - inter)
+            if (iou > NMS_IOU).any():
+                continue
+            if (inter > NMS_INTER * area[i]).any():
+                continue
+            if inter.sum() > NMS_FILL * area[i]:
+                continue
+        keep[i] = True
+        acc.append(i)
+    return keep
+
+
+def test_greedy_nms_matches_loop_on_dense_page():
+    # more candidates than one pairwise block, dense enough that every
+    # rule fires, with the contrast gate on
+    rng = np.random.default_rng(7)
+    n = 5200
+    wh = rng.uniform(6, 48, (n, 2))
+    wh[::7] = wh[::7].round()  # exact duplicates of size
+    centers = rng.uniform(0, 900, (n, 2)).round(1)
+    centers[1::9] = centers[::9][:len(centers[1::9])]  # stacked boxes
+    boxes = np.column_stack([np.sort(rng.uniform(0, 1, n))[::-1],
+                             centers, wh])
+    hists = rng.uniform(0, 1, n)
+    for args in ((boxes,), (boxes, hists, 0.1)):
+        keep = greedy_nms(*args)
+        ref = _greedy_nms_loop(*args)
+        assert 200 < keep.sum() < n - 200
+        assert np.array_equal(keep, ref)
+
+
+def _runs_rows_loop(line_vals, sep_vals):
+    """Reference: per-row RLE, split on mask edges and value changes."""
+    rows = []
+    for name, vals, th in (("line", line_vals, LINE_VALUETH),
+                           ("sep", sep_vals, SEP_RUN_FLOOR)):
+        mask = vals > th
+        for y in range(mask.shape[0]):
+            row = mask[y]
+            if not row.any():
+                continue
+            q = np.where(row, np.round(vals[y], 6), 0.0)
+            change = np.nonzero(np.diff(q) != 0)[0] + 1
+            bounds = np.concatenate([[0], change, [len(row)]])
+            for s, e in zip(bounds[:-1], bounds[1:]):
+                if row[s]:
+                    rows.append((name, y, int(s), int(e) - 1, float(q[s])))
+    return pd.DataFrame(rows, columns=["channel", "y", "x1", "x2", "v"])
+
+
+def test_runs_df_matches_row_loop():
+    rng = np.random.default_rng(3)
+    for _ in range(20):
+        h, w = rng.integers(1, 60, 2)
+        levels = np.array([0.0, 0.03, 0.2, 0.45, 0.7, 0.982],
+                          dtype=np.float32)
+        line = levels[rng.integers(0, 6, (h, w))]
+        sep = np.repeat(levels[rng.integers(0, 6, (h, 1 + w // 4))], 4,
+                        axis=1)[:, :w]
+        got = _runs_df(line, sep)
+        want = _runs_rows_loop(line, sep)
+        assert len(want)
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+    empty = _runs_df(np.zeros((4, 5)), np.zeros((4, 5)))
+    assert empty.empty
+    assert list(empty.dtypes) == [object, np.int64, np.int64, np.int64,
+                                  np.float64]
 
 
 def test_detect_recovers_every_glyph():

@@ -1,6 +1,6 @@
 """Property-based layout fuzzing of the textline port (VERDICT r3 item 6).
 
-The 2,916-line ``run_textline_detect`` port is gated by curated fixtures
+The ``run_textline_detect`` port is gated by curated fixtures
 and golden parity; this hammers it with seeded structured-random layouts
 — glyph grids with jitter, ruby runs, vertical columns, separators,
 ornament specks, pure noise — and checks hard invariants:
