@@ -55,7 +55,7 @@ def _extract_html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _extract_synthetic_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full two-leg pipeline over the deterministic synthetic corpus
+    """Full extraction pipeline over the deterministic synthetic corpus
     (detect/group/decode are not SQL-expressible → rows-only check; the
     byte-parity gate lives in tests/test_pipeline_spark.py)."""
     from findtextcenternet_spark.corpus import generate_pages

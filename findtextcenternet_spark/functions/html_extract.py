@@ -12,7 +12,12 @@ Semantics mirror the reference's Aozora scraper
    (``gaiji_codepoint``) that the synthetic corpus generator inverts, so
    round-trip parity is exact without external data;
 5. strip single-line ``<span class="notes">…</span>`` (:99);
-6. strip all remaining tags (:100).
+6. strip all remaining tags (:100);
+7. F3 codepoint guard (process_ocr_base.py:236-247, as in
+   ``functions/crt.py``): lone surrogates U+D800–DFFF and codes above
+   ``MAX_CODEPOINT`` become U+FFFD. A gaiji key or a declared charset
+   (utf-7, unicode_escape) can yield surrogates, and UTF-8 — hence
+   Arrow — cannot encode them.
 
 Implementation is a brand-new vectorized pandas kernel: the regex steps run
 as pandas ``str.replace`` over the whole Arrow batch; only the depth-aware
@@ -26,6 +31,8 @@ from __future__ import annotations
 import re
 
 import pandas as pd
+
+from ..config import MAX_CODEPOINT
 
 _CHARSET_RE = re.compile(rb'charset=["\']?([\w-]+)', re.I)
 _CHARSET_ALIAS = {
@@ -64,6 +71,8 @@ _RUBY_HTML_RE = re.compile(r"<ruby><rb>(.*?)</rb>.*?<rt>(.*?)</rt>.*?</ruby>")
 _GAIJI_RE = re.compile(r"<img [^>]*?/(\d-\d\d-\d\d)\.png[^>]*?>")
 _NOTES_RE = re.compile(r'<span class="notes">.*?</span>')
 _TAG_RE = re.compile(r"<[^>]*?>")
+_BAD_CP_RE = re.compile(
+    f"[\\ud800-\\udfff\\U{MAX_CODEPOINT + 1:08x}-\\U0010ffff]")
 
 
 def gaiji_codepoint(key: str) -> int:
@@ -111,7 +120,7 @@ def extract_main_text(html: str) -> str:
     text = _GAIJI_RE.sub(lambda m: chr(gaiji_codepoint(m.group(1))), text)
     text = _NOTES_RE.sub("", text)
     text = _TAG_RE.sub("", text)
-    return text
+    return _BAD_CP_RE.sub("\ufffd", text)
 
 
 def extract_main_text_series(html: pd.Series) -> pd.Series:
@@ -128,4 +137,4 @@ def extract_main_text_series(html: pd.Series) -> pd.Series:
     s = s.map(lambda t: _GAIJI_RE.sub(lambda m: chr(gaiji_codepoint(m.group(1))), t) if "<img" in t else t)
     s = s.str.replace(_NOTES_RE, "", regex=True)
     s = s.str.replace(_TAG_RE, "", regex=True)
-    return s
+    return s.str.replace(_BAD_CP_RE, "\ufffd", regex=True)

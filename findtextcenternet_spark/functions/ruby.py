@@ -6,9 +6,12 @@ The canonical in-engine form is U+FFF9 base U+FFFA ruby U+FFFB
   html    <ruby><rb>base</rb><rp>(</rp><rt>ruby</rt><rp>)</rp></ruby>
   noruby  base
 
-All three are single regex substitutions, so on Spark they run JVM-side as
-``regexp_replace`` — no Python UDF. The pandas kernels below exist only for
-the golden reference and unit tests.
+All three are single regex substitutions. ``decode_ruby`` is the kernel
+form: the extraction pipeline's kind-dispatching kernel
+(``pipeline._unified_impl``) and the golden reference call it on every
+HTML and PDF document. ``decode_ruby_col`` is the same substitution as a
+JVM-side ``regexp_replace`` Column, for plans over text already in a
+DataFrame.
 """
 
 from __future__ import annotations
@@ -28,7 +31,7 @@ _HTML_RUBY_RE = re.compile(
 
 
 def decode_ruby(text: str, outtype: str = "aozora") -> str:
-    """Kernel form (golden reference / tests)."""
+    """Kernel form (extraction kernel, golden reference)."""
     if outtype == "aozora":
         return _RUBY_RE.sub(r"｜\1《\2》", text)
     if outtype == "html":

@@ -9,11 +9,10 @@ chain-merge fixpoint, unbound-box directional attach, warichu split,
 space chains, ruby band attach + interleave, next-line edges, block DFS,
 section (multi-column) reading order, warichu reorder, and the
 duplicate/lost space checks. This module is the DataFrame adapter, called
-once per page: in the default plan inside the one kind-dispatching
+once per page inside the pipeline's one kind-dispatching
 ``mapInPandas`` (``pipeline._unified_impl`` →
-``golden.extract_raster_page``), in the staged plan per url group of an
-``applyInPandas``. Pages never cross executors, so the stage scales
-linearly with page count regardless of cluster size.
+``golden.extract_raster_page``). Pages never cross executors, so the
+stage scales linearly with page count regardless of cluster size.
 """
 
 from __future__ import annotations

@@ -33,10 +33,9 @@ Documented divergences (each deliberate, none observable on clean pages):
   whose row bands interleave are read row-major like a table instead of
   column-major.
 
-Scale note: the default plan runs this once per page inside the one
+Scale note: the pipeline runs this once per page inside its one
 kind-dispatching ``mapInPandas`` (``pipeline._unified_impl`` →
-``golden.extract_raster_page`` → ``group.group_page``; the staged plan
-runs it per url group of an ``applyInPandas``). Pages never cross
+``golden.extract_raster_page`` → ``group.group_page``). Pages never cross
 executors, so the stage is embarrassingly parallel and its cost is
 O(page) regardless of corpus size. Within a page the cost is Python
 interpretation, not arithmetic: a median page grid is about 200x200 cells

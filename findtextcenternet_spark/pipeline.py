@@ -1,95 +1,39 @@
 """End-to-end Spark extraction pipeline (SURVEY.md §3.1 lifecycle).
 
-Default plan (round 4):
+One plan:
 
     pages ── spread(url) ── ONE kind-dispatching mapInPandas ── docs
              (1 scan, 1 shuffle, 2 stages)
 
 The kernel splits each Arrow batch by magic bytes and runs the HTML
 subset batch-vectorized, the PDF and raster subsets per-page — the
-distributed form of ``golden.extract_page_golden``. Why not a three-leg
-union sharing one spread: Catalyst pushes each leg's kind filter BELOW
-its repartition, so the union actually executes three source scans and
-three disjoint exchanges (verified via stage shuffle metrics) — three
-passes over the object store at corpus scale, seven stages, three Python
-worker pipelines. The union remains behind ``split_legs=True``;
-``staged=True`` keeps the separate legs plus the two-exchange
-detect/group/decode/assemble raster split for heterogeneous clusters
-(GPU detect executors) — see ``extract_raster_path``'s docstring.
+distributed form of ``golden.extract_page_golden``. Why one kernel and
+not a union of per-kind legs over the spread: Catalyst pushes each leg's
+kind filter BELOW its repartition, so such a union executes one source
+scan, one exchange and one Python worker chain per kind.
 
 Skew: urls are unique, so hashing on the full url is the perfect case of
 salted domain repartition (tests/test_skew.py). Poison pills are handled
-IN-PASS: every extraction kernel catches per-page failures and emits an
-``error`` row (null for clean docs) — no separate validation probe,
-nothing parsed twice, and one malformed page out of 10^12 costs one
-quarantine row, never a task.
+IN-PASS: the kernel catches per-page failures and emits an ``error`` row
+(null for clean docs) — no separate validation probe, nothing parsed
+twice, and one malformed page out of 10^12 costs one quarantine row,
+never a task.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .config import FEATURE_DIM
 from .corpus import RASTER_MARKER
 from .functions.html_extract import extract_main_text_series
-from .functions.ruby import decode_ruby_col
-from .operators.assemble import assemble_page
-from .operators.decode import expand_window, segment_windows, tokenize_page
-from .operators.detect import detect_page, parse_layout
-from .operators.group import group_page
+from .operators.pdf import PDF_MAGIC, extract_pdf_text
 
 # ---------------------------------------------------------------- schemas
-
-DETECT_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("kind", T.StringType()),          # 'box' | 'run'
-    T.StructField("box_id", T.LongType()),
-    T.StructField("p", T.DoubleType()),
-    T.StructField("cx", T.DoubleType()),
-    T.StructField("cy", T.DoubleType()),
-    T.StructField("w", T.DoubleType()),
-    T.StructField("h", T.DoubleType()),
-    T.StructField("code1", T.DoubleType()),
-    T.StructField("code2", T.DoubleType()),
-    T.StructField("code4", T.DoubleType()),
-    T.StructField("code8", T.DoubleType()),
-    T.StructField("feature", T.BinaryType()),   # 100 packed float32
-    T.StructField("channel", T.StringType()),        # runs only
-    T.StructField("ry", T.LongType()),
-    T.StructField("rx1", T.LongType()),
-    T.StructField("rx2", T.LongType()),
-    T.StructField("rv", T.DoubleType()),             # run cell value
-    T.StructField("error", T.StringType()),          # kind='err' rows
-])
-
-# tokens/meta/tok_of travel as packed little-endian buffers, one binary
-# cell per window: (n,106) float32, (n,9) float64, (m,) int64. Arrow moves
-# them as a single memcpy per cell; list<list<float>> would box every
-# element in Python on both sides of every exchange.
-WINDOW_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("win_id", T.LongType()),
-    T.StructField("keep_back", T.LongType()),
-    T.StructField("tokens", T.BinaryType()),
-    T.StructField("meta", T.BinaryType()),
-    T.StructField("error", T.StringType()),
-])
-
-DECODED_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("win_id", T.LongType()),
-    T.StructField("keep_back", T.LongType()),
-    T.StructField("pred", T.StringType()),
-    T.StructField("tok_of", T.BinaryType()),
-    T.StructField("meta", T.BinaryType()),
-    T.StructField("error", T.StringType()),
-])
 
 SPAN_TYPE = T.StructType([
     T.StructField("cx", T.DoubleType()), T.StructField("cy", T.DoubleType()),
@@ -130,265 +74,6 @@ DOC_SCHEMA = T.StructType([
     # non-null rows ARE the quarantine (poison pills never fail a task)
 ])
 
-# ---------------------------------------------------------------- stages
-
-
-def _make_detect_batches(weights_path: str | None = None):
-    """Factory: the mapInPandas detect kernel with ``weights_path``
-    captured in the closure (cloudpickle ships it to every worker — no
-    reliance on executor env propagation).
-
-    Poison pills are caught HERE, in the same pass that parses the page —
-    a malformed layout becomes one kind='err' row that flows to a
-    quarantine doc, never a task failure and never a second validation
-    parse of the whole corpus."""
-    def _detect_batches(it: Iterator[pd.DataFrame]
-                        ) -> Iterator[pd.DataFrame]:
-        from .operators.model_registry import get_detector_model
-
-        model = get_detector_model(weights_path)  # per-worker singleton;
-        # loads once, reused by every task this worker runs
-        yield from _detect_batches_impl(it, model)
-    return _detect_batches
-
-
-def _detect_batches_impl(it: Iterator[pd.DataFrame], model
-                         ) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        out = []
-        for url, html in zip(pdf["url"], pdf["html"]):
-            try:
-                layout = parse_layout(bytes(html))
-                boxes, runs = detect_page(layout, model)
-            except Exception as e:  # noqa: BLE001 — quarantine, never fail
-                out.append(pd.DataFrame([{
-                    "url": url, "kind": "err",
-                    "box_id": -1, "p": 0.0, "cx": 0.0, "cy": 0.0,
-                    "w": 0.0, "h": 0.0, "code1": 0.0, "code2": 0.0,
-                    "code4": 0.0, "code8": 0.0, "feature": None,
-                    "channel": None, "ry": -1, "rx1": -1, "rx2": -1,
-                    "rv": 0.0,
-                    "error": f"{type(e).__name__}: {e}"[:500],
-                }]))
-                continue
-            if not boxes.empty:
-                b = boxes.copy()
-                b.insert(0, "url", url)
-                b.insert(1, "kind", "box")
-                b["channel"] = None
-                b["ry"] = -1
-                b["rx1"] = -1
-                b["rx2"] = -1
-                b["rv"] = 0.0
-                b["error"] = None
-                out.append(b)
-            if not runs.empty:
-                r = pd.DataFrame({
-                    "url": url, "kind": "run",
-                    "box_id": -1, "p": 0.0, "cx": 0.0, "cy": 0.0,
-                    "w": 0.0, "h": 0.0, "code1": 0.0, "code2": 0.0,
-                    "code4": 0.0, "code8": 0.0,
-                    "feature": None,
-                    "channel": runs["channel"],
-                    "ry": runs["y"].astype("int64"),
-                    "rx1": runs["x1"].astype("int64"),
-                    "rx2": runs["x2"].astype("int64"),
-                    "rv": runs["v"].astype("float64"),
-                    "error": None,
-                })
-                out.append(r)
-            if boxes.empty and runs.empty:
-                # sentinel: a valid page with no detections must still
-                # reach the assemble stage (the fused leg emits an
-                # empty-text doc for it; without this row the url would
-                # silently vanish from the staged leg and never settle
-                # in the lineage done-set)
-                out.append(pd.DataFrame([{
-                    "url": url, "kind": "page",
-                    "box_id": -1, "p": 0.0, "cx": 0.0, "cy": 0.0,
-                    "w": 0.0, "h": 0.0, "code1": 0.0, "code2": 0.0,
-                    "code4": 0.0, "code8": 0.0, "feature": None,
-                    "channel": None, "ry": -1, "rx1": -1, "rx2": -1,
-                    "rv": 0.0, "error": None,
-                }]))
-        if out:
-            yield pd.concat(out, ignore_index=True)[
-                [f.name for f in DETECT_SCHEMA.fields]]
-
-
-def _group_and_window(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas(url) kernel: group boxes into reading order, tokenize,
-    segment into decode windows. Error rows (from detect) and this
-    kernel's own failures pass through as error windows."""
-    url = key[0]
-    cols = ["url", "win_id", "keep_back", "tokens", "meta", "error"]
-    err = pdf.loc[pdf["kind"] == "err", "error"]
-    if len(err):
-        return pd.DataFrame([(url, -1, 0, None, None, err.iloc[0])],
-                            columns=cols)
-    try:
-        boxes = pdf[pdf["kind"] == "box"][
-            ["box_id", "p", "cx", "cy", "w", "h",
-             "code1", "code2", "code4", "code8", "feature"]
-        ].sort_values("box_id").reset_index(drop=True)
-        runs = pd.DataFrame({
-            "channel": pdf.loc[pdf["kind"] == "run", "channel"],
-            "y": pdf.loc[pdf["kind"] == "run", "ry"],
-            "x1": pdf.loc[pdf["kind"] == "run", "rx1"],
-            "x2": pdf.loc[pdf["kind"] == "run", "rx2"],
-            "v": pdf.loc[pdf["kind"] == "run", "rv"],
-        }).sort_values(["channel", "y", "x1"]).reset_index(drop=True)
-
-        ordered = group_page(boxes, runs)
-        tokens, meta = tokenize_page(ordered)
-        rows = []
-        for wi, (start, end, keep_back) in enumerate(segment_windows(tokens)):
-            rows.append((url, wi, keep_back,
-                         np.ascontiguousarray(tokens[start:end],
-                                              dtype=np.float32).tobytes(),
-                         np.ascontiguousarray(meta[start:end],
-                                              dtype=np.float64).tobytes(),
-                         None))
-    except Exception as e:  # noqa: BLE001 — quarantine, never fail
-        return pd.DataFrame([(url, -1, 0, None, None,
-                              f"{type(e).__name__}: {e}"[:500])],
-                            columns=cols)
-    if not rows:
-        # zero decode windows (empty page, or grouping dropped every box):
-        # emit a sentinel so the url still yields an (empty) doc row
-        rows.append((url, -1, 0, None, None, None))
-    return pd.DataFrame(rows, columns=cols)
-
-
-def _make_decode_batches(weights_path: str | None = None,
-                         max_windows: int | None = None,
-                         max_tokens: int | None = None):
-    """Factory: mask-predict decode kernel, batched across pages; the
-    residue head (surrogate or real softmax heads) resolves per worker
-    from the captured weights path.
-
-    ``max_windows`` / ``max_tokens`` bound the model-facing batch
-    geometry independently of Arrow's ``maxRecordsPerBatch``: a GPU
-    transformer wants full batches (merge the small Arrow batches a
-    token-heavy page forces) without OOM (split a batch whose total
-    token count exceeds the device budget) — see ``rebatch_windows``."""
-    def _decode_batches(it: Iterator[pd.DataFrame]
-                        ) -> Iterator[pd.DataFrame]:
-        from .operators.model_registry import get_residue_heads
-
-        head = get_residue_heads(weights_path)
-        yield from _decode_batches_impl(
-            rebatch_windows(it, max_windows, max_tokens), head)
-    return _decode_batches
-
-
-def _window_tokens(row_tokens) -> int:
-    """Token count of one packed window cell (float32 × enc_dim)."""
-    if row_tokens is None:
-        return 0
-    return len(row_tokens) // (4 * (FEATURE_DIM + 6))
-
-
-def rebatch_windows(it: Iterator[pd.DataFrame],
-                    max_windows: int | None,
-                    max_tokens: int | None) -> Iterator[pd.DataFrame]:
-    """Re-chunk the incoming Arrow batches into model-facing batches of
-    at most ``max_windows`` rows and ``max_tokens`` total tokens
-    (whichever binds first; a single over-budget window still ships
-    alone — it cannot be split below one window). With both limits None
-    this is the identity pass-through."""
-    if max_windows is None and max_tokens is None:
-        yield from it
-        return
-    buf: list[pd.DataFrame] = []
-    n_rows = n_toks = 0
-
-    def flush():
-        nonlocal buf, n_rows, n_toks
-        if buf:
-            yield pd.concat(buf, ignore_index=True) if len(buf) > 1 \
-                else buf[0]
-        buf, n_rows, n_toks = [], 0, 0
-
-    for pdf in it:
-        start = 0
-        for i in range(len(pdf)):
-            t = _window_tokens(pdf["tokens"].iloc[i])
-            over_rows = max_windows is not None and n_rows + 1 > max_windows
-            over_toks = (max_tokens is not None and n_toks + t > max_tokens
-                         and n_rows > 0)
-            if over_rows or over_toks:
-                if i > start:
-                    buf.append(pdf.iloc[start:i])
-                start = i
-                yield from flush()
-            n_rows += 1
-            n_toks += t
-        if start < len(pdf):
-            buf.append(pdf.iloc[start:])
-    yield from flush()
-
-
-def _decode_batches_impl(it: Iterator[pd.DataFrame], head
-                         ) -> Iterator[pd.DataFrame]:
-    enc_dim = FEATURE_DIM + 6
-    for pdf in it:
-        preds, toks = [], []
-        for tokens, meta, error in zip(pdf["tokens"], pdf["meta"],
-                                       pdf["error"]):
-            if error is not None or tokens is None:
-                preds.append(None)
-                toks.append(None)
-                continue
-            tok = np.frombuffer(tokens, dtype=np.float32).reshape(-1, enc_dim)
-            mt = np.frombuffer(meta, dtype=np.float64).reshape(-1, 9)
-            pred, tok_of = expand_window(tok, mt, head)
-            preds.append(pred)
-            toks.append(np.ascontiguousarray(tok_of,
-                                             dtype=np.int64).tobytes())
-        yield pd.DataFrame({
-            "url": pdf["url"], "win_id": pdf["win_id"],
-            "keep_back": pdf["keep_back"], "pred": preds, "tok_of": toks,
-            "meta": pdf["meta"], "error": pdf["error"],
-        })
-
-
-def _assemble_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    url = key[0]
-    err = pdf["error"].dropna()
-    if len(err):
-        return pd.DataFrame([{
-            "url": url, "text": None, "aozora": None, "noruby": None,
-            "spans": None, "lines": None, "blocks": None,
-            "path": "raster", "error": err.iloc[0],
-        }])
-    try:
-        # drop error-free sentinel windows (win_id < 0): they carry no
-        # tokens — assemble over whatever real windows remain (possibly
-        # none → empty-text doc, byte-identical to the fused leg)
-        pdf = pdf[pdf["win_id"] >= 0].sort_values("win_id")
-        windows = [
-            {"pred": r.pred,
-             "tok_of": np.frombuffer(r.tok_of, dtype=np.int64),
-             "meta": np.frombuffer(r.meta, dtype=np.float64).reshape(-1, 9),
-             "keep_back": int(r.keep_back)}
-            for r in pdf.itertuples()
-        ]
-        rec = assemble_page(windows)
-    except Exception as e:  # noqa: BLE001 — quarantine, never fail
-        return pd.DataFrame([{
-            "url": url, "text": None, "aozora": None, "noruby": None,
-            "spans": None, "lines": None, "blocks": None,
-            "path": "raster", "error": f"{type(e).__name__}: {e}"[:500],
-        }])
-    return pd.DataFrame([{
-        "url": url, "text": rec["text"], "aozora": rec["aozora"],
-        "noruby": rec["noruby"], "spans": rec["spans"],
-        "lines": rec["lines"], "blocks": rec["blocks"], "path": "raster",
-        "error": None,
-    }])
-
-
 # ---------------------------------------------------------------- pipeline
 
 
@@ -397,273 +82,25 @@ def extract_html_udf(html: pd.Series) -> pd.Series:
     return extract_main_text_series(html)
 
 
-# explicit StructType: a DDL-string returnType would be parsed at import
-# time and require an active SparkContext
-_EXTRACT_STRUCT = T.StructType([
-    T.StructField("text", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
-
-# one shared message so the unified kernel and the split-legs union emit
-# byte-identical quarantine rows for a null page cell
+# quarantine message for a null page cell: it has no magic bytes, so it
+# settles on the html path
 NULL_PAGE_ERROR = "NullPage: html column is null"
 
 
-def _html_robust_batch(html: pd.Series) -> pd.DataFrame:
-    """Whole-batch vectorized kernel with a per-row fallback: runs once;
-    only if it throws does the batch retry row-at-a-time so one poison
-    page costs one error row, not the batch. Null cells are quarantined
-    up front (the vectorized kernel would silently map them to empty
-    text — a lost page, not a settled one; ADVICE r4)."""
-    nulls = html.isna()
-    if nulls.any():
-        out = pd.DataFrame({"text": None, "error": None}, index=html.index,
-                           dtype="object")
-        out.loc[nulls, "error"] = NULL_PAGE_ERROR
-        sub = _html_robust_batch(html[~nulls])
-        out.loc[~nulls, "text"] = sub["text"].values
-        out.loc[~nulls, "error"] = sub["error"].values
-        return out
-    try:
-        return pd.DataFrame({"text": extract_main_text_series(html),
-                             "error": None})
-    except Exception:  # noqa: BLE001 — isolate the poison row
-        texts, errs = [], []
-        for b in html:
-            try:
-                texts.append(extract_main_text_series(
-                    pd.Series([b])).iloc[0])
-                errs.append(None)
-            except Exception as e:  # noqa: BLE001
-                texts.append(None)
-                errs.append(f"{type(e).__name__}: {e}"[:500])
-        return pd.DataFrame({"text": texts, "error": errs})
-
-
-@F.pandas_udf(_EXTRACT_STRUCT)
-def extract_html_robust_udf(html: pd.Series) -> pd.DataFrame:
-    return _html_robust_batch(html)
-
-
-@F.pandas_udf(_EXTRACT_STRUCT)
-def extract_pdf_udf(blob: pd.Series) -> pd.DataFrame:
-    from .operators.pdf import extract_pdf_text
-
-    texts, errs = [], []
-    for b in blob:
-        try:
-            texts.append(extract_pdf_text(bytes(b)))
-            errs.append(None)
-        except Exception as e:  # noqa: BLE001 — quarantine, never fail
-            texts.append(None)
-            errs.append(f"{type(e).__name__}: {e}"[:500])
-    return pd.DataFrame({"text": texts, "error": errs})
-
-
-def is_raster_col():
-    # binary prefix probe — JVM-side, no decoded copy of the page
-    return F.startswith(F.col("html"), F.lit(RASTER_MARKER))
-
-
-def is_pdf_col():
-    return F.startswith(F.col("html"), F.lit(b"%PDF-"))
-
-
-def extract_pdf_path(pages: DataFrame) -> DataFrame:
-    """The PDF leg: text-layer parse, one vectorized UDF, fully narrow
-    (operators/pdf.py; north rule 'PDF/layout parse'). Parse failures
-    become error rows in the same pass."""
-    return (
-        pages.filter(is_pdf_col())
-        .select("url", extract_pdf_udf(F.col("html")).alias("r"))
-        .select(
-            "url", F.col("r.text").alias("text"),
-            decode_ruby_col(F.col("r.text"), "aozora").alias("aozora"),
-            decode_ruby_col(F.col("r.text"), "noruby").alias("noruby"),
-            F.array().cast(T.ArrayType(SPAN_TYPE)).alias("spans"),
-            F.array().cast(T.ArrayType(LINE_TYPE)).alias("lines"),
-            F.array().cast(T.ArrayType(BLOCK_TYPE)).alias("blocks"),
-            F.lit("pdf").alias("path"),
-            F.col("r.error").alias("error"),
-        )
-    )
-
-
-def extract_html_path(pages: DataFrame) -> DataFrame:
-    """The pure-HTML leg: one vectorized UDF, fully narrow. Charset
-    detection (utf-8/cp932/latin-1) happens inside the kernel; failures
-    become error rows in the same pass. Null html cells route HERE (the
-    magic-byte probes return null → the other legs' filters drop them)
-    and the kernel quarantines them — without the isNull() arm a null
-    page would vanish from the output and never settle in the lineage
-    done-set (ADVICE r4 medium)."""
-    return (
-        pages.filter((~is_raster_col() & ~is_pdf_col())
-                     | F.col("html").isNull())
-        .select("url", extract_html_robust_udf(F.col("html")).alias("r"))
-        .select(
-            "url", F.col("r.text").alias("text"),
-            decode_ruby_col(F.col("r.text"), "aozora").alias("aozora"),
-            decode_ruby_col(F.col("r.text"), "noruby").alias("noruby"),
-            F.array().cast(T.ArrayType(SPAN_TYPE)).alias("spans"),
-            F.array().cast(T.ArrayType(LINE_TYPE)).alias("lines"),
-            F.array().cast(T.ArrayType(BLOCK_TYPE)).alias("blocks"),
-            F.lit("html").alias("path"),
-            F.col("r.error").alias("error"),
-        )
-    )
-
-
-def _parallelism(df: DataFrame, num_partitions: int | None) -> int:
-    if num_partitions is not None:
-        return num_partitions
-    # 4 tasks per core: measured best at local[32] on 100k docs (2 waves
-    # leave cores idle in each stage's straggler tail; 8 waves over-pay
-    # per-task overhead)
-    return df.sparkSession.sparkContext.defaultParallelism * 4
-
-
-def _coalesce_cheap_legs(spread: DataFrame) -> DataFrame:
-    """Per-leg parallelism for the scalar-UDF legs (VERDICT r3 weak item).
-
-    The HTML/PDF kernels cost microseconds per page, so at the raster
-    leg's 4-tasks-per-core spread the fixed per-task cost (Python worker
-    round-trip, Arrow batch setup) could dominate them on a mixed
-    web-shape corpus. ``coalesce`` to N tasks per core is a NARROW merge
-    of the post-shuffle partitions — no new exchange; each cheap task
-    reads several shuffle partitions.
-
-    Measured (20-30k mixed docs, interleaved fresh-JVM A/B): the
-    isolated html stage gains 2.3x from coalesce(cores) at local[32],
-    but in the full union the cheap tasks overlap the raster stage, so
-    end-to-end the variants are a wash at 8 cores (850 vs 826 docs/s)
-    and fine grain wins best-of at 32 (1352 vs 1020 — coarse 1-2 s tasks
-    straggle in this guest's steal windows). The default is therefore
-    OFF: the union already hides the per-task cost. Against the plain
-    process pool the authoritative comparison is the round-5 PAIRED
-    same-window protocol (scripts/ab_mixed.py, BENCH.md): on the same
-    disk-to-docs job the median Spark/pool ratio is 1.003 at 32 workers
-    and 0.928 at 8 (pairs span 0.83-1.18) — parity within noise; the
-    r3/r4 unpaired window ranges that suggested a pool lead compared a
-    RAM-fed control against the disk-fed pipeline. Set
-    ``SPARK_GRAFT_CHEAP_TASKS_PER_CORE=1`` (or higher) on deployments
-    where per-task fixed cost is the measured bottleneck (many tiny
-    executors; scalar stages without a heavy sibling stage to overlap)."""
-    import os
-
-    tpc = int(os.environ.get("SPARK_GRAFT_CHEAP_TASKS_PER_CORE", "0"))
-    if tpc <= 0:
-        return spread
-    sc = spread.sparkSession.sparkContext
-    return spread.coalesce(max(1, sc.defaultParallelism * tpc))
-
-
-def _make_raster_fused_batches(weights_path: str | None = None):
-    """Factory: fused raster kernel — detect → group → window → decode →
-    assemble for each page inside ONE mapInPandas — the same per-page
-    kernels as the staged path (and the golden reference), so output
-    parity is by construction. Poison pages become error rows in the
-    same pass."""
-    def _raster_fused_batches(it: Iterator[pd.DataFrame]
-                              ) -> Iterator[pd.DataFrame]:
-        from .operators.model_registry import get_detector_model
-
-        get_detector_model(weights_path)  # per-worker singleton
-        yield from _raster_fused_impl(it, weights_path)
-    return _raster_fused_batches
-
-
-def _raster_fused_impl(it: Iterator[pd.DataFrame],
-                       weights_path: str | None
-                       ) -> Iterator[pd.DataFrame]:
-    from .golden import extract_raster_page
-
-    doc_cols = [f.name for f in DOC_SCHEMA.fields]
-    for pdf in it:
-        recs = []
-        for url, html in zip(pdf["url"], pdf["html"]):
-            try:
-                rec = extract_raster_page(bytes(html), weights_path)
-                recs.append({
-                    "url": url, "text": rec["text"],
-                    "aozora": rec["aozora"], "noruby": rec["noruby"],
-                    "spans": rec["spans"], "lines": rec["lines"],
-                    "blocks": rec["blocks"], "path": "raster",
-                    "error": None,
-                })
-            except Exception as e:  # noqa: BLE001 — quarantine, never fail
-                recs.append({
-                    "url": url, "text": None, "aozora": None,
-                    "noruby": None, "spans": None, "lines": None,
-                    "blocks": None, "path": "raster",
-                    "error": f"{type(e).__name__}: {e}"[:500],
-                })
-        if recs:
-            yield pd.DataFrame(recs)[doc_cols]
-
-
-def extract_raster_path(pages: DataFrame,
-                        num_partitions: int | None = None,
-                        staged: bool = False,
-                        weights_path: str | None = None,
-                        decode_batch_windows: int | None = None,
-                        decode_batch_tokens: int | None = None
-                        ) -> DataFrame:
-    """The raster leg.
-
-    Default (``staged=False``): ONE narrow mapInPandas running the whole
-    detect → group/window → decode → assemble chain per page — zero
-    shuffles. Every stage is page-local, so when detect and group run on
-    the same resource type there is nothing to exchange; fusing removes
-    two shuffles and four Arrow crossings per document. Measured at 9000
-    all-raster docs: the staged path's 2→8-core scaling efficiency is
-    ~0.68 (per-worker Arrow/shuffle overhead grows with concurrency in
-    one JVM) while the same kernels in plain processes scale at ~0.91
-    (scripts/mp_control.py) — fusion puts the Spark path back on the
-    process-scaling curve, and at 100 TB two fewer shuffles of the box
-    stream is strictly less cluster work.
-
-    ``staged=True`` keeps the two-exchange architecture — detect
-    (mapInPandas) → repartition(url) → group/window (applyInPandas) →
-    decode (mapInPandas, batched ACROSS pages) → repartition(url) →
-    assemble — for heterogeneous clusters where the detector runs on GPU
-    executors and grouping on CPU executors, or where single giant pages
-    would serialize a fused task. Each grouped stage is fed by an
-    EXPLICIT ``repartition(n, url)``: the groupBy reuses that exchange,
-    and a user-specified partition count is exempt from AQE partition
-    coalescing (AQE's 64 MB advisory target would coalesce these
-    Python-CPU-bound stages to a handful of partitions — measured 2.3×
-    slowdown at local[32]).
-
-    ``decode_batch_windows`` / ``decode_batch_tokens`` bound the staged
-    decode stage's model-facing batch geometry (windows per batch, total
-    tokens per batch) independently of Arrow's maxRecordsPerBatch — a GPU
-    transformer gets full batches without OOM on token-heavy pages
-    (tests/test_decode_batching.py asserts the geometry).
-
-    Both paths produce byte-identical output (tests/test_pipeline_spark.py
-    fused-vs-staged parity).
-    """
-    raster = pages.filter(is_raster_col()).select("url", "html")
-    if not staged:
-        return raster.mapInPandas(_make_raster_fused_batches(weights_path),
-                                  DOC_SCHEMA)
-    n = _parallelism(pages, num_partitions)
-    detected = raster.mapInPandas(_make_detect_batches(weights_path),
-                                  DETECT_SCHEMA)
-    windows = (detected.repartition(n, F.col("url"))
-               .groupBy("url").applyInPandas(_group_and_window,
-                                             WINDOW_SCHEMA))
-    decoded = windows.mapInPandas(
-        _make_decode_batches(weights_path, decode_batch_windows,
-                             decode_batch_tokens), DECODED_SCHEMA)
-    return (decoded.repartition(n, F.col("url"))
-            .groupBy("url").applyInPandas(_assemble_group, DOC_SCHEMA))
+def is_html_col():
+    """Column-side twin of the kernel's kind dispatch: true for the pages
+    the HTML path takes — no raster or PDF magic bytes, or a null cell
+    (quarantined there). Binary prefix probes, JVM-side, no decoded copy
+    of the page."""
+    html = F.col("html")
+    return ((~F.startswith(html, F.lit(RASTER_MARKER))
+             & ~F.startswith(html, F.lit(PDF_MAGIC)))
+            | html.isNull())
 
 
 def spread_pages(pages: DataFrame, num_partitions: int | None = None,
                  ) -> DataFrame:
-    """Hash-repartition the input on ``url`` before the compute legs.
+    """Hash-repartition the input on ``url`` before the extraction kernel.
 
     Two jobs at once (SURVEY.md §4 "what needs explicit engineering"):
       * parallelism floor — a corpus written as few giant files (or one
@@ -673,8 +110,8 @@ def spread_pages(pages: DataFrame, num_partitions: int | None = None,
         (perfect) case of salted-repartition by domain: a hot host's pages
         scatter uniformly instead of landing in one task.
 
-    Both downstream legs reuse the single exchange (Catalyst ReuseExchange),
-    so this adds exactly one shuffle of the raw pages.
+    This is the plan's one shuffle; column pruning pushes through it, so
+    only the columns the kernel reads cross the exchange.
     """
     if num_partitions is None:
         sc = pages.sparkSession.sparkContext
@@ -688,10 +125,9 @@ def _make_unified_batches(weights_path: str | None = None):
     """Factory: the single kind-dispatching extraction kernel — the
     distributed form of ``golden.extract_page_golden``'s dispatch. Within
     each Arrow batch, rows split by magic bytes: the HTML subset runs the
-    batch-vectorized ``extract_main_text_series`` (with the same
-    whole-batch-then-per-row poison fallback as the dedicated leg), PDF
-    and raster subsets run their per-page kernels. One kernel, one
-    Python worker chain, byte-identical output to the three-leg union."""
+    batch-vectorized ``extract_main_text_series`` (whole batch first,
+    row-at-a-time only if that throws, so one poison page costs one error
+    row), PDF and raster subsets run their per-page kernels."""
     def _unified(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .operators.model_registry import get_detector_model
 
@@ -711,7 +147,6 @@ def _ruby_variants(text):
 def _unified_impl(it: Iterator[pd.DataFrame], weights_path: str | None
                   ) -> Iterator[pd.DataFrame]:
     from .golden import extract_raster_page
-    from .operators.pdf import extract_pdf_text
 
     doc_cols = [f.name for f in DOC_SCHEMA.fields]
     empty = {"spans": [], "lines": [], "blocks": []}
@@ -723,7 +158,7 @@ def _unified_impl(it: Iterator[pd.DataFrame], weights_path: str | None
                 # a null page cell is malformed input, not a task failure
                 # (ADVICE r4 medium): quarantine it like any poison row.
                 # 'html' path label: a null has no magic bytes, so it
-                # belongs to the catch-all leg — same label both plans.
+                # belongs to the catch-all kind (see ``is_html_col``).
                 recs[i] = {"url": url, "text": None, "aozora": None,
                            "noruby": None, **empty, "path": "html",
                            "error": NULL_PAGE_ERROR}
@@ -743,7 +178,7 @@ def _unified_impl(it: Iterator[pd.DataFrame], weights_path: str | None
                                "noruby": None, "spans": None, "lines": None,
                                "blocks": None, "path": "raster",
                                "error": f"{type(e).__name__}: {e}"[:500]}
-            elif b.startswith(b"%PDF-"):
+            elif b.startswith(PDF_MAGIC):
                 try:
                     text = extract_pdf_text(b)
                     az, nr = _ruby_variants(text)
@@ -782,37 +217,14 @@ def _unified_impl(it: Iterator[pd.DataFrame], weights_path: str | None
 
 def extract_documents(pages: DataFrame,
                       num_partitions: int | None = None,
-                      staged: bool = False,
-                      weights_path: str | None = None,
-                      split_legs: bool = False) -> DataFrame:
+                      weights_path: str | None = None) -> DataFrame:
     """Full extraction, one output table (``error`` column null for clean
-    docs — non-null rows are the in-pass quarantine). ``weights_path``
+    docs — non-null rows are the in-pass quarantine): ONE scan → one
+    url-hash spread → ONE kind-dispatching mapInPandas. ``weights_path``
     routes the raster path through the real-model forward
     (operators/models.py); on a cluster ship the file with
-    ``spark-submit --files`` and pass ``SparkFiles.get(...)`` here.
-
-    Default plan: ONE scan → one url-hash spread → ONE kind-dispatching
-    mapInPandas. The previous three-leg union is kept behind
-    ``split_legs=True`` (and is implied by ``staged=True``) — measured
-    against it: Catalyst pushes each leg's kind filter BELOW its
-    repartition, so the union actually executes THREE source scans and
-    three disjoint exchanges (verified via stage shuffle metrics) — at
-    corpus scale that is three full passes over the object store where
-    the unified kernel does one, and on a mixed corpus the union pays
-    three Python-worker pipelines and seven stages for the unified
-    plan's two."""
-    spread = spread_pages(pages, num_partitions)
-    if staged or split_legs:
-        # scalar legs optionally run at N tasks/core over the spread
-        # (narrow coalesce — no second shuffle); raster keeps 4/core
-        cheap = (_coalesce_cheap_legs(spread)
-                 if num_partitions is None or num_partitions > 0 else spread)
-        return (extract_html_path(cheap)
-                .unionByName(extract_pdf_path(cheap))
-                .unionByName(extract_raster_path(spread, num_partitions,
-                                                 staged=staged,
-                                                 weights_path=weights_path)))
-    return (spread.select("url", "html")
+    ``spark-submit --files`` and pass ``SparkFiles.get(...)`` here."""
+    return (spread_pages(pages, num_partitions).select("url", "html")
             .mapInPandas(_make_unified_batches(weights_path), DOC_SCHEMA))
 
 
@@ -821,12 +233,12 @@ def extract_documents_robust(pages: DataFrame,
                              ) -> tuple[DataFrame, DataFrame]:
     """Poison-pill-safe extraction for unbounded corpora.
 
-    Every leg now handles its own failures IN-PASS (try/except inside the
-    extraction kernels, emitting error rows) — no separate validation
-    probe, so nothing is parsed twice. Returns (docs, quarantine) views
-    over the one combined frame; callers that materialize both should
-    write the combined ``extract_documents`` output once (lineage.py does)
-    instead of executing each view separately."""
+    The kernel handles its own failures IN-PASS (try/except per page,
+    emitting error rows) — no separate validation probe, so nothing is
+    parsed twice. Returns (docs, quarantine) views over the one combined
+    frame; callers that materialize both should write the combined
+    ``extract_documents`` output once (lineage.py does) instead of
+    executing each view separately."""
     combined = extract_documents(pages, num_partitions)
     docs = combined.filter(F.col("error").isNull()).drop("error")
     quarantine = (combined.filter(F.col("error").isNotNull())

@@ -11,12 +11,12 @@ analogues of its nearest patterns:
                             → checkpoint directory: a restarted query resumes
                               from the last committed micro-batch offset.
 
-Only the HTML extraction leg streams — it is a stateless vectorized
-projection, legal in a streaming plan. The raster leg needs two grouped
-shuffles (group/assemble), which batch handles; at corpus scale the split is
-"stream the cheap 95%, micro-batch the heavy 5% via foreachBatch", and
-``stream_extract_html(..., include_raster=True)`` demonstrates exactly that
-foreachBatch pattern.
+The native stream extracts only HTML-kind pages (the kind filter plus the
+one stateless ``extract_documents`` plan, legal in a streaming query).
+Raster pages cost orders of magnitude more per page; at corpus scale the
+split is "stream the cheap 95%, micro-batch the heavy 5% via foreachBatch",
+and ``stream_extract_html(..., include_raster=True)`` demonstrates exactly
+that foreachBatch pattern.
 """
 
 from __future__ import annotations
@@ -84,33 +84,30 @@ def stream_extract_html(spark: SparkSession, input_dir: str,
                         quality_gate: bool = False):
     """Streaming main-content extraction.
 
-    Stateless leg streams natively; with ``include_raster`` every
-    micro-batch runs the FULL batch pipeline via foreachBatch (grouped-map
-    stages are batch-only, so the stream hands each micro-batch to the
-    batch planner — the standard escape hatch for heavy multi-shuffle work
-    inside a stream). Exactly-once: the native file sink uses its commit
+    Without ``include_raster`` the stream keeps only HTML-kind pages
+    (``is_html_col``) and streams natively through ``extract_documents``;
+    with it every micro-batch runs the FULL pipeline over every kind via
+    foreachBatch. Exactly-once: the native file sink uses its commit
     log; the foreachBatch path writes each micro-batch into its own
     ``batch_id=<id>`` partition directory with overwrite, so a replayed
     batch (restart after a mid-batch crash) overwrites its own output
     instead of duplicating it — idempotent, hence effectively-once.
     """
-    from ..pipeline import extract_documents, extract_html_path
+    from ..pipeline import extract_documents, is_html_col
 
     pages = read_pages_stream(spark, input_dir)
-    if include_raster:
+    if not include_raster:
+        pages = pages.filter(is_html_col())
+    if include_raster or quality_gate:
+        # raster pages are the micro-batched heavy share (module
+        # docstring); the gate joins per-doc metadata back onto the
+        # batch — a multi-input plan the native streaming sink can't run
+        # without the foreachBatch escape hatch — so it routes here too
         return _foreach_batch_idempotent(
             pages, out_dir, checkpoint_dir,
             transform=lambda b: _maybe_quality_gate(
                 extract_documents(b), quality_gate))
-    if quality_gate:
-        # the gate joins per-doc metadata back onto the batch — a
-        # multi-input plan the native streaming sink can't run without
-        # the foreachBatch escape hatch, so route through it
-        return _foreach_batch_idempotent(
-            pages, out_dir, checkpoint_dir,
-            transform=lambda b: _maybe_quality_gate(
-                extract_html_path(b), True))
-    out = extract_html_path(pages)
+    out = extract_documents(pages)
     return (out.writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", checkpoint_dir)

@@ -282,16 +282,10 @@ Rows, top = headline:
   structure. Shown to document the box limit, not the architecture limit.
 * **mixed @ 8→32** — the web-corpus shape (~70% HTML, 10% PDF, 20% raster);
   with the cheap surrogate most pages cost microseconds, so the row tracks
-  fixed per-stage costs and host-steal, not kernel scaling. Round-4 A/B
-  (fresh-JVM, interleaved): coalescing the cheap legs to 1 task/core wins
-  2.3x on the isolated html stage but loses end-to-end at 32 cores (coarse
-  tasks straggle in steal windows; the union already overlaps cheap tasks
-  with the raster stage) — so the default keeps fine grain and the
-  `SPARK_GRAFT_CHEAP_TASKS_PER_CORE` knob serves deployments where
-  per-task cost is the measured bottleneck. Grade this row on ABSOLUTE
-  throughput vs the same-shape mp control at each level via the PAIRED
-  protocol below (unpaired absolute numbers from different steal windows
-  on this guest are weather, not measurements).
+  fixed per-stage costs and host-steal, not kernel scaling. Grade this
+  row on ABSOLUTE throughput vs the same-shape mp control at each level
+  via the PAIRED protocol below (unpaired absolute numbers from different
+  steal windows on this guest are weather, not measurements).
 
 {ab_section}| corpus | docs | N→4N | estimator | N docs/s [reps] | 4N docs/s [reps] | efficiency | eff median/best | mp control eff | parity |
 |---|---|---|---|---|---|---|---|---|---|

@@ -1,6 +1,7 @@
 """HTML main-content extraction tests (reference: get_aozora.py:49-101)."""
 
 import pandas as pd
+import pytest
 
 from findtextcenternet_spark.corpus import generate_pages
 from findtextcenternet_spark.functions.html_extract import (
@@ -101,3 +102,27 @@ def test_cp932_page_extracts_byte_exact():
     for row in cp932:
         rec = extract_page_golden(row.url, bytes(row.html))
         assert rec["text"] == row.text
+
+
+# pages whose decoded text holds a lone surrogate, which UTF-8 (and so
+# Arrow) cannot encode: a gaiji key mapping to U+D800 (4-94-79), and two
+# declared charsets that decode to one
+SURROGATE_PAGES = [
+    b'<div class="main_text">a<img src="gaiji/4-94-79.png">b</div>',
+    b'<html><head><meta charset="utf-7"></head>'
+    b'<div class="main_text">a+2AA-b</div></html>',
+    b'<html><head><meta charset="unicode_escape"></head>'
+    b'<div class="main_text">a\\ud800b</div></html>',
+]
+
+
+@pytest.mark.parametrize("page", SURROGATE_PAGES,
+                         ids=["gaiji", "utf-7", "unicode_escape"])
+def test_surrogates_become_replacement_char(page):
+    from findtextcenternet_spark.functions.html_extract import (
+        decode_page_bytes,
+    )
+    assert extract_main_text(decode_page_bytes(page)) == "a\ufffdb"
+    got = extract_main_text_series(pd.Series([page])).iloc[0]
+    assert got == "a\ufffdb"
+    got.encode("utf-8")  # strict: raises on a lone surrogate

@@ -5,7 +5,10 @@ import pandas as pd
 import pytest
 
 from findtextcenternet_spark.corpus import generate_pages
-from findtextcenternet_spark.golden import extract_corpus_golden
+from findtextcenternet_spark.golden import (
+    extract_corpus_golden,
+    extract_page_golden,
+)
 from findtextcenternet_spark.pipeline import (
     extract_documents,
     pages_from_pandas,
@@ -28,7 +31,7 @@ def _run(spark, pdf, n_parts):
 def _norm_nested(cells):
     """Normalize a spans/lines/blocks cell — list of pyspark Rows or
     golden dicts (or None/empty) — to a comparable tuple-of-tuples with
-    keys in sorted order, so golden-vs-spark and plan-vs-plan compares
+    keys in sorted order, so golden-vs-spark and run-vs-run compares
     are exact (floats must be bit-identical: same kernels, same math)."""
     if cells is None or (hasattr(cells, "__len__") and len(cells) == 0):
         return ()
@@ -61,40 +64,44 @@ def test_spark_matches_golden(spark, corpus):
 def test_partitioning_invariance(spark, corpus):
     a = _run(spark, corpus, 2)
     b = _run(spark, corpus, 7)
-    pd.testing.assert_frame_equal(
-        a[["url", "text", "aozora", "noruby", "path"]],
-        b[["url", "text", "aozora", "noruby", "path"]],
-    )
-    for col in NESTED:
-        assert a[col].map(_norm_nested).equals(b[col].map(_norm_nested))
-
-
-def test_unified_matches_legs_matches_staged(spark, corpus):
-    """All three plan shapes — the default one-kernel unified path, the
-    three-leg union, and the staged two-exchange raster variant — must
-    produce byte-identical documents (same per-page kernels), including
-    the nested span/line/block structures."""
-    pages = pages_from_pandas(spark, corpus).repartition(4, "url")
+    # 2-row Arrow batches: the kernel's per-batch kind split sees many
+    # tiny, mostly single-kind batches
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    try:
+        c = _run(spark, corpus, 4)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
     cols = ["url", "text", "aozora", "noruby", "path"]
-    unified = (extract_documents(pages).toPandas()
-               .sort_values("url").reset_index(drop=True))
-    legs = (extract_documents(pages, split_legs=True).toPandas()
-            .sort_values("url").reset_index(drop=True))
-    staged = (extract_documents(pages, staged=True).toPandas()
-              .sort_values("url").reset_index(drop=True))
-    for col in NESTED:
-        u = unified[col].map(_norm_nested)
-        assert u.equals(legs[col].map(_norm_nested)), col
-        assert u.equals(staged[col].map(_norm_nested)), col
-    pd.testing.assert_frame_equal(unified[cols], legs[cols])
-    pd.testing.assert_frame_equal(unified[cols], staged[cols])
+    for other in (b, c):
+        pd.testing.assert_frame_equal(a[cols], other[cols])
+        for col in NESTED:
+            assert a[col].map(_norm_nested).equals(
+                other[col].map(_norm_nested))
+
+
+def _assert_matches_golden(out, pdf):
+    """Every output row equals ``extract_page_golden`` on its page."""
+    html = dict(zip(pdf["url"], pdf["html"]))
+    for r in out.itertuples():
+        g = extract_page_golden(r.url, bytes(html[r.url]))
+        assert (r.text, r.aozora, r.noruby, r.path) == \
+            (g["text"], g["aozora"], g["noruby"], g["path"]), r.url
+        for col in NESTED:
+            assert _norm_nested(getattr(r, col)) == \
+                _norm_nested(g[col]), (r.url, col)
 
 
 def test_blank_layout_reaches_output_on_both_legs(spark, corpus):
     """A valid raster page with zero glyphs/textlines (and a zero-strength
-    separator stroke) must yield an empty-text doc row — not silently
-    vanish — on BOTH the fused and the staged leg (ADVICE r2: the staged
-    leg dropped such urls; detect also raised on v<=0 strokes)."""
+    separator stroke) must yield an empty-text doc row equal to the
+    golden's — not silently vanish (ADVICE r2: a url missing from the
+    output never settles in the lineage done-set; detect also raised on
+    v<=0 strokes)."""
     import json
 
     from findtextcenternet_spark.corpus import RASTER_MARKER
@@ -116,21 +123,39 @@ def test_blank_layout_reaches_output_on_both_legs(spark, corpus):
          "text": "", "lang": "raster:ja"},
     ])
     pdf = pd.concat([corpus.head(6), extra], ignore_index=True)
-    pages = pages_from_pandas(spark, pdf).repartition(4, "url")
-    fused = (extract_documents(pages, staged=False).toPandas()
-             .sort_values("url").reset_index(drop=True))
-    staged = (extract_documents(pages, staged=True).toPandas()
-              .sort_values("url").reset_index(drop=True))
-    assert len(fused) == len(staged) == len(pdf)
-    for out in (fused, staged):
-        rows = out[out.url.str.startswith("https://blank.")]
-        assert len(rows) == 2
-        assert (rows.text == "").all()
-        assert rows.error.isna().all()
-    pd.testing.assert_frame_equal(
-        fused[["url", "text", "aozora", "noruby", "path"]],
-        staged[["url", "text", "aozora", "noruby", "path"]],
-    )
+    out = _run(spark, pdf, 4)
+    assert len(out) == len(pdf)
+    assert out.error.isna().all()
+    rows = out[out.url.str.startswith("https://blank.")]
+    assert len(rows) == 2
+    assert (rows.text == "").all()
+    _assert_matches_golden(out, pdf)
+
+
+def test_surrogate_html_page_does_not_fail_job(spark, corpus):
+    """HTML pages whose decoded text holds a lone surrogate (a gaiji key
+    mapping to U+D800; a utf-7 or unicode_escape charset declaration)
+    used to kill the job in the Arrow output serializer, outside the
+    kernel's quarantine. The codepoint guard makes them U+FFFD, so the
+    job completes and every row equals the golden."""
+    bad = [
+        b'<div class="main_text">a<img src="gaiji/4-94-79.png">b</div>',
+        b'<html><head><meta charset="utf-7"></head>'
+        b'<div class="main_text">a+2AA-b</div></html>',
+        b'<html><head><meta charset="unicode_escape"></head>'
+        b'<div class="main_text">a\\ud800b</div></html>',
+    ]
+    extra = pd.DataFrame([
+        {"url": f"https://surrogate.example.org/{i}",
+         "warc_ts": corpus["warc_ts"].iloc[0], "html": b,
+         "text": "", "lang": "ja"} for i, b in enumerate(bad)])
+    pdf = pd.concat([corpus.head(6), extra], ignore_index=True)
+    out = _run(spark, pdf, 4)
+    assert len(out) == len(pdf)
+    assert out.error.isna().all()
+    rows = out[out.url.str.startswith("https://surrogate.")]
+    assert (rows.text == "a\ufffdb").all()
+    _assert_matches_golden(out, pdf)
 
 
 def test_raster_records_nonempty(spark, corpus):
@@ -148,9 +173,9 @@ def test_raster_records_nonempty(spark, corpus):
 
 def test_null_html_quarantined_identically_in_both_plans(spark):
     """ADVICE r4 (medium): a null html cell must become ONE quarantine
-    row — not a task crash (unified kernel did bytes(None)) and not a
-    silently vanished url (the legs' magic-byte filters drop null rows).
-    Both plans emit the byte-identical row."""
+    row — not a task crash (bytes(None)) and not a silently vanished url
+    (the magic-byte probes return null on it) — while every other page
+    still equals the golden."""
     from findtextcenternet_spark.pipeline import NULL_PAGE_ERROR
 
     good = generate_pages(10)
@@ -161,17 +186,14 @@ def test_null_html_quarantined_identically_in_both_plans(spark):
     ])
     pages = pages_from_pandas(spark, pd.concat([good, nulls],
                                                ignore_index=True))
-    outs = []
-    for kw in ({}, {"split_legs": True}):
-        out = (extract_documents(pages, num_partitions=4, **kw)
-               .toPandas().sort_values("url").reset_index(drop=True))
-        assert len(out) == 11  # the null url settles, never vanishes
-        row = out[out["url"] == "https://null.example.org/missing-body"]
-        assert len(row) == 1
-        assert row["error"].iloc[0] == NULL_PAGE_ERROR
-        assert row["path"].iloc[0] == "html"
-        assert row["text"].iloc[0] is None
-        outs.append(out)
-    for col in ("url", "text", "path", "error"):
-        assert outs[0][col].fillna("§").tolist() == \
-            outs[1][col].fillna("§").tolist(), col
+    out = (extract_documents(pages, num_partitions=4)
+           .toPandas().sort_values("url").reset_index(drop=True))
+    assert len(out) == 11  # the null url settles, never vanishes
+    row = out[out["url"] == "https://null.example.org/missing-body"]
+    assert len(row) == 1
+    assert row["error"].iloc[0] == NULL_PAGE_ERROR
+    assert row["path"].iloc[0] == "html"
+    assert row["text"].iloc[0] is None
+    rest = out[out["url"] != "https://null.example.org/missing-body"]
+    assert rest.error.isna().all()
+    _assert_matches_golden(rest, good)

@@ -153,7 +153,7 @@ def test_stream_dedup_exact(spark, tmp_path):
 
 
 def test_stream_stateless_leg_quality_gate(spark, tmp_path):
-    """quality_gate=True on the stateless HTML leg routes through the
+    """quality_gate=True on the HTML-only stream routes through the
     foreachBatch escape hatch (the gate's metadata join is not a
     native-streaming-sink plan) and marks rejects without dropping."""
     import pandas as pd
@@ -174,14 +174,14 @@ def test_stream_stateless_leg_quality_gate(spark, tmp_path):
     q = stream_extract_html(spark, d, out, ckpt, quality_gate=True)
     q.awaitTermination(120)
     got = spark.read.parquet(out).toPandas()
-    # none of the leg's pages vanish (raster/pdf pages are the OTHER
-    # legs' by design); the junk page is marked, not dropped
+    # none of the HTML-kind pages vanish (raster/pdf pages are filtered
+    # out by design); the junk page is marked, not dropped
     from findtextcenternet_spark.pipeline import (
-        extract_html_path,
+        is_html_col,
         pages_from_pandas,
     )
-    n_leg = extract_html_path(pages_from_pandas(spark, pdf)).count()
-    assert got["url"].nunique() == n_leg
+    n_html = pages_from_pandas(spark, pdf).filter(is_html_col()).count()
+    assert got["url"].nunique() == n_html
     bad = got[got["error"].notna()].set_index("url")["error"].to_dict()
     assert bad["https://q.example.org/junk"] == "quality:too_repetitive"
 
