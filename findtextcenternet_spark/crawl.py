@@ -28,9 +28,9 @@ Scale shape, stage by stage at 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from .lineage import run_extract
+from .lineage import observed, run_extract
 from .operators.cc import connected_components
 from .plans.training_data import (
     drop_repeated_paragraphs,
@@ -181,12 +181,12 @@ def url_canon_filter(docs: DataFrame, id_col: str = "url"
 
 
 def pii_scrub_docs(docs: DataFrame, text_col: str = "text"
-                   ) -> tuple[DataFrame, DataFrame]:
+                   ) -> tuple[DataFrame, Observation]:
     """(scrubbed_docs, audit): redact emails/IPv4s in the text column
-    (functions/urlnorm.scrub_pii_col, schema unchanged); ``audit`` is a
-    one-row (n_redactions) frame aggregated from the pre-scrub text for
-    the summary. Pure row-local map — zero shuffles at any corpus
-    size (the audit agg is a map-side partial sum)."""
+    (functions/urlnorm.scrub_pii_col, schema unchanged); ``audit``
+    observes ``n_redactions`` on the pre-scrub text, filled by the
+    first action over the scrubbed frame (the sink). Pure row-local
+    map — zero shuffles and no extra job at any corpus size."""
     from .functions.urlnorm import (
         EMAIL_RE,
         IPV4_RE,
@@ -194,7 +194,8 @@ def pii_scrub_docs(docs: DataFrame, text_col: str = "text"
         scrub_pii_col,
     )
 
-    audit = docs.agg(F.sum(
+    audit = Observation()
+    docs = docs.observe(audit, F.sum(
         pii_count_col(F.col(text_col), EMAIL_RE)
         + pii_count_col(F.col(text_col), IPV4_RE)
     ).alias("n_redactions"))
@@ -304,65 +305,65 @@ def crawl_to_corpus(spark: SparkSession, input_path: str, out_dir: str, *,
         summary["wet_shards"] = summary["wet_records"] = 0
         return summary
 
+    # funnel counts are Observations on the main line, filled by the job
+    # that builds the pins and by the sink: no job of their own
+    read, para, pinned, gated, near, sink = (Observation() for _ in range(6))
+    rows = F.count(F.lit(1)).alias("n")
     # corpus-wide post-passes read the WHOLE committed store through the
     # storage seam (snapshot read on a catalog, dir read on parquet)
     docs = (store.read_docs()
             .filter(F.col("error").isNull())
-            .select("url", "text"))
+            .select("url", "text").observe(read, rows))
 
     if url_canon:
         # FIRST post-pass: collapse tracking-noise re-captures of one
         # page before any content pass spends work on them
-        docs, collapsed = url_canon_filter(docs)
-        summary["url_collapsed"] = collapsed.count()
+        docs, _ = url_canon_filter(docs)
 
     if para_dedup_max is not None:
         cleaned = drop_repeated_paragraphs(docs, id_col="url",
                                            max_count=para_dedup_max)
-        docs = (cleaned.filter(F.col("clean_text").isNotNull())
+        docs = (cleaned.observe(para, rows, F.sum("n_dropped").alias("drop"))
+                .filter(F.col("clean_text").isNotNull())
                 .select("url", F.col("clean_text").alias("text")))
-        # pin the cleaned frame: the n_dropped agg, the LSH/cluster pass
-        # and the WET write would otherwise each re-run the corpus-wide
-        # paragraph pass — three full passes over the store
-        docs = docs.persist()
-        summary["paragraphs_dropped"] = int(
-            cleaned.agg(F.sum("n_dropped")).collect()[0][0] or 0)
-    else:
-        docs = docs.persist()
+    # pin the cleaned frame: the gate, the LSH/cluster pass and the sink
+    # would otherwise each re-run the corpus-wide paragraph pass
+    docs = docs.observe(pinned, rows).persist()
     pins = [docs]
 
     try:
         if quality_gate:
             # gate AFTER the boilerplate drop (repetition is measured on
-            # the text that would actually be trained on)
-            docs, rejected = quality_gate_filter(docs)
-            summary["quality_rejected"] = rejected.count()
+            # the text that would actually be trained on); pin the gated
+            # frame, which the LSH, the verify and the sink all read
+            docs, _ = quality_gate_filter(docs)
+            docs = docs.observe(gated, rows).persist()
+            pins.append(docs)
+        # build both pins with one job, the FIRST query over the
+        # observations above: each keeps what its tasks added by the end
+        # of that query, and a lazy localCheckpoint downstream runs none
+        docs.write.format("noop").mode("overwrite").save()
+        kept = observed(gated if quality_gate else pinned)
 
         if near_dedup:
-            docs, clusters = near_dup_filter(
-                docs, keep_best=near_dedup_keep_best)
-            stats = clusters.agg(
-                F.count("*").alias("n"),
-                F.sum((F.col("url") != F.col("keeper")).cast("long"))
-                .alias("drop")).collect()[0]
-            summary["near_dup_clustered"] = int(stats["n"])
-            summary["near_dup_dropped"] = int(stats["drop"] or 0)
+            _, clusters = near_dup_filter(docs,
+                                          keep_best=near_dedup_keep_best)
+            # a left join, not the anti-join: an Observation on the build
+            # side would read an empty cluster frame that AQE pruned
+            loser = F.col("url") != F.col("keeper")
+            docs = (docs.join(clusters.select("url", "keeper"), "url", "left")
+                    .observe(near, F.count("keeper").alias("n"),
+                             F.count(F.when(loser, 1)).alias("drop"))
+                    .filter(loser.isNull() | ~loser).drop("keeper"))
 
         if host_cap is not None:
-            # pin: the before/after counts and the WET write would each
-            # re-run the upstream gate+dedup chain otherwise
-            docs = docs.persist()
-            pins.append(docs)
-            before = docs.count()
             docs = host_cap_filter(docs, host_cap)
-            summary["host_capped"] = before - docs.count()
+        docs = docs.observe(sink, rows)
 
         if pii_scrub:
             # LAST content pass, right before the sink: redaction must
             # not perturb the dedup fingerprints computed upstream
             docs, audit = pii_scrub_docs(docs)
-            summary["pii_redactions"] = int(
-                audit.collect()[0]["n_redactions"] or 0)
 
         if wet_dir is not None:
             from .sources.warc import write_wet
@@ -375,4 +376,18 @@ def crawl_to_corpus(spark: SparkSession, input_path: str, out_dir: str, *,
     finally:
         for p in pins:
             p.unpersist()
+
+    # rows each pass removed: rows in minus rows out
+    summary["url_collapsed"] = observed(read) - observed(
+        para if para_dedup_max is not None else pinned)
+    if para_dedup_max is not None:
+        summary["paragraphs_dropped"] = observed(para, "drop")
+    summary["quality_rejected"] = observed(pinned) - kept
+    if near_dedup:
+        summary["near_dup_clustered"] = observed(near)
+        summary["near_dup_dropped"] = observed(near, "drop")
+    summary["host_capped"] = (kept - summary["near_dup_dropped"]
+                              - observed(sink))
+    if pii_scrub:
+        summary["pii_redactions"] = observed(audit, "n_redactions")
     return summary

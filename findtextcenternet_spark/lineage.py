@@ -49,15 +49,10 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import extract_documents
-
-# done-set file clustering: files are url-hash-clustered so a resume
-# anti-join shuffles evenly; on Iceberg this is a bucket(url) partition
-# spec and the read is a snapshot scan
-DONE_BUCKETS = 64
 
 LEGACY_RUN_ID = "legacy-backfill"
 
@@ -257,7 +252,8 @@ class ParquetDirStore(DocStore):
         return out
 
     def append_done(self, urls: DataFrame) -> None:
-        (urls.repartition(DONE_BUCKETS, "url")
+        # url-hash-clustered files, as many as AQE coalesces them to
+        (urls.repartition("url")
          .write.mode("append").parquet(self.done_dir))
 
     def mark_done(self, run_ids: list[str]) -> None:
@@ -467,7 +463,7 @@ class IcebergDocStore(DocStore):
     * ``read_run_urls`` → snapshot read with a ``run_id`` filter
       (partition-pruned by the spec);
     * ``_done_urls`` → ``{ns}.done`` (url + run_id; on a real deployment
-      bucket(url, 64) in the partition spec mirrors DONE_BUCKETS);
+      bucket(url) in the partition spec mirrors the url-hash clustering);
     * ``mark_done`` → append to ``{ns}.done_marks``. Where the catalog
       supports multi-table transactions (or a WAP branch), docs + done +
       mark collapse into ONE commit and the healing pass degenerates to
@@ -536,7 +532,7 @@ class IcebergDocStore(DocStore):
         return self.spark.table(self.docs_tbl)
 
     def append_done(self, urls: DataFrame) -> None:
-        self._append(urls.repartition(DONE_BUCKETS, "url"), self.done_tbl)
+        self._append(urls.repartition("url"), self.done_tbl)
 
     def mark_done(self, run_ids: list[str]) -> None:
         if not run_ids:
@@ -672,6 +668,12 @@ def _settled_urls(store: DocStore, heal: bool) -> DataFrame | None:
     return union
 
 
+def observed(obs: Observation, key: str = "n") -> int:
+    """Count or sum ``key`` of ``obs`` once an action over it ends (blocks
+    until then); a node AQE pruned as empty ran no task and reads 0."""
+    return int(obs._jo.getRow().size() and obs.get[key] or 0)
+
+
 def extracted_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Read-only view of the settled urls (see ``_settled_urls``): the
     ``_done_urls`` side table unioned with any committed-but-unrecorded
@@ -711,15 +713,20 @@ def run_extract(pages: DataFrame, out_dir: str,
 
     t0 = time.time()
     combined = extract_documents(todo, num_partitions)
+    counts = Observation()
     out = (combined
            .withColumn("part_id", F.spark_partition_id())
-           .withColumn("run_id", F.lit(run_id)))
+           .withColumn("run_id", F.lit(run_id))
+           .observe(counts, F.count(F.lit(1)).alias("n"),
+                    F.count("error").alias("n_quarantined")))
     # pin ONE materialization: part_id comes from spark_partition_id, so
     # every consumer below must see the same physical run, and the docs
     # write must not recompute the extraction a second time. On Iceberg
     # the equivalent is write-then-snapshot-read; here localCheckpoint
-    # keeps the run's output on executor-local disk for its 3 consumers.
+    # keeps the run's output on executor-local disk for its consumers.
     out = out.localCheckpoint(eager=True)
+    n_quarantined = observed(counts, "n_quarantined")
+    n_docs = observed(counts) - n_quarantined
     try:
         store.append_docs(out)
         wall = time.time() - t0
@@ -729,11 +736,10 @@ def run_extract(pages: DataFrame, out_dir: str,
         # column, instead of the url column of everything ever written
         store.append_done(out.select("url", "run_id"))
 
-        quarantine = out.filter(F.col("error").isNotNull())
-        n_quarantined = quarantine.count()
         if n_quarantined:
             store.append_quarantine(
-                quarantine.select("url", "error", "run_id"))
+                out.filter(F.col("error").isNotNull())
+                .select("url", "error", "run_id"))
 
         good = out.filter(F.col("error").isNull())
         lineage = (good.groupBy("part_id")
@@ -753,7 +759,6 @@ def run_extract(pages: DataFrame, out_dir: str,
         # (re-extraction never happens either way; docs are the commit
         # point and the anti-join sees the backfilled done rows)
         store.mark_done([run_id])
-        n_docs = good.count()
     finally:
         out.unpersist()
     return {"run_id": run_id, "n_docs": n_docs,
