@@ -57,10 +57,14 @@ def near_dup_clusters(docs: DataFrame, id_col: str = "url",
 def near_dup_filter(docs: DataFrame, id_col: str = "url",
                     text_col: str = "text", threshold: float = 0.5,
                     keep_best: bool = False
-                    ) -> tuple[DataFrame, DataFrame]:
-    """(kept_docs, clusters): drop every cluster member except its
+                    ) -> tuple[DataFrame, Observation]:
+    """(kept_docs, stats): drop every cluster member except its
     keeper; docs outside any cluster pass through untouched. The drop
-    set is an anti-join on the id — text never shuffles twice.
+    is a left join on the id plus a filter — text never shuffles twice.
+    ``stats`` observes ``n`` (doc rows in a cluster) and ``drop`` (rows
+    dropped), filled by the first action over ``kept_docs``: they sit
+    above the join, not on the cluster frame, which AQE prunes when
+    empty.
 
     ``keep_best=True`` keeps the cluster member with the MOST tokens
     (tie → min id) instead of the min-id member: the full article
@@ -76,15 +80,17 @@ def near_dup_filter(docs: DataFrame, id_col: str = "url",
         decision = keep_best_per_cluster(
             docs.select(F.col(id_col), F.col(text_col).alias("text")),
             lab, id_col=id_col, include_singletons=False)
-        # re-key the cluster report on the quality keeper so the summary
-        # counts describe the doc that actually survives
-        clusters = (decision
-                    .join(clusters.select(id_col, "cluster_size"), id_col)
-                    .select(id_col, F.col("best_doc").alias("keeper"),
-                            "cluster_size"))
-    losers = (clusters.filter(F.col(id_col) != F.col("keeper"))
-              .select(id_col))
-    return docs.join(losers, id_col, "left_anti"), clusters
+        # re-key on the quality keeper; a url captured twice has a
+        # decision row per capture, each naming the same keeper
+        clusters = decision.select(
+            id_col, F.col("best_doc").alias("keeper")).distinct()
+    stats = Observation()
+    loser = F.col(id_col) != F.col("keeper")
+    kept = (docs.join(clusters.select(id_col, "keeper"), id_col, "left")
+            .observe(stats, F.count("keeper").alias("n"),
+                     F.count(F.when(loser, 1)).alias("drop"))
+            .filter(loser.isNull() | ~loser).drop("keeper"))
+    return kept, stats
 
 
 # Scripts written without word separators (kana, unified ideographs and
@@ -307,7 +313,7 @@ def crawl_to_corpus(spark: SparkSession, input_path: str, out_dir: str, *,
 
     # funnel counts are Observations on the main line, filled by the job
     # that builds the pins and by the sink: no job of their own
-    read, para, pinned, gated, near, sink = (Observation() for _ in range(6))
+    read, para, pinned, gated, sink = (Observation() for _ in range(5))
     rows = F.count(F.lit(1)).alias("n")
     # corpus-wide post-passes read the WHOLE committed store through the
     # storage seam (snapshot read on a catalog, dir read on parquet)
@@ -346,15 +352,8 @@ def crawl_to_corpus(spark: SparkSession, input_path: str, out_dir: str, *,
         kept = observed(gated if quality_gate else pinned)
 
         if near_dedup:
-            _, clusters = near_dup_filter(docs,
-                                          keep_best=near_dedup_keep_best)
-            # a left join, not the anti-join: an Observation on the build
-            # side would read an empty cluster frame that AQE pruned
-            loser = F.col("url") != F.col("keeper")
-            docs = (docs.join(clusters.select("url", "keeper"), "url", "left")
-                    .observe(near, F.count("keeper").alias("n"),
-                             F.count(F.when(loser, 1)).alias("drop"))
-                    .filter(loser.isNull() | ~loser).drop("keeper"))
+            docs, near = near_dup_filter(docs,
+                                         keep_best=near_dedup_keep_best)
 
         if host_cap is not None:
             docs = host_cap_filter(docs, host_cap)

@@ -749,8 +749,9 @@ def keep_best_per_cluster(docs, lab, id_col: str = "doc_id",
                           .alias("keep")))
     if not include_singletons:
         # caller only wants the per-cluster decision (e.g. the crawl
-        # flagship, which anti-joins losers out) — skip the corpus-wide
-        # anti-join that tags every non-clustered doc as its own keeper
+        # flagship, which drops just the losers it names) — skip the
+        # corpus-wide anti-join that tags every non-clustered doc as its
+        # own keeper
         return in_cluster
     singles = (docs.join(lab.select(id_col), id_col, "left_anti")
                .select(id_col,
