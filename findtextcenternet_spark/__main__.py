@@ -202,39 +202,12 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     from .lineage import run_extract
+    from .sources import read_pages
 
-    if args.input_format == "warc":
-        from .sources.warc import read_warc
-
-        # error-marker rows (corrupt archive tails) keep flowing: their
-        # html is null, so the pipeline quarantines them under the
-        # per-archive warc:tail-error:<path> url
-        pages = read_warc(spark, args.input).drop("error")
-    elif args.input_format == "cdx":
-        from pyspark.sql import functions as F
-
-        from .sources.cdx import fetch_cdx_records, read_cdxj
-
-        idx = read_cdxj(spark, args.input)
-        if args.cdx_mime:
-            idx = idx.filter(F.col("mime") == args.cdx_mime)
-        if args.cdx_prefix:
-            idx = idx.filter(F.col("urlkey").startswith(args.cdx_prefix))
-        if args.cdx_diff:
-            from .sources.cdx import diff_cdx_snapshots
-
-            changed = (diff_cdx_snapshots(read_cdxj(spark, args.cdx_diff),
-                                          idx)
-                       .filter(F.col("status").isin("new", "changed"))
-                       .select("urlkey"))
-            idx = idx.join(changed, "urlkey", "left_semi")
-        if args.cdx_dedup:
-            from .sources.cdx import latest_unique_captures
-
-            idx = latest_unique_captures(idx)
-        pages = fetch_cdx_records(spark, idx).drop("error")
-    else:
-        pages = spark.read.parquet(args.input)
+    pages = read_pages(spark, args.input, args.input_format,
+                       cdx_mime=args.cdx_mime, cdx_prefix=args.cdx_prefix,
+                       cdx_diff_old=args.cdx_diff,
+                       cdx_dedup=args.cdx_dedup)
     summary = run_extract(pages, args.out_dir, run_id=args.run_id,
                           num_partitions=args.partitions)
     if args.compact is not None:

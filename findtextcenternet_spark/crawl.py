@@ -30,12 +30,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from .lineage import observed, run_extract
+from .lineage import ParquetDirStore, observed, run_extract
 from .operators.cc import connected_components
 from .plans.training_data import (
     drop_repeated_paragraphs,
     lsh_verified_pairs_df,
 )
+from .sources import read_pages
 
 
 def near_dup_clusters(docs: DataFrame, id_col: str = "url",
@@ -253,9 +254,9 @@ def crawl_to_corpus(spark: SparkSession, input_path: str, out_dir: str, *,
     """One invocation from crawl archives (or a CDX index) to a deduped
     WET corpus. Returns a summary dict.
 
-    ``input_format='warc'``: full archive walk. ``'cdx'``: index-driven —
-    prune by mime/prefix, collapse re-captures to the newest entry per
-    payload digest, then range-fetch only the selected records.
+    Input selection is :func:`sources.read_pages` (``input_format``,
+    ``cdx_*``); from a CDX index, re-captures always collapse to the
+    newest entry per payload digest before the range fetch.
 
     Extraction goes through ``lineage.run_extract`` (same OUT_DIR →
     resume; poison pages → quarantine). Dedup then runs over the WHOLE
@@ -263,41 +264,8 @@ def crawl_to_corpus(spark: SparkSession, input_path: str, out_dir: str, *,
     re-dedups against everything already extracted — exactly what a
     rolling training-data pipeline needs.
     """
-    if input_format == "warc":
-        from .sources.warc import read_warc
-
-        pages = read_warc(spark, input_path).drop("error")
-    elif input_format == "cdx":
-        from .sources.cdx import (
-            fetch_cdx_records,
-            latest_unique_captures,
-            read_cdxj,
-        )
-
-        idx = read_cdxj(spark, input_path)
-        if cdx_mime:
-            idx = idx.filter(F.col("mime") == cdx_mime)
-        if cdx_prefix:
-            idx = idx.filter(F.col("urlkey").startswith(cdx_prefix))
-        if cdx_diff_old:
-            # incremental re-crawl: judge THIS index against the previous
-            # snapshot and fetch only urls whose content is new or
-            # changed — unchanged bytes never leave the archive (resume
-            # dedups at the extraction grain; this saves the FETCH)
-            from .sources.cdx import diff_cdx_snapshots
-
-            changed = (diff_cdx_snapshots(read_cdxj(spark, cdx_diff_old),
-                                          idx)
-                       .filter(F.col("status").isin("new", "changed"))
-                       .select("urlkey"))
-            idx = idx.join(changed, "urlkey", "left_semi")
-        idx = latest_unique_captures(idx)
-        pages = fetch_cdx_records(spark, idx).drop("error")
-    else:
-        pages = spark.read.parquet(input_path)
-
-    from .lineage import ParquetDirStore
-
+    pages = read_pages(spark, input_path, input_format, cdx_mime=cdx_mime,
+                       cdx_prefix=cdx_prefix, cdx_diff_old=cdx_diff_old)
     store = store or ParquetDirStore(spark, out_dir)
     summary = run_extract(pages, out_dir, run_id=run_id,
                           num_partitions=num_partitions, store=store)
@@ -307,7 +275,7 @@ def crawl_to_corpus(spark: SparkSession, input_path: str, out_dir: str, *,
 
     # an input filter can legitimately select NOTHING (e.g. a mime with
     # no captures) — an empty store has no post-passes to run
-    if not store.docs_nonempty():
+    if not store.nonempty("docs"):
         summary["wet_shards"] = summary["wet_records"] = 0
         return summary
 
@@ -317,7 +285,7 @@ def crawl_to_corpus(spark: SparkSession, input_path: str, out_dir: str, *,
     rows = F.count(F.lit(1)).alias("n")
     # corpus-wide post-passes read the WHOLE committed store through the
     # storage seam (snapshot read on a catalog, dir read on parquet)
-    docs = (store.read_docs()
+    docs = (store.read("docs")
             .filter(F.col("error").isNull())
             .select("url", "text").observe(read, rows))
 

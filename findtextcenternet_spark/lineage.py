@@ -16,36 +16,39 @@ and the done-set append are two writes; only the docs append is the
 commit point. On every resume the done-set is RECONCILED against the set
 of committed docs run_ids (a partition listing, not a data scan): any
 run committed to docs whose done append is not known COMPLETE — a crash
-between or DURING the two appends, or a docs dir written before the side
-table existed — has its urls backfilled from that run's pruned partition.
-Completeness is a per-run ``done marker`` written only AFTER the done
-append commits (``DocStore.mark_done``): a partially-visible done append
-(multi-file job crashed mid-commit) has no marker, so its run is
-backfilled in full rather than trusted on sight (ADVICE r4 — trusting
-the mere presence of a run_id in the done DATA would skip the backfill
-and re-extract that run's missing urls into duplicate doc rows). The
-backfill may duplicate (url, run_id) rows inside ``_done_urls`` itself;
-that is harmless — the resume anti-join is set-semantics — and doc rows,
-the table that matters, are never duplicated. On Iceberg
-``append_docs``+``append_done`` are one atomic commit and the marker
-degenerates to snapshot membership.
+between or DURING the two appends — has its urls backfilled from that
+run's pruned partition. Completeness is a per-run ``done marker`` written
+only AFTER the run's last append commits (``DocStore.mark_done``): a
+partially-visible done append (multi-file job crashed mid-commit) has no
+marker, so its run is backfilled in full rather than trusted on sight
+(ADVICE r4 — trusting the mere presence of a run_id in the done DATA
+would skip the backfill and re-extract that run's missing urls into
+duplicate doc rows). The backfill may duplicate (url, run_id) rows inside
+``_done_urls`` itself; that is harmless — the resume anti-join is
+set-semantics — and doc rows, the table that matters, are never
+duplicated.
 
-Storage seam: all physical I/O goes through :class:`DocStore`.
-:class:`ParquetDirStore` is the sandbox implementation (parquet
-directories, partition dirs as commit markers);
-:class:`InMemoryCatalogStore` proves the logic is directory-free; and
-:class:`IcebergDocStore` is the production mapping made concrete —
-snapshot reads, partition metadata (``committed_run_ids`` is a
-metadata-table query, no listing), one snapshot commit per append (and,
-where the catalog supports multi-table transactions, the healing pass
-becomes a cheap no-op check). The resume/healing contract matrix
-(tests/test_lineage_stores.py) is written once and parameterized over
-the catalog-style stores.
+Storage seam: all physical I/O goes through :class:`DocStore` — three
+table-generic methods over the four tables (docs, done, quarantine,
+lineage), three per-run ones (committed runs, one run's rows, drop),
+the done markers and the compaction log. :class:`ParquetDirStore` is
+the real store (parquet directories, partition dirs as commit markers);
+:class:`InMemoryCatalogStore` is a catalog-style test double whose run
+membership is metadata, proving the logic above the seam is
+directory-free. The resume/healing contract matrix
+(tests/test_lineage_stores.py) is written once and runs over both. A
+catalog-backed store (Iceberg: one snapshot commit per append, the
+partitions metadata table for ``committed_run_ids``) would implement the
+same ten methods; none ships, because the repository carries no Iceberg
+Spark runtime to test it against.
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import os
+import shutil
 import time
 import uuid
 
@@ -53,8 +56,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import extract_documents
-
-LEGACY_RUN_ID = "legacy-backfill"
 
 
 def _dir_nonempty(path: str) -> bool:
@@ -68,60 +69,52 @@ def _dir_nonempty(path: str) -> bool:
     return False
 
 
-class DocStore:
-    """Physical storage for one extraction output: docs + _done_urls +
-    _quarantine + _lineage. Subclass per catalog; run_extract and the
-    resume healing logic are storage-agnostic above this interface.
+TABLES = ("docs", "done", "quarantine", "lineage")
 
-    Iceberg mapping (the production implementation): ``docs`` is a table
-    partitioned by run_id with a bucket(url) spec; ``committed_run_ids``
-    reads the partitions metadata table (no file listing);
-    ``read_run_urls`` is a snapshot read with a run_id partition filter;
-    ``append_docs``+``append_done`` become one atomic multi-table commit,
-    so the healing pass finds nothing to heal.
+
+class DocStore:
+    """Physical storage for one extraction output: four append-only
+    tables (``TABLES``) plus run-level metadata. Subclass per storage
+    shape; run_extract, the resume healing and compaction are
+    storage-agnostic above this interface.
+
+    ``docs`` holds every doc row (errors included) partitioned by
+    run_id; ``done`` the settled (url, run_id) pairs; ``quarantine`` the
+    mirror of the error rows; ``lineage`` one row per output partition.
     """
 
-    def docs_nonempty(self) -> bool:
+    def append(self, table: str, df: DataFrame) -> None:
+        """Append ``df`` to ``table``; a ``docs`` append is one run's
+        commit point."""
         raise NotImplementedError
 
-    def done_nonempty(self) -> bool:
+    def read(self, table: str) -> DataFrame:
+        """Every committed row of ``table`` (``docs``: across all runs —
+        the input of corpus-wide post-passes)."""
+        raise NotImplementedError
+
+    def nonempty(self, table: str) -> bool:
         raise NotImplementedError
 
     def committed_run_ids(self) -> set[str]:
-        """run_ids whose docs append committed (partition metadata)."""
+        """run_ids whose docs append committed (partition metadata, not
+        a data scan)."""
         raise NotImplementedError
 
-    def has_legacy_flat_docs(self) -> bool:
-        """True when docs were written before run_id partitioning."""
+    def read_run(self, run_id: str) -> DataFrame:
+        """Every doc row of one committed run — partition-pruned."""
         raise NotImplementedError
 
-    def read_done(self) -> DataFrame:
-        raise NotImplementedError
-
-    def read_run_urls(self, run_id: str) -> DataFrame:
-        """url column of one committed run — partition-pruned."""
-        raise NotImplementedError
-
-    def read_legacy_urls(self) -> DataFrame:
-        """url column of the pre-partitioning flat docs files."""
-        raise NotImplementedError
-
-    def append_docs(self, df: DataFrame) -> None:
-        raise NotImplementedError
-
-    def read_docs(self) -> DataFrame:
-        """Every committed doc row across all runs (snapshot read) — the
-        input of corpus-wide post-passes (dedup, WET publication)."""
-        raise NotImplementedError
-
-    def append_done(self, urls: DataFrame) -> None:
-        """urls: (url, run_id) frame, appended bucket-clustered."""
+    def drop_runs(self, run_ids: list[str]) -> None:
+        """Remove committed runs from the docs table. Dropping a run_id
+        that no longer exists is a no-op — the healing pass replays
+        drops idempotently."""
         raise NotImplementedError
 
     def mark_done(self, run_ids: list[str]) -> None:
-        """Record that the done append for these runs COMMITTED in full —
-        called only after ``append_done`` returns. On Iceberg this is a
-        no-op (append_docs+append_done are one atomic commit)."""
+        """Record that these runs are FULLY recorded — done set,
+        quarantine mirror and lineage; called only after those appends
+        return."""
         raise NotImplementedError
 
     def done_run_ids(self) -> set[str]:
@@ -129,38 +122,6 @@ class DocStore:
         A run_id merely present in the done DATA is not enough: a
         multi-file append observed mid-crash can be partial, and trusting
         it would skip the healing backfill (ADVICE r4)."""
-        raise NotImplementedError
-
-    def append_quarantine(self, df: DataFrame) -> None:
-        raise NotImplementedError
-
-    def quarantine_nonempty(self) -> bool:
-        raise NotImplementedError
-
-    def read_quarantine(self) -> DataFrame:
-        raise NotImplementedError
-
-    def read_run_quarantine(self, run_id: str) -> DataFrame:
-        """(url, error, run_id) error rows of one committed run, read
-        from the docs table (error rows ARE the quarantine; the mirror
-        table is derived) — partition-pruned; healing uses this to
-        rebuild the quarantine mirror for a run whose post-docs appends
-        were lost to a crash."""
-        raise NotImplementedError
-
-    def append_lineage(self, df: DataFrame) -> None:
-        raise NotImplementedError
-
-    def read_lineage(self) -> DataFrame:
-        raise NotImplementedError
-
-    # ----- compaction (small-files maintenance; see compact_docs) -----
-
-    def drop_runs(self, run_ids: list[str]) -> None:
-        """Remove committed runs from the docs table (metadata delete on
-        a catalog, partition-dir removal on a filesystem). Dropping a
-        run_id that no longer exists is a no-op — the healing pass
-        replays drops idempotently."""
         raise NotImplementedError
 
     def record_compaction(self, compact_id: str,
@@ -177,84 +138,54 @@ class DocStore:
         raise NotImplementedError
 
 
+
 class ParquetDirStore(DocStore):
-    """Parquet-directory stand-in (the sandbox has no catalog): partition
-    directories under docs/ are the commit markers (Spark's output
-    committer renames them in atomically from _temporary)."""
+    """Parquet directories under ``out_dir``: partition directories under
+    docs/ are the commit markers (Spark's output committer renames them
+    in atomically from _temporary)."""
 
     def __init__(self, spark: SparkSession, out_dir: str) -> None:
         self.spark = spark
         self.out_dir = out_dir
         self.docs_dir = os.path.join(out_dir, "docs")
         self.done_dir = os.path.join(out_dir, "_done_urls")
-        self.quarantine_dir = os.path.join(out_dir, "_quarantine")
-        self.lineage_dir = os.path.join(out_dir, "_lineage")
+        self.dirs = {"docs": self.docs_dir, "done": self.done_dir,
+                     "quarantine": os.path.join(out_dir, "_quarantine"),
+                     "lineage": os.path.join(out_dir, "_lineage")}
 
-    def docs_nonempty(self) -> bool:
-        return _dir_nonempty(self.docs_dir)
+    def append(self, table: str, df: DataFrame) -> None:
+        if table == "done":
+            # url-hash-clustered files, as many as AQE coalesces them to
+            df = df.repartition("url")
+        w = df.write.mode("append")
+        if table == "docs":
+            w = w.partitionBy("run_id")
+        w.parquet(self.dirs[table])
 
-    def done_nonempty(self) -> bool:
-        return _dir_nonempty(self.done_dir)
+    def read(self, table: str) -> DataFrame:
+        return self.spark.read.parquet(self.dirs[table])
+
+    def nonempty(self, table: str) -> bool:
+        return _dir_nonempty(self.dirs[table])
 
     def committed_run_ids(self) -> set[str]:
         if not os.path.isdir(self.docs_dir):
             return set()
-        out = set()
-        for e in os.listdir(self.docs_dir):
-            if e.startswith("run_id=") and _dir_nonempty(
-                    os.path.join(self.docs_dir, e)):
-                out.add(e.split("=", 1)[1])
-        return out
+        return {e.split("=", 1)[1] for e in os.listdir(self.docs_dir)
+                if e.startswith("run_id=")
+                and _dir_nonempty(os.path.join(self.docs_dir, e))}
 
-    def has_legacy_flat_docs(self) -> bool:
-        if not os.path.isdir(self.docs_dir):
-            return False
-        return any(e.endswith(".parquet")
-                   for e in os.listdir(self.docs_dir))
-
-    def read_done(self) -> DataFrame:
-        return self.spark.read.parquet(self.done_dir)
-
-    def read_run_urls(self, run_id: str) -> DataFrame:
-        # read the partition directory itself: pruned by construction,
-        # and immune to the mixed flat/partitioned layout that breaks
-        # partition inference over the whole dir
+    def read_run(self, run_id: str) -> DataFrame:
+        # the partition directory itself: pruned by construction
         part = os.path.join(self.docs_dir, f"run_id={run_id}")
-        return self.spark.read.parquet(part).select("url")
+        return (self.spark.read.parquet(part)
+                .withColumn("run_id", F.lit(run_id)))
 
-    def read_legacy_urls(self) -> DataFrame:
-        flat = [os.path.join(self.docs_dir, e)
-                for e in os.listdir(self.docs_dir)
-                if e.endswith(".parquet")]
-        return self.spark.read.parquet(*flat).select("url")
-
-    def append_docs(self, df: DataFrame) -> None:
-        df.write.mode("append").partitionBy("run_id").parquet(self.docs_dir)
-
-    def read_docs(self) -> DataFrame:
-        if not self.has_legacy_flat_docs():
-            return self.spark.read.parquet(self.docs_dir)
-        # mixed layout: flat pre-partitioning files at the root next to
-        # run_id= dirs break whole-dir partition discovery ('conflicting
-        # directory structures') — read each shape explicitly, like
-        # read_run_urls does
-        flat = [os.path.join(self.docs_dir, e)
-                for e in os.listdir(self.docs_dir)
-                if e.endswith(".parquet")]
-        out = (self.spark.read.parquet(*flat)
-               .withColumn("run_id", F.lit(LEGACY_RUN_ID)))
-        for rid in sorted(self.committed_run_ids()):
+    def drop_runs(self, run_ids: list[str]) -> None:
+        for rid in run_ids:
             part = os.path.join(self.docs_dir, f"run_id={rid}")
-            out = out.unionByName(
-                self.spark.read.parquet(part)
-                .withColumn("run_id", F.lit(rid)),
-                allowMissingColumns=True)
-        return out
-
-    def append_done(self, urls: DataFrame) -> None:
-        # url-hash-clustered files, as many as AQE coalesces them to
-        (urls.repartition("url")
-         .write.mode("append").parquet(self.done_dir))
+            if os.path.isdir(part):
+                shutil.rmtree(part)
 
     def mark_done(self, run_ids: list[str]) -> None:
         # leading underscore: Spark's parquet reader treats the marker
@@ -272,40 +203,8 @@ class ParquetDirStore(DocStore):
                 for e in os.listdir(self.done_dir)
                 if e.startswith("_run_") and e.endswith(".done")}
 
-    def append_quarantine(self, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self.quarantine_dir)
-
-    def quarantine_nonempty(self) -> bool:
-        return _dir_nonempty(self.quarantine_dir)
-
-    def read_quarantine(self) -> DataFrame:
-        return self.spark.read.parquet(self.quarantine_dir)
-
-    def read_run_quarantine(self, run_id: str) -> DataFrame:
-        part = os.path.join(self.docs_dir, f"run_id={run_id}")
-        return (self.spark.read.parquet(part)
-                .filter(F.col("error").isNotNull())
-                .select("url", "error")
-                .withColumn("run_id", F.lit(run_id)))
-
-    def append_lineage(self, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self.lineage_dir)
-
-    def read_lineage(self) -> DataFrame:
-        return self.spark.read.parquet(self.lineage_dir)
-
-    def drop_runs(self, run_ids: list[str]) -> None:
-        import shutil
-
-        for rid in run_ids:
-            part = os.path.join(self.docs_dir, f"run_id={rid}")
-            if os.path.isdir(part):
-                shutil.rmtree(part)
-
     def record_compaction(self, compact_id: str,
                           replaced: list[str]) -> None:
-        import json
-
         d = os.path.join(self.out_dir, "_compactions")
         os.makedirs(d, exist_ok=True)
         tmp = os.path.join(d, f".{compact_id}.json.tmp")
@@ -316,8 +215,6 @@ class ParquetDirStore(DocStore):
         os.replace(tmp, os.path.join(d, f"{compact_id}.json"))
 
     def compaction_log(self) -> dict[str, list[str]]:
-        import json
-
         d = os.path.join(self.out_dir, "_compactions")
         if not os.path.isdir(d):
             return {}
@@ -333,99 +230,58 @@ class ParquetDirStore(DocStore):
 class InMemoryCatalogStore(DocStore):
     """Catalog-style second implementation of the storage seam (VERDICT
     r4 item 7): run membership lives in METADATA — a committed-runs dict
-    keyed by run_id — exactly like an Iceberg partitions metadata table,
-    so ``committed_run_ids`` does no listing and ``read_run_urls`` is a
+    keyed by run_id, like a catalog's partitions metadata table — so
+    ``committed_run_ids`` does no listing and ``read_run`` is a
     metadata-keyed lookup, not a path scan. Rows are held as collected
-    Spark Rows + schema (this store is a test/CI double; the point is
-    that ``run_extract`` and the healing pass run UNCHANGED through a
-    storage shape with none of ParquetDirStore's directory semantics —
-    no partition dirs, no marker files, no legacy flat layout)."""
+    Spark Rows + schema (this store is a test double; the point is that
+    ``run_extract`` and the healing pass run UNCHANGED through a storage
+    shape with none of ParquetDirStore's directory semantics — no
+    partition dirs, no marker files)."""
 
     def __init__(self, spark: SparkSession) -> None:
         self.spark = spark
-        self._docs: dict[str, tuple] = {}        # run_id -> (schema, rows)
-        self._done: list[tuple] = []              # [(schema, rows), ...]
+        self._runs: dict[str, tuple] = {}      # run_id -> (schema, rows)
+        self._parts: dict[str, list[tuple]] = {
+            t: [] for t in TABLES if t != "docs"}
         self._done_marked: set[str] = set()
-        self._quarantine: list[tuple] = []
-        self._lineage: list[tuple] = []
         self._compactions: dict[str, list[str]] = {}
 
-    @staticmethod
-    def _collect(df: DataFrame) -> tuple:
-        return df.schema, df.collect()
+    def _table(self, table: str) -> list[tuple]:
+        return (list(self._runs.values()) if table == "docs"
+                else self._parts[table])
 
-    def _frame(self, parts: list[tuple]) -> DataFrame:
-        schema = parts[0][0]
-        rows = [r for _s, rs in parts for r in rs]
-        return self.spark.createDataFrame(rows, schema=schema)
+    def append(self, table: str, df: DataFrame) -> None:
+        schema, rows = df.schema, df.collect()
+        if table != "docs":
+            self._parts[table].append((schema, rows))
+            return
+        for r in rows:
+            self._runs.setdefault(r["run_id"], (schema, []))[1].append(r)
 
-    def docs_nonempty(self) -> bool:
-        return any(rows for _s, rows in self._docs.values())
+    def read(self, table: str) -> DataFrame:
+        parts = self._table(table)
+        return self.spark.createDataFrame(
+            [r for _s, rs in parts for r in rs], schema=parts[0][0])
 
-    def done_nonempty(self) -> bool:
-        return any(rows for _s, rows in self._done)
+    def nonempty(self, table: str) -> bool:
+        return any(rows for _s, rows in self._table(table))
 
     def committed_run_ids(self) -> set[str]:
-        return {rid for rid, (_s, rows) in self._docs.items() if rows}
+        return {rid for rid, (_s, rows) in self._runs.items() if rows}
 
-    def has_legacy_flat_docs(self) -> bool:
-        return False        # a catalog has no pre-catalog layout
+    def read_run(self, run_id: str) -> DataFrame:
+        schema, rows = self._runs[run_id]
+        return self.spark.createDataFrame(rows, schema=schema)
 
-    def read_done(self) -> DataFrame:
-        return self._frame(self._done)
-
-    def read_run_urls(self, run_id: str) -> DataFrame:
-        schema, rows = self._docs[run_id]
-        return self.spark.createDataFrame(rows, schema=schema).select("url")
-
-    def read_legacy_urls(self) -> DataFrame:
-        raise AssertionError("catalog store has no legacy layout")
-
-    def append_docs(self, df: DataFrame) -> None:
-        schema, rows = self._collect(df)
-        by_run: dict[str, list] = {}
-        for r in rows:
-            by_run.setdefault(r["run_id"], []).append(r)
-        for rid, rs in by_run.items():
-            old = self._docs.get(rid)
-            self._docs[rid] = (schema, (old[1] if old else []) + rs)
-
-    def read_docs(self) -> DataFrame:
-        return self._frame(list(self._docs.values()))
-
-    def append_done(self, urls: DataFrame) -> None:
-        self._done.append(self._collect(urls))
+    def drop_runs(self, run_ids: list[str]) -> None:
+        for rid in run_ids:
+            self._runs.pop(rid, None)
 
     def mark_done(self, run_ids: list[str]) -> None:
         self._done_marked.update(run_ids)
 
     def done_run_ids(self) -> set[str]:
         return set(self._done_marked)
-
-    def append_quarantine(self, df: DataFrame) -> None:
-        self._quarantine.append(self._collect(df))
-
-    def quarantine_nonempty(self) -> bool:
-        return any(rows for _s, rows in self._quarantine)
-
-    def read_run_quarantine(self, run_id: str) -> DataFrame:
-        schema, rows = self._docs[run_id]
-        return (self.spark.createDataFrame(rows, schema=schema)
-                .filter(F.col("error").isNotNull())
-                .select("url", "error", "run_id"))
-
-    def append_lineage(self, df: DataFrame) -> None:
-        self._lineage.append(self._collect(df))
-
-    def read_lineage(self) -> DataFrame:
-        return self._frame(self._lineage)
-
-    def read_quarantine(self) -> DataFrame:
-        return self._frame(self._quarantine)
-
-    def drop_runs(self, run_ids: list[str]) -> None:
-        for rid in run_ids:
-            self._docs.pop(rid, None)
 
     def record_compaction(self, compact_id: str,
                           replaced: list[str]) -> None:
@@ -435,174 +291,18 @@ class InMemoryCatalogStore(DocStore):
         return dict(self._compactions)
 
 
-def iceberg_available(spark: SparkSession, catalog: str = "local") -> bool:
-    """True when an Iceberg catalog named ``catalog`` is configured AND
-    the Iceberg Spark runtime is on the classpath (a namespace probe —
-    cheap, no data). This sandbox ships neither, so the contract matrix
-    runs :class:`IcebergDocStore` behind a skip guard; on a cluster with
-    ``spark.sql.catalog.<name>`` configured the same matrix goes green
-    with zero code changes."""
-    try:
-        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.fcn_probe")
-        spark.sql(f"DROP NAMESPACE IF EXISTS {catalog}.fcn_probe")
-        return True
-    except Exception:
-        return False
-
-
-class IcebergDocStore(DocStore):
-    """The production storage mapping documented on :class:`DocStore`,
-    made concrete against Spark's DataSourceV2 + an Iceberg catalog.
-
-    * ``docs`` → ``{ns}.docs`` partitioned by ``run_id``
-      (``writeTo(...).partitionedBy(col("run_id")).create()`` then
-      ``.append()`` — each append is one atomic snapshot commit);
-    * ``committed_run_ids`` → ``SELECT partition.run_id FROM
-      {ns}.docs.partitions`` — the partitions METADATA table: no file
-      listing, O(partitions) rows;
-    * ``read_run_urls`` → snapshot read with a ``run_id`` filter
-      (partition-pruned by the spec);
-    * ``_done_urls`` → ``{ns}.done`` (url + run_id; on a real deployment
-      bucket(url) in the partition spec mirrors the url-hash clustering);
-    * ``mark_done`` → append to ``{ns}.done_marks``. Where the catalog
-      supports multi-table transactions (or a WAP branch), docs + done +
-      mark collapse into ONE commit and the healing pass degenerates to
-      a no-op check — the marks table keeps the crash-window contract
-      testable on catalogs without that.
-
-    Requires ``iceberg_available``; everything else (run_extract, resume,
-    healing) is the UNCHANGED storage-agnostic logic above DocStore.
-    """
-
-    def __init__(self, spark: SparkSession, namespace: str) -> None:
-        self.spark = spark
-        self.ns = namespace            # e.g. "local.extract_2026_03"
-        spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {namespace}")
-        self.docs_tbl = f"{namespace}.docs"
-        self.done_tbl = f"{namespace}.done"
-        self.marks_tbl = f"{namespace}.done_marks"
-        self.quarantine_tbl = f"{namespace}.quarantine"
-        self.lineage_tbl = f"{namespace}.lineage"
-
-    def _exists(self, tbl: str) -> bool:
-        return self.spark.catalog.tableExists(tbl)
-
-    def _append(self, df: DataFrame, tbl: str, partition: str | None = None
-                ) -> None:
-        if self._exists(tbl):
-            df.writeTo(tbl).append()
-            return
-        w = df.writeTo(tbl).using("iceberg")
-        if partition:
-            w = w.partitionedBy(F.col(partition))
-        w.create()
-
-    def docs_nonempty(self) -> bool:
-        return bool(self.committed_run_ids())
-
-    def done_nonempty(self) -> bool:
-        return (self._exists(self.done_tbl)
-                and bool(self.spark.table(self.done_tbl).head(1)))
-
-    def committed_run_ids(self) -> set[str]:
-        if not self._exists(self.docs_tbl):
-            return set()
-        rows = self.spark.sql(
-            f"SELECT DISTINCT partition.run_id AS run_id "
-            f"FROM {self.docs_tbl}.partitions").collect()
-        return {r["run_id"] for r in rows}
-
-    def has_legacy_flat_docs(self) -> bool:
-        return False        # a catalog has no pre-catalog layout
-
-    def read_done(self) -> DataFrame:
-        return self.spark.table(self.done_tbl)
-
-    def read_run_urls(self, run_id: str) -> DataFrame:
-        return (self.spark.table(self.docs_tbl)
-                .filter(F.col("run_id") == run_id).select("url"))
-
-    def read_legacy_urls(self) -> DataFrame:
-        raise AssertionError("catalog store has no legacy layout")
-
-    def append_docs(self, df: DataFrame) -> None:
-        self._append(df, self.docs_tbl, partition="run_id")
-
-    def read_docs(self) -> DataFrame:
-        return self.spark.table(self.docs_tbl)
-
-    def append_done(self, urls: DataFrame) -> None:
-        self._append(urls.repartition("url"), self.done_tbl)
-
-    def mark_done(self, run_ids: list[str]) -> None:
-        if not run_ids:
-            return
-        df = self.spark.createDataFrame([(r,) for r in run_ids],
-                                        "run_id string")
-        self._append(df, self.marks_tbl)
-
-    def done_run_ids(self) -> set[str]:
-        if not self._exists(self.marks_tbl):
-            return set()
-        return {r["run_id"]
-                for r in self.spark.table(self.marks_tbl).collect()}
-
-    def append_quarantine(self, df: DataFrame) -> None:
-        self._append(df, self.quarantine_tbl)
-
-    def quarantine_nonempty(self) -> bool:
-        return (self._exists(self.quarantine_tbl)
-                and bool(self.spark.table(self.quarantine_tbl).head(1)))
-
-    def read_run_quarantine(self, run_id: str) -> DataFrame:
-        return (self.spark.table(self.docs_tbl)
-                .filter((F.col("run_id") == run_id)
-                        & F.col("error").isNotNull())
-                .select("url", "error", "run_id"))
-
-    def append_lineage(self, df: DataFrame) -> None:
-        self._append(df, self.lineage_tbl)
-
-    def read_lineage(self) -> DataFrame:
-        return self.spark.table(self.lineage_tbl)
-
-    def read_quarantine(self) -> DataFrame:
-        return self.spark.table(self.quarantine_tbl)
-
-    def drop_runs(self, run_ids: list[str]) -> None:
-        # partition-level metadata delete (one snapshot commit); the
-        # native alternative is CALL rewrite_data_files, but routing
-        # through the seam keeps compact_docs storage-agnostic
-        ids = ", ".join(f"'{r}'" for r in run_ids)
-        self.spark.sql(
-            f"DELETE FROM {self.docs_tbl} WHERE run_id IN ({ids})")
-
-    def record_compaction(self, compact_id: str,
-                          replaced: list[str]) -> None:
-        self._append(self.spark.createDataFrame(
-            [(compact_id, list(sorted(replaced)))],
-            "compact_id string, replaced array<string>"),
-            f"{self.ns}.compactions")
-
-    def compaction_log(self) -> dict[str, list[str]]:
-        tbl = f"{self.ns}.compactions"
-        if not self._exists(tbl):
-            return {}
-        return {r["compact_id"]: list(r["replaced"])
-                for r in self.spark.table(tbl).collect()}
-
-
 def _settled_urls(store: DocStore, heal: bool) -> DataFrame | None:
     """Urls already settled in the output — extracted OR quarantined (a
     poison page is quarantined exactly once per output directory, never
     re-validated on every resume).
 
     Reconciles the compact ``_done_urls`` side table against the
-    committed docs run_ids: any run committed to docs but absent from
-    the side table (crash between the two appends, or a pre-side-table
-    output dir) contributes its urls from a partition-pruned read — and,
-    with ``heal=True``, is backfilled into ``_done_urls`` so the NEXT
-    resume is O(done-set) again. Returns None when nothing is settled.
+    committed docs run_ids: any run committed to docs but not marked
+    done (a crash between or during the post-docs appends) contributes
+    its urls from a partition-pruned read — and, with ``heal=True``, is
+    backfilled into ``_done_urls`` (and its error rows into the
+    quarantine mirror) so the NEXT resume is O(done-set) again. Returns
+    None when nothing is settled.
     """
     if heal:
         # a compaction that crashed mid-window can leave the docs table
@@ -611,61 +311,42 @@ def _settled_urls(store: DocStore, heal: bool) -> DataFrame | None:
         # present → roll forward; unmarked compact run → roll back.
         heal_compaction(store)
 
-    docs_any = store.docs_nonempty()
-    done_any = store.done_nonempty()
-    if not docs_any and not done_any:
+    done_any = store.nonempty("done")
+    if not done_any and not store.nonempty("docs"):
         return None
 
-    done = store.read_done().select("url", "run_id") if done_any else None
+    done = store.read("done").select("url") if done_any else None
     # trust only runs whose done append is KNOWN complete (marker written
     # after the append commits) — a run_id visible in the done data could
     # be a partially-committed append, and skipping its backfill would
     # re-extract the missing urls into duplicate doc rows (ADVICE r4)
     done_ids = store.done_run_ids() if done_any else set()
+    missing = sorted(store.committed_run_ids() - done_ids)
+    if not missing:
+        return done
 
-    missing = store.committed_run_ids() - done_ids
-    backfills = [store.read_run_urls(rid).withColumn("run_id", F.lit(rid))
-                 for rid in sorted(missing)]
-    if store.has_legacy_flat_docs() and LEGACY_RUN_ID not in done_ids:
-        backfills.append(store.read_legacy_urls()
-                         .withColumn("run_id", F.lit(LEGACY_RUN_ID)))
-
-    if not backfills:
-        return done.select("url") if done is not None else None
-
-    missing_urls = backfills[0]
-    for b in backfills[1:]:
-        missing_urls = missing_urls.unionByName(b)
-    if heal:
-        # distinct() collapses exact (url, run_id) duplicate rows within
-        # this backfill; a url re-extracted under TWO run_ids still lands
-        # twice — tolerated, the resume anti-join is set-semantics
-        store.append_done(missing_urls.distinct())
-        # the quarantine MIRROR is also post-docs state: rebuild it for
-        # the backfilled runs from their committed error rows, skipping
-        # urls already mirrored (quarantined exactly once per output dir)
-        q_backfill = None
-        for rid in sorted(missing):
-            q = store.read_run_quarantine(rid)
-            q_backfill = q if q_backfill is None else q_backfill.unionByName(q)
-        if q_backfill is not None:
-            if store.quarantine_nonempty():
-                q_backfill = q_backfill.join(
-                    store.read_quarantine().select("url"),
-                    "url", "left_anti")
-            q_backfill = q_backfill.localCheckpoint()
-            if q_backfill.head(1):
-                store.append_quarantine(q_backfill)
-        healed_ids = sorted(missing)
-        if store.has_legacy_flat_docs() and LEGACY_RUN_ID not in done_ids:
-            healed_ids.append(LEGACY_RUN_ID)
-        store.mark_done(healed_ids)
-        healed = store.read_done().select("url")
-        return healed
-    union = missing_urls.select("url")
-    if done is not None:
-        union = union.unionByName(done.select("url"))
-    return union
+    backfill = functools.reduce(DataFrame.unionByName,
+                                [store.read_run(rid) for rid in missing])
+    if not heal:
+        urls = backfill.select("url")
+        return urls if done is None else urls.unionByName(done)
+    # distinct() collapses exact (url, run_id) duplicate rows within this
+    # backfill; a url re-extracted under TWO run_ids still lands twice —
+    # tolerated, the resume anti-join is set-semantics
+    store.append("done", backfill.select("url", "run_id").distinct())
+    # the quarantine MIRROR is also post-docs state: rebuild it for the
+    # backfilled runs from their committed error rows, skipping urls
+    # already mirrored (quarantined exactly once per output dir)
+    errors = (backfill.filter(F.col("error").isNotNull())
+              .select("url", "error", "run_id"))
+    if store.nonempty("quarantine"):
+        errors = errors.join(store.read("quarantine").select("url"),
+                             "url", "left_anti")
+    errors = errors.localCheckpoint()
+    if errors.head(1):
+        store.append("quarantine", errors)
+    store.mark_done(missing)
+    return store.read("done").select("url")
 
 
 def observed(obs: Observation, key: str = "n") -> int:
@@ -721,25 +402,25 @@ def run_extract(pages: DataFrame, out_dir: str,
                     F.count("error").alias("n_quarantined")))
     # pin ONE materialization: part_id comes from spark_partition_id, so
     # every consumer below must see the same physical run, and the docs
-    # write must not recompute the extraction a second time. On Iceberg
-    # the equivalent is write-then-snapshot-read; here localCheckpoint
-    # keeps the run's output on executor-local disk for its consumers.
+    # write must not recompute the extraction a second time;
+    # localCheckpoint keeps the run's output on executor-local disk for
+    # its consumers.
     out = out.localCheckpoint(eager=True)
     n_quarantined = observed(counts, "n_quarantined")
     n_docs = observed(counts) - n_quarantined
     try:
-        store.append_docs(out)
+        store.append("docs", out)
         wall = time.time() - t0
 
         # this run's settled urls (docs AND quarantine rows) → compact
         # done-set side table: resume reads O(done-set), one string
         # column, instead of the url column of everything ever written
-        store.append_done(out.select("url", "run_id"))
+        store.append("done", out.select("url", "run_id"))
 
         if n_quarantined:
-            store.append_quarantine(
-                out.filter(F.col("error").isNotNull())
-                .select("url", "error", "run_id"))
+            store.append("quarantine",
+                         out.filter(F.col("error").isNotNull())
+                         .select("url", "error", "run_id"))
 
         good = out.filter(F.col("error").isNull())
         lineage = (good.groupBy("part_id")
@@ -751,13 +432,14 @@ def run_extract(pages: DataFrame, out_dir: str,
                    .withColumn("run_id", F.lit(run_id))
                    .withColumn("wall_sec", F.lit(round(wall, 3)))
                    .withColumn("committed_at", F.current_timestamp()))
-        store.append_lineage(lineage)
+        store.append("lineage", lineage)
         # the marker means the run is FULLY recorded — done set,
         # quarantine mirror AND lineage — so it is written LAST: a crash
         # anywhere above leaves the run unmarked and the next resume's
-        # healing pass re-derives all three from the committed docs
-        # (re-extraction never happens either way; docs are the commit
-        # point and the anti-join sees the backfilled done rows)
+        # healing pass rebuilds the done set and the quarantine mirror
+        # from the committed docs (re-extraction never happens either
+        # way; docs are the commit point and the anti-join sees the
+        # backfilled done rows)
         store.mark_done([run_id])
     finally:
         out.unpersist()
@@ -766,10 +448,6 @@ def run_extract(pages: DataFrame, out_dir: str,
             "docs_dir": os.path.join(out_dir, "docs"),
             "lineage_dir": os.path.join(out_dir, "_lineage"),
             "quarantine_dir": os.path.join(out_dir, "_quarantine")}
-
-
-def lineage_table(spark: SparkSession, out_dir: str) -> DataFrame:
-    return ParquetDirStore(spark, out_dir).read_lineage()
 
 
 # ---------------------------------------------- small-files compaction
@@ -824,9 +502,9 @@ def compact_docs(store: DocStore, num_files: int = 8,
     preserved where it lives: ``_done_urls`` and ``_lineage`` keep the
     ORIGINAL run_ids; only the physical docs layout changes.
 
-    On Iceberg the engine-native equivalent is
-    ``CALL rewrite_data_files`` — this seam-level version exists so the
-    parquet-dir and catalog stores share one tested protocol.
+    A catalog has an engine-native equivalent (Iceberg's
+    ``CALL rewrite_data_files``); this seam-level version lets the
+    parquet-dir and catalog-style stores share one tested protocol.
 
     Returns a summary dict; a store with ≤1 committed run is already
     compact (no-op)."""
@@ -837,22 +515,17 @@ def compact_docs(store: DocStore, num_files: int = 8,
         raise ValueError(
             f"compact_id must start with {COMPACT_PREFIX!r}")
     heal_compaction(store)
-    if store.has_legacy_flat_docs():
-        raise ValueError(
-            "compaction requires the run_id-partitioned layout; "
-            "re-extract the legacy flat docs into a partitioned store "
-            "first")
     old = sorted(store.committed_run_ids())
     if len(old) <= 1:
         return {"compacted_runs": 0, "compact_id": None, "n_docs": 0}
     cid = compact_id or (COMPACT_PREFIX + uuid.uuid4().hex[:12])
-    rewritten = (store.read_docs()
+    rewritten = (store.read("docs")
                  .repartition(num_files)
                  .withColumn("run_id", F.lit(cid)))
-    store.append_docs(rewritten)
+    store.append("docs", rewritten)
     store.mark_done([cid])
     store.record_compaction(cid, old)      # <- the commit point
     store.drop_runs(old)
-    n_docs = store.read_docs().count()
+    n_docs = store.read("docs").count()
     return {"compacted_runs": len(old), "compact_id": cid,
             "n_docs": n_docs}

@@ -12,9 +12,8 @@ Two backends:
   parameters — heatmaps rendered from the layout record.
 * **real** (``weights_path`` given, or ``FINDTEXTCENTERNET_SPARK_WEIGHTS``
   set): ``operators/models.py`` — rasterize → 768px tiles → batched CNN
-  forward with the reference's 10+100-channel output contract
-  (torch when importable, NumPy otherwise), plus three per-modulus
-  residue softmax heads for the decoder.
+  forward with the reference's 10+100-channel output contract (NumPy),
+  plus three per-modulus residue softmax heads for the decoder.
 
 On a cluster the weights file ships via ``spark-submit --files`` (read
 back with ``SparkFiles.get``) and the path is threaded through

@@ -20,10 +20,9 @@ The sandbox ships no trained weights, so the architectures here are tiny
 to exercise every real-path shape: pixel rasterization, 768-px tiling,
 batched forward, interior-mask merge, fp16 feature transport, image-based
 P6 contrast, map-derived line/separator runs, and top-3 residue decode.
-A torch implementation of the same math sits behind an import guard and
-loads the same ``.npz``; absent torch, NumPy runs it. A real deployment
-swaps the forward bodies for the trained EfficientNetV2/transformer and
-nothing upstream changes.
+NumPy runs the forward; a real deployment swaps the forward bodies for
+the trained EfficientNetV2/transformer (on any backend) and nothing
+upstream changes.
 """
 
 from __future__ import annotations
@@ -33,11 +32,6 @@ import math
 import numpy as np
 
 from ..config import FEATURE_DIM, HM, MODULOS, SCALE, STRIDE
-
-try:  # torch backend — absent in this sandbox
-    import torch
-except ImportError:  # pragma: no cover - environment-dependent
-    torch = None
 
 TILE_PX = HM * SCALE          # 768
 ENCODER_DIM = FEATURE_DIM + 6  # 106
@@ -91,17 +85,14 @@ class NumpyDetector:
         self.w2 = npz["conv2_w"]
         self.b2 = npz["conv2_b"]
 
-    def _maps(self, tiles: np.ndarray) -> np.ndarray:
+    def forward_tiles(self, tiles: np.ndarray
+                      ) -> tuple[np.ndarray, np.ndarray]:
         b = tiles.shape[0]
         x = tiles.astype(np.float32) / 255.0
         x = x * 2.0 - 1.0  # reference input scaling (detector.py:218)
         x = x.reshape(b, HM, SCALE, HM, SCALE, 3).mean(axis=(2, 4))
         h = np.maximum(x @ self.w1.T + self.b1, 0.0)
-        return h @ self.w2.T + self.b2  # (B, HM, HM, N_MAPS + FEATURE_DIM)
-
-    def forward_tiles(self, tiles: np.ndarray
-                      ) -> tuple[np.ndarray, np.ndarray]:
-        y = self._maps(tiles)
+        y = h @ self.w2.T + self.b2  # (B, HM, HM, N_MAPS + FEATURE_DIM)
         maps = np.ascontiguousarray(y[..., :N_MAPS].transpose(0, 3, 1, 2))
         feats = np.ascontiguousarray(
             y[..., N_MAPS:].transpose(0, 3, 1, 2)).astype(np.float16)
@@ -110,22 +101,6 @@ class NumpyDetector:
         detected = np.where(key < peak, np.float32(-np.inf), key)
         heat = np.concatenate([key, detected, maps[:, 1:]], axis=1)
         return heat.astype(np.float32), feats
-
-
-class TorchDetector(NumpyDetector):
-    """Same math on torch tensors (GPU-capable); loads the same npz."""
-
-    kind = "real-torch"
-
-    def _maps(self, tiles: np.ndarray) -> np.ndarray:
-        t = torch.from_numpy(np.ascontiguousarray(tiles)).float() / 255.0
-        t = t * 2.0 - 1.0
-        b = t.shape[0]
-        t = t.reshape(b, HM, SCALE, HM, SCALE, 3).mean(dim=(2, 4))
-        h = torch.relu(t @ torch.from_numpy(self.w1).T
-                       + torch.from_numpy(self.b1))
-        y = h @ torch.from_numpy(self.w2).T + torch.from_numpy(self.b2)
-        return y.numpy()
 
 
 def _maxpool3x3_batch(key: np.ndarray) -> np.ndarray:
@@ -187,8 +162,7 @@ def load_detector(weights_path: str):
             f"{N_MAPS} maps ({', '.join(RAW_MAPS)}) + {FEATURE_DIM} "
             "features — a checkpoint converted at different shapes would "
             "silently shift every feature channel")
-    cls = TorchDetector if torch is not None else NumpyDetector
-    return cls(npz)
+    return NumpyDetector(npz)
 
 
 def load_residue_heads(weights_path: str) -> NumpyResidueHeads:

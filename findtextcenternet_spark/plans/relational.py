@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import MODULOS
+from ..operators.cc import connected_components
 from .registry_core import SparkQuery, register, registry  # noqa: F401
 # register/registry live in registry_core (the ONE central dict); re-export
 # kept so `from .relational import register` in sibling modules still works
@@ -802,15 +803,15 @@ SELECT CAST(min(s_suppkey) AS BIGINT) AS component, count(*) AS n_nodes,
 FROM lbl GROUP BY run_id, s_nationkey
 """)
 def a11_connected_components(spark, sf_dir):
-    """A11 connected components (prepare.cpp:6-66) as iterative min-label
-    propagation over an edge list — the distributed CC idiom (join labels
-    across edges, take min, repeat to fixpoint; O(log n) rounds on chains
-    thanks to label doubling via both edge directions).
+    """A11 connected components (prepare.cpp:6-66) through the engine's
+    distributed CC (``operators.cc``: large-star/small-star rounds to a
+    star forest, a hard error on non-convergence).
 
     Graph: supplier nodes, an edge between consecutive suppkeys of the same
     nation — so components are maximal consecutive same-nation runs, which
     the oracle computes in closed form (window run detection). The Spark
     side runs the actual iterative algorithm; the oracle is independent.
+    Nodes with no edge are their own component.
     """
     s = (_t(spark, sf_dir, "supplier")
          .select(F.col("s_suppkey").alias("node"),
@@ -821,35 +822,11 @@ def a11_connected_components(spark, sf_dir):
     edges = (s.join(nxt, ["node"])
              .filter(F.col("nation") == F.col("nation2"))
              .select(F.col("src").alias("a"), F.col("node").alias("b")))
-    edges = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))).cache()
-    labels = s.select("node", "nation", F.col("node").alias("label"))
-    for rnd in range(32):  # ≥ log2(max run length) rounds; fixpoint-checked
-        prop = (labels.join(edges, labels.node == edges.a)
-                .groupBy(F.col("b").alias("node"))
-                .agg(F.min("label").alias("nbr_label")))
-        new = (labels.join(prop, "node", "left")
-               .select("node", "nation",
-                       F.least("label", F.coalesce("nbr_label", "label"))
-                       .alias("label"),
-                       (F.col("label") !=
-                        F.least("label", F.coalesce("nbr_label", "label")))
-                       .alias("_chg")))
-        # localCheckpoint truncates lineage each round — 32 rounds of
-        # stacked joins would otherwise grow the plan without bound;
-        # superseded checkpoint blocks are reclaimed by the ContextCleaner
-        # once the old frame's reference drops
-        new = new.localCheckpoint(eager=True)
-        # convergence flag rides the same pass (no labels-vs-labels join);
-        # check every 2 rounds — label doubling converges fast and each
-        # count pays one (cheap, checkpoint-backed) job
-        if rnd % 2 == 1 or rnd == 31:
-            if new.filter(F.col("_chg")).count() == 0:
-                labels = new.drop("_chg")
-                break
-        labels = new.drop("_chg")
-    edges.unpersist()
-    return (labels.groupBy("label", "nation")
+    keepers = connected_components(edges, "a", "b").select(
+        F.col("doc_id").alias("node"), "cluster_keeper")
+    return (s.join(keepers, "node", "left")
+            .groupBy(F.coalesce("cluster_keeper", "node").alias("label"),
+                     "nation")
             .agg(F.count("*").alias("n_nodes"))
             .select(F.col("label").cast("long").alias("component"),
                     "n_nodes", F.col("nation").cast("long").alias("nation")))

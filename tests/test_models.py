@@ -100,7 +100,7 @@ def test_registry_backend_selection(weights):
     per-path singletons."""
     assert get_detector_model()["kind"] == "surrogate"
     real = get_detector_model(weights)
-    assert real.kind in ("real-numpy", "real-torch")
+    assert real.kind == "real-numpy"
     assert get_detector_model(weights) is real  # lru singleton
     assert get_residue_heads() is None
     assert get_residue_heads(weights).kind == "real-numpy"
@@ -132,17 +132,3 @@ def test_real_path_end_to_end_matches_golden(spark, weights):
         assert (r.text, r.aozora, r.noruby, r.path) == \
             (g["text"], g["aozora"], g["noruby"], g["path"]), r.url
 
-
-@pytest.mark.skipif(M.torch is None, reason="torch not installed")
-def test_torch_matches_numpy(weights):
-    npz = np.load(weights)
-    a = M.NumpyDetector(npz)
-    b = M.TorchDetector(npz)
-    tiles = np.random.default_rng(3).integers(
-        0, 256, (1, 768, 768, 3), dtype=np.uint8)
-    ha, fa = a.forward_tiles(tiles)
-    hb, fb = b.forward_tiles(tiles)
-    fin = np.isfinite(ha) & np.isfinite(hb)
-    assert np.allclose(ha[fin], hb[fin], atol=1e-4)
-    assert np.allclose(fa.astype(np.float32), fb.astype(np.float32),
-                       atol=1e-2)
