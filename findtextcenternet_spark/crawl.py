@@ -30,13 +30,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from .lineage import ParquetDirStore, observed, run_extract
+from .lineage import ParquetDirStore, run_extract
 from .operators.cc import connected_components
 from .plans.training_data import (
     drop_repeated_paragraphs,
     lsh_verified_pairs_df,
 )
 from .sources import read_pages
+from .sources.session import observed
 
 
 def near_dup_clusters(docs: DataFrame, id_col: str = "url",
@@ -270,7 +271,8 @@ def crawl_to_corpus(spark: SparkSession, input_path: str, out_dir: str, *,
     summary = run_extract(pages, out_dir, run_id=run_id,
                           num_partitions=num_partitions, store=store)
     summary = {**summary, "near_dup_clustered": 0, "near_dup_dropped": 0,
-               "paragraphs_dropped": 0, "quality_rejected": 0,
+               "paragraphs_dropped": 0, "boilerplate_only": 0,
+               "quality_rejected": 0,
                "host_capped": 0, "url_collapsed": 0, "pii_redactions": 0}
 
     # an input filter can legitimately select NOTHING (e.g. a mime with
@@ -315,7 +317,8 @@ def crawl_to_corpus(spark: SparkSession, input_path: str, out_dir: str, *,
             pins.append(docs)
         # build both pins with one job, the FIRST query over the
         # observations above: each keeps what its tasks added by the end
-        # of that query, and a lazy localCheckpoint downstream runs none
+        # of that query, whatever later queries (the near-dup pins among
+        # them) read the persisted frames
         docs.write.format("noop").mode("overwrite").save()
         kept = observed(gated if quality_gate else pinned)
 
@@ -349,6 +352,8 @@ def crawl_to_corpus(spark: SparkSession, input_path: str, out_dir: str, *,
         para if para_dedup_max is not None else pinned)
     if para_dedup_max is not None:
         summary["paragraphs_dropped"] = observed(para, "drop")
+        # pages whose every paragraph was boilerplate
+        summary["boilerplate_only"] = observed(para) - observed(pinned)
     summary["quality_rejected"] = observed(pinned) - kept
     if near_dedup:
         summary["near_dup_clustered"] = observed(near)

@@ -62,13 +62,3 @@ def decode_ruby_col(col: Column, outtype: str = "aozora") -> Column:
     if outtype == "noruby":
         return F.regexp_replace(col, _RUBY_PATTERN_SQL, "$1")
     raise ValueError(f"unknown outtype: {outtype}")
-
-
-def decode_ruby_sql(col_name: str, outtype: str = "aozora") -> str:
-    """ANSI-SQL equivalent (DuckDB oracle) of decode_ruby_col."""
-    pat = _RUBY_PATTERN_SQL.replace("'", "''")
-    if outtype == "aozora":
-        return f"regexp_replace({col_name}, '{pat}', '｜\\1《\\2》', 'g')"
-    if outtype == "noruby":
-        return f"regexp_replace({col_name}, '{pat}', '\\1', 'g')"
-    raise ValueError(f"unsupported oracle outtype: {outtype}")

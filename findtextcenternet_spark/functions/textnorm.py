@@ -1,18 +1,12 @@
-"""Text normalization & character-class functions (SURVEY.md F6-F8).
+"""The reference's whitespace character set (SURVEY.md F6).
 
-Mirrors the reference's whitespace set (process_ocr_base.py:11-37 /
-dataset/data_transformer.py:25-51 — the 25 Unicode whitespace characters),
-space normalization (data_transformer.py:424-426) and ASCII/Hangul class
-tests (data_transformer.py:53-57). All are single regex/char-set
-operations, so on Spark they are native Column expressions (JVM-side).
+Mirrors process_ocr_base.py:11-37 / dataset/data_transformer.py:25-51 —
+the 25 Unicode whitespace characters, which the assemble stage tests
+characters against. The F6/F7 whitespace ops are native Column
+expressions in plans/relational.py.
 """
 
 from __future__ import annotations
-
-import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # The reference's 25 Unicode whitespace characters (process_ocr_base.py:11-37).
 _WS_CODES = (
@@ -22,51 +16,3 @@ _WS_CODES = (
     0x3000,
 )
 WHITESPACE_CHARS = "".join(map(chr, _WS_CODES))
-_WS_CLASS = "[" + WHITESPACE_CHARS + "]"
-
-ASCII_SET = (
-    "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
-    "~!@#$%^&*()_+-={}[]|\\:;\"'<>,.?/‘’“”"
-)  # data_transformer.py:53-54
-
-
-def is_whitespace_col(col: Column) -> Column:
-    """True when the single-char column is one of the 25 whitespace chars."""
-    return col.rlike("^" + _WS_CLASS + "$")
-
-
-def normalize_spaces_col(col: Column) -> Column:
-    """Collapse repeated spaces / blank lines (data_transformer.py:424-426):
-    ``　　+``→``　``, ``  +``→`` ``, ``\\n\\n\\n+``→``\\n\\n``."""
-    c = F.regexp_replace(col, "　　+", "　")
-    c = F.regexp_replace(c, "  +", " ")
-    c = F.regexp_replace(c, "\n\n\n+", "\n\n")
-    return c
-
-
-def normalize_spaces_sql(col_name: str) -> str:
-    """DuckDB-oracle SQL equivalent of normalize_spaces_col."""
-    return (
-        "regexp_replace(regexp_replace(regexp_replace("
-        f"{col_name}, '　　+', '　', 'g'), '  +', ' ', 'g'), "
-        "'\\n\\n\\n+', chr(10)||chr(10), 'g')"
-    )
-
-
-def is_ascii_col(col: Column) -> Column:
-    """True when every char of the string is in the reference ASCII set."""
-    cls = "[" + re.escape(ASCII_SET) + "]"
-    return col.rlike(f"^{cls}+$")
-
-
-def is_hangul_col(col: Column) -> Column:
-    """True when the string contains a Hangul-syllable char (U+AC00-D7A3)."""
-    return col.rlike("[가-힣]")
-
-
-def normalize_spaces(text: str) -> str:
-    """Kernel form for the golden reference."""
-    text = re.sub("　　+", "　", text)
-    text = re.sub("  +", " ", text)
-    text = re.sub("\n\n\n+", "\n\n", text)
-    return text

@@ -52,10 +52,11 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pipeline import extract_documents
+from .sources.session import pin
 
 
 def _dir_nonempty(path: str) -> bool:
@@ -163,7 +164,18 @@ class ParquetDirStore(DocStore):
         w.parquet(self.dirs[table])
 
     def read(self, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.dirs[table])
+        runs = sorted(self.committed_run_ids()) if table == "docs" else []
+        if not runs:
+            return self.spark.read.parquet(self.dirs[table])
+        # run_id values stay strings: inferred, an all-digit id reads
+        # back as a number (leading zeros lost) and one such as
+        # "8e4912345678" parses as a decimal with a 4.9e9 exponent,
+        # whose scaling never finishes. Naming the partition column's
+        # type turns inference off for it alone.
+        schema = (self.spark.read.parquet(
+            os.path.join(self.docs_dir, f"run_id={runs[0]}")).schema
+            .add("run_id", "string"))
+        return self.spark.read.schema(schema).parquet(self.docs_dir)
 
     def nonempty(self, table: str) -> bool:
         return _dir_nonempty(self.dirs[table])
@@ -342,17 +354,11 @@ def _settled_urls(store: DocStore, heal: bool) -> DataFrame | None:
     if store.nonempty("quarantine"):
         errors = errors.join(store.read("quarantine").select("url"),
                              "url", "left_anti")
-    errors = errors.localCheckpoint()
-    if errors.head(1):
+    errors, seen = pin(errors, F.count(F.lit(1)).alias("n"))
+    if seen["n"]:
         store.append("quarantine", errors)
     store.mark_done(missing)
     return store.read("done").select("url")
-
-
-def observed(obs: Observation, key: str = "n") -> int:
-    """Count or sum ``key`` of ``obs`` once an action over it ends (blocks
-    until then); a node AQE pruned as empty ran no task and reads 0."""
-    return int(obs._jo.getRow().size() and obs.get[key] or 0)
 
 
 def extracted_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
@@ -371,9 +377,10 @@ def run_extract(pages: DataFrame, out_dir: str,
     Anti-joins pages already settled (resume, with done-set healing —
     see module docstring), runs the extraction pipeline (poison pills
     become in-pass error rows, never task failures), pins the combined
-    frame once (localCheckpoint — the docs write, done-set, quarantine
-    and lineage all derive from the SAME materialization; nothing
-    re-reads the docs table, the 100 TB listing killer), and appends:
+    frame once (``sources.session.pin`` — the docs write, done-set,
+    quarantine and lineage all derive from the SAME materialization, and
+    the pin's own query counts its rows and error rows; nothing re-reads
+    the docs table, the 100 TB listing killer), and appends:
     docs (the commit point), then _done_urls, then _quarantine/_lineage.
     A crash after the docs append is healed by the next resume's
     reconciliation — no re-extraction, no duplicates.
@@ -394,20 +401,16 @@ def run_extract(pages: DataFrame, out_dir: str,
 
     t0 = time.time()
     combined = extract_documents(todo, num_partitions)
-    counts = Observation()
-    out = (combined
-           .withColumn("part_id", F.spark_partition_id())
-           .withColumn("run_id", F.lit(run_id))
-           .observe(counts, F.count(F.lit(1)).alias("n"),
-                    F.count("error").alias("n_quarantined")))
     # pin ONE materialization: part_id comes from spark_partition_id, so
     # every consumer below must see the same physical run, and the docs
-    # write must not recompute the extraction a second time;
-    # localCheckpoint keeps the run's output on executor-local disk for
-    # its consumers.
-    out = out.localCheckpoint(eager=True)
-    n_quarantined = observed(counts, "n_quarantined")
-    n_docs = observed(counts) - n_quarantined
+    # write must not recompute the extraction a second time
+    out, counts = pin(combined
+                      .withColumn("part_id", F.spark_partition_id())
+                      .withColumn("run_id", F.lit(run_id)),
+                      F.count(F.lit(1)).alias("n"),
+                      F.count("error").alias("n_quarantined"))
+    n_quarantined = counts["n_quarantined"]
+    n_docs = counts["n"] - n_quarantined
     try:
         store.append("docs", out)
         wall = time.time() - t0

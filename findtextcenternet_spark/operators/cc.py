@@ -11,10 +11,12 @@ and Beyond", SoCC'14). Each round is two groupBy-min shuffles over the
 edge set; the edge set converges to a star forest whose centers are the
 component minima in O(log^2 n) rounds (O(log n) in practice — duplicate
 clusters are near-cliques, which finish in 2-3 rounds). There is NO
-per-edge driver work: the driver loop only compares per-round
-fingerprints (count + two order-independent hash sums), one tiny
-aggregate action per round, and `localCheckpoint` truncates the lineage
-so round N's plan does not replay rounds 1..N-1.
+per-edge driver work: each round's edge set is pinned
+(``sources.session.pin``: one eager query that truncates the lineage,
+so round N's plan does not replay rounds 1..N-1), and that same query
+observes the round's fingerprint (count + two order-independent hash
+sums), which is all the driver loop compares. One SQL query per round,
+plus one for the initial edge set.
 
 Scale shape at 100 TB: the edge set after LSH+verify is ~0.01% of the
 pair space and shrinks monotonically toward one edge per non-keeper doc;
@@ -27,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
+
+from ..sources.session import pin
 
 
 def _norm(e: DataFrame, dedup: bool = True) -> DataFrame:
@@ -69,14 +73,15 @@ def _small_star(e: DataFrame) -> DataFrame:
                                  F.col("m").alias("b"))))
 
 
-def _fingerprint(e: DataFrame) -> tuple:
-    """Order-independent edge-set fingerprint: one aggregate action.
-    bit_xor never overflows (ANSI-safe) and xor over a DISTINCT edge set
-    is collision-resistant enough paired with the count + both hashes."""
-    row = e.agg(F.count("*").alias("n"),
-                F.expr("bit_xor(xxhash64(a, b))").alias("h1"),
-                F.expr("bit_xor(xxhash64(b, a))").alias("h2")).collect()[0]
-    return (row["n"], row["h1"], row["h2"])
+def _pin_edges(e: DataFrame) -> tuple[DataFrame, tuple]:
+    """Pin an edge set and read its order-independent fingerprint off
+    the pin's own query. bit_xor never overflows (ANSI-safe) and xor
+    over a DISTINCT edge set is collision-resistant enough paired with
+    the count + both hashes."""
+    e, v = pin(e, F.count(F.lit(1)).alias("n"),
+               F.expr("bit_xor(xxhash64(a, b))").alias("h1"),
+               F.expr("bit_xor(xxhash64(b, a))").alias("h2"))
+    return e, (v["n"], v["h1"], v["h2"])
 
 
 def cc_edges(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b",
@@ -86,17 +91,14 @@ def cc_edges(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b",
     # ids keep their incoming type: longs for doc_ids, strings for urls
     # (least/greatest/min are lexicographic there — still a total order,
     # so the keeper is deterministic and no hash-to-long collision risk)
-    e = _norm(pairs.select(F.col(a).alias("a"), F.col(b).alias("b")))
-    # lazy localCheckpoint: the fingerprint action right after is what
-    # materializes it, so each round costs ONE Spark job (eager=True
-    # would pay a second, redundant materialization job per round)
-    e = e.localCheckpoint(eager=False)
-    fp = _fingerprint(e)
+    # every pin is one query: it builds the edge set AND reads its
+    # fingerprint, so the convergence check costs no action of its own
+    e, fp = _pin_edges(_norm(pairs.select(F.col(a).alias("a"),
+                                          F.col(b).alias("b"))))
     rounds = 0
     converged = fp[0] == 0             # empty edge set is trivially done
     for rounds in range(1, max_rounds + 1):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        nfp = _fingerprint(e)
+        e, nfp = _pin_edges(_small_star(_large_star(e)))
         if nfp == fp:
             converged = True
             break

@@ -204,28 +204,3 @@ def pad_to_tile_grid(img: np.ndarray) -> np.ndarray:
     out = np.full((ph, pw, 3), 255, dtype=img.dtype)
     out[:h, :w] = img
     return out
-
-
-def runs_from_mask(mask: np.ndarray, vals: np.ndarray | None = None
-                   ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row runs of True cells -> (runs (n,3) [y,x1,x2], values).
-    The group stage consumes line/sep maps in run-length form."""
-    runs = []
-    rvals = []
-    for y in range(mask.shape[0]):
-        row = mask[y]
-        if not row.any():
-            continue
-        d = np.diff(row.astype(np.int8))
-        starts = np.nonzero(d == 1)[0] + 1
-        ends = np.nonzero(d == -1)[0]
-        if row[0]:
-            starts = np.r_[0, starts]
-        if row[-1]:
-            ends = np.r_[ends, mask.shape[1] - 1]
-        for x1, x2 in zip(starts, ends):
-            runs.append((y, int(x1), int(x2)))
-            rvals.append(float(vals[y, x1:x2 + 1].max())
-                         if vals is not None else 1.0)
-    return (np.array(runs, dtype=np.int64).reshape(-1, 3),
-            np.array(rvals, dtype=np.float64))

@@ -38,7 +38,6 @@ import re
 import zlib
 
 import numpy as np
-import pandas as pd
 
 PDF_MAGIC = b"%PDF-"
 
@@ -392,11 +391,6 @@ def extract_pdf_text(blob: bytes) -> str:
     if lines:
         paras.append(lines)
     return "\n\n".join("\n".join(ls) for ls in paras)
-
-
-def extract_pdf_series(blobs: pd.Series) -> pd.Series:
-    return pd.Series([extract_pdf_text(bytes(b)) for b in blobs],
-                     index=blobs.index, dtype="object")
 
 
 # --- fixture generator (inverse of the parser) -----------------------------

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 
 from ..config import MODULOS
 from ..operators.cc import connected_components
+from ..sources.session import pin
 from .registry_core import SparkQuery, register, registry  # noqa: F401
 # register/registry live in registry_core (the ONE central dict); re-export
 # kept so `from .relational import register` in sibling modules still works
@@ -307,16 +308,16 @@ def scalable_global_rank(df: DataFrame, *order_cols) -> DataFrame:
     """
     # explicit partition count: a bare repartitionByRange is AQE-coalescible
     # and re-sampled on recompute, so the offset map collected below could
-    # disagree with the second execution's partitioning. localCheckpoint
-    # (not .cache()) pins it: a cached frame is best-effort — under memory
-    # pressure the second job would re-run repartitionByRange, whose
-    # boundary RE-SAMPLING can disagree with the collected offsets and
-    # produce wrong/duplicate ranks; checkpoint blocks are materialized
-    # once and reclaimed by the ContextCleaner when the frame drops
+    # disagree with the second execution's partitioning. pin (a
+    # localCheckpoint, not .cache()) fixes it: a cached frame is
+    # best-effort — under memory pressure the second job would re-run
+    # repartitionByRange, whose boundary RE-SAMPLING can disagree with
+    # the collected offsets and produce wrong/duplicate ranks; checkpoint
+    # blocks are materialized once (by the offsets collect) and
+    # reclaimed by the ContextCleaner when the frame drops
     n = max(2, df.sparkSession.sparkContext.defaultParallelism)
     ranged = df.repartitionByRange(n, *order_cols)
-    ranged = (ranged.withColumn("_pid", F.spark_partition_id())
-              .localCheckpoint(eager=True))
+    ranged, _ = pin(ranged.withColumn("_pid", F.spark_partition_id()))
     counts = {r["_pid"]: r["n"] for r in
               ranged.groupBy("_pid").agg(F.count("*").alias("n")).collect()}
     offsets, acc = {}, 0

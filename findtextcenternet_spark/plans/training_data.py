@@ -16,6 +16,7 @@ import math
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.session import pin
 from .relational import _t, _t_raw, register
 
 # ---------------------------------------------------------------- dedup
@@ -221,10 +222,11 @@ def lsh_verified_pairs_df(docs, threshold: float = 0.5):
     fraction of the corpus (~0.01% of docs at scale) — so the shingle
     arrays are built over a semi-join-pruned doc set, not the whole
     corpus (guide §3.2: reduce the big side before computing/shuffling
-    it). The pair frame is localCheckpoint-ed first: it is small by
-    construction (bucketed LSH output) and both the endpoint set and the
-    final pair join read it, so the band self-join runs once."""
-    pairs = lsh_candidate_pairs_df(docs).localCheckpoint(eager=False)
+    it). The pair frame is pinned first (``sources.session.pin``, no
+    metrics: the first reader stores it): it is small by construction
+    (bucketed LSH output) and both the endpoint set and the final pair
+    join read it, so the band self-join runs once."""
+    pairs, _ = pin(lsh_candidate_pairs_df(docs))
     ends = (pairs.select(F.col("doc_a").alias("doc_id"))
             .union(pairs.select(F.col("doc_b").alias("doc_id")))
             .distinct())
@@ -265,9 +267,9 @@ def dedup_ngram_jaccard(spark, sf_dir):
     (lang, length-bucket) block holds millions of docs at corpus scale and
     goes quadratic. Word-set Jaccard is the verify metric; candidates only."""
     # same §3.2 shape as lsh_verified_pairs_df: word sets are built only
-    # for candidate-pair endpoints (semi-join prune), off a checkpointed
-    # pair frame so the band self-join runs once
-    pairs = _lsh_candidate_pairs(spark, sf_dir).localCheckpoint(eager=False)
+    # for candidate-pair endpoints (semi-join prune), off a pinned pair
+    # frame so the band self-join runs once
+    pairs, _ = pin(_lsh_candidate_pairs(spark, sf_dir))
     ends = (pairs.select(F.col("doc_a").alias("doc_id"))
             .union(pairs.select(F.col("doc_b").alias("doc_id")))
             .distinct())

@@ -21,10 +21,13 @@ there are no dangling nodes and no dangling-mass term.
 Scale shape at 100 TB: the edge list is one map-side derivation plus
 ONE shuffle on (src_host, dst_host); each PageRank round shuffles edge
 contributions on dst_host while the rank table stays |hosts| rows
-(broadcast-joinable); the transition matrix is localCheckpoint-ed once
-so the per-round plan never replays the derivation; rounds are a fixed
-small constant (power iteration converges geometrically at the damping
-rate). No driver-side per-edge or per-host work anywhere.
+(broadcast-joinable); the transition matrix is pinned once
+(``sources.session.pin``) so the per-round plan never replays the
+derivation, and every round's rank table is pinned too (with no
+metrics, so the next round's query stores it: no job of its own);
+rounds are a fixed small constant (power iteration converges
+geometrically at the damping rate). No driver-side per-edge or per-host
+work anywhere.
 
 Float discipline: transition probabilities are exact small rationals,
 per-round sums are <= |hosts| doubles, so cross-engine drift is ~1e-15
@@ -35,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sources.session import pin
 from .relational import _t, _t_raw, register
 
 _N_LINKS = 3        # outlinks derived per document
@@ -165,20 +169,17 @@ def pagerank_from_edges(edges: DataFrame, hosts: DataFrame,
     construction for the derived graph; callers with organic graphs
     add sink self-loops first. Per round: edges join the rank table on
     src (rank side is |hosts| rows — AQE broadcasts it), contributions
-    aggregate on dst (ONE shuffle), and the new rank table is
-    localCheckpoint-ed so round N's plan does not replay rounds 1..N-1
-    (the cc.py idiom). The transition matrix is checkpointed once up
-    front for the same reason. ``n_hosts`` lets a caller that already
-    counted the host table skip the extra count job."""
+    aggregate on dst (ONE shuffle), and the new rank table is pinned
+    (``sources.session.pin`` with no metrics: the next round's query
+    stores it) so round N's plan does not replay rounds 1..N-1. The
+    transition matrix is pinned once up front for the same reason.
+    ``n_hosts`` lets a caller that already counted the host table skip
+    the extra count job."""
     n = n_hosts if n_hosts is not None else hosts.count()
     out = edges.groupBy("src_host").agg(F.sum("w").alias("wout"))
-    # lazy localCheckpoint (the cc.py idiom): the first round's action is
-    # what materializes each checkpoint, so every round costs ONE Spark
-    # job — eager=True would pay a redundant materialization job per round
-    trans = (edges.join(out, "src_host")
-             .select("src_host", "dst_host",
-                     (F.col("w") / F.col("wout")).alias("p"))
-             .localCheckpoint(eager=False))
+    trans, _ = pin(edges.join(out, "src_host")
+                   .select("src_host", "dst_host",
+                           (F.col("w") / F.col("wout")).alias("p")))
     ranks = hosts.select("host", F.lit(1.0 / n).alias("pr"))
     base = (1.0 - damp) / n
     for _ in range(iters):
@@ -186,13 +187,12 @@ def pagerank_from_edges(edges: DataFrame, hosts: DataFrame,
                               trans.src_host == ranks.host)
                    .groupBy("dst_host")
                    .agg(F.sum(F.col("p") * F.col("pr")).alias("c")))
-        ranks = (hosts.join(contrib, hosts.host == contrib.dst_host,
-                            "left")
-                 .select("host",
-                         (F.lit(base)
-                          + damp * F.coalesce("c", F.lit(0.0)))
-                         .alias("pr"))
-                 .localCheckpoint(eager=False))
+        ranks, _ = pin(hosts.join(contrib, hosts.host == contrib.dst_host,
+                                  "left")
+                       .select("host",
+                               (F.lit(base)
+                                + damp * F.coalesce("c", F.lit(0.0)))
+                               .alias("pr")))
     return ranks.select("host", F.round("pr", 6).alias("pagerank"))
 
 
@@ -251,41 +251,42 @@ def hits_from_edges(edges: DataFrame, hosts: DataFrame,
 
     Scale shape mirrors :func:`pagerank_from_edges`: the score tables
     stay |hosts| rows (AQE broadcasts them onto the edge side), each
-    half-step is ONE shuffle on the aggregated endpoint, the L1 total is
-    a 1-row aggregate crossJoined back (broadcast by construction), and
-    lazy localCheckpoints truncate lineage per half-step. ``n_hosts``
-    lets a caller that already counted the host table skip the extra
-    count job."""
+    half-step is ONE shuffle on the aggregated endpoint, and every
+    intermediate is pinned (``sources.session.pin``) so lineage stops
+    at each half-step. The L1 total is an observed metric of the raw
+    half-step's pin (so that pin is eager, one query): a driver-side
+    double, with no aggregate frame joined back. ``n_hosts`` lets a
+    caller that already counted the host table skip the extra count
+    job."""
     n = n_hosts if n_hosts is not None else hosts.count()
     if n == 0:
         return hosts.select("host", F.lit(0.0).alias("hub"),
                             F.lit(0.0).alias("auth"))
-    e = edges.localCheckpoint(eager=False)
+    e, _ = pin(edges)
     hub = hosts.select("host", F.lit(1.0 / n).alias("hub"))
     auth = None
     for _ in range(iters):
-        # checkpoint the raw half-step aggregate so the L1 total and the
-        # host re-join read ONE materialization instead of recomputing it
-        a_raw = (e.join(hub, e.src_host == hub.host)
-                 .groupBy("dst_host")
-                 .agg(F.sum(F.col("w") * F.col("hub")).alias("a"))
-                 .localCheckpoint(eager=False))
-        a_all = (hosts.join(a_raw, hosts.host == a_raw.dst_host, "left")
-                 .select("host", F.coalesce("a", F.lit(0.0)).alias("a")))
-        a_tot = a_raw.agg(F.sum("a").alias("t"))
-        auth = (a_all.crossJoin(F.broadcast(a_tot))
-                .select("host", (F.col("a") / F.col("t")).alias("auth"))
-                .localCheckpoint(eager=False))
-        h_raw = (e.join(auth, e.dst_host == auth.host)
-                 .groupBy("src_host")
-                 .agg(F.sum(F.col("w") * F.col("auth")).alias("v"))
-                 .localCheckpoint(eager=False))
-        h_all = (hosts.join(h_raw, hosts.host == h_raw.src_host, "left")
-                 .select("host", F.coalesce("v", F.lit(0.0)).alias("v")))
-        h_tot = h_raw.agg(F.sum("v").alias("t"))
-        hub = (h_all.crossJoin(F.broadcast(h_tot))
-               .select("host", (F.col("v") / F.col("t")).alias("hub"))
-               .localCheckpoint(eager=False))
+        # the raw half-step's pin also observes its L1 total, so the
+        # host re-join reads ONE materialization and the total is free;
+        # an empty half-step's total reads 0 and divides as null (every
+        # score null, as a SQL sum over no rows gives, not an ANSI
+        # divide-by-zero)
+        a_raw, tot = pin(e.join(hub, e.src_host == hub.host)
+                         .groupBy("dst_host")
+                         .agg(F.sum(F.col("w") * F.col("hub")).alias("a")),
+                         F.sum("a").alias("t"))
+        t = F.lit(tot["t"] or None)
+        auth, _ = pin(hosts.join(a_raw, hosts.host == a_raw.dst_host, "left")
+                      .select("host",
+                              (F.coalesce("a", F.lit(0.0)) / t).alias("auth")))
+        h_raw, tot = pin(e.join(auth, e.dst_host == auth.host)
+                         .groupBy("src_host")
+                         .agg(F.sum(F.col("w") * F.col("auth")).alias("v")),
+                         F.sum("v").alias("t"))
+        t = F.lit(tot["t"] or None)
+        hub, _ = pin(hosts.join(h_raw, hosts.host == h_raw.src_host, "left")
+                     .select("host",
+                             (F.coalesce("v", F.lit(0.0)) / t).alias("hub")))
     return (hub.join(auth, "host")
             .select("host", F.round("hub", 6).alias("hub"),
                     F.round("auth", 6).alias("auth")))

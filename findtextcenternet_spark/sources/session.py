@@ -1,4 +1,5 @@
-"""SparkSession factory with the engine's scale-oriented defaults.
+"""SparkSession factory with the engine's scale-oriented defaults, and
+``pin``: the one way the engine pins an intermediate.
 
 Tuned for correctness parity with the DuckDB oracle (UTC session timezone)
 and for Arrow-batched Python exchange. At cluster scale the same settings
@@ -9,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 def get_spark(app: str = "findtextcenternet-spark",
@@ -62,3 +63,36 @@ def get_spark(app: str = "findtextcenternet-spark",
         .config("spark.ui.enabled", "false")
     )
     return b.getOrCreate()
+
+
+def observed(obs: Observation, key: str = "n") -> int:
+    """Count or sum ``key`` of ``obs`` once an action over it ends (blocks
+    until then); a node AQE pruned as empty ran no task and reads 0."""
+    return int(obs._jo.getRow().size() and obs.get[key] or 0)
+
+
+def pin(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """The one way to pin an intermediate: ``(pinned, values)``. Later
+    actions read the pinned blocks and never replay ``df``'s plan; the
+    blocks live on executor-local storage, so a lost executor loses
+    them.
+
+    With ``metrics`` (aggregate columns with aliases) the pin is an
+    EAGER ``localCheckpoint`` of ``df`` observed with them: one SQL
+    query that runs every stage below it. ``values`` maps each alias to
+    what that query saw, read once it has ended; an aggregate over no
+    rows reads 0, whether AQE pruned the node as empty or not.
+
+    Without metrics there is nothing to read, and the pin is a lazy
+    ``localCheckpoint``: under AQE it runs the map stages below it now,
+    and the first action that reads it runs the last stage and stores
+    the blocks. That saves the eager pin's own job, which a loop that
+    pins every round (PageRank's rank tables) would pay each round."""
+    if not metrics:
+        return df.localCheckpoint(eager=False), {}
+    obs = Observation()
+    pinned = df.observe(obs, *metrics).localCheckpoint(eager=True)
+    # a node AQE pruned as empty ran no task: its row has no fields
+    values = (obs.get if obs._jo.getRow().size()
+              else dict.fromkeys(df.select(*metrics).columns))
+    return pinned, {k: 0 if v is None else v for k, v in values.items()}

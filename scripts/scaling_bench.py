@@ -194,8 +194,9 @@ def write_bench_md(summary, n_docs: int) -> None:
     headline, raster, mixed = (summary["headline"], summary["raster"],
                                summary["mixed"])
     bench_md = os.path.join(REPO, "BENCH.md")
-    # the paired Spark-vs-pool A/B section is measured by ab_mixed.py, not
-    # by this script — keep its recorded story across regens
+    # the paired Spark-vs-pool A/B section was measured by ab_mixed.py
+    # (since removed), not by this script — keep its recorded story
+    # across regens
     ab_path = os.path.join(REPO, "BENCH_AB.md")
     ab_section = ""
     if os.path.exists(ab_path):
@@ -261,7 +262,7 @@ count; efficiencies {control.get('raster', {}).get('efficiency', {})} and
 above its mp-control efficiency means the remaining scaling gap is the
 box (shared DRAM, KVM steal), not the architecture. What sets the box's
 own 8→32 ceiling: a pure-ALU tiny-working-set busy loop
-(`scripts/alu_control.py` — no DRAM streaming at all) scales at ~0.715
+(`scripts/alu_control.py`, since removed — no DRAM streaming at all) scales at ~0.715
 from 8→32 workers on this guest while the extraction kernels scale at
 ~0.738 in the same window, so the ceiling is the guest's vCPU delivery
 (KVM host scheduling/steal), not memory bandwidth and not the pipeline —

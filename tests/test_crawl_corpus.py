@@ -2,10 +2,8 @@
 test proving the CDX-indexed path equals the full-walk path minus
 duplicates, plus the CLI invocation."""
 
-import contextlib
 import datetime as dt
 import json
-import signal
 import subprocess
 import sys
 
@@ -434,31 +432,14 @@ def test_crawl_to_corpus_incremental_cdx_diff(spark, tmp_path):
 
 # ---- the summary funnel (observed, not counted by extra jobs) ---------
 
-_FUNNEL = ("url_collapsed", "paragraphs_dropped", "quality_rejected",
-           "near_dup_clustered", "near_dup_dropped", "host_capped",
-           "pii_redactions")
+_FUNNEL = ("url_collapsed", "paragraphs_dropped", "boilerplate_only",
+           "quality_rejected", "near_dup_clustered", "near_dup_dropped",
+           "host_capped", "pii_redactions")
 _ALL_FLAGS = dict(near_dedup=True, url_canon=True, para_dedup_max=2,
                   quality_gate=True, host_cap=10, pii_scrub=True)
 
 
-@contextlib.contextmanager
-def _deadline(seconds: int):
-    """Fail instead of hanging: a funnel read waits until an action over
-    the observed frame has finished."""
-    def expired(signum, frame):
-        raise TimeoutError(f"crawl_to_corpus still running after "
-                           f"{seconds} s")
-
-    prev = signal.signal(signal.SIGALRM, expired)
-    signal.alarm(seconds)
-    try:
-        yield
-    finally:
-        signal.alarm(0)
-        signal.signal(signal.SIGALRM, prev)
-
-
-def test_crawl_to_corpus_nothing_removed(spark, tmp_path):
+def test_crawl_to_corpus_nothing_removed(spark, tmp_path, deadline):
     """Every post-pass on and none removes anything: no url variant, no
     shared paragraph, no gated page, no near-dup pair (so the cluster
     frame is empty), a cap above every host, no PII. Every funnel count
@@ -470,7 +451,7 @@ def test_crawl_to_corpus_nothing_removed(spark, tmp_path):
         [_page(f"https://c.example.org/u{i:02d}", _text(i))
          for i in range(20)]))
     for tag, wet in (("wet", str(tmp_path / "wet")), ("count", None)):
-        with _deadline(600):
+        with deadline(600):
             s = crawl_to_corpus(spark, str(warc), str(tmp_path / tag),
                                 input_format="warc", wet_dir=wet,
                                 **{**_ALL_FLAGS, "host_cap": 100})
@@ -478,7 +459,7 @@ def test_crawl_to_corpus_nothing_removed(spark, tmp_path):
         assert s["wet_records" if wet else "corpus_docs"] == 20
 
 
-def test_crawl_to_corpus_all_quarantined(spark, tmp_path):
+def test_crawl_to_corpus_all_quarantined(spark, tmp_path, deadline):
     """A store holding only quarantined rows: every post-pass runs over
     an empty frame, every funnel count is 0 and no WET shard is
     written — no crash, no hang."""
@@ -489,7 +470,7 @@ def test_crawl_to_corpus_all_quarantined(spark, tmp_path):
         "url": [f"https://c.example.org/bad{i}" for i in range(5)],
         "html": pa.array([None] * 5, pa.binary())}),
         str(tmp_path / "pages.parquet"))
-    with _deadline(600):
+    with deadline(600):
         s = crawl_to_corpus(spark, str(tmp_path / "pages.parquet"),
                             str(tmp_path / "out"), input_format="parquet",
                             wet_dir=str(tmp_path / "wet"), **_ALL_FLAGS)
@@ -536,18 +517,8 @@ def test_crawl_to_corpus_near_dedup_keep_best(spark, tmp_path,
                        "https://c.example.org/u05"}
 
 
-def _query_ids(spark) -> set[int]:
-    """Ids of the SQL queries (DataFrame actions, writes, checkpoints)
-    the session's status store holds, once its listener has seen every
-    event so far. The store drops the oldest queries beyond its
-    retention limit, never the newest."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    qs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    return {qs.apply(i).executionId() for i in range(qs.length())}
-
-
 @pytest.fixture(scope="module")
-def all_flags_run(spark, tmp_path_factory, crawl_fixture):
+def all_flags_run(spark, tmp_path_factory, crawl_fixture, query_ids):
     """One all-flags crawl_to_corpus over the crawl fixture plus a
     capture per post-pass, run under its own Spark job group:
     (summary, out dir, Spark jobs, SQL queries it ran)."""
@@ -567,7 +538,7 @@ def all_flags_run(spark, tmp_path_factory, crawl_fixture):
     warc.write_bytes(write_warc(pages))
     sc = spark.sparkContext
     group = "crawl-all-flags"
-    last = max(_query_ids(spark), default=-1)
+    last = max(query_ids(spark), default=-1)
     sc.setJobGroup(group, "all-flags crawl_to_corpus")
     try:
         s = crawl_to_corpus(spark, str(warc), str(tp / "out"),
@@ -577,7 +548,7 @@ def all_flags_run(spark, tmp_path_factory, crawl_fixture):
         for prop in ("spark.jobGroup.id", "spark.job.description",
                      "spark.job.interruptOnCancel"):
             sc.setLocalProperty(prop, None)
-    queries = [q for q in _query_ids(spark) if q > last]
+    queries = [q for q in query_ids(spark) if q > last]
     return (s, tp / "out", sc.statusTracker().getJobIdsForGroup(group),
             queries)
 
@@ -591,9 +562,8 @@ def test_crawl_to_corpus_funnel_matches_helpers(spark, all_flags_run):
     ``quality_gate_filter``'s ``rejected`` frame lists it once (its
     repetition side is one row per url and text length), but both rows
     leave the corpus: ``quality_rejected`` is 3, not that union's 2.
-    (A page whose every paragraph is boilerplate leaves the corpus
-    without a funnel key; the byte-identical u05/mirror pair would be
-    one at ``para_dedup_max=1``, hence 2 here.)"""
+    No page here is all boilerplate at ``para_dedup_max=2``; see
+    :func:`test_crawl_to_corpus_boilerplate_only_pages`."""
     from findtextcenternet_spark.crawl import (
         host_cap_filter,
         pii_scrub_docs,
@@ -621,6 +591,7 @@ def test_crawl_to_corpus_funnel_matches_helpers(spark, all_flags_run):
     want = {
         "url_collapsed": collapsed.count(),
         "paragraphs_dropped": cleaned.agg(F.sum("n_dropped")).first()[0],
+        "boilerplate_only": cleaned.count() - para.count(),
         "quality_rejected": para.count() - gated.count(),
         "near_dup_clustered": clusters.count(),
         "near_dup_dropped": clusters.filter(
@@ -632,28 +603,54 @@ def test_crawl_to_corpus_funnel_matches_helpers(spark, all_flags_run):
     # u07 variant; 4 shared footers; junk x2 + short; the A~B~C chain
     # and u05/mirror; c.example.org over the cap; one email, one IPv4
     assert want == {"url_collapsed": 1, "paragraphs_dropped": 4,
+                    "boilerplate_only": 0,
                     "quality_rejected": 3, "near_dup_clustered": 5,
                     "near_dup_dropped": 3, "host_capped": 12,
                     "pii_redactions": 2}
     assert rejected.count() == 2
     assert (s["n_docs"], s["n_quarantined"]) == (docs.count(), 0)
-    removed = (s["url_collapsed"] + s["quality_rejected"]
-               + s["near_dup_dropped"] + s["host_capped"])
+    removed = (s["url_collapsed"] + s["boilerplate_only"]
+               + s["quality_rejected"] + s["near_dup_dropped"]
+               + s["host_capped"])
     assert s["n_docs"] - removed == s["wet_records"] == n_sink
+
+
+def test_crawl_to_corpus_boilerplate_only_pages(spark, tmp_path,
+                                                crawl_fixture):
+    """At ``para_dedup_max=1`` the byte-identical u05/mirror pair shares
+    its one paragraph, so both pages are all boilerplate and leave the
+    corpus under ``boilerplate_only``; the funnel still conserves rows
+    with the A~B~C chain's two losers dropped as near-dups."""
+    warc = tmp_path / "a.warc"
+    warc.write_bytes(write_warc(crawl_fixture))
+    s = crawl_to_corpus(spark, str(warc), str(tmp_path / "out"),
+                        input_format="warc", para_dedup_max=1,
+                        wet_dir=str(tmp_path / "wet"))
+    assert (s["paragraphs_dropped"], s["boilerplate_only"]) == (2, 2)
+    assert s["near_dup_dropped"] == 2
+    removed = (s["url_collapsed"] + s["boilerplate_only"]
+               + s["quality_rejected"] + s["near_dup_dropped"]
+               + s["host_capped"])
+    assert s["n_docs"] - removed == s["wet_records"] == 20
+    urls = set(read_wet(spark, str(tmp_path / "wet")).toPandas()["url"])
+    assert not urls & {"https://c.example.org/u05",
+                       "https://c.example.org/mirror-of-u05"}
 
 
 def test_crawl_to_corpus_job_budget(all_flags_run):
     """ROADMAP aim 4: the funnel costs no Spark job of its own.
 
     The bound is on SQL queries, one per DataFrame action, write or
-    eager checkpoint: every counter-only action was one. The job count
-    itself is not a stable bound: AQE runs each query stage as a job,
-    and how many it runs varies by one from run to run. Measured on the
-    all-flags run, 4 local cores: 13 queries in each of 45 runs; 55
-    jobs in 88 of 97 runs, 56 in the other 9. When every funnel number
-    was a separate action (url-canon count, paragraph agg, rejected
-    count, cluster agg, host-cap before/after counts, PII audit and
-    run_extract's two counts) the same run took 21 queries and 95
-    jobs."""
+    pin (``sources.session.pin``): every counter-only action was one,
+    and so was each connected-components fingerprint until it became
+    the metrics of the round's pin. The job count itself is not a
+    stable bound: AQE runs each query stage as a job, and how many it
+    runs can vary by one from run to run. Measured on the all-flags
+    run, 4 local cores: 10 queries and 53 jobs in each of 6 runs. With
+    a separate fingerprint action per CC round it took 13 queries and
+    55-56 jobs; when every funnel number was a separate action too
+    (url-canon count, paragraph agg, rejected count, cluster agg,
+    host-cap before/after counts, PII audit and run_extract's two
+    counts) it took 21 queries and 95 jobs."""
     _, _, jobs, queries = all_flags_run
-    assert len(queries) <= 13, (len(queries), len(jobs))
+    assert len(queries) <= 10, (len(queries), len(jobs))

@@ -57,6 +57,22 @@ def test_self_loops_and_singletons_excluded(spark):
     assert lab == {8: (8, 2), 9: (8, 2)}
 
 
+def test_cc_empty_pair_frame(spark, deadline):
+    """An empty pair graph is 0 edges, with no hang and no error, both
+    from an empty local relation and from pairs that a shuffle filters
+    to nothing at run time. Every pin there reads an Observation whose
+    node may have been pruned as empty; a read that waited for a task
+    which never runs would hang, hence the deadline."""
+    for pairs in (spark.createDataFrame([], "doc_a long, doc_b long"),
+                  _pairs(spark, [(1, 2), (2, 3)]).distinct()
+                  .filter(F.col("doc_a") > 99)):
+        with deadline(300):
+            star, rounds = cc_edges(pairs)
+            assert star.count() == 0
+            assert rounds == 1
+            assert connected_components(pairs).count() == 0
+
+
 def test_drop_repeated_paragraphs_golden_footer(spark):
     """VERDICT r5 item 6: a shared footer paragraph is removed
     corpus-wide without touching unique text."""

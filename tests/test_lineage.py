@@ -2,7 +2,7 @@
 committed output)."""
 
 from findtextcenternet_spark.corpus import generate_pages
-from findtextcenternet_spark.lineage import run_extract
+from findtextcenternet_spark.lineage import ParquetDirStore, run_extract
 from findtextcenternet_spark.pipeline import pages_from_pandas
 
 
@@ -46,6 +46,25 @@ def test_poison_pages_quarantined_not_fatal(spark, tmp_path):
     assert r2["n_quarantined"] == 0
     q2 = spark.read.parquet(out_dir + "/_quarantine")
     assert q2.count() == 2
+
+
+def test_numeric_looking_run_ids_stay_strings(spark, tmp_path, deadline):
+    """run_ids are the docs table's partition values: an all-digit id
+    and an exponent-shaped one (a 12-hex-digit uuid prefix is one of
+    the two about 0.7% of the time) read back through the store as the
+    same strings, and the read returns — left to type inference, the
+    first lost its leading zeros and the second parsed as a decimal
+    with a 4.9e9 exponent, a read that never ended."""
+    out_dir = str(tmp_path / "ids")
+    pages = pages_from_pandas(spark, generate_pages(6))
+    with deadline(300):
+        for rid, want in (("000000000042", {"000000000042"}),
+                          ("8e4912345678", {"000000000042",
+                                            "8e4912345678"})):
+            run_extract(pages.limit(len(want) * 3), out_dir, run_id=rid)
+            docs = ParquetDirStore(spark, out_dir).read("docs")
+            assert {r.run_id for r in
+                    docs.select("run_id").distinct().collect()} == want
 
 
 def test_resume_reads_compact_done_set_urls_only(spark, tmp_path):

@@ -260,10 +260,12 @@ def test_paragraph_dedup_never_shuffles_text(spark):
     assert got == {f"u{i}": (f"unique {i}", 1) for i in range(8)}
 
 
-def test_cc_rounds_are_bounded_shuffles(spark):
+def test_cc_rounds_are_bounded_shuffles(spark, query_ids):
     """Connected components: each round is groupBy-min + join — no
     cartesian, no per-edge driver work, lineage truncated per round (the
-    round-N plan must NOT contain round N-1's operators)."""
+    round-N plan must NOT contain round N-1's operators), and ONE SQL
+    query per round plus one for the initial edge set: the convergence
+    fingerprint is read off each round's pin, not a separate action."""
     import pandas as pd
 
     from findtextcenternet_spark.operators.cc import cc_edges
@@ -271,7 +273,9 @@ def test_cc_rounds_are_bounded_shuffles(spark):
     pairs = spark.createDataFrame(pd.DataFrame(
         [(i, i + 1) for i in range(0, 40, 2)] + [(1, 2), (3, 4)],
         columns=["doc_a", "doc_b"]).astype("int64"))
+    first = max(query_ids(spark), default=-1)
     star, rounds = cc_edges(pairs)
+    assert max(query_ids(spark)) - first == rounds + 1, rounds
     phys = star._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in phys
     assert "BroadcastNestedLoopJoin" not in phys

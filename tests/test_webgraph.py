@@ -114,6 +114,21 @@ def test_hits_hub_and_authority_split(spark):
     assert len({s[f"h{i}"][0] for i in range(2, 6)}) == 1
 
 
+def test_hits_edgeless_graph_reads_null(spark, deadline):
+    """Hosts with no edge between them: each half-step sums over no
+    rows, so every score is null (a sum over no rows is null), with no
+    divide-by-zero error under ANSI mode."""
+    from findtextcenternet_spark.plans.webgraph import hits_from_edges
+
+    edges = spark.createDataFrame([], "src_host string, dst_host string, "
+                                      "w double")
+    hosts = spark.createDataFrame(pd.DataFrame({"host": ["a", "b", "c"]}))
+    with deadline(300):
+        rows = hits_from_edges(edges, hosts).collect()
+    assert sorted((r.host, r.hub, r.auth) for r in rows) == [
+        ("a", None, None), ("b", None, None), ("c", None, None)]
+
+
 def test_dsir_target_stratum_scores_higher(spark):
     """DSIR log-weights measure similarity to the lang='en' target: the
     en stratum's mean per-token log-ratio must exceed the rest's."""
