@@ -18,6 +18,9 @@ deterministic surrogate head that reads residue distributions out of the
 invertible glyph embedding (operators/detect.py:feature_embedding) — the
 round loop, candidate expansion, CRT reconstruction and re-masking are the
 real algorithm, vectorized over all positions of a batch of windows.
+The pipeline runs one ``mask_predict`` over the framed windows of a whole
+Arrow batch (``pipeline._decode_codes``); ``expand_window`` is the
+one-window form the golden runs.
 """
 
 from __future__ import annotations
@@ -62,52 +65,47 @@ def tokenize_page(ordered: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     meta columns: box_id, block, idx, subidx, subtype, cx, cy, w, h
     (box_id = -1 for break tokens). Break-token emission mirrors
     process_ocr_base.py:135-149: one break on block change (which resets the
-    line index) plus one on line change.
+    line index) plus one on line change; a break carries the vertical flag
+    of the glyph before it. Whole-array: the breaks before each glyph are
+    counted first, which fixes every row's output position.
     """
-    tokens: list[np.ndarray] = []
-    meta: list[tuple] = []
-    prev_block = 0
-    prev_idx = 0
-    vertical = 0
-
-    def break_token() -> None:
-        g = np.zeros(ENCODER_DIM, dtype=np.float32)
-        g[FEATURE_DIM + TK_VERT] = 5.0 * vertical
-        g[FEATURE_DIM + TK_NL] = 5.0
-        tokens.append(g)
-        meta.append((-1, -1, -1, -1, -1, 0.0, 0.0, 0.0, 0.0))
-
-    for row in ordered.itertuples(index=False):
-        subtype = int(row.subtype)
-        if prev_block != row.block:
-            prev_block = row.block
-            break_token()
-            prev_idx = -1
-        if prev_idx != row.idx:
-            prev_idx = row.idx
-            break_token()
-
-        ruby = 1 if (subtype & SUBTYPE_RUBY) == SUBTYPE_RUBY else 0
-        rubybase = 1 if (not ruby and (subtype & SUBTYPE_RUBYBASE)) else 0
-        space = 1 if subtype & SUBTYPE_SPACE else 0
-        emphasis = 1 if subtype & SUBTYPE_EMPHASIS else 0
-        vertical = 1 if subtype & SUBTYPE_VERTICAL else 0
-
-        g = np.empty(ENCODER_DIM, dtype=np.float32)
-        f = row.feature
-        g[:FEATURE_DIM] = (np.frombuffer(f, dtype=np.float32)
-                           if isinstance(f, (bytes, bytearray))
-                           else np.asarray(f, dtype=np.float32))
-        g[FEATURE_DIM:] = 5.0 * np.array(
-            [vertical, rubybase, ruby, space, emphasis, 0], dtype=np.float32)
-        tokens.append(g)
-        meta.append((int(row.box_id), int(row.block), int(row.idx),
-                     int(row.subidx), subtype,
-                     float(row.cx), float(row.cy), float(row.w), float(row.h)))
-
-    if not tokens:
+    n = len(ordered)
+    if n == 0:
         return (np.zeros((0, ENCODER_DIM), np.float32), np.zeros((0, 9)))
-    return np.stack(tokens), np.array(meta, dtype=np.float64)
+    block = ordered["block"].to_numpy()
+    idx = ordered["idx"].to_numpy()
+    subtype = ordered["subtype"].to_numpy().astype(np.int64)
+    new_block = block != np.r_[0, block[:-1]]
+    new_line = idx != np.where(new_block, -1, np.r_[0, idx[:-1]])
+    n_breaks = new_block.astype(np.int64) + new_line
+    pos = np.arange(n) + np.cumsum(n_breaks)  # output row of each glyph
+    brk = np.r_[pos[n_breaks == 2] - 2, pos[n_breaks > 0] - 1]
+    ruby = (subtype & SUBTYPE_RUBY) == SUBTYPE_RUBY
+    vertical = (subtype & SUBTYPE_VERTICAL) != 0
+    flags = np.column_stack([
+        vertical, ~ruby & ((subtype & SUBTYPE_RUBYBASE) != 0), ruby,
+        (subtype & SUBTYPE_SPACE) != 0, (subtype & SUBTYPE_EMPHASIS) != 0])
+
+    tokens = np.zeros((n + len(brk), ENCODER_DIM), dtype=np.float32)
+    feats = ordered["feature"].tolist()
+    tokens[pos, :FEATURE_DIM] = (
+        np.frombuffer(b"".join(feats), np.float32).reshape(n, FEATURE_DIM)
+        if all(isinstance(f, bytes) for f in feats)
+        else np.stack([np.asarray(f, np.float32) for f in feats]))
+    tokens[pos, FEATURE_DIM:FEATURE_DIM + TK_NL] = 5.0 * flags
+    prev_vert = np.r_[False, vertical[:-1]]
+    tokens[brk, FEATURE_DIM + TK_VERT] = 5.0 * np.r_[
+        prev_vert[n_breaks == 2], prev_vert[n_breaks > 0]]
+    tokens[brk, FEATURE_DIM + TK_NL] = 5.0
+
+    meta = np.zeros((len(tokens), 9))
+    meta[:, :5] = -1
+    meta[pos, :5] = np.column_stack(
+        [ordered[c].to_numpy().astype(np.int64)
+         for c in ("box_id", "block", "idx", "subidx")] + [subtype])
+    meta[pos, 5:] = np.column_stack([ordered[c].to_numpy(dtype=np.float64)
+                                     for c in ("cx", "cy", "w", "h")])
+    return tokens, meta
 
 
 def segment_windows(tokens: np.ndarray) -> list[tuple[int, int, int]]:
@@ -269,9 +267,27 @@ def mask_predict(tokens: np.ndarray, head=None
 
 # --- character expansion ----------------------------------------------------
 
+def frame_window(tokens: np.ndarray) -> np.ndarray:
+    """D2 SOT/EOT framing: one window's glyph rows (break tokens dropped)
+    wrapped in SP_token / -SP_token rows (process_ocr_base.py:172-174,
+    230-233); the decoder consumes them as sequence delimiters, so their
+    output positions are discarded (``codes[1:-1]``)."""
+    glyphs = tokens[tokens[:, FEATURE_DIM + TK_NL] == 0]
+    return np.vstack([sp_token()[None, :], glyphs, -sp_token()[None, :]])
+
+
 def expand_window(tokens: np.ndarray, meta: np.ndarray, head=None
                   ) -> tuple[str, np.ndarray]:
-    """Decode one window's tokens into its character stream.
+    """Decode one window's tokens into its character stream: one
+    ``mask_predict`` over the framed glyph rows, then ``emit_window``."""
+    codes, _ = mask_predict(frame_window(tokens), head)
+    return emit_window(tokens, codes[1:-1])
+
+
+def emit_window(tokens: np.ndarray, codes: np.ndarray
+                ) -> tuple[str, np.ndarray]:
+    """Emit one window's characters from its decoded glyph codes
+    (``codes[k]`` belongs to the window's k-th glyph row).
 
     Emission rules (what the reference transformer learned end-to-end,
     observable in its output format, process_ocr_base.py:236-247,285-401):
@@ -286,18 +302,7 @@ def expand_window(tokens: np.ndarray, meta: np.ndarray, head=None
     """
     n = tokens.shape[0]
     fl = tokens[:, FEATURE_DIM:]
-    glyph_mask = fl[:, TK_NL] == 0
-    glyph_idx = np.nonzero(glyph_mask)[0]
-    # D2 SOT/EOT framing: the encoder tensor is wrapped in SP_token /
-    # -SP_token rows (process_ocr_base.py:172-174,230-233); the decoder
-    # consumes them as sequence delimiters — their output positions are
-    # discarded
-    framed = np.vstack([sp_token()[None, :],
-                        tokens[glyph_idx],
-                        -sp_token()[None, :]])
-    codes_all, _ = mask_predict(framed, head)
-    codes = codes_all[1:-1]
-    code_of = dict(zip(glyph_idx.tolist(), codes.tolist()))
+    glyph_codes = iter(codes.tolist())
 
     out: list[str] = []
     tok_of: list[int] = []
@@ -338,7 +343,7 @@ def expand_window(tokens: np.ndarray, meta: np.ndarray, head=None
             out.append("￻")
             tok_of.append(-1)
             state = 0
-        cp = code_of.get(t, 0xFFFD)
+        cp = next(glyph_codes)
         ch = chr(cp) if 0 < cp <= 0x3FFFF and not (0xD800 <= cp <= 0xDFFF) else "�"
         if fl[t, TK_SPACE] > 0:
             # F8: ASCII and Hangul text uses ' ', CJK uses '　'

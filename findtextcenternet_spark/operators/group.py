@@ -10,8 +10,9 @@ space chains, ruby band attach + interleave, next-line edges, block DFS,
 section (multi-column) reading order, warichu reorder, and the
 duplicate/lost space checks. This module is the DataFrame adapter, called
 once per page inside the pipeline's one kind-dispatching
-``mapInPandas`` (``pipeline._unified_impl`` →
-``golden.extract_raster_page``). Pages never cross executors, so the
+``mapInPandas`` (``pipeline._raster_records``, which batches only the
+decode after it across the Arrow batch's pages) and by
+``golden.extract_raster_page``. Pages never cross executors, so the
 stage scales linearly with page count regardless of cluster size.
 """
 

@@ -677,13 +677,18 @@ FROM s GROUP BY user_id, sess_id
 """)
 def sessionize(spark, sf_dir):
     """Sessionization (streaming-analog batch form): 30-min gap splits via
-    lag + running sum (SURVEY §2.9; session_window in streaming)."""
+    lag + running sum (SURVEY §2.9; session_window in streaming). The
+    gap is a day-time interval, exact to the microsecond as the oracle's
+    ``epoch(ts)``, for TIMESTAMP and TIMESTAMP_NTZ alike: whole seconds
+    would read a 1800.5 s gap that straddles a second boundary as 1800 s
+    and miss the new session."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ep = F.unix_timestamp("ts")
+    prev = F.lag("ts").over(w)
     t = (_t(spark, sf_dir, "events")
          .withColumn("new_sess",
-                     F.when((ep - F.lag(ep).over(w) > 1800)
-                            | F.lag(ep).over(w).isNull(), 1).otherwise(0)))
+                     F.when((F.col("ts") - prev
+                             > F.expr("INTERVAL 1800 SECONDS"))
+                            | prev.isNull(), 1).otherwise(0)))
     t = t.withColumn("sess_id", F.sum("new_sess").over(
         w.rowsBetween(Window.unboundedPreceding, 0)))
     return (t.groupBy("user_id", "sess_id")

@@ -118,3 +118,32 @@ def test_events_parity_on_adversarial_rows(spark, fuzz_dir, name):
     assert len(got) == len(want), f"{name}: {len(got)} vs {len(want)}"
     pd.testing.assert_frame_equal(got, want, check_dtype=False,
                                   check_exact=False, atol=1e-6)
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_sessionize_subsecond_gap_matches_oracle(spark, tmp_path, ts_type):
+    """A 1800.5 s gap that straddles a second boundary (00:00:00.2 →
+    00:30:00.7) opens a new session; a gap of exactly 1800 s with
+    fractional ends (00:00:00.7 → 00:30:00.7) does not. Whole-second gaps
+    read the first as 1800 s, so Spark gave 1 session where the oracle's
+    ``epoch(ts)`` gives 2. The generated ``events`` tables carry
+    TIMESTAMP_NTZ, the fuzz table above TIMESTAMP."""
+    from findtextcenternet_spark.plans import full_registry
+
+    ms = dt.timedelta(milliseconds=1)
+    pdf = pd.DataFrame(
+        [(0, _T0 + 200 * ms, 1), (1, _T0 + 1_800_700 * ms, 1),
+         (2, _T0 + 700 * ms, 2), (3, _T0 + 1_800_700 * ms, 2)],
+        columns=["event_id", "ts", "user_id"]).assign(
+            event_type="view", value=1.0, props="{}")
+    spark.createDataFrame(
+        pdf, schema=(f"event_id long, ts {ts_type}, user_id long, "
+                     "event_type string, value double, props string")
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    fn, sql = full_registry()["sessionize"]
+    got = sorted(map(tuple, fn(spark, str(tmp_path)).toPandas().to_numpy()))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM "
+                f"'{tmp_path}/events.parquet/*.parquet'")
+    want = sorted(map(tuple, con.execute(sql).df().to_numpy()))
+    assert got == want == [(1, 1, 1), (1, 2, 1), (2, 1, 2)]

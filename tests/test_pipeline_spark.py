@@ -197,3 +197,24 @@ def test_null_html_quarantined_identically_in_both_plans(spark):
     rest = out[out["url"] != "https://null.example.org/missing-body"]
     assert rest.error.isna().all()
     _assert_matches_golden(rest, good)
+
+
+def test_default_spread_runs_one_kernel_task_per_core(spark, corpus):
+    """With no ``num_partitions``, the kernel stage runs exactly
+    ``defaultParallelism`` Python tasks: every Python task pays a fixed
+    start, and past one task per core more tasks only add starts. Read
+    off the status tracker: the kernel is the result stage after the url
+    exchange, the last stage of the write's jobs."""
+    sc = spark.sparkContext
+    group = "one-kernel-task-per-core"
+    sc.setJobGroup(group, "extract_documents into the noop sink")
+    try:
+        (extract_documents(pages_from_pandas(spark, corpus))
+         .write.format("noop").mode("overwrite").save())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [s for j in tracker.getJobIdsForGroup(group)
+              for s in tracker.getJobInfo(j).stageIds]
+    kernel = tracker.getStageInfo(max(stages))
+    assert kernel.numTasks == sc.defaultParallelism == 4
