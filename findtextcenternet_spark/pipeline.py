@@ -53,6 +53,7 @@ from .operators.decode import (
 from .operators.detect import detect_page, parse_layout
 from .operators.group import group_page
 from .operators.pdf import PDF_MAGIC, extract_pdf_text
+from .sources import PAGES_SCHEMA
 
 # ---------------------------------------------------------------- schemas
 
@@ -337,11 +338,4 @@ def extract_documents_robust(pages: DataFrame,
 
 
 def pages_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ])
-    return spark.createDataFrame(pdf, schema=schema)
+    return spark.createDataFrame(pdf, schema=PAGES_SCHEMA)

@@ -3,6 +3,20 @@
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+# the pages table every extraction run consumes (Common Crawl's shape)
+PAGES_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("warc_ts", T.TimestampType()),
+    T.StructField("html", T.BinaryType()),
+    T.StructField("text", T.StringType()),
+    T.StructField("lang", T.StringType()),
+])
+# what the archive readers emit: the pages columns plus a row-level error
+# (null = clean row)
+PAGES_ERROR_SCHEMA = T.StructType(
+    PAGES_SCHEMA.fields + [T.StructField("error", T.StringType())])
 
 
 def read_pages(spark: SparkSession, path: str, input_format: str, *,
@@ -13,8 +27,9 @@ def read_pages(spark: SparkSession, path: str, input_format: str, *,
     """The pages frame an extraction run consumes, from any input shape.
 
     ``'parquet'``: a pages parquet. ``'warc'``: a full archive walk; its
-    error-marker rows (corrupt archive tails) keep flowing with a null
-    html, so the pipeline quarantines them under the per-archive
+    error rows keep flowing with a null html, so the pipeline
+    quarantines them: an undecodable payload under its own url, a
+    corrupt archive tail under the per-archive
     ``warc:tail-error:<path>`` url. ``'cdx'``: index-driven — prune by
     mime/prefix, optionally keep only urls new or changed since the
     ``cdx_diff_old`` snapshot, collapse re-captures to the newest entry

@@ -38,24 +38,20 @@ import gzip
 import hashlib
 import io
 import json
-import os
 import zlib
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from . import fsutil
+from . import PAGES_ERROR_SCHEMA, fsutil
 from .fsutil import open_binary
 from .warc import (
-    _BINARYFILE_SCHEMA,
-    PAGES_SCHEMA,
     SALVAGE_ERRORS,
-    _parse_warc_date,
-    decode_http_payload,
+    _PAGES_COLS,
+    archive_stream,
+    iter_responses,
     iter_warc_records,
-    parse_http_response,
-    split_http_response,
 )
 
 CDX_SCHEMA = ("urlkey string, warc_ts timestamp, url string, mime string, "
@@ -154,46 +150,35 @@ def _iter_slices(blob: bytes) -> Iterator[tuple[int, int, bytes]]:
 
 
 def iter_cdx_entries(blob: bytes, filename: str) -> list[dict]:
-    """One archive → CDX entries for its HTTP response records. The
-    digest is the sha1-base32 of the decoded payload (Common Crawl's
-    convention); ``offset``/``length`` address the record's slice of the
-    archive as stored (compressed member for ``.warc.gz``). When a slice
-    holds several records (whole-file gzip), its entries share the slice
-    address and :func:`fetch_cdx_records` filters inside it — same
-    result, coarser fetch grain. Corrupt tails stop the walk; the
-    salvaged entries are returned plus one error row naming the archive
-    (``cdx:tail-error:<filename>``), mirroring the WARC source."""
+    """One archive → CDX entries for its HTTP response records
+    (``warc.iter_responses``). The digest is the sha1-base32 of the
+    decoded payload (Common Crawl's convention); a payload that cannot be
+    decoded (e.g. ``Content-Encoding: br``) is indexed with the digest of
+    the raw stored payload. ``offset``/``length`` address the record's
+    slice of the archive as stored (compressed member for
+    ``.warc.gz``). When a slice holds several records (whole-file gzip),
+    its entries share the slice address and :func:`fetch_cdx_records`
+    filters inside it — same result, coarser fetch grain. Corrupt tails
+    stop the walk; the salvaged entries are returned plus one error row
+    naming the archive (``cdx:tail-error:<filename>``), mirroring the
+    WARC source."""
     rows: list[dict] = []
     try:
         for offset, length, rec_bytes in _iter_slices(blob):
-            for headers, body in iter_warc_records(io.BytesIO(rec_bytes)):
-                if headers.get("warc-type") != "response":
-                    continue
-                if "application/http" not in headers.get("content-type", ""):
-                    continue
-                # payload decode failures are RECORD-level conditions
-                # (e.g. Content-Encoding: br, corrupt body gzip) — index
-                # the record with the raw stored payload's digest instead
-                # of poisoning the whole archive tail
-                http, raw_payload = split_http_response(body)
-                try:
-                    payload = decode_http_payload(http, raw_payload)
-                except SALVAGE_ERRORS:
-                    payload = raw_payload
-                status_line = http.get("_status", "").split()
-                url = headers.get("warc-target-uri", "")
-                ts = _parse_warc_date(headers["warc-date"])
+            for r in iter_responses(io.BytesIO(rec_bytes)):
+                status_line = r.http.get("_status", "").split()
                 rows.append({
-                    "urlkey": surt_key(url),
-                    "warc_ts": ts,
-                    "url": url,
-                    "mime": http.get("content-type", "")
+                    "urlkey": surt_key(r.url),
+                    "warc_ts": r.warc_ts,
+                    "url": r.url,
+                    "mime": r.http.get("content-type", "")
                             .split(";")[0].strip().lower(),
                     "status": int(status_line[1])
                               if len(status_line) > 1
                               and status_line[1].isdigit() else None,
-                    "digest": base64.b32encode(
-                        hashlib.sha1(payload).digest()).decode(),
+                    "digest": base64.b32encode(hashlib.sha1(
+                        r.raw if r.payload is None else r.payload
+                    ).digest()).decode(),
                     "length": length,
                     "offset": offset,
                     "filename": filename,
@@ -226,23 +211,16 @@ def _index_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 iter_cdx_entries(bytes(blob), str(src)), columns=_CDX_COLS)
 
 
-def build_cdx_stream(spark: SparkSession, input_dir: str,
-                     max_files_per_trigger: int = 4,
-                     glob: str = "*.warc*") -> DataFrame:
+def build_cdx_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming twin of :func:`build_cdx`: index archives AS THEY LAND
     (Common Crawl publishes per-segment cdx files alongside the segment
-    for exactly this reason). Same file-stream machinery as
-    ``read_warc_stream`` — the checkpoint commits whole archives, so a
-    committed archive's entries are in exactly one micro-batch. The
+    for exactly this reason). Same file stream as ``read_warc_stream``
+    (``warc.archive_stream``) — the checkpoint commits whole archives, so
+    a committed archive's entries are in exactly one micro-batch. The
     stream appends to the index TABLE; the globally-sorted CDXJ shards
     (:func:`write_cdxj`) are a periodic batch compaction over it, like
     the crawl's own cluster index."""
-    files = (spark.readStream.format("binaryFile")
-             .schema(_BINARYFILE_SCHEMA)
-             .option("pathGlobFilter", glob)
-             .option("maxFilesPerTrigger", str(max_files_per_trigger))
-             .load(input_dir))
-    return files.select("path", "content") \
+    return archive_stream(spark, input_dir) \
         .mapInPandas(_index_kernel, CDX_SCHEMA)
 
 
@@ -471,7 +449,12 @@ def fetch_cdx_records(spark: SparkSession, cdx: DataFrame,
     the seek is ``f.seek``; on an object store the identical offsets
     become ranged GETs. A slice shared by several requested entries
     (whole-file-gzip archives) is read once and filtered to the
-    requested urls inside."""
+    requested captures inside. Each fetched record goes through
+    ``warc.iter_responses`` and comes back as the full walk's row for it
+    (fractional-second ``warc_ts`` included; a payload that cannot be
+    decoded is an error row under its own url). Structural corruption
+    ends the archive's fetch with one ``cdx-fetch:error:<file>`` row
+    carrying the salvage count."""
     from pyspark.sql import functions as F
 
     n = num_partitions or spark.sparkContext.defaultParallelism
@@ -482,15 +465,17 @@ def fetch_cdx_records(spark: SparkSession, cdx: DataFrame,
             for fname, grp in pdf.groupby("filename", sort=False):
                 # a shared slice (whole-file gzip) can hold SEVERAL
                 # captures of a url — key the filter on (url, ts) at
-                # second grain so only the addressed captures come back
-                # (filtering on url alone would reintroduce re-captures
-                # the index dedup removed)
+                # second grain (CDXJ stores 14-digit timestamps) so only
+                # the addressed captures come back (filtering on url
+                # alone would reintroduce re-captures the index dedup
+                # removed)
                 want: dict[tuple[int, int], set] = {}
                 for r in grp.to_dict("records"):
                     ts = r["warc_ts"].to_pydatetime().replace(microsecond=0)
                     want.setdefault(
                         (int(r["offset"]), int(r["length"])),
                         set()).add((r["url"], ts))
+                start = len(rows)
                 try:
                     # local paths via open(); s3/hdfs/gs URIs via
                     # pyarrow.fs — seek+read there IS a ranged GET
@@ -500,35 +485,23 @@ def fetch_cdx_records(spark: SparkSession, cdx: DataFrame,
                             raw = f.read(ln)
                             if raw[:2] == b"\x1f\x8b":
                                 raw = gzip.decompress(raw)
-                            for hdr, body in iter_warc_records(
-                                    io.BytesIO(raw)):
-                                if hdr.get("warc-type") != "response":
-                                    continue
-                                url = hdr.get("warc-target-uri", "")
-                                rec_ts = _parse_warc_date(
-                                    hdr["warc-date"]).replace(microsecond=0)
-                                if (url, rec_ts) not in want[(off, ln)]:
-                                    continue
-                                _http, payload = parse_http_response(body)
-                                rows.append({
-                                    "url": url,
-                                    "warc_ts": rec_ts,
-                                    "html": payload, "text": None,
-                                    "lang": None, "error": None,
-                                })
+                            for rec in iter_responses(io.BytesIO(raw)):
+                                key = (rec.url,
+                                       rec.warc_ts.replace(microsecond=0))
+                                if key in want[(off, ln)]:
+                                    rows.append(rec.page_row())
                 except SALVAGE_ERRORS as exc:
                     rows.append({
                         "url": f"cdx-fetch:error:{fname}",
                         "warc_ts": None, "html": None, "text": None,
-                        "lang": None,
-                        "error": f"cdx-fetch: {type(exc).__name__}: {exc}"})
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang",
-                               "error"])
+                        "lang": "",
+                        "error": f"cdx-fetch: {type(exc).__name__}: {exc} "
+                                 f"(salvaged {len(rows) - start} rows)"})
+            yield pd.DataFrame(rows, columns=_PAGES_COLS)
 
     keep = cdx.filter(cdx.error.isNull()) \
               .select("url", "warc_ts", "filename", "offset", "length")
     band = F.floor(F.col("offset") / F.lit(band_bytes))
     return (keep.repartition(n, F.col("filename"), band)
             .sortWithinPartitions("filename", "offset")
-            .mapInPandas(_fetch, PAGES_SCHEMA))
+            .mapInPandas(_fetch, PAGES_ERROR_SCHEMA))

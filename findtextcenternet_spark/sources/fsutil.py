@@ -1,9 +1,9 @@
 """Executor-side filesystem access for the crawl readers.
 
 Spark's JVM Hadoop filesystems are not reachable from Python worker
-processes (no py4j gateway on executors), so the record-streaming
-readers (``warc_datasource``) and the CDX range fetch open files
-themselves. This shim routes by URI scheme:
+processes (no py4j gateway on executors), so the CDX range fetch and
+the WET/CDXJ shard sinks open files themselves. This shim routes by URI
+scheme:
 
 * bare paths and ``binaryFile``'s ``file:/x`` form → plain ``open`` /
   ``os`` (local, NFS, or any DFS mount — the common cluster layout);
@@ -19,7 +19,6 @@ even though this sandbox has no object store.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 
 
@@ -42,42 +41,6 @@ def open_binary(path: str):
 
     fs, p = pafs.FileSystem.from_uri(path)
     return fs.open_input_file(p)
-
-
-def list_files(path: str, match: str = ".warc") -> list[str]:
-    """Directory, glob, single file, or filesystem URI → sorted file
-    paths containing ``match`` in their name (``.inprogress`` excluded).
-    Globs are local-only (object stores have no glob API — point at the
-    prefix/directory instead); URI listings return URIs with the same
-    scheme so downstream opens route back through the same filesystem."""
-    if _is_local(path):
-        local = _strip_file_scheme(path)
-        if os.path.isdir(local):
-            names = [os.path.join(local, n) for n in os.listdir(local)
-                     if match in n and not n.endswith(".inprogress")]
-        else:
-            # the glob branch applies the SAME match filter as the
-            # directory branch — the contract is uniform
-            names = [n for n in _glob.glob(local)
-                     if match in os.path.basename(n)
-                     and not n.endswith(".inprogress")]
-        return sorted(n for n in names if os.path.isfile(n))
-    import pyarrow.fs as pafs
-
-    fs, p = pafs.FileSystem.from_uri(path)
-    info = fs.get_file_info(p)
-    if info.type == pafs.FileType.File:
-        return [path]
-    # rebuild child URIs by joining base_name onto the ORIGINAL uri —
-    # reconstructing from fi.path would drop the authority (hdfs://
-    # host:port) or double the bucket (s3://bucket), since from_uri's
-    # path normalization differs per filesystem
-    base = path.rstrip("/")
-    sel = pafs.FileSelector(p, recursive=False)
-    return sorted(
-        f"{base}/{fi.base_name}" for fi in fs.get_file_info(sel)
-        if fi.type == pafs.FileType.File and match in fi.base_name
-        and not fi.base_name.endswith(".inprogress"))
 
 
 def _as_local(path: str) -> str | None:
@@ -131,8 +94,7 @@ def write_shard(path: str, data: bytes) -> None:
       function of the partition id makes retries byte-idempotent.
     * Other remote filesystems (``hdfs://`` etc. — streaming writes,
       partial files ARE observable): unique tmp name + ``fs.move``.
-    The ``.inprogress`` tmp suffix is excluded by ``list_files`` in
-    every branch."""
+    Every branch's tmp name ends in ``.inprogress``."""
     local = _as_local(path)
     if local is not None:
         os.makedirs(os.path.dirname(local), exist_ok=True)

@@ -10,6 +10,8 @@ kernel that walks each archive's records incrementally (GzipFile
 streams the per-record gzip members — the archive is never materialized
 decompressed), and a standard pages-schema output that feeds straight
 into ``pipeline.extract_documents`` or the lineage runner.
+``binaryFile`` hands each archive to its task as ONE binary cell, so an
+archive must fit in task memory and under Arrow's 2 GB cell limit.
 
 Format coverage (ISO 28500 / WARC 1.0, and RFC 9112 for the embedded
 HTTP):
@@ -23,10 +25,14 @@ HTTP):
 * ``WARC-Target-URI`` → ``url``, ``WARC-Date`` (ISO 8601) → ``warc_ts``,
   decoded HTTP body → ``html``.
 
-A structurally corrupt record poisons only its FILE TAIL, not the task:
-the reader stops at the first unparseable record and reports the rows
-salvaged before it plus an ``error`` marker row, matching the
-pipeline's row-level quarantine convention.
+One record rule, :func:`iter_responses`, serves every archive walk: the
+pages walk here, and the CDX index and range fetch (``cdx.py``). A
+record whose payload cannot be decoded is a RECORD-level outcome (an
+error row under its own url; the walk goes on). A structurally corrupt
+record poisons only its FILE TAIL, not the task: the walk stops at the
+first unparseable record and reports the rows salvaged before it plus
+an ``error`` marker row, matching the pipeline's row-level quarantine
+convention.
 """
 
 from __future__ import annotations
@@ -36,13 +42,14 @@ import gzip
 import hashlib
 import io
 import zlib
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
-                "text string, lang string, error string")
+from . import PAGES_ERROR_SCHEMA
+
+_PAGES_COLS = PAGES_ERROR_SCHEMA.fieldNames()
 
 # the ONE exception tuple every record-walk salvage handler uses:
 # zlib.error is NOT a ValueError/OSError — omitting it lets mid-member
@@ -136,12 +143,6 @@ def decode_http_payload(headers: dict[str, str], payload: bytes) -> bytes:
     return payload
 
 
-def parse_http_response(body: bytes) -> tuple[dict[str, str], bytes]:
-    """(headers, decoded payload) from raw HTTP response bytes."""
-    headers, payload = split_http_response(body)
-    return headers, decode_http_payload(headers, payload)
-
-
 def _parse_warc_date(s: str) -> dt.datetime:
     """WARC 1.0 dates are second-grain; WARC 1.1 permits fractional
     seconds ('2017-03-06T04:03:53.405Z'). Accept both — a ValueError
@@ -161,56 +162,96 @@ def _parse_warc_date(s: str) -> dt.datetime:
     return parsed
 
 
+class Response(NamedTuple):
+    """One HTTP response record, as every archive walk sees it."""
+    url: str
+    warc_ts: dt.datetime
+    http: dict[str, str]      # HTTP headers; status line under ``_status``
+    raw: bytes                # payload as stored (transfer/content-coded)
+    payload: bytes | None     # decoded payload; None if it cannot be decoded
+    error: str | None         # why the payload could not be decoded
+
+    def page_row(self) -> dict:
+        """This record's pages row: clean, or an error row (null html)
+        under the record's own url, which the extraction quarantines."""
+        return {"url": self.url, "warc_ts": self.warc_ts,
+                "html": self.payload, "text": None, "lang": "",
+                "error": self.error}
+
+
+def iter_responses(fp, content_types: tuple[str, ...] | None = None
+                   ) -> Iterator[Response]:
+    """The record rule every archive walk consumes (the pages walk, the
+    CDX index and the CDX fetch): the ``WARC-Type: response`` records
+    carrying ``application/http`` of a WARC byte stream, as
+    :class:`Response`.
+
+    ``content_types``: optional HTTP Content-Type prefixes to keep (a
+    real crawl archive interleaves html with images/scripts/fonts). The
+    filter reads the HTTP headers only, so a filtered-out record's
+    payload is never de-chunked or gunzipped. A payload that cannot be
+    decoded (``Content-Encoding: br``, a corrupt body gzip) is a
+    record-level outcome: the record comes back with ``payload`` None
+    and ``error`` set, and the walk goes on. Structural corruption (a
+    broken WARC or HTTP header block, a truncated record, a bad date)
+    raises one of :data:`SALVAGE_ERRORS` and ends the walk."""
+    for headers, body in iter_warc_records(fp):
+        if headers.get("warc-type") != "response" \
+                or "application/http" not in headers.get("content-type", ""):
+            continue
+        http, raw = split_http_response(body)
+        if content_types is not None:
+            ct = http.get("content-type", "").lower()
+            if not any(ct.startswith(p) for p in content_types):
+                continue
+        url = headers.get("warc-target-uri", "")
+        ts = _parse_warc_date(headers["warc-date"])
+        try:
+            payload, error = decode_http_payload(http, raw), None
+        except SALVAGE_ERRORS as exc:
+            payload, error = None, f"warc: {type(exc).__name__}: {exc}"
+        yield Response(url, ts, http, raw, payload, error)
+
+
+def _open_archive(blob: bytes):
+    """Plain or gzip archive bytes → a stream of its WARC records."""
+    raw = io.BytesIO(blob)
+    return gzip.GzipFile(fileobj=raw) if blob[:2] == b"\x1f\x8b" \
+        else io.BufferedReader(raw)
+
+
 def pages_from_warc_bytes(blob: bytes, source: str = "",
                           content_types: tuple[str, ...] | None = None,
                           ) -> pd.DataFrame:
-    """One WARC archive (plain or gzip) → pages rows. Corruption stops
-    the walk and lands as ONE error row carrying the salvage count, so a
-    bad archive tail never fails the Spark task (the same row-level
+    """One WARC archive (plain or gzip) → pages rows, one per
+    :func:`iter_responses` record (``content_types`` filters there,
+    before the rows enter the Arrow exchange). Corruption stops the walk
+    and lands as ONE error row carrying the salvage count, so a bad
+    archive tail never fails the Spark task (the same row-level
     quarantine contract as the extraction kernels). The error row's url
     is ``warc:tail-error:<source>`` — a stable per-archive key, so the
     lineage quarantine records WHICH archive to re-fetch and a re-run
     over a repaired archive still extracts its pages (their own urls are
-    not in the done-set).
-
-    ``content_types``: optional HTTP Content-Type prefixes to keep (a
-    real crawl archive interleaves html with images/scripts/fonts;
-    filtering at the record walk drops the bulk BEFORE it enters the
-    Arrow exchange). None keeps every response record — the extraction
-    kernel's magic-byte dispatch and quarantine handle the rest."""
-    raw = io.BytesIO(blob)
-    fp = gzip.GzipFile(fileobj=raw) if blob[:2] == b"\x1f\x8b" \
-        else io.BufferedReader(raw)
+    not in the done-set)."""
     rows: list[dict] = []
     try:
-        for headers, body in iter_warc_records(fp):
-            if headers.get("warc-type") != "response":
-                continue
-            if "application/http" not in headers.get("content-type", ""):
-                continue
-            # header-only parse first: a filtered-out record's payload
-            # is never de-chunked or gunzipped
-            http, raw_payload = split_http_response(body)
-            if content_types is not None:
-                ct = http.get("content-type", "").lower()
-                if not any(ct.startswith(p) for p in content_types):
-                    continue
-            payload = decode_http_payload(http, raw_payload)
-            rows.append({
-                "url": headers.get("warc-target-uri", ""),
-                "warc_ts": _parse_warc_date(headers["warc-date"]),
-                "html": payload,
-                "text": None,
-                "lang": "",
-                "error": None,
-            })
+        for r in iter_responses(_open_archive(blob), content_types):
+            rows.append(r.page_row())
     except SALVAGE_ERRORS as exc:
         rows.append({"url": f"warc:tail-error:{source}", "warc_ts": None,
                      "html": None, "text": None, "lang": "",
                      "error": f"warc: {type(exc).__name__}: {exc} "
                               f"(salvaged {len(rows)} rows)"})
-    return pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text",
-                                       "lang", "error"])
+    return pd.DataFrame(rows, columns=_PAGES_COLS)
+
+
+def _pages_kernel(content_types: tuple[str, ...] | None):
+    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            for src, blob in zip(pdf["path"], pdf["content"]):
+                yield pages_from_warc_bytes(bytes(blob), source=str(src),
+                                            content_types=content_types)
+    return _parse
 
 
 def read_warc(spark: SparkSession, path: str,
@@ -225,47 +266,42 @@ def read_warc(spark: SparkSession, path: str,
     payloads inside the record walk — in a real crawl archive that is
     most of the bytes, filtered before they ever cross into Arrow."""
     files = spark.read.format("binaryFile").load(path)
-
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for src, blob in zip(pdf["path"], pdf["content"]):
-                yield pages_from_warc_bytes(bytes(blob), source=str(src),
-                                            content_types=content_types)
-
-    return files.select("path", "content").mapInPandas(_parse, PAGES_SCHEMA)
+    return files.select("path", "content").mapInPandas(
+        _pages_kernel(content_types), PAGES_ERROR_SCHEMA)
 
 
 _BINARYFILE_SCHEMA = ("path string, modificationTime timestamp, "
                       "length long, content binary")
 
+# newly-landed archives one micro-batch takes at most: a few ~1 GB crawl
+# files, so trigger latency stays flat as the landing dir grows
+_FILES_PER_TRIGGER = 4
+
+
+def archive_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+    """``(path, content)`` stream of the ``*.warc*`` archives landing in
+    ``input_dir`` (the shape of a live Common Crawl segment drop), at
+    most ``_FILES_PER_TRIGGER`` archives a micro-batch. ``binaryFile`` is
+    a file-format source, so the standard file-stream machinery applies
+    — the checkpoint's file log records which archives each micro-batch
+    consumed, and a restarted query resumes after the last committed
+    archive. One archive = one task, the batch readers' grain."""
+    return (spark.readStream.format("binaryFile")
+            .schema(_BINARYFILE_SCHEMA)
+            .option("pathGlobFilter", "*.warc*")
+            .option("maxFilesPerTrigger", str(_FILES_PER_TRIGGER))
+            .load(input_dir)
+            .select("path", "content"))
+
 
 def read_warc_stream(spark: SparkSession, input_dir: str,
-                     max_files_per_trigger: int = 4,
-                     glob: str = "*.warc*",
                      content_types: tuple[str, ...] | None = None,
                      ) -> DataFrame:
     """Streaming twin of :func:`read_warc`: tail a crawl landing directory
-    as new ``.warc``/``.warc.gz`` archives arrive (the shape of a live
-    Common Crawl segment drop). ``binaryFile`` is a file-format source, so
-    the standard file-stream machinery applies — the checkpoint's file log
-    records which archives each micro-batch consumed, and a restarted
-    query resumes after the last committed archive. One archive = one
-    task, same grain as the batch reader; ``max_files_per_trigger`` bounds
-    a micro-batch to a few ~1 GB archives so trigger latency stays flat as
-    the landing dir grows."""
-    files = (spark.readStream.format("binaryFile")
-             .schema(_BINARYFILE_SCHEMA)
-             .option("pathGlobFilter", glob)
-             .option("maxFilesPerTrigger", str(max_files_per_trigger))
-             .load(input_dir))
-
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for src, blob in zip(pdf["path"], pdf["content"]):
-                yield pages_from_warc_bytes(bytes(blob), source=str(src),
-                                            content_types=content_types)
-
-    return files.select("path", "content").mapInPandas(_parse, PAGES_SCHEMA)
+    (:func:`archive_stream`) as new ``.warc``/``.warc.gz`` archives
+    arrive."""
+    return archive_stream(spark, input_dir).mapInPandas(
+        _pages_kernel(content_types), PAGES_ERROR_SCHEMA)
 
 
 # --- WET sink/source (crawl-native extracted-text archives) ----------------
@@ -353,12 +389,9 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
     out_schema = "url string, warc_ts timestamp, text string, error string"
 
     def _one(blob: bytes, source: str) -> pd.DataFrame:
-        raw = io.BytesIO(blob)
-        fp = gzip.GzipFile(fileobj=raw) if blob[:2] == b"\x1f\x8b" \
-            else io.BufferedReader(raw)
         rows: list[dict] = []
         try:
-            for headers, body in iter_warc_records(fp):
+            for headers, body in iter_warc_records(_open_archive(blob)):
                 if headers.get("warc-type") != "conversion":
                     continue
                 rows.append({

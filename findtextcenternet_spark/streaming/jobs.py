@@ -29,13 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-PAGES_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType()),
-    T.StructField("warc_ts", T.TimestampType()),
-    T.StructField("html", T.BinaryType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("lang", T.StringType()),
-])
+from ..sources import PAGES_SCHEMA
 
 
 def read_pages_stream(spark: SparkSession, input_dir: str,
@@ -116,14 +110,14 @@ def stream_extract_html(spark: SparkSession, input_dir: str,
 
 def stream_extract_warc(spark: SparkSession, input_dir: str,
                         out_dir: str, checkpoint_dir: str,
-                        max_files_per_trigger: int = 4,
                         quality_gate: bool = False):
     """Streaming crawl-native extraction: tail a WARC landing directory
     and run the FULL batch pipeline on each micro-batch of archives.
 
-    Source grain is one archive per file-log entry (sources/warc.py), so
-    "effectively-once" composes cleanly: the checkpoint commits archives,
-    and every page of a committed archive is in exactly one micro-batch.
+    Source grain is one archive per file-log entry, at most 4 archives a
+    micro-batch (``sources/warc.archive_stream``), so "effectively-once"
+    composes cleanly: the checkpoint commits archives, and every page of
+    a committed archive is in exactly one micro-batch.
     Each batch writes its own ``batch_id=<id>`` partition with overwrite —
     a replayed batch (crash between sink write and checkpoint commit)
     overwrites itself instead of duplicating. Error-marker rows from
@@ -133,9 +127,7 @@ def stream_extract_warc(spark: SparkSession, input_dir: str,
     from ..pipeline import extract_documents
     from ..sources.warc import read_warc_stream
 
-    pages = read_warc_stream(spark, input_dir,
-                             max_files_per_trigger=max_files_per_trigger)
-
+    pages = read_warc_stream(spark, input_dir)
     return _foreach_batch_idempotent(
         pages, out_dir, checkpoint_dir,
         transform=lambda b: _maybe_quality_gate(
@@ -143,8 +135,7 @@ def stream_extract_warc(spark: SparkSession, input_dir: str,
 
 
 def stream_index_warc(spark: SparkSession, input_dir: str,
-                      out_dir: str, checkpoint_dir: str,
-                      max_files_per_trigger: int = 4):
+                      out_dir: str, checkpoint_dir: str):
     """Streaming crawl indexing: tail a WARC landing directory and append
     each micro-batch's CDX entries (sources/cdx.build_cdx_stream) to the
     index table under ``batch_id=<id>`` partitions — overwrite per batch,
@@ -156,8 +147,7 @@ def stream_index_warc(spark: SparkSession, input_dir: str,
     crawl's per-segment cdx → cluster index split."""
     from ..sources.cdx import build_cdx_stream
 
-    entries = build_cdx_stream(spark, input_dir,
-                               max_files_per_trigger=max_files_per_trigger)
+    entries = build_cdx_stream(spark, input_dir)
     return _foreach_batch_idempotent(entries, out_dir, checkpoint_dir)
 
 

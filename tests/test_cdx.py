@@ -1,8 +1,9 @@
 """CDX index: offset math units + Spark build/publish/fetch parity."""
 
+import base64
 import gzip
 import hashlib
-import base64
+import re
 
 import pandas as pd
 import pytest
@@ -18,7 +19,11 @@ from findtextcenternet_spark.sources.cdx import (
     surt_key,
     write_cdxj,
 )
-from findtextcenternet_spark.sources.warc import read_warc, write_warc
+from findtextcenternet_spark.sources.warc import (
+    iter_responses,
+    read_warc,
+    write_warc,
+)
 
 
 @pytest.fixture(scope="module")
@@ -47,8 +52,6 @@ def test_entries_address_their_records(corpus, gz):
     """Every entry's (offset, length) slice decodes to exactly its
     record, and the digest is the payload's sha1-base32 — the contract a
     range fetch depends on."""
-    from findtextcenternet_spark.sources.warc import (
-        iter_warc_records, parse_http_response)
     import io
 
     rows = _rows(corpus.head(10))
@@ -59,12 +62,10 @@ def test_entries_address_their_records(corpus, gz):
         raw = blob[e["offset"]:e["offset"] + e["length"]]
         if gz:
             raw = gzip.decompress(raw)
-        recs = [(h, b) for h, b in iter_warc_records(io.BytesIO(raw))
-                if h.get("warc-type") == "response"]
+        recs = list(iter_responses(io.BytesIO(raw)))
         assert len(recs) == 1
-        hdr, body = recs[0]
-        assert hdr["warc-target-uri"] == want["url"] == e["url"]
-        _http, payload = parse_http_response(body)
+        assert recs[0].url == want["url"] == e["url"]
+        payload = recs[0].payload
         assert payload == bytes(want["html"])
         assert e["digest"] == \
             base64.b32encode(hashlib.sha1(payload).digest()).decode()
@@ -93,13 +94,30 @@ def test_corrupt_tail_salvage(corpus):
     assert bad[0]["filename"] == "bad.warc"
 
 
+def _fractional_dates(plain: bytes, gzip_records: bool) -> bytes:
+    """A plain archive with every WARC-Date in the WARC 1.1
+    fractional-second form ('...T04:03:53.405Z'), optionally re-gzipped
+    one member per record (the Common Crawl layout)."""
+    patched = re.sub(
+        rb"(WARC-Date: \d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})Z",
+        rb"\g<1>.405Z", plain)
+    assert patched != plain
+    if not gzip_records:
+        return patched
+    return b"".join(gzip.compress(rec) for rec in
+                    re.split(rb"(?=WARC/1\.0\r\n)", patched) if rec)
+
+
 def test_build_fetch_parity(spark, tmp_path, corpus):
     """Spark build over a directory == in-memory entries; a filtered
-    fetch returns byte-identical html to the full-walk reader."""
+    fetch returns exactly the full-walk reader's rows for the records it
+    fetches — fractional-second WARC 1.1 dates included, although the
+    fetch matches captures at the index's second grain."""
     rows = _rows(corpus)
-    (tmp_path / "a.warc.gz").write_bytes(write_warc(rows[:25]))
-    (tmp_path / "b.warc").write_bytes(
-        write_warc(rows[25:], gzip_records=False))
+    (tmp_path / "a.warc.gz").write_bytes(_fractional_dates(
+        write_warc(rows[:25], gzip_records=False), gzip_records=True))
+    (tmp_path / "b.warc").write_bytes(_fractional_dates(
+        write_warc(rows[25:], gzip_records=False), gzip_records=False))
 
     cdx = build_cdx(spark, str(tmp_path) + "/*.warc*")
     got = cdx.toPandas().sort_values("url").reset_index(drop=True)
@@ -117,11 +135,16 @@ def test_build_fetch_parity(spark, tmp_path, corpus):
     assert {u: bytes(h) for u, h in zip(pages["url"], pages["html"])} \
         == want
 
-    # and the fetched subset equals the full walk restricted to it
+    # and every fetched row IS the full walk's row for that record
     full = read_warc(spark, str(tmp_path) + "/*.warc*").toPandas()
-    full_map = {u: bytes(h) for u, h in zip(full["url"], full["html"])
-                if u in want}
-    assert full_map == want
+    assert full["error"].isna().all() and len(full) == 40
+    assert all(ts.microsecond == 405000 for ts in full["warc_ts"])
+    cols = ["url", "warc_ts", "html", "lang"]
+    walk = {r["url"]: r for r in full[cols].to_dict("records")}
+    for r in pages[cols].to_dict("records"):
+        w = walk[r["url"]]
+        assert (r["warc_ts"], bytes(r["html"]), r["lang"]) == \
+            (w["warc_ts"], bytes(w["html"]), w["lang"]), r["url"]
 
 
 def test_latest_unique_captures(spark, tmp_path, corpus):
@@ -239,9 +262,6 @@ def test_fuzz_index_addresses_every_layout():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from findtextcenternet_spark.sources.warc import (
-        iter_warc_records, parse_http_response)
-
     @settings(max_examples=25, deadline=None)
     @given(st.integers(0, 2**32 - 1), st.integers(1, 8),
            st.sampled_from(["member", "plain", "whole"]),
@@ -264,12 +284,10 @@ def test_fuzz_index_addresses_every_layout():
             raw = blob[e["offset"]:e["offset"] + e["length"]]
             if blob[:2] == b"\x1f\x8b":
                 raw = gzip.decompress(raw)
-            hits = [
-                (h, b) for h, b in iter_warc_records(io.BytesIO(raw))
-                if h.get("warc-type") == "response"
-                and h.get("warc-target-uri") == want["url"]]
+            hits = [r for r in iter_responses(io.BytesIO(raw))
+                    if r.url == want["url"]]
             assert len(hits) == 1
-            _http, payload = parse_http_response(hits[0][1])
+            payload = hits[0].payload
             assert payload == bytes(want["html"])
             assert e["digest"] == base64.b32encode(
                 hashlib.sha1(payload).digest()).decode()
@@ -468,10 +486,13 @@ def test_zlib_corruption_salvaged(corpus):
     assert len(good) >= 1        # earlier members survived
 
 
-def test_unsupported_content_encoding_is_record_level(corpus):
+def test_unsupported_content_encoding_is_record_level(spark, tmp_path,
+                                                      corpus):
     """Review r6: a 'Content-Encoding: br' record must not poison the
     archive tail — it is indexed with the raw stored payload's digest
-    and the walk continues to the records after it."""
+    and the walk continues to the records after it. The full walk and
+    the index-driven fetch both give the six clean pages plus ONE error
+    row under the br record's own url."""
     raw_payload = b"\x8b\x02\x80fake-brotli-bytes"
     http = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
             b"Content-Encoding: br\r\n\r\n" + raw_payload)
@@ -493,6 +514,18 @@ def test_unsupported_content_encoding_is_record_level(corpus):
     br = next(e for e in entries if e["url"] == "http://br.example.org/x")
     assert br["digest"] == base64.b32encode(
         hashlib.sha1(raw_payload).digest()).decode()
+
+    (tmp_path / "br.warc").write_bytes(blob)
+    want = {r["url"] for r in before + after}
+    walk = read_warc(spark, str(tmp_path / "br.warc")).toPandas()
+    fetched = fetch_cdx_records(
+        spark, build_cdx(spark, str(tmp_path / "br.warc"))).toPandas()
+    for got in (walk, fetched):
+        ok, bad = got[got["error"].isna()], got[got["error"].notna()]
+        assert set(ok["url"]) == want and len(ok) == 6
+        assert list(bad["url"]) == ["http://br.example.org/x"]
+        assert "Content-Encoding 'br'" in bad.iloc[0]["error"]
+        assert bad.iloc[0]["html"] is None
 
 
 def test_read_cdxj_truncated_shard_salvages(spark, tmp_path, corpus):
@@ -544,17 +577,12 @@ def test_fetch_shared_slice_filters_by_capture(spark, tmp_path, corpus):
 
 
 def test_warc_datasource_empty_dir(spark, tmp_path):
-    """Review r6: reading an empty landing dir returns an empty frame
-    (PySpark calls read(None) when partitions() is empty)."""
+    """Reading or indexing an empty landing dir returns an empty frame,
+    not an error."""
     d = tmp_path / "empty"
     d.mkdir()
-    from findtextcenternet_spark.sources.warc_datasource import (
-        register_warc_datasource,
-    )
-
-    register_warc_datasource(spark)
-    out = spark.read.format("warc").load(str(d))
-    assert out.count() == 0
+    assert read_warc(spark, str(d)).count() == 0
+    assert build_cdx(spark, str(d)).count() == 0
 
 
 def test_diff_cdx_snapshots(spark):

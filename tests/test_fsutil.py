@@ -6,8 +6,8 @@ import pandas as pd
 import pytest
 
 from findtextcenternet_spark.corpus import generate_pages
-from findtextcenternet_spark.sources.fsutil import list_files, open_binary
-from findtextcenternet_spark.sources.warc import write_warc
+from findtextcenternet_spark.sources.fsutil import open_binary
+from findtextcenternet_spark.sources.warc import read_warc, write_warc
 
 
 def test_open_binary_all_forms(tmp_path):
@@ -20,40 +20,21 @@ def test_open_binary_all_forms(tmp_path):
             assert f.read(2) == bytes([44, 45]), form   # ranged read
 
 
-def test_list_files_local_and_uri(tmp_path):
-    for n in ("a.warc.gz", "b.warc", "c.warc.gz.inprogress", "d.txt"):
-        (tmp_path / n).write_bytes(b"x")
-    want = [str(tmp_path / "a.warc.gz"), str(tmp_path / "b.warc")]
-    assert list_files(str(tmp_path)) == want
-    assert list_files(str(tmp_path / "*.warc*")) == \
-        [str(tmp_path / "a.warc.gz"), str(tmp_path / "b.warc")]
-    # pyarrow branch: same files, URIs preserved for downstream opens
-    got = list_files(f"file://{tmp_path}")
-    assert [g.rsplit("/", 1)[1] for g in got] == ["a.warc.gz", "b.warc"]
-    assert all(g.startswith("file://") for g in got)
-    # single-file URI
-    assert list_files(f"file://{tmp_path}/a.warc.gz") == \
-        [f"file://{tmp_path}/a.warc.gz"]
-
-
 def test_datasource_and_fetch_through_uri(spark, tmp_path):
-    """The executor-side pyarrow branch under Spark: the native warc
-    source planned from a file:// URI, and a CDX fetch whose filenames
-    are file:// URIs, both match the plain-path results."""
+    """URI forms under Spark: the binaryFile archive reader loaded from a
+    file:// URI matches the plain path, and a CDX fetch whose filenames
+    are file:// URIs takes the executor-side pyarrow branch and matches
+    the plain-path results."""
     from pyspark.sql import functions as F
 
     from findtextcenternet_spark.sources.cdx import (
         build_cdx, fetch_cdx_records)
-    from findtextcenternet_spark.sources.warc_datasource import (
-        register_warc_datasource)
 
     rows = generate_pages(12).to_dict("records")
     (tmp_path / "u.warc.gz").write_bytes(write_warc(rows))
-    register_warc_datasource(spark)
 
-    plain = spark.read.format("warc").load(str(tmp_path)).toPandas()
-    via_uri = spark.read.format("warc").load(f"file://{tmp_path}") \
-        .toPandas()
+    plain = read_warc(spark, str(tmp_path)).toPandas()
+    via_uri = read_warc(spark, f"file://{tmp_path}").toPandas()
     assert sorted(via_uri["url"]) == sorted(plain["url"]) \
         and len(plain) == 12
 

@@ -24,6 +24,20 @@ def weights(tmp_path_factory):
     return p
 
 
+@pytest.fixture(scope="module")
+def decoding_weights(tmp_path_factory):
+    """Tiny random weights whose keymap bias (``conv2_b[0]``) is raised
+    from -6 to -1, so the real detector finds glyph boxes on the fixture
+    raster pages (308-771 a page with seed 0; at -2 it still finds none)
+    and the real decode produces text."""
+    p = str(tmp_path_factory.mktemp("weights") / "decoding.npz")
+    M.save_tiny_random_weights(p, seed=0)
+    arrs = dict(np.load(p))
+    arrs["conv2_b"][0] = -1.0
+    np.savez(p, **arrs)
+    return p
+
+
 def test_detector_output_contract(weights):
     """forward_tiles honors the CenterNetDetector contract: 10 heatmap
     channels (keymap + 3x3-NMS'd peak + sizes + line + sep + 4 codes)
@@ -106,11 +120,13 @@ def test_registry_backend_selection(weights):
     assert get_residue_heads(weights).kind == "real-numpy"
 
 
-def test_real_path_end_to_end_matches_golden(spark, weights):
+def test_real_path_end_to_end_matches_golden(spark, decoding_weights):
     """The raster path runs the real model end-to-end (weights path
     threaded through the kernel closure to every Python worker) and stays
     byte-identical to the golden runner with the same weights — the plug
-    point is exercised, not just constructed."""
+    point is exercised, not just constructed: the real detector finds
+    boxes and the real decode emits non-empty raster text."""
+    weights = decoding_weights
     from findtextcenternet_spark.corpus import generate_pages
     from findtextcenternet_spark.golden import extract_page_golden
     from findtextcenternet_spark.pipeline import (
@@ -125,6 +141,7 @@ def test_real_path_end_to_end_matches_golden(spark, weights):
     assert len(out) == len(pdf)
     assert out.error.isna().all(), out[out.error.notna()].head()
     assert (out.path == "raster").any()
+    assert (out[out.path == "raster"].text != "").any()
     golden = {r.url: extract_page_golden(r.url, bytes(r.html), weights)
               for r in pdf.itertuples()}
     for r in out.itertuples():

@@ -1,16 +1,20 @@
 """WARC source: record/HTTP parsing units + Spark ingest to extraction."""
 
 import gzip
+import pathlib
+import re
 
 import numpy as np
 import pandas as pd
 import pytest
 
+import findtextcenternet_spark
 from findtextcenternet_spark.corpus import generate_pages
 from findtextcenternet_spark.sources.warc import (
+    decode_http_payload,
     pages_from_warc_bytes,
-    parse_http_response,
     read_warc,
+    split_http_response,
     write_warc,
 )
 
@@ -73,7 +77,8 @@ def test_content_type_filter(corpus):
 def test_content_type_filter_skips_payload_decode():
     """A filtered-out record's payload is never de-chunked/gunzipped:
     a junk record with a CORRUPT gzip body parses cleanly when filtered
-    away, but poisons the walk when it must be decoded."""
+    away, and becomes an error row under its own url when it must be
+    decoded."""
     http = (b"HTTP/1.1 200 OK\r\nContent-Type: image/png\r\n"
             b"Content-Encoding: gzip\r\nContent-Length: 9\r\n\r\n"
             b"not-gzip!")
@@ -86,24 +91,30 @@ def test_content_type_filter_skips_payload_decode():
     filtered = pages_from_warc_bytes(rec, content_types=("text/html",))
     assert len(filtered) == 0            # skipped without decoding
     unfiltered = pages_from_warc_bytes(rec)
-    assert len(unfiltered) == 1          # decode attempted -> salvage row
+    assert len(unfiltered) == 1          # decode attempted -> error row
     assert unfiltered.iloc[0]["error"] is not None
+    assert unfiltered.iloc[0]["url"] == "http://x.example/bad.png"
+
+
+def _parse_http(body: bytes) -> tuple[dict, bytes]:
+    hdrs, raw = split_http_response(body)
+    return hdrs, decode_http_payload(hdrs, raw)
 
 
 def test_http_parse_units():
-    hdrs, payload = parse_http_response(
+    hdrs, payload = _parse_http(
         b"HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n"
         b"Transfer-Encoding: chunked\r\n\r\n"
         b"5\r\nhello\r\n6;ext=1\r\n world\r\n0\r\n\r\n")
     assert hdrs["_status"] == "HTTP/1.1 200 OK"
     assert payload == b"hello world"
     import zlib
-    hdrs, payload = parse_http_response(
+    hdrs, payload = _parse_http(
         b"HTTP/1.1 200 OK\r\nContent-Encoding: deflate\r\n\r\n"
         + zlib.compress(b"abc"))
     assert payload == b"abc"
     with pytest.raises(ValueError, match="Content-Encoding"):
-        parse_http_response(
+        _parse_http(
             b"HTTP/1.1 200 OK\r\nContent-Encoding: br\r\n\r\nxx")
 
 
@@ -254,6 +265,9 @@ def test_spark_ingest_to_extraction(spark, tmp_path, corpus):
     got_pages = pages.toPandas()
     assert got_pages["error"].isna().all()
     assert len(got_pages) == 60
+    empty = tmp_path / "empty"                 # a landing dir before data
+    empty.mkdir()
+    assert read_warc(spark, str(empty)).count() == 0
     docs = (extract_documents(pages.drop("error"))
             .select("url", "text").toPandas().set_index("url"))
     want = extract_corpus_golden(corpus).set_index("url")
@@ -269,7 +283,6 @@ def test_warc11_fractional_second_dates(corpus):
     rows = _rows(corpus)[:4]
     blob = write_warc(rows, gzip_records=False)
     # rewrite every WARC-Date to the fractional form
-    import re
     patched = re.sub(rb"(WARC-Date: \d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})Z",
                      rb"\g<1>.405Z", blob)
     assert patched != blob
@@ -283,8 +296,6 @@ def test_warc_offset_dates_normalize_to_naive_utc(corpus):
     """Review r6: '+HH:MM' offset dates must come back NAIVE UTC — a
     tz-aware value mixed with naive Z-dates fails the pandas→Arrow
     conversion outside the salvage path and kills the task."""
-    import re
-
     rows = _rows(corpus)[:3]
     blob = write_warc(rows, gzip_records=False)
     patched = re.sub(rb"(WARC-Date: \d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})Z",
@@ -342,3 +353,20 @@ def test_stream_extract_warc_quality_gate(spark, tmp_path, corpus):
             apply_quality_gate(batch_docs).select("url", "error")
             .collect() if r["error"] is not None}
     assert bad == want
+
+
+_PKG = pathlib.Path(findtextcenternet_spark.__file__).parent
+_RECORD_RULE = re.compile(
+    r"""["']warc-type["']|split_http_response\(|decode_http_payload\(""")
+
+
+def test_only_warc_reads_records():
+    """No module but ``sources/warc.py`` reads a record's ``warc-type``
+    or splits/decodes an HTTP response: every archive walk goes through
+    ``iter_responses``, the one record rule."""
+    hits = [f"{path.relative_to(_PKG)}:{n}"
+            for path in sorted(_PKG.rglob("*.py"))
+            if path.relative_to(_PKG).as_posix() != "sources/warc.py"
+            for n, line in enumerate(path.read_text().splitlines(), 1)
+            if _RECORD_RULE.search(line)]
+    assert not hits, hits

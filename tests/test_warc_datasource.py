@@ -1,13 +1,13 @@
-"""Native `warc` data source (Python DataSource API): batch parity with
-the binaryFile reader, live stream tailing, corrupt-tail contract."""
+"""WARC data source over ``binaryFile``: the batch reader's corrupt-tail
+contract and live tailing of a landing dir by the stream reader."""
 
-import pandas as pd
 import pytest
 
 from findtextcenternet_spark.corpus import generate_pages
-from findtextcenternet_spark.sources.warc import read_warc, write_warc
-from findtextcenternet_spark.sources.warc_datasource import (
-    register_warc_datasource,
+from findtextcenternet_spark.sources.warc import (
+    read_warc,
+    read_warc_stream,
+    write_warc,
 )
 
 
@@ -16,102 +16,31 @@ def corpus():
     return generate_pages(40)
 
 
-@pytest.fixture(scope="module")
-def registered(spark):
-    register_warc_datasource(spark)
-    return spark
-
-
-def test_file_iterator_matches_inmemory_parser(tmp_path, corpus):
-    """No-Spark unit: the datasource's disk-streaming record walk yields
-    exactly what the in-memory parser yields for the same archive (both
-    good rows and the corrupt-tail error contract)."""
-    from findtextcenternet_spark.sources.warc import pages_from_warc_bytes
-    from findtextcenternet_spark.sources.warc_datasource import (
-        _iter_file_rows,
-    )
-
-    rows = corpus.to_dict("records")[:12]
-    blob_plain = write_warc(rows, gzip_records=False) + b"WARC/1.0\r\nbroken"
-    for data, name in ((write_warc(rows), "ok.warc.gz"),
-                       (blob_plain, "bad.warc")):
-        p = tmp_path / name
-        p.write_bytes(data)
-        got = list(_iter_file_rows(str(p)))
-        want = pages_from_warc_bytes(data, source=str(p))
-        assert len(got) == len(want)
-        for tup, (_, w) in zip(got, want.iterrows()):
-            assert tup[0] == w["url"]
-            assert (tup[2] is None and w["html"] is None) \
-                or bytes(tup[2]) == bytes(w["html"])
-            assert (tup[5] is None) == (w["error"] is None)
-
-
-def test_content_types_option(registered, tmp_path, corpus):
-    """.option("contentTypes", ...) drops non-matching payloads inside
-    the record walk, matching the batch reader's content_types arg."""
-    rows = corpus.to_dict("records")[:12]
-    for i, r in enumerate(rows):
-        if i % 2:
-            r["mime"] = "image/jpeg"
-    (tmp_path / "m.warc.gz").write_bytes(write_warc(rows))
-
-    got = (registered.read.format("warc")
-           .option("contentTypes", "text/html")
-           .load(str(tmp_path / "m.warc.gz")).toPandas())
-    assert sorted(got["url"]) == sorted(
-        r["url"] for i, r in enumerate(rows) if not i % 2)
-    # unfiltered read still sees every response
-    assert registered.read.format("warc") \
-        .load(str(tmp_path / "m.warc.gz")).count() == 12
-
-
-def test_batch_matches_binaryfile_reader(registered, tmp_path, corpus):
-    spark = registered
-    rows = corpus.to_dict("records")
-    d = tmp_path / "warcs"
-    d.mkdir()
-    (d / "a.warc.gz").write_bytes(write_warc(rows[:20]))
-    (d / "b.warc").write_bytes(write_warc(rows[20:], gzip_records=False))
-
-    got = (spark.read.format("warc").load(str(d))
-           .toPandas().sort_values("url").reset_index(drop=True))
-    want = (read_warc(spark, str(d))
-            .toPandas().sort_values("url").reset_index(drop=True))
-    assert list(got["url"]) == list(want["url"])
-    for h1, h2 in zip(got["html"], want["html"]):
-        assert bytes(h1) == bytes(h2)
-    assert list(got["warc_ts"]) == list(want["warc_ts"])
-    assert got["error"].isna().all()
-    # one partition per archive (file-grain planning)
-    assert (spark.read.format("warc").load(str(d))
-            .rdd.getNumPartitions()) == 2
-
-
-def test_batch_corrupt_tail(registered, tmp_path, corpus):
-    spark = registered
+def test_batch_corrupt_tail(spark, tmp_path, corpus):
+    """Every record before a corrupt tail is read; the tail is one error
+    row naming its archive."""
     rows = corpus.to_dict("records")[:10]
     d = tmp_path / "warcs"
     d.mkdir()
     (d / "bad.warc").write_bytes(
         write_warc(rows, gzip_records=False) + b"WARC/1.0\r\nbroken")
-    got = spark.read.format("warc").load(str(d)).toPandas()
+    got = read_warc(spark, str(d)).toPandas()
     ok, bad = got[got["error"].isna()], got[got["error"].notna()]
     assert len(ok) == 10
     assert len(bad) == 1
     assert bad.iloc[0]["url"].endswith("bad.warc")
 
 
-def test_stream_tails_landing_dir_live(registered, tmp_path, corpus):
+def test_stream_tails_landing_dir_live(spark, tmp_path, corpus):
     """ONE running query picks up newly-landed archives across
-    micro-batches — no restart — and never re-reads a committed one."""
-    spark = registered
+    micro-batches — no restart — and never re-reads a committed one; a
+    corrupt tail is one error row naming its archive."""
     rows = corpus.to_dict("records")
     land = tmp_path / "landing"
     land.mkdir()
     (land / "seg0.warc.gz").write_bytes(write_warc(rows[:15]))
 
-    q = (spark.readStream.format("warc").load(str(land))
+    q = (read_warc_stream(spark, str(land))
          .writeStream.format("memory").queryName("warc_live")
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .start())
@@ -120,10 +49,13 @@ def test_stream_tails_landing_dir_live(registered, tmp_path, corpus):
         n1 = spark.sql("select count(*) c from warc_live").collect()[0].c
         assert n1 == 15
 
-        (land / "seg1.warc.gz").write_bytes(write_warc(rows[15:]))
+        (land / "seg1.warc").write_bytes(
+            write_warc(rows[15:], gzip_records=False) + b"WARC/1.0\r\nbroken")
         q.processAllAvailable()
-        got = spark.sql("select url from warc_live").toPandas()
-        assert len(got) == 40
-        assert got["url"].nunique() == 40
+        got = spark.sql("select url, error from warc_live").toPandas()
     finally:
         q.stop()
+    ok = got[got["error"].isna()]
+    assert len(ok) == 40 and ok["url"].nunique() == 40
+    bad = got[got["error"].notna()]
+    assert len(bad) == 1 and bad.iloc[0]["url"].endswith("seg1.warc")
