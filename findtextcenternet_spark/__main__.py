@@ -6,6 +6,7 @@
         [--format parquet|warc|cdx] [--master local[32]] [--partitions N]
         [--run-id ID] [--streaming]
         [--index] [--cdx-mime TYPE] [--cdx-prefix SURT]
+        [--cdx-diff OLD_IDX] [--cdx-dedup]
         [--near-dedup] [--para-dedup N] [--wet-out DIR]
         [--quality-gate] [--host-cap N] [--url-canon] [--pii-scrub]
         [--compact N]
@@ -14,18 +15,22 @@ Batch mode runs one resumable lineage-tracked extraction pass (re-invoking
 with the same OUT_DIR extracts only not-yet-done urls). ``--format warc``
 ingests crawl-native .warc/.warc.gz archives (sources/warc.py) instead of
 a pages parquet; archives whose tails are corrupt land their error-marker
-rows in the quarantine like any other poison page. --streaming tails
-INPUT as a file-source stream with checkpointed, idempotent
-(effectively-once) output instead; combined with ``--format warc`` it
-tails a crawl landing directory archive-by-archive (``binaryFile`` is a
-file-format source, so the checkpoint file log commits whole archives).
+rows in the quarantine like any other poison page. ``--streaming``
+instead tails INPUT as a file-source stream (a pages parquet dir, or with
+``--format warc`` a crawl landing directory read archive by archive) and
+runs the same batch extraction plan once per micro-batch
+(streaming.stream_extract): every page kind is extracted or quarantined,
+into checkpointed, idempotent (effectively-once) output; only the per-doc
+``--quality-gate`` combines with it.
 
 The index pair covers the crawl's two-phase flow at corpus scale: first
 ``--format warc --index`` walks archives ONCE and publishes sorted CDXJ
 shards to OUT_DIR (one task per archive, ``--partitions`` = shard
 count); later ``--format cdx`` runs extraction FROM an index, pruning by
 ``--cdx-mime`` / ``--cdx-prefix`` before any archive byte moves and
-range-fetching only the selected records (sources/cdx.py).
+range-fetching only the selected records (sources/cdx.py). The
+``--cdx-*`` flags require ``--format cdx``; ``--streaming`` neither
+builds nor reads an index.
 
 ``--near-dedup`` / ``--para-dedup N`` / ``--wet-out DIR`` chain the
 full crawl→corpus flagship (crawl.crawl_to_corpus): extraction stays
@@ -102,6 +107,13 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
     if args.index and args.input_format != "warc":
         ap.error("--index requires --format warc")
+    if args.streaming and (args.index or args.input_format == "cdx"):
+        ap.error("--streaming tails a pages parquet or WARC landing dir; "
+                 "it cannot combine with --index or --format cdx")
+    if ((args.cdx_mime or args.cdx_prefix or args.cdx_dedup)
+            and args.input_format != "cdx"):
+        ap.error("--cdx-mime/--cdx-prefix/--cdx-dedup prune a CDX index; "
+                 "they require --format cdx")
     if args.keep_best and not args.near_dedup:
         ap.error("--keep-best only changes the near-dedup keeper; "
                  "it requires --near-dedup")
@@ -139,22 +151,16 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
 
     if args.streaming:
-        if args.input_format == "warc":
-            from .streaming import stream_extract_warc
+        from .sources.warc import read_warc_stream
+        from .streaming import read_pages_stream, stream_extract
 
-            q = stream_extract_warc(
-                spark, args.input,
-                out_dir=os.path.join(args.out_dir, "docs"),
-                checkpoint_dir=os.path.join(args.out_dir, "_checkpoint"),
-                quality_gate=args.quality_gate)
-        else:
-            from .streaming import stream_extract_html
-
-            q = stream_extract_html(
-                spark, args.input,
-                out_dir=os.path.join(args.out_dir, "docs"),
-                checkpoint_dir=os.path.join(args.out_dir, "_checkpoint"),
-                include_raster=True, quality_gate=args.quality_gate)
+        read_stream = (read_warc_stream if args.input_format == "warc"
+                       else read_pages_stream)
+        q = stream_extract(
+            read_stream(spark, args.input),
+            out_dir=os.path.join(args.out_dir, "docs"),
+            checkpoint_dir=os.path.join(args.out_dir, "_checkpoint"),
+            quality_gate=args.quality_gate)
         q.awaitTermination()
         print(json.dumps({"mode": "streaming", "out": args.out_dir}))
         if owns_session:

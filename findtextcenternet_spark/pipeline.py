@@ -109,17 +109,6 @@ def extract_html_udf(html: pd.Series) -> pd.Series:
 NULL_PAGE_ERROR = "NullPage: html column is null"
 
 
-def is_html_col():
-    """Column-side twin of the kernel's kind dispatch: true for the pages
-    the HTML path takes — no raster or PDF magic bytes, or a null cell
-    (quarantined there). Binary prefix probes, JVM-side, no decoded copy
-    of the page."""
-    html = F.col("html")
-    return ((~F.startswith(html, F.lit(RASTER_MARKER))
-             & ~F.startswith(html, F.lit(PDF_MAGIC)))
-            | html.isNull())
-
-
 def spread_pages(pages: DataFrame, num_partitions: int | None = None,
                  ) -> DataFrame:
     """Hash-repartition the input on ``url`` before the extraction kernel.
@@ -258,7 +247,7 @@ def _unified_impl(it: Iterator[pd.DataFrame], weights_path: str | None
                 # a null page cell is malformed input, not a task failure
                 # (ADVICE r4 medium): quarantine it like any poison row.
                 # 'html' path label: a null has no magic bytes, so it
-                # belongs to the catch-all kind (see ``is_html_col``).
+                # belongs to the catch-all kind.
                 recs[i] = {"url": url, "text": None, "aozora": None,
                            "noruby": None, **empty, "path": "html",
                            "error": NULL_PAGE_ERROR}

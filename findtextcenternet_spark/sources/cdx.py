@@ -338,14 +338,7 @@ def latest_unique_captures(cdx: DataFrame) -> DataFrame:
     newest capture per digest (ties broken by urlkey for determinism).
     Scale shape: one hash shuffle on digest — rank inside partitions,
     no collect, no join."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy("digest").orderBy(
-        F.col("warc_ts").desc(), F.col("urlkey"))
-    return (cdx.filter(cdx.error.isNull())
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn"))
+    return _newest_clean_per(cdx, "digest", "urlkey")
 
 
 def latest_capture_per_url(cdx: DataFrame) -> DataFrame:
@@ -354,11 +347,17 @@ def latest_capture_per_url(cdx: DataFrame) -> DataFrame:
     keeps its urlkey when its content changes; that change is exactly
     what the snapshot diff below must see). Ties broken by digest for
     determinism."""
+    return _newest_clean_per(cdx, "urlkey", "digest")
+
+
+def _newest_clean_per(cdx: DataFrame, key: str, tie: str) -> DataFrame:
+    """The newest error-free entry per ``key`` (ties broken by ``tie``):
+    one window over one hash shuffle on ``key``."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    w = Window.partitionBy("urlkey").orderBy(
-        F.col("warc_ts").desc(), F.col("digest"))
+    w = Window.partitionBy(key).orderBy(F.col("warc_ts").desc(),
+                                        F.col(tie))
     return (cdx.filter(cdx.error.isNull())
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn"))

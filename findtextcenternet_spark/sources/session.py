@@ -37,10 +37,6 @@ def get_spark(app: str = "findtextcenternet-spark",
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer."
                 "InferFiltersFromGenerate")
-        # AQE: runtime coalesce + skew-join splitting (north rule: skew)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow exchange for pandas UDF stages
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

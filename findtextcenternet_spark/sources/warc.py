@@ -294,14 +294,12 @@ def archive_stream(spark: SparkSession, input_dir: str) -> DataFrame:
             .select("path", "content"))
 
 
-def read_warc_stream(spark: SparkSession, input_dir: str,
-                     content_types: tuple[str, ...] | None = None,
-                     ) -> DataFrame:
+def read_warc_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming twin of :func:`read_warc`: tail a crawl landing directory
     (:func:`archive_stream`) as new ``.warc``/``.warc.gz`` archives
     arrive."""
     return archive_stream(spark, input_dir).mapInPandas(
-        _pages_kernel(content_types), PAGES_ERROR_SCHEMA)
+        _pages_kernel(None), PAGES_ERROR_SCHEMA)
 
 
 # --- WET sink/source (crawl-native extracted-text archives) ----------------

@@ -1,7 +1,7 @@
 from .jobs import (  # noqa: F401
+    read_pages_stream,
     stream_dedup_exact,
-    stream_extract_html,
-    stream_extract_warc,
+    stream_extract,
     stream_index_warc,
     stream_quality_windows,
     stream_sessionize,

@@ -11,12 +11,13 @@ analogues of its nearest patterns:
                             → checkpoint directory: a restarted query resumes
                               from the last committed micro-batch offset.
 
-The native stream extracts only HTML-kind pages (the kind filter plus the
-one stateless ``extract_documents`` plan, legal in a streaming query).
-Raster pages cost orders of magnitude more per page; at corpus scale the
-split is "stream the cheap 95%, micro-batch the heavy 5% via foreachBatch",
-and ``stream_extract_html(..., include_raster=True)`` demonstrates exactly
-that foreachBatch pattern.
+Extraction has one streaming form, the batch plan run once per
+micro-batch: ``stream_extract`` takes any pages stream
+(``read_pages_stream`` over a pages parquet dir, or
+``sources/warc.read_warc_stream`` over a WARC landing dir) and hands
+each micro-batch to ``extract_documents`` inside one idempotent
+``foreachBatch`` sink. Every page kind (HTML, raster, PDF) is extracted
+or quarantined there; none is filtered out of the stream.
 """
 
 from __future__ import annotations
@@ -32,12 +33,16 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..sources import PAGES_SCHEMA
 
 
-def read_pages_stream(spark: SparkSession, input_dir: str,
-                      max_files_per_trigger: int = 8) -> DataFrame:
+# newly-landed pages parquet files one micro-batch takes at most
+_FILES_PER_TRIGGER = 8
+
+
+def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-source stream over a directory of pages parquet (the Iceberg
-    analogue of incremental snapshot reads)."""
+    analogue of incremental snapshot reads), at most
+    ``_FILES_PER_TRIGGER`` files a micro-batch."""
     return (spark.readStream.schema(PAGES_SCHEMA)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
+            .option("maxFilesPerTrigger", str(_FILES_PER_TRIGGER))
             .parquet(input_dir))
 
 
@@ -60,78 +65,31 @@ def _foreach_batch_idempotent(stream_df: DataFrame, out_dir: str,
             .trigger(availableNow=True).start())
 
 
-def _maybe_quality_gate(docs: DataFrame, quality_gate: bool) -> DataFrame:
-    """Per-doc gate (word floor + repetition ceiling) is row-local per
-    document, so it is micro-batch-safe; rejected docs stay in the
-    output as ``quality:<reason>`` error rows (the quarantine idiom)
-    rather than silently vanishing from the effectively-once output."""
-    if not quality_gate:
-        return docs
+def stream_extract(pages: DataFrame, out_dir: str, checkpoint_dir: str,
+                   quality_gate: bool = False):
+    """Streaming main-content extraction: the streaming twin of
+    ``lineage.run_extract(pages, ...)``. ``pages`` is a pages stream
+    (``read_pages_stream`` or ``sources/warc.read_warc_stream``); each
+    micro-batch runs the batch ``extract_documents`` plan over every page
+    kind through :func:`_foreach_batch_idempotent`, so a replayed batch
+    overwrites its own ``batch_id=<id>`` partition (effectively-once),
+    and a restart on the same checkpoint resumes after the last
+    committed batch.
+
+    Error rows of the archive readers (null html) come out as quarantine
+    rows under their own url, so a corrupt archive tail never stalls the
+    stream. With ``quality_gate`` the per-doc gate (word floor +
+    repetition ceiling, row-local, so micro-batch-safe) marks rejects as
+    ``quality:<reason>`` error rows instead of dropping them."""
     from ..crawl import apply_quality_gate
-
-    return apply_quality_gate(docs)
-
-
-def stream_extract_html(spark: SparkSession, input_dir: str,
-                        out_dir: str, checkpoint_dir: str,
-                        include_raster: bool = False,
-                        quality_gate: bool = False):
-    """Streaming main-content extraction.
-
-    Without ``include_raster`` the stream keeps only HTML-kind pages
-    (``is_html_col``) and streams natively through ``extract_documents``;
-    with it every micro-batch runs the FULL pipeline over every kind via
-    foreachBatch. Exactly-once: the native file sink uses its commit
-    log; the foreachBatch path writes each micro-batch into its own
-    ``batch_id=<id>`` partition directory with overwrite, so a replayed
-    batch (restart after a mid-batch crash) overwrites its own output
-    instead of duplicating it — idempotent, hence effectively-once.
-    """
-    from ..pipeline import extract_documents, is_html_col
-
-    pages = read_pages_stream(spark, input_dir)
-    if not include_raster:
-        pages = pages.filter(is_html_col())
-    if include_raster or quality_gate:
-        # raster pages are the micro-batched heavy share (module
-        # docstring); the gate joins per-doc metadata back onto the
-        # batch — a multi-input plan the native streaming sink can't run
-        # without the foreachBatch escape hatch — so it routes here too
-        return _foreach_batch_idempotent(
-            pages, out_dir, checkpoint_dir,
-            transform=lambda b: _maybe_quality_gate(
-                extract_documents(b), quality_gate))
-    out = extract_documents(pages)
-    return (out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
-
-
-def stream_extract_warc(spark: SparkSession, input_dir: str,
-                        out_dir: str, checkpoint_dir: str,
-                        quality_gate: bool = False):
-    """Streaming crawl-native extraction: tail a WARC landing directory
-    and run the FULL batch pipeline on each micro-batch of archives.
-
-    Source grain is one archive per file-log entry, at most 4 archives a
-    micro-batch (``sources/warc.archive_stream``), so "effectively-once"
-    composes cleanly: the checkpoint commits archives, and every page of
-    a committed archive is in exactly one micro-batch.
-    Each batch writes its own ``batch_id=<id>`` partition with overwrite —
-    a replayed batch (crash between sink write and checkpoint commit)
-    overwrites itself instead of duplicating. Error-marker rows from
-    corrupt archive tails flow through ``extract_documents``'s quarantine
-    (null html → error row under the per-archive ``warc:tail-error:``
-    url), so a bad archive never stalls the stream."""
     from ..pipeline import extract_documents
-    from ..sources.warc import read_warc_stream
 
-    pages = read_warc_stream(spark, input_dir)
-    return _foreach_batch_idempotent(
-        pages, out_dir, checkpoint_dir,
-        transform=lambda b: _maybe_quality_gate(
-            extract_documents(b.drop("error")), quality_gate))
+    def _extract(batch: DataFrame) -> DataFrame:
+        docs = extract_documents(batch)
+        return apply_quality_gate(docs) if quality_gate else docs
+
+    return _foreach_batch_idempotent(pages, out_dir, checkpoint_dir,
+                                     transform=_extract)
 
 
 def stream_index_warc(spark: SparkSession, input_dir: str,

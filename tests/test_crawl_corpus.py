@@ -237,6 +237,11 @@ def test_cli_flag_guards(tmp_path):
         ["in", "out", "--format", "warc", "--index", "--wet-out", "w"],
         ["in", "out", "--format", "cdx", "--cdx-dedup", "--near-dedup"],
         ["in", "out", "--keep-best"],
+        ["in", "out", "--streaming", "--index", "--format", "warc"],
+        ["in", "out", "--streaming", "--format", "cdx"],
+        ["in", "out", "--cdx-mime", "text/html"],
+        ["in", "out", "--format", "warc", "--cdx-prefix", "org,example"],
+        ["in", "out", "--cdx-dedup"],
     ):
         with pytest.raises(SystemExit) as ei:
             main(argv)

@@ -6,11 +6,11 @@ import os
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from findtextcenternet_spark.corpus import generate_pages
 from findtextcenternet_spark.streaming import (
-    stream_extract_html,
+    read_pages_stream,
+    stream_extract,
     stream_quality_windows,
     stream_welford_by_lang,
 )
@@ -28,32 +28,19 @@ def pages_dir(spark, tmp_path_factory):
     return d
 
 
-def test_stream_extract_html_and_resume(spark, pages_dir, tmp_path):
+def test_stream_extract_and_resume(spark, pages_dir, tmp_path):
+    """The batch plan once per micro-batch: every page of every kind is
+    extracted exactly once and equals the batch output per url, and a
+    restart on the same checkpoint adds no rows."""
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    q = stream_extract_html(spark, pages_dir, out, ckpt)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    n_html = got.count()
-    assert n_html > 0
-    assert set(got.select("path").distinct().toPandas()["path"]) == {"html"}
-
-    # resume with the same checkpoint: no new input -> no duplicate output
-    q2 = stream_extract_html(spark, pages_dir, out, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == n_html
-
-
-def test_stream_foreachbatch_full_pipeline(spark, pages_dir, tmp_path):
-    out = str(tmp_path / "out_full")
-    ckpt = str(tmp_path / "ckpt_full")
-    q = stream_extract_html(spark, pages_dir, out, ckpt, include_raster=True)
+    q = stream_extract(read_pages_stream(spark, pages_dir), out, ckpt)
     q.awaitTermination(240)
     got = spark.read.parquet(out)
-    # full pipeline: every input page extracted exactly once
     assert got.count() == 120
     assert got.select("url").distinct().count() == 120
-    # and the streamed output matches the batch pipeline per url
+    assert set(got.select("path").distinct().toPandas()["path"]) == {
+        "html", "raster", "pdf"}
     from findtextcenternet_spark.pipeline import (
         extract_documents,
         pages_from_pandas,
@@ -63,6 +50,11 @@ def test_stream_foreachbatch_full_pipeline(spark, pages_dir, tmp_path):
         .select("url", "text").toPandas().set_index("url")["text"])
     streamed = got.select("url", "text").toPandas().set_index("url")["text"]
     assert streamed.sort_index().equals(batch.sort_index())
+
+    # resume with the same checkpoint: no new input -> no duplicate output
+    q2 = stream_extract(read_pages_stream(spark, pages_dir), out, ckpt)
+    q2.awaitTermination(120)
+    assert spark.read.parquet(out).count() == 120
 
 
 def test_stream_quality_windows(spark, pages_dir, tmp_path):
@@ -150,40 +142,6 @@ def test_stream_dedup_exact(spark, tmp_path):
     assert got["fp"].nunique() == 40              # one row per payload
     # exactly one of each (original, mirror) pair survived
     assert int(got["url"].str.endswith("?mirror").sum()) <= 5
-
-
-def test_stream_stateless_leg_quality_gate(spark, tmp_path):
-    """quality_gate=True on the HTML-only stream routes through the
-    foreachBatch escape hatch (the gate's metadata join is not a
-    native-streaming-sink plan) and marks rejects without dropping."""
-    import pandas as pd
-
-    pdf = generate_pages(12)
-    junk = pdf.iloc[:1].copy()
-    junk["url"] = "https://q.example.org/junk"
-    junk["html"] = ("<html><body><div class=\"main_text\">"
-                    + "spam ham " * 60
-                    + "</div></body></html>").encode()
-    pdf = pd.concat([pdf, junk], ignore_index=True)
-    d = str(tmp_path / "pages")
-    os.makedirs(d)
-    pdf.to_parquet(os.path.join(d, "a.parquet"), index=False,
-                   coerce_timestamps="us", allow_truncated_timestamps=True)
-
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = stream_extract_html(spark, d, out, ckpt, quality_gate=True)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out).toPandas()
-    # none of the HTML-kind pages vanish (raster/pdf pages are filtered
-    # out by design); the junk page is marked, not dropped
-    from findtextcenternet_spark.pipeline import (
-        is_html_col,
-        pages_from_pandas,
-    )
-    n_html = pages_from_pandas(spark, pdf).filter(is_html_col()).count()
-    assert got["url"].nunique() == n_html
-    bad = got[got["error"].notna()].set_index("url")["error"].to_dict()
-    assert bad["https://q.example.org/junk"] == "quality:too_repetitive"
 
 
 def test_cli_streaming_quality_gate(spark, tmp_path):

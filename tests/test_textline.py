@@ -16,6 +16,7 @@ from findtextcenternet_spark.operators.detect import detect_page
 from findtextcenternet_spark.operators.group import group_page
 from findtextcenternet_spark.operators.textline import (
     Page,
+    combine_chains,
     fix_chain_info,
     make_lineblocker,
     run_textline_detect,
@@ -118,6 +119,30 @@ def test_j2_no_merge_through_blocker():
     P, order = run_textline_detect(boxes, runs, sep,
                                    np.full(len(sep), 0.982))
     assert len({(int(P.block[i]), int(P.idx[i])) for i in order}) == 2
+
+
+def test_j2_horizontal_head_probe_sees_two_chains():
+    """The head probe of a horizontal chain keeps walking past the first
+    chain it accepts (search_loop.cpp:640-690): meeting a second
+    acceptable chain in a later column makes the hit ambiguous, so
+    nothing merges. Big-glyph chain C reaches both small-glyph chains A
+    and B to its left; A and B are too small to reach each other or C."""
+    small = [(176 + 14 * i, 100, 12, 12) for i in range(3)]   # B
+    small += [(276 + 14 * i, 100, 12, 12) for i in range(3)]  # A
+    big = [(400 + 64 * i, 100, 60, 60) for i in range(3)]     # C
+
+    def combined(rows, chains):
+        P = Page(_boxes(rows), NO_RUNS, NO_RUNS, np.zeros(0))
+        make_lineblocker(P)
+        combine_chains(P, chains)
+        return chains
+
+    # C alone with A: the head probe's single hit merges them
+    assert combined(small[3:] + big, [[0, 1, 2], [3, 4, 5]]) == [
+        [0, 1, 2, 3, 4, 5]]
+    # with B further along the probe, C sees two chains: no merge
+    assert combined(small + big, [[0, 1, 2], [3, 4, 5], [6, 7, 8]]) == [
+        [0, 1, 2], [3, 4, 5], [6, 7, 8]]
 
 
 def test_w1_tie_group_cross_axis_resort():

@@ -172,7 +172,8 @@ def test_stream_extract_warc_incremental(spark, tmp_path, corpus):
     row instead of stalling the stream, and the streamed text matches the
     golden per url."""
     from findtextcenternet_spark.golden import extract_corpus_golden
-    from findtextcenternet_spark.streaming import stream_extract_warc
+    from findtextcenternet_spark.sources.warc import read_warc_stream
+    from findtextcenternet_spark.streaming import stream_extract
 
     rows = _rows(corpus)[:24]
     land = tmp_path / "landing"
@@ -180,7 +181,7 @@ def test_stream_extract_warc_incremental(spark, tmp_path, corpus):
     (land / "seg0.warc.gz").write_bytes(write_warc(rows[:12]))
     out, ckpt = str(tmp_path / "docs"), str(tmp_path / "ckpt")
 
-    q = stream_extract_warc(spark, str(land), out, ckpt)
+    q = stream_extract(read_warc_stream(spark, str(land)), out, ckpt)
     q.awaitTermination(240)
     got = spark.read.parquet(out).toPandas()
     assert len(got) == 12 and got["error"].isna().all()
@@ -190,7 +191,7 @@ def test_stream_extract_warc_incremental(spark, tmp_path, corpus):
     (land / "seg1.warc.gz").write_bytes(write_warc(rows[12:]))
     (land / "seg2.warc").write_bytes(
         write_warc([], gzip_records=False) + b"WARC/1.0\r\nbroken")
-    q2 = stream_extract_warc(spark, str(land), out, ckpt)
+    q2 = stream_extract(read_warc_stream(spark, str(land)), out, ckpt)
     q2.awaitTermination(240)
     got2 = spark.read.parquet(out).toPandas()
     ok = got2[got2["error"].isna()]
@@ -316,7 +317,8 @@ def test_stream_extract_warc_quality_gate(spark, tmp_path, corpus):
     out as a quality:<reason> error row (the quarantine idiom — never
     silently dropped from the effectively-once output), clean pages are
     untouched."""
-    from findtextcenternet_spark.streaming import stream_extract_warc
+    from findtextcenternet_spark.sources.warc import read_warc_stream
+    from findtextcenternet_spark.streaming import stream_extract
 
     rows = _rows(corpus)[:8]
     junk_html = ("<html><body><div class=\"main_text\">"
@@ -328,7 +330,8 @@ def test_stream_extract_warc_quality_gate(spark, tmp_path, corpus):
     (land / "seg0.warc.gz").write_bytes(write_warc(rows))
     out, ckpt = str(tmp_path / "docs"), str(tmp_path / "ckpt")
 
-    q = stream_extract_warc(spark, str(land), out, ckpt, quality_gate=True)
+    q = stream_extract(read_warc_stream(spark, str(land)), out, ckpt,
+                       quality_gate=True)
     q.awaitTermination(240)
     got = spark.read.parquet(out).toPandas()
     # nothing vanishes: every input page is in the output exactly once
