@@ -28,19 +28,34 @@ def pages_dir(spark, tmp_path_factory):
     return d
 
 
-def test_stream_extract_and_resume(spark, pages_dir, tmp_path):
-    """The batch plan once per micro-batch: every page of every kind is
-    extracted exactly once and equals the batch output per url, and a
-    restart on the same checkpoint adds no rows."""
+def test_stream_extract_html_and_resume(spark, pages_dir, tmp_path):
+    """The one stream extracts every page kind, not only html, and a restart
+    on the same checkpoint adds no rows."""
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     q = stream_extract(read_pages_stream(spark, pages_dir), out, ckpt)
     q.awaitTermination(240)
     got = spark.read.parquet(out)
     assert got.count() == 120
-    assert got.select("url").distinct().count() == 120
     assert set(got.select("path").distinct().toPandas()["path"]) == {
         "html", "raster", "pdf"}
+
+    # resume with the same checkpoint: no new input -> no duplicate output
+    q2 = stream_extract(read_pages_stream(spark, pages_dir), out, ckpt)
+    q2.awaitTermination(120)
+    assert spark.read.parquet(out).count() == 120
+
+
+def test_stream_foreachbatch_full_pipeline(spark, pages_dir, tmp_path):
+    """The batch plan once per micro-batch: every page is extracted exactly
+    once and equals the batch output per url."""
+    out = str(tmp_path / "out_full")
+    ckpt = str(tmp_path / "ckpt_full")
+    q = stream_extract(read_pages_stream(spark, pages_dir), out, ckpt)
+    q.awaitTermination(240)
+    got = spark.read.parquet(out)
+    assert got.count() == 120
+    assert got.select("url").distinct().count() == 120
     from findtextcenternet_spark.pipeline import (
         extract_documents,
         pages_from_pandas,
@@ -50,11 +65,6 @@ def test_stream_extract_and_resume(spark, pages_dir, tmp_path):
         .select("url", "text").toPandas().set_index("url")["text"])
     streamed = got.select("url", "text").toPandas().set_index("url")["text"]
     assert streamed.sort_index().equals(batch.sort_index())
-
-    # resume with the same checkpoint: no new input -> no duplicate output
-    q2 = stream_extract(read_pages_stream(spark, pages_dir), out, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == 120
 
 
 def test_stream_quality_windows(spark, pages_dir, tmp_path):
