@@ -21,7 +21,8 @@ instead tails INPUT as a file-source stream (a pages parquet dir, or with
 runs the same batch extraction plan once per micro-batch
 (streaming.stream_extract): every page kind is extracted or quarantined,
 into checkpointed, idempotent (effectively-once) output; only the per-doc
-``--quality-gate`` combines with it.
+``--quality-gate`` combines with it (``--partitions`` and ``--run-id``
+are batch-only).
 
 The index pair covers the crawl's two-phase flow at corpus scale: first
 ``--format warc --index`` walks archives ONCE and publishes sorted CDXJ
@@ -110,6 +111,11 @@ def main(argv: list[str] | None = None) -> int:
     if args.streaming and (args.index or args.input_format == "cdx"):
         ap.error("--streaming tails a pages parquet or WARC landing dir; "
                  "it cannot combine with --index or --format cdx")
+    if args.streaming and (args.partitions is not None
+                           or args.run_id is not None):
+        ap.error("--streaming spreads each micro-batch over the default "
+                 "parallelism and writes batch_id= partitions; it cannot "
+                 "combine with --partitions or --run-id")
     if ((args.cdx_mime or args.cdx_prefix or args.cdx_dedup)
             and args.input_format != "cdx"):
         ap.error("--cdx-mime/--cdx-prefix/--cdx-dedup prune a CDX index; "

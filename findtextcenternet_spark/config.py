@@ -67,6 +67,3 @@ RUBY_CLOSE = "￻"  # U+FFFB INTERLINEAR ANNOTATION TERMINATOR
 # --- corpus generation ---
 CORPUS_SEED = 42
 LANGS = ("ja", "en", "ko", "fr", "de", "it")  # train_data3/make_data.py:48-53
-
-# --- scale mechanics ---
-SALT_BUCKETS = 16   # salt fan-out for skewed domains

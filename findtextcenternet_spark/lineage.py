@@ -411,41 +411,38 @@ def run_extract(pages: DataFrame, out_dir: str,
                       F.count("error").alias("n_quarantined"))
     n_quarantined = counts["n_quarantined"]
     n_docs = counts["n"] - n_quarantined
-    try:
-        store.append("docs", out)
-        wall = time.time() - t0
+    store.append("docs", out)
+    wall = time.time() - t0
 
-        # this run's settled urls (docs AND quarantine rows) → compact
-        # done-set side table: resume reads O(done-set), one string
-        # column, instead of the url column of everything ever written
-        store.append("done", out.select("url", "run_id"))
+    # this run's settled urls (docs AND quarantine rows) → compact
+    # done-set side table: resume reads O(done-set), one string
+    # column, instead of the url column of everything ever written
+    store.append("done", out.select("url", "run_id"))
 
-        if n_quarantined:
-            store.append("quarantine",
-                         out.filter(F.col("error").isNotNull())
-                         .select("url", "error", "run_id"))
+    if n_quarantined:
+        store.append("quarantine",
+                     out.filter(F.col("error").isNotNull())
+                     .select("url", "error", "run_id"))
 
-        good = out.filter(F.col("error").isNull())
-        lineage = (good.groupBy("part_id")
-                   .agg(F.count("*").alias("n_docs"),
-                        # BYTES, not characters: CJK text is ~3 B/char
-                        F.sum(F.octet_length("text")).alias("text_bytes"),
-                        F.sum(F.when(F.col("path") == "raster", 1)
-                              .otherwise(0)).alias("n_raster"))
-                   .withColumn("run_id", F.lit(run_id))
-                   .withColumn("wall_sec", F.lit(round(wall, 3)))
-                   .withColumn("committed_at", F.current_timestamp()))
-        store.append("lineage", lineage)
-        # the marker means the run is FULLY recorded — done set,
-        # quarantine mirror AND lineage — so it is written LAST: a crash
-        # anywhere above leaves the run unmarked and the next resume's
-        # healing pass rebuilds the done set and the quarantine mirror
-        # from the committed docs (re-extraction never happens either
-        # way; docs are the commit point and the anti-join sees the
-        # backfilled done rows)
-        store.mark_done([run_id])
-    finally:
-        out.unpersist()
+    good = out.filter(F.col("error").isNull())
+    lineage = (good.groupBy("part_id")
+               .agg(F.count("*").alias("n_docs"),
+                    # BYTES, not characters: CJK text is ~3 B/char
+                    F.sum(F.octet_length("text")).alias("text_bytes"),
+                    F.sum(F.when(F.col("path") == "raster", 1)
+                          .otherwise(0)).alias("n_raster"))
+               .withColumn("run_id", F.lit(run_id))
+               .withColumn("wall_sec", F.lit(round(wall, 3)))
+               .withColumn("committed_at", F.current_timestamp()))
+    store.append("lineage", lineage)
+    # the marker means the run is FULLY recorded — done set,
+    # quarantine mirror AND lineage — so it is written LAST: a crash
+    # anywhere above leaves the run unmarked and the next resume's
+    # healing pass rebuilds the done set and the quarantine mirror
+    # from the committed docs (re-extraction never happens either
+    # way; docs are the commit point and the anti-join sees the
+    # backfilled done rows)
+    store.mark_done([run_id])
     return {"run_id": run_id, "n_docs": n_docs,
             "n_quarantined": n_quarantined, "wall_sec": round(wall, 3),
             "docs_dir": os.path.join(out_dir, "docs"),

@@ -5,15 +5,19 @@ merges per-tile heatmaps with an interior mask (process_ocr_base.py:474-650).
 No model weights exist in this sandbox, so the detector forward pass is a
 deterministic surrogate: heatmaps are *rendered* from the page's layout
 record with the reference's own label math — Gaussian center stamps on the
-keypoint channel and ``log(size/1024)+3`` on the size channels
+keypoint channel and ``log(size/SIZE_NORM)+SIZE_BIAS`` on the size channels
 (dataset/processer.pyx:133-182) — and the glyph feature map carries a
-deterministic invertible 100-d embedding per codepoint. Everything
-downstream of the forward pass (tiling, interior-mask overlap merge, 3×3
-max-pool NMS, sigmoid, cutoff, size decode, greedy IoU NMS, separator-mask
-filter) is the real algorithm, vectorized NumPy.
+deterministic invertible 100-d embedding per codepoint.
 
-The real-model path differs only in the function that produces the tile
-heatmaps; the plumbing (schema, partitioning, batch shape) is identical.
+``detect_page`` is one of two forward functions in front of one decode.
+``_surrogate_forward`` renders the page maps and max-pools their peaks;
+``_real_forward`` runs the model (operators/models.py) over 768px tiles
+and merges them with the interior mask (``tile_windows``). Each returns
+the same thing: the page maps in CH_* order, the key probability, its
+peak mask, and per-box readers for the P6 contrast score and the glyph
+feature. ``_decode`` does everything else once, for both: peak ranking,
+size decode and filter, contrast-gated greedy IoU NMS, separator-mask
+filter, 3×3 code max, and the boxes and runs frames.
 """
 
 from __future__ import annotations
@@ -34,6 +38,8 @@ from ..config import (
     NMS_INTER,
     NMS_IOU,
     SCALE,
+    SIZE_BIAS,
+    SIZE_NORM,
     STRIDE,
 )
 from .textline import mask_cells
@@ -120,8 +126,8 @@ def _stamp_maps(layout: dict, ox: int, oy: int, h_cells: int,
                    out=hm[CH_KEY, y0:y1, x0:x1])
         cix, ciy = int(round(gx)), int(round(gy))
         if 0 <= cix < w_cells and 0 <= ciy < h_cells:
-            hm[CH_SZX, ciy, cix] = np.float32(math.log(g["w"] / 1024.0) + 3.0)
-            hm[CH_SZY, ciy, cix] = np.float32(math.log(g["h"] / 1024.0) + 3.0)
+            hm[CH_SZX, ciy, cix] = np.float32(math.log(g["w"] / SIZE_NORM) + SIZE_BIAS)
+            hm[CH_SZY, ciy, cix] = np.float32(math.log(g["h"] / SIZE_NORM) + SIZE_BIAS)
             hm[CH_C1, ciy, cix] = _ON_LOGIT if g["ruby"] else _OFF_LOGIT
             hm[CH_C2, ciy, cix] = _ON_LOGIT if (g["rubybase"] or g["ruby"]) else _OFF_LOGIT
             hm[CH_C4, ciy, cix] = _ON_LOGIT if g["emphasis"] else _OFF_LOGIT
@@ -166,10 +172,6 @@ def _stamp_maps(layout: dict, ox: int, oy: int, h_cells: int,
     return hm
 
 
-def _stamp_tile(layout: dict, ox: int, oy: int) -> np.ndarray:
-    return _stamp_maps(layout, ox, oy, TILE_CELLS, TILE_CELLS)
-
-
 def tile_origins(n_cells: int) -> list[int]:
     """Tile offsets covering [0, n_cells) with stride STRIDE_CELLS
     (process_ocr_base.py:70-76 tiling, in heatmap cells)."""
@@ -178,6 +180,27 @@ def tile_origins(n_cells: int) -> list[int]:
     out = list(range(0, n_cells - TILE_CELLS, STRIDE_CELLS))
     out.append(n_cells - TILE_CELLS)
     return out
+
+
+def tile_windows(hc: int, wc: int
+                 ) -> Iterator[tuple[tuple[int, int], tuple, tuple]]:
+    """Tile fan-out (P1) and interior mask (P2) over an hc×wc-cell page,
+    one tile at a time in row-major tile order: the tile's origin
+    ``(oy, ox)``, the page window it owns and the tile window that lands
+    there, both as ``[:, y, x]`` indices. A tile owns itself less the
+    half-overlap margin on every side that is not a page edge, clipped to
+    the page (process_ocr_base.py:498-503)."""
+    for oy in tile_origins(hc):
+        for ox in tile_origins(wc):
+            x_lo = _MARGIN if ox > 0 else 0
+            x_hi = TILE_CELLS - _MARGIN if ox + TILE_CELLS < wc else TILE_CELLS
+            y_lo = _MARGIN if oy > 0 else 0
+            y_hi = TILE_CELLS - _MARGIN if oy + TILE_CELLS < hc else TILE_CELLS
+            x_hi = min(x_hi, wc - ox)
+            y_hi = min(y_hi, hc - oy)
+            yield ((oy, ox),
+                   np.s_[:, oy + y_lo:oy + y_hi, ox + x_lo:ox + x_hi],
+                   np.s_[:, y_lo:y_hi, x_lo:x_hi])
 
 
 def render_page_heatmaps(layout: dict) -> np.ndarray:
@@ -201,27 +224,16 @@ def render_page_heatmaps(layout: dict) -> np.ndarray:
 
 def render_page_heatmaps_tiled(layout: dict) -> np.ndarray:
     """Tile fan-out (P1) + interior mask (P2) + overlap-max merge (A1) —
-    the real-model geometry; kept as the reference implementation for the
-    equivalence test."""
+    the real-model geometry (``tile_windows``, as ``_real_forward``
+    merges); kept as the reference implementation for the equivalence
+    test."""
     wc = int(math.ceil(layout["page_w"] / SCALE))
     hc = int(math.ceil(layout["page_h"] / SCALE))
     page = np.full((N_CH, hc, wc), -np.inf, dtype=np.float32)
-    xs = tile_origins(wc)
-    ys = tile_origins(hc)
-    for oy in ys:
-        for ox in xs:
-            tile = _stamp_tile(layout, ox, oy)
-            # interior mask: keep the interior half-overlap margin except
-            # at page edges (process_ocr_base.py:498-503)
-            x_lo = _MARGIN if ox > 0 else 0
-            x_hi = TILE_CELLS - _MARGIN if ox + TILE_CELLS < wc else TILE_CELLS
-            y_lo = _MARGIN if oy > 0 else 0
-            y_hi = TILE_CELLS - _MARGIN if oy + TILE_CELLS < hc else TILE_CELLS
-            # clip to page bounds
-            x_hi = min(x_hi, wc - ox)
-            y_hi = min(y_hi, hc - oy)
-            view = page[:, oy + y_lo:oy + y_hi, ox + x_lo:ox + x_hi]
-            np.maximum(view, tile[:, y_lo:y_hi, x_lo:x_hi], out=view)
+    for (oy, ox), page_win, tile_win in tile_windows(hc, wc):
+        tile = _stamp_maps(layout, ox, oy, TILE_CELLS, TILE_CELLS)
+        view = page[page_win]
+        np.maximum(view, tile[tile_win], out=view)
     # cells never covered by an interior mask can only occur if stride >
     # 2*margin; fill from -inf for safety
     np.nan_to_num(page, copy=False, neginf=_BG_KEY_LOGIT)
@@ -229,18 +241,22 @@ def render_page_heatmaps_tiled(layout: dict) -> np.ndarray:
 
 
 def maxpool3x3(p: np.ndarray) -> np.ndarray:
-    """3×3 neighborhood max (T4, models/detector.py:289-296)."""
+    """3×3 neighborhood max over the last two axes (T4,
+    models/detector.py:289-296); leading axes (tile, channel) pool
+    independently."""
     out = p.copy()
+    h, w = p.shape[-2:]
     for dy in (-1, 0, 1):
         for dx in (-1, 0, 1):
             if dy == 0 and dx == 0:
                 continue
-            sl_y = slice(max(0, dy), p.shape[0] + min(0, dy))
-            sl_x = slice(max(0, dx), p.shape[1] + min(0, dx))
-            dl_y = slice(max(0, -dy), p.shape[0] + min(0, -dy))
-            dl_x = slice(max(0, -dx), p.shape[1] + min(0, -dx))
-            np.maximum(out[dl_y, dl_x], p[sl_y, sl_x], out=out[dl_y, dl_x])
+            src = np.s_[..., max(0, dy):h + min(0, dy),
+                        max(0, dx):w + min(0, dx)]
+            dst = np.s_[..., max(0, -dy):h + min(0, -dy),
+                        max(0, -dx):w + min(0, -dx)]
+            np.maximum(out[dst], p[src], out=out[dst])
     return out
+
 
 
 def cluster_dist(hist: np.ndarray) -> float:
@@ -349,54 +365,146 @@ def greedy_nms(boxes: np.ndarray, hists: np.ndarray | None = None,
 
 def detect_page(layout: dict, model=None
                 ) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Full detect stage for one page.
+    """Full detect stage for one page: a forward pass, then the one
+    decode (``_decode``).
 
-    ``model`` comes from model_registry.get_detector_model(): the
-    surrogate dict (default — heatmaps rendered from the layout record)
-    or a real forward-pass object (operators/models.py — rasterize,
-    tile, batched CNN forward, interior-mask merge), which shares all
-    downstream machinery (NMS, cutoff, size decode, contrast, runs).
+    ``model`` comes from model_registry.get_detector_model(): ``None`` for
+    the surrogate (``_surrogate_forward``: maps rendered from the layout
+    record) or a real forward-pass object (``_real_forward`` over
+    operators/models.py: rasterize, tile, batched CNN forward,
+    interior-mask merge).
 
     Returns (boxes, runs):
-      boxes: box_id, p, cx, cy, w, h, code1..code8, feature(len-100 list)
+      boxes: box_id, p, cx, cy, w, h, code1..code8, feature (100 float32,
+             packed bytes)
       runs:  channel ('line'|'sep'), y (cell row), x1, x2 (inclusive cells)
     """
-    if model is not None and not isinstance(model, dict):
-        return detect_page_real(layout, model)
-    page = render_page_heatmaps(layout)
-    p = sigmoid(page[CH_KEY])
-    pooled = maxpool3x3(p)
-    peak_mask = (p >= pooled) & (p >= CUT_OFF)
-    ys, xs = mask_cells(peak_mask)
+    if model is None:
+        forward = _surrogate_forward(layout)
+    else:
+        forward = _real_forward(layout, model)
+    return _decode(layout, *forward)
+
+
+def _surrogate_forward(layout: dict) -> tuple:
+    """Surrogate forward pass: the page maps of ``render_page_heatmaps``,
+    the key probability and its 3×3 max-pooled peaks at CUT_OFF. A box
+    reads the glyph whose center cell is its own: P6 scores that glyph's
+    two-tone patch (``contrast_score``), the feature is its
+    ``feature_embedding``."""
+    maps = render_page_heatmaps(layout)
+    p = sigmoid(maps[CH_KEY])
+    peaks = (p >= maxpool3x3(p)) & (p >= CUT_OFF)
+
+    gl = layout["glyphs"]
+    at: dict[tuple[int, int], int] = {}
+    for gi, g in enumerate(gl):
+        at[(int(round(g["cy"] / SCALE)), int(round(g["cx"] / SCALE)))] = gi
+
+    def glyphs(ys, xs):
+        return [at.get(cell, -1) for cell in zip(ys.tolist(), xs.tolist())]
+
+    def contrast(ys, xs, cx, cy, w, h):
+        hists = np.zeros(len(ys))
+        for j, gi in enumerate(glyphs(ys, xs)):
+            c = float(gl[gi].get("contrast", 1.0)) if gi >= 0 else 1.0
+            hists[j] = contrast_score(w[j], h[j], c)
+        return hists
+
+    def features(ys, xs):
+        cps = np.array([g["cp"] for g in gl], dtype=np.int64)
+        emb = (feature_embedding(cps) if len(gl)
+               else np.zeros((0, FEATURE_DIM), np.float32))
+        feats = np.zeros((len(ys), FEATURE_DIM), dtype=np.float32)
+        for j, gi in enumerate(glyphs(ys, xs)):
+            if gi >= 0:
+                feats[j] = emb[gi]
+        return feats
+
+    return maps, p, peaks, contrast, features
+
+
+def _real_forward(layout: dict, model) -> tuple:
+    """Real-model forward pass: rasterize -> white-pad -> 768px tiles ->
+    batched CNN forward (10+100-channel output, models/detector.py:
+    203-230) -> interior-mask merge in tile order (``tile_windows``; heat
+    by overlap max, P1+P2+A1, process_ocr_base.py:480-516, features by
+    assignment), cropped to the page, -inf read as -30.
+
+    The heat channels are the keymap, its 3×3-NMS'd copy, then the other
+    ``models.RAW_MAPS``: without the NMS'd copy they are the CH_* maps,
+    and the copy gives the key probability and its peaks at CUT_OFF.
+    P6 scores a histogram of the real pixels under each box
+    (process_ocr_base.py:543-575); the feature is the fp16 feature page
+    at the box's cell (test_image3_torch.py:397)."""
+    from .models import TILE_PX, pad_to_tile_grid, rasterize_layout
+
+    img = pad_to_tile_grid(rasterize_layout(layout))
+    gray = img[:, :, 0]
+    hc_all, wc_all = img.shape[0] // SCALE, img.shape[1] // SCALE
+    windows = list(tile_windows(hc_all, wc_all))
+    heat, feats = model.forward_tiles(np.stack([
+        img[oy * SCALE:oy * SCALE + TILE_PX, ox * SCALE:ox * SCALE + TILE_PX]
+        for (oy, ox), _, _ in windows]))  # (B,10,192,192), (B,100,·,·)
+
+    page = np.full((heat.shape[1], hc_all, wc_all), -np.inf,
+                   dtype=np.float32)
+    fpage = np.zeros((FEATURE_DIM, hc_all, wc_all), dtype=np.float16)
+    for b, (_, page_win, tile_win) in enumerate(windows):
+        view = page[page_win]
+        np.maximum(view, heat[b][tile_win], out=view)
+        fpage[page_win] = feats[b][tile_win]
+    hcp = int(math.ceil(layout["page_h"] / SCALE))
+    wcp = int(math.ceil(layout["page_w"] / SCALE))
+    page = np.nan_to_num(page[:, :hcp, :wcp], neginf=-30.0)
+    fpage = fpage[:, :hcp, :wcp]
+    p = sigmoid(page[1])
+
+    def contrast(ys, xs, cx, cy, w, h):
+        hists = np.zeros(len(ys))
+        for j in range(len(ys)):
+            x1 = max(0, int(cx[j] - w[j] / 2) - 1)
+            x2 = min(gray.shape[1], int(cx[j] + w[j] / 2) + 2)
+            y1 = max(0, int(cy[j] - h[j] / 2) - 1)
+            y2 = min(gray.shape[0], int(cy[j] + h[j] / 2) + 2)
+            hist = np.bincount(gray[y1:y2, x1:x2].ravel(), minlength=256)
+            hists[j] = cluster_dist(hist.astype(np.float64))
+        return hists
+
+    def features(ys, xs):
+        return fpage[:, ys, xs].T.astype(np.float32)
+
+    return np.delete(page, 1, axis=0), p, p >= CUT_OFF, contrast, features
+
+
+def _decode(layout: dict, maps: np.ndarray, p: np.ndarray,
+            peaks: np.ndarray, contrast, features
+            ) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """The detect decode after either forward pass: ``maps`` are the
+    (N_CH, h, w) page logits in CH_* order, ``p`` the key probability
+    and ``peaks`` its peak cells; ``contrast(ys, xs, cx, cy, w, h)`` gives
+    each box's P6 score and ``features(ys, xs)`` its (n, FEATURE_DIM)
+    float32 features."""
+    ys, xs = mask_cells(peaks)
     pv = p[ys, xs]
 
     # W4 peak ranking: score desc, then (y, x) asc for determinism
     order = np.lexsort((xs, ys, -pv))
     ys, xs, pv = ys[order], xs[order], pv[order]
 
-    w = np.exp(page[CH_SZX, ys, xs].astype(np.float64) - 3.0) * 1024.0
-    h = np.exp(page[CH_SZY, ys, xs].astype(np.float64) - 3.0) * 1024.0
+    # P5 size decode (the inverse of the size label, dataset/processer.pyx:
+    # 164-165), then drop degenerate / page-exceeding sizes
+    w = np.exp(maps[CH_SZX, ys, xs].astype(np.float64) - SIZE_BIAS) * SIZE_NORM
+    h = np.exp(maps[CH_SZY, ys, xs].astype(np.float64) - SIZE_BIAS) * SIZE_NORM
     cx = xs.astype(np.float64) * SCALE
     cy = ys.astype(np.float64) * SCALE
-
-    # P5: drop degenerate / page-exceeding sizes
     ok = (w > 1.0) & (h > 1.0) & (w < layout["page_w"]) & (h < layout["page_h"])
     ys, xs, pv, w, h, cx, cy = ys[ok], xs[ok], pv[ok], w[ok], h[ok], cx[ok], cy[ok]
-
-    # glyph cell lookup (shared by P6 contrast and the feature read below)
-    gl = layout["glyphs"]
-    feat_lookup: dict[tuple[int, int], int] = {}
-    for gi, g in enumerate(gl):
-        feat_lookup[(int(round(g["cy"] / SCALE)), int(round(g["cx"] / SCALE)))] = gi
 
     # P6: contrast filter — per-box two-cluster histogram distance,
     # threshold median(all)/5 (process_ocr_base.py:543-557); applied
     # inside the greedy NMS loop exactly like the reference
-    hists = np.zeros(len(ys))
-    for j in range(len(ys)):
-        gi = feat_lookup.get((int(ys[j]), int(xs[j])), -1)
-        contrast = float(gl[gi].get("contrast", 1.0)) if gi >= 0 else 1.0
-        hists[j] = contrast_score(w[j], h[j], contrast)
+    hists = contrast(ys, xs, cx, cy, w, h)
     th_hist = (float(np.median(hists)) / 5.0) if len(hists) else 0.0
 
     # T3: greedy IoU NMS in score order, P6-gated
@@ -404,30 +512,20 @@ def detect_page(layout: dict, model=None
     ys, xs, pv, w, h, cx, cy = ys[keep], xs[keep], pv[keep], w[keep], h[keep], cx[keep], cy[keep]
 
     # P7: separator-mask filter — drop boxes centered on separator pixels
-    sep_p = sigmoid(page[CH_SEP, ys, xs])
-    ok = sep_p <= 0.5
+    ok = sigmoid(maps[CH_SEP, ys, xs]) <= 0.5
     ys, xs, pv, w, h, cx, cy = ys[ok], xs[ok], pv[ok], w[ok], h[ok], cx[ok], cy[ok]
 
     # A2: code flags max-pooled over the 3×3 neighborhood of the center
     codes = np.zeros((4, len(ys)), dtype=np.float64)
-    hc, wc = p.shape
+    hc, wc = maps.shape[1:]
     for ci, ch in enumerate((CH_C1, CH_C2, CH_C4, CH_C8)):
         cmax = np.full(len(ys), -np.inf, dtype=np.float32)
         for dy in (-1, 0, 1):
             for dx in (-1, 0, 1):
                 yy = np.clip(ys + dy, 0, hc - 1)
                 xx = np.clip(xs + dx, 0, wc - 1)
-                np.maximum(cmax, page[ch, yy, xx], out=cmax)
+                np.maximum(cmax, maps[ch, yy, xx], out=cmax)
         codes[ci] = sigmoid(cmax.astype(np.float64))
-
-    # glyph features read at the peak cells (surrogate: invertible embedding)
-    cps = np.array([g["cp"] for g in gl], dtype=np.int64)
-    emb = feature_embedding(cps) if len(gl) else np.zeros((0, FEATURE_DIM), np.float32)
-    feats = np.zeros((len(ys), FEATURE_DIM), dtype=np.float32)
-    for j in range(len(ys)):
-        gi = feat_lookup.get((int(ys[j]), int(xs[j])), -1)
-        if gi >= 0:
-            feats[j] = emb[gi]
 
     boxes = pd.DataFrame({
         "box_id": np.arange(len(ys), dtype=np.int64),
@@ -438,9 +536,9 @@ def detect_page(layout: dict, model=None
     })
     # packed float32 bytes: 100 floats as one binary cell is ~10x cheaper
     # through Arrow than list<float> (no per-element boxing)
-    boxes["feature"] = [row.tobytes() for row in feats]
+    boxes["feature"] = [row.tobytes() for row in features(ys, xs)]
 
-    runs = _runs_df(sigmoid(page[CH_LINE]), sigmoid(page[CH_SEP]))
+    runs = _runs_df(sigmoid(maps[CH_LINE]), sigmoid(maps[CH_SEP]))
     return boxes, runs
 
 
@@ -476,112 +574,6 @@ def _runs_df(line_vals: np.ndarray, sep_vals: np.ndarray) -> pd.DataFrame:
         "x2": np.concatenate([part[2] for part in parts]).astype(np.int64),
         "v": np.concatenate([part[3] for part in parts]).astype(np.float64)})
 
-
-def detect_page_real(layout: dict, model) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Real-model detect: rasterize -> white-pad -> 768px tiles -> batched
-    CNN forward (10+100-channel output, models/detector.py:203-230) ->
-    interior-mask overlap-max merge (P1+P2+A1, process_ocr_base.py:
-    480-516) -> the SAME peak/NMS/size/contrast/separator pipeline as the
-    surrogate. Features come from the model's fp16 feature map at the
-    peak cells (fp16 transport, test_image3_torch.py:397); the P6
-    contrast histogram comes from the actual pixels
-    (process_ocr_base.py:543-575)."""
-    from .models import TILE_PX, pad_to_tile_grid, rasterize_layout
-
-    img = pad_to_tile_grid(rasterize_layout(layout))
-    gray = img[:, :, 0]
-    hc_all, wc_all = img.shape[0] // SCALE, img.shape[1] // SCALE
-    oys, oxs = tile_origins(hc_all), tile_origins(wc_all)
-    tiles = np.stack([
-        img[oy * SCALE:oy * SCALE + TILE_PX, ox * SCALE:ox * SCALE + TILE_PX]
-        for oy in oys for ox in oxs])
-    heat, feats = model.forward_tiles(tiles)  # (B,10,192,192), (B,100,·,·)
-
-    page = np.full((heat.shape[1], hc_all, wc_all), -np.inf,
-                   dtype=np.float32)
-    fpage = np.zeros((FEATURE_DIM, hc_all, wc_all), dtype=np.float16)
-    bi = 0
-    for oy in oys:
-        for ox in oxs:
-            x_lo = _MARGIN if ox > 0 else 0
-            x_hi = TILE_CELLS - _MARGIN if ox + TILE_CELLS < wc_all \
-                else TILE_CELLS
-            y_lo = _MARGIN if oy > 0 else 0
-            y_hi = TILE_CELLS - _MARGIN if oy + TILE_CELLS < hc_all \
-                else TILE_CELLS
-            x_hi = min(x_hi, wc_all - ox)
-            y_hi = min(y_hi, hc_all - oy)
-            view = page[:, oy + y_lo:oy + y_hi, ox + x_lo:ox + x_hi]
-            np.maximum(view, heat[bi, :, y_lo:y_hi, x_lo:x_hi], out=view)
-            fpage[:, oy + y_lo:oy + y_hi, ox + x_lo:ox + x_hi] = \
-                feats[bi, :, y_lo:y_hi, x_lo:x_hi]
-            bi += 1
-    hcp = int(math.ceil(layout["page_h"] / SCALE))
-    wcp = int(math.ceil(layout["page_w"] / SCALE))
-    page = page[:, :hcp, :wcp]
-    fpage = fpage[:, :hcp, :wcp]
-
-    # channels: 0 keymap, 1 NMS'd peak, 2 szx, 3 szy, 4 line, 5 sep, 6-9
-    # codes (CenterNetDetector ordering)
-    p = sigmoid(np.nan_to_num(page[1], neginf=-30.0))
-    ys, xs = mask_cells(p >= CUT_OFF)
-    pv = p[ys, xs]
-    order = np.lexsort((xs, ys, -pv))
-    ys, xs, pv = ys[order], xs[order], pv[order]
-
-    w = np.exp(page[2, ys, xs].astype(np.float64) - 3.0) * 1024.0
-    h = np.exp(page[3, ys, xs].astype(np.float64) - 3.0) * 1024.0
-    cx = xs.astype(np.float64) * SCALE
-    cy = ys.astype(np.float64) * SCALE
-    ok = (w > 1.0) & (h > 1.0) & (w < layout["page_w"]) \
-        & (h < layout["page_h"])
-    ys, xs, pv, w, h, cx, cy = (ys[ok], xs[ok], pv[ok], w[ok], h[ok],
-                                cx[ok], cy[ok])
-
-    # P6 contrast from the real pixels (process_ocr_base.py:543-557)
-    hists = np.zeros(len(ys))
-    for j in range(len(ys)):
-        x1 = max(0, int(cx[j] - w[j] / 2) - 1)
-        x2 = min(gray.shape[1], int(cx[j] + w[j] / 2) + 2)
-        y1 = max(0, int(cy[j] - h[j] / 2) - 1)
-        y2 = min(gray.shape[0], int(cy[j] + h[j] / 2) + 2)
-        hist = np.bincount(gray[y1:y2, x1:x2].ravel(), minlength=256)
-        hists[j] = cluster_dist(hist.astype(np.float64))
-    th_hist = (float(np.median(hists)) / 5.0) if len(hists) else 0.0
-
-    keep = greedy_nms(np.stack([pv, cx, cy, w, h], axis=1), hists, th_hist)
-    ys, xs, pv, w, h, cx, cy = (ys[keep], xs[keep], pv[keep], w[keep],
-                                h[keep], cx[keep], cy[keep])
-
-    sep_p = sigmoid(np.nan_to_num(page[5, ys, xs], neginf=-30.0))
-    ok = sep_p <= 0.5
-    ys, xs, pv, w, h, cx, cy = (ys[ok], xs[ok], pv[ok], w[ok], h[ok],
-                                cx[ok], cy[ok])
-
-    codes = np.zeros((4, len(ys)), dtype=np.float64)
-    for ci, ch in enumerate((6, 7, 8, 9)):
-        cmax = np.full(len(ys), -np.inf, dtype=np.float32)
-        for dy in (-1, 0, 1):
-            for dx in (-1, 0, 1):
-                yy = np.clip(ys + dy, 0, hcp - 1)
-                xx = np.clip(xs + dx, 0, wcp - 1)
-                np.maximum(cmax, page[ch, yy, xx], out=cmax)
-        codes[ci] = sigmoid(np.nan_to_num(cmax.astype(np.float64),
-                                          neginf=-30.0))
-
-    feats_rows = fpage[:, ys, xs].T.astype(np.float32)
-    boxes = pd.DataFrame({
-        "box_id": np.arange(len(ys), dtype=np.int64),
-        "p": pv.astype(np.float64),
-        "cx": cx, "cy": cy, "w": w, "h": h,
-        "code1": codes[0], "code2": codes[1],
-        "code4": codes[2], "code8": codes[3],
-    })
-    boxes["feature"] = [row.tobytes() for row in feats_rows]
-
-    line_vals = sigmoid(np.nan_to_num(page[4], neginf=-30.0))
-    sep_vals = sigmoid(np.nan_to_num(page[5], neginf=-30.0))
-    return boxes, _runs_df(line_vals, sep_vals)
 
 
 def parse_layout(html: bytes) -> dict:

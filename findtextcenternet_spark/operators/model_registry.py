@@ -8,8 +8,9 @@ per-batch cost, no re-broadcast per stage.
 
 Two backends:
 
-* **surrogate** (default, no weights): deterministic stamp/decode
-  parameters — heatmaps rendered from the layout record.
+* **surrogate** (default, no weights): ``None`` from both getters —
+  ``detect.detect_page`` renders the heatmaps from the layout record and
+  ``decode`` uses its deterministic residue head.
 * **real** (``weights_path`` given, or ``FINDTEXTCENTERNET_SPARK_WEIGHTS``
   set): ``operators/models.py`` — rasterize → 768px tiles → batched CNN
   forward with the reference's 10+100-channel output contract (NumPy),
@@ -34,20 +35,14 @@ WEIGHTS_ENV = "FINDTEXTCENTERNET_SPARK_WEIGHTS"
 def get_detector_model(weights_path: str | None = None):
     """Resolved once per (worker process, weights path) — lru_cache at
     module scope = per-process singleton; Spark reuses workers across
-    tasks."""
+    tasks. ``None`` selects the surrogate forward pass
+    (detect.py:_surrogate_forward)."""
     path = weights_path or os.environ.get(WEIGHTS_ENV) or None
     if path:
         from .models import load_detector
 
         return load_detector(path)
-    from ..config import CUT_OFF, NMS_FILL, NMS_INTER, NMS_IOU
-
-    return {
-        "kind": "surrogate",
-        "pid": os.getpid(),
-        "cut_off": CUT_OFF,
-        "nms": {"iou": NMS_IOU, "inter": NMS_INTER, "fill": NMS_FILL},
-    }
+    return None
 
 
 @functools.lru_cache(maxsize=4)

@@ -32,6 +32,7 @@ import math
 import numpy as np
 
 from ..config import FEATURE_DIM, HM, MODULOS, SCALE, STRIDE
+from .detect import maxpool3x3
 
 TILE_PX = HM * SCALE          # 768
 ENCODER_DIM = FEATURE_DIM + 6  # 106
@@ -97,26 +98,10 @@ class NumpyDetector:
         feats = np.ascontiguousarray(
             y[..., N_MAPS:].transpose(0, 3, 1, 2)).astype(np.float16)
         key = maps[:, 0:1]
-        peak = _maxpool3x3_batch(key)
+        peak = maxpool3x3(key)
         detected = np.where(key < peak, np.float32(-np.inf), key)
         heat = np.concatenate([key, detected, maps[:, 1:]], axis=1)
         return heat.astype(np.float32), feats
-
-
-def _maxpool3x3_batch(key: np.ndarray) -> np.ndarray:
-    out = key.copy()
-    h, w = key.shape[-2:]
-    for dy in (-1, 0, 1):
-        for dx in (-1, 0, 1):
-            if dy == 0 and dx == 0:
-                continue
-            sy = slice(max(0, dy), h + min(0, dy))
-            sx = slice(max(0, dx), w + min(0, dx))
-            ty = slice(max(0, -dy), h + min(0, -dy))
-            tx = slice(max(0, -dx), w + min(0, -dx))
-            np.maximum(out[..., ty, tx], key[..., sy, sx],
-                       out=out[..., ty, tx])
-    return out
 
 
 # ---------------------------------------------------------------- decoder

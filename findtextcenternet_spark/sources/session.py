@@ -83,7 +83,12 @@ def pin(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
     ``localCheckpoint``: under AQE it runs the map stages below it now,
     and the first action that reads it runs the last stage and stores
     the blocks. That saves the eager pin's own job, which a loop that
-    pins every round (PageRank's rank tables) would pay each round."""
+    pins every round (PageRank's rank tables) would pay each round.
+
+    ``pinned.unpersist()`` does not free a ``localCheckpoint``'s blocks
+    (the checkpoint RDD stays in ``getRDDStorageInfo`` after
+    ``unpersist(blocking=True)``), where it frees a ``persist``ed
+    frame's; so no caller unpersists a pin."""
     if not metrics:
         return df.localCheckpoint(eager=False), {}
     obs = Observation()

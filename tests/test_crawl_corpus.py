@@ -239,6 +239,8 @@ def test_cli_flag_guards(tmp_path):
         ["in", "out", "--keep-best"],
         ["in", "out", "--streaming", "--index", "--format", "warc"],
         ["in", "out", "--streaming", "--format", "cdx"],
+        ["in", "out", "--streaming", "--partitions", "4"],
+        ["in", "out", "--streaming", "--run-id", "r1"],
         ["in", "out", "--cdx-mime", "text/html"],
         ["in", "out", "--format", "warc", "--cdx-prefix", "org,example"],
         ["in", "out", "--cdx-dedup"],

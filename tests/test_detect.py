@@ -1,5 +1,8 @@
 """Detect-stage tests (FIXTURES.md §6: NMS table; peak recovery)."""
 
+import re
+from pathlib import Path
+
 import numpy as np
 import pandas as pd
 
@@ -11,6 +14,7 @@ from findtextcenternet_spark.config import (
     SEP_RUN_FLOOR,
 )
 from findtextcenternet_spark.corpus import generate_pages, make_layout
+from findtextcenternet_spark.operators import detect
 from findtextcenternet_spark.operators.detect import (
     _runs_df,
     detect_page,
@@ -19,6 +23,8 @@ from findtextcenternet_spark.operators.detect import (
     parse_layout,
     tile_origins,
 )
+
+_NMS_CALL = re.compile(r"(?<!def )\bgreedy_nms\(")
 
 
 def test_tile_origins_cover():
@@ -38,6 +44,14 @@ def test_maxpool3x3():
     assert out[1, 1] == out[2, 3] == 1.0
     assert out[0, 0] == 0.0
     assert (p >= out).sum() == 25 - 8  # only the 8 ring cells lose
+    # (B, C, H, W): every (tile, channel) slice pools on its own
+    batch = np.random.default_rng(5).normal(size=(3, 2, 7, 9)).astype(
+        np.float32)
+    pooled = maxpool3x3(batch)
+    assert pooled.shape == batch.shape
+    for b in range(3):
+        for c in range(2):
+            assert np.array_equal(pooled[b, c], maxpool3x3(batch[b, c]))
 
 
 def test_greedy_nms_rules():
@@ -189,6 +203,17 @@ def test_multi_tile_page_consistent():
     assert layout["page_w"] > 768  # multi-tile in x
     boxes, _ = detect_page(layout)
     assert len(boxes) == len(layout["glyphs"])
+
+
+def test_one_decode_calls_greedy_nms():
+    """Only ``operators/detect.py`` calls ``greedy_nms``, once, in the
+    decode both forward passes share: a second call would be a second
+    copy of the decode."""
+    pkg = Path(detect.__file__).resolve().parents[1]
+    calls = {path.relative_to(pkg).as_posix(): n
+             for path in sorted(pkg.rglob("*.py"))
+             if (n := len(_NMS_CALL.findall(path.read_text()))) > 0}
+    assert calls == {"operators/detect.py": 1}, calls
 
 
 def test_tiled_merge_equals_direct():

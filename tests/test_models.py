@@ -110,9 +110,9 @@ def test_real_detect_page_shapes(weights):
 
 
 def test_registry_backend_selection(weights):
-    """No path -> surrogate dict; a weights path -> real model object;
-    per-path singletons."""
-    assert get_detector_model()["kind"] == "surrogate"
+    """No path -> None (the surrogate forward pass); a weights path ->
+    real model object; per-path singletons."""
+    assert get_detector_model() is None
     real = get_detector_model(weights)
     assert real.kind == "real-numpy"
     assert get_detector_model(weights) is real  # lru singleton
