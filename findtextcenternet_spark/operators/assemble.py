@@ -57,10 +57,11 @@ def assemble_page(windows: list[dict]) -> dict:
     for w in windows:
         pred: str = w["pred"]
         tok_of = np.asarray(w["tok_of"], dtype=np.int64)
-        meta = np.asarray(w["meta"], dtype=np.float64).reshape(-1, 9)
+        # token rows as lists: the walk below unpacks one per character
+        meta = np.asarray(w["meta"], dtype=np.float64).reshape(-1, 9).tolist()
         kb = int(w["keep_back"])
         chars = pred[kb:]
-        toks = tok_of[kb:]
+        toks = tok_of[kb:].tolist()
         result_txt.append(chars)
 
         for c, t in zip(chars, toks):

@@ -116,7 +116,9 @@ def segment_windows(tokens: np.ndarray) -> list[tuple[int, int, int]]:
     splicing. Reimplements process_ocr_base.py:187-283 break semantics.
     """
     n = tokens.shape[0]
-    fl = tokens[:, FEATURE_DIM:]  # flag columns
+    # flag columns as lists: the walks below read them token by token
+    vert, rbase, ruby, space, nl = tokens[:, FEATURE_DIM + np.array(
+        [TK_VERT, TK_RBASE, TK_RUBY, TK_SPACE, TK_NL])].T.tolist()
     windows: list[tuple[int, int, int]] = []
     cur_i = 0
     prev_j = 0
@@ -127,31 +129,31 @@ def segment_windows(tokens: np.ndarray) -> list[tuple[int, int, int]]:
         s = 0
         hard_cap = min(cur_i + MAX_ENCODERLEN - 3, n)
         for k in range(cur_i, hard_cap):
-            if fl[k, TK_SPACE] > 0:
+            if space[k] > 0:
                 r += 1
-            if s == 0 and fl[k, TK_RBASE] > 0:
+            if s == 0 and rbase[k] > 0:
                 r += 3
                 s = 1
-            elif s == 1 and fl[k, TK_RUBY] > 0:
+            elif s == 1 and ruby[k] > 0:
                 s = 2
-            elif s == 2 and fl[k, TK_RUBY] == 0:
+            elif s == 2 and ruby[k] == 0:
                 s = 0
         cur_j = min(n, cur_i + (MAX_ENCODERLEN - 3 - r))
         # direction change point (:205-208)
         for j in range(cur_i + 1, cur_j):
-            if fl[j, TK_VERT] != fl[cur_i, TK_VERT]:
+            if vert[j] != vert[cur_i]:
                 cur_j = j
                 break
         # double newline = block boundary (:209-214)
         if cur_j < n - 1 and cur_i + 1 < cur_j - 1:
             for j in range(cur_i + 1, cur_j - 1):
-                if fl[j, TK_NL] > 0 and fl[j + 1, TK_NL] > 0:
+                if nl[j] > 0 and nl[j + 1] > 0:
                     cur_j = j + 2
                     break
         # never split inside a ruby group (:216-223)
-        if cur_j < n and cur_j > 1 and fl[cur_j - 1, TK_NL] == 0:
+        if cur_j < n and cur_j > 1 and nl[cur_j - 1] == 0:
             for j in reversed(range(cur_i + 1, cur_j)):
-                if fl[j, TK_RUBY] == 0 and fl[j, TK_RBASE] == 0:
+                if ruby[j] == 0 and rbase[j] == 0:
                     cur_j = j + 1
                     break
 
@@ -169,16 +171,16 @@ def segment_windows(tokens: np.ndarray) -> list[tuple[int, int, int]]:
         prev_j = cur_j
         keep_back = 0
         while cur_i < k:
-            if fl[k, TK_VERT] != fl[cur_j, TK_VERT]:
+            if vert[k] != vert[cur_j]:
                 k += 1
                 break
-            if fl[k, TK_RBASE] > 0 or fl[k, TK_RUBY] > 0:
+            if rbase[k] > 0 or ruby[k] > 0:
                 k += 1
                 break
-            if k < cur_j - 1 and fl[k, TK_NL] > 0:
+            if k < cur_j - 1 and nl[k] > 0:
                 k += 1
                 break
-            if fl[k, TK_SPACE] > 0:
+            if space[k] > 0:
                 keep_back += 1
             if k > cur_j - 3:
                 k -= 1
@@ -300,15 +302,16 @@ def emit_window(tokens: np.ndarray, codes: np.ndarray
     Returns (text, tok_of_char) where tok_of_char[i] is the window-local
     token index of character i (−1 for structural characters).
     """
-    n = tokens.shape[0]
-    fl = tokens[:, FEATURE_DIM:]
+    rbase, ruby, space, nl = tokens[:, FEATURE_DIM + np.array(
+        [TK_RBASE, TK_RUBY, TK_SPACE, TK_NL])].T.tolist()
     glyph_codes = iter(codes.tolist())
 
     out: list[str] = []
     tok_of: list[int] = []
     state = 0  # 0 plain, 1 in base run, 2 in ruby run
-    for t in range(n):
-        if fl[t, TK_NL] > 0:
+    for t, (is_nl, base_flag, ruby_flag, space_flag) in enumerate(
+            zip(nl, rbase, ruby, space)):
+        if is_nl > 0:
             if state == 2:
                 out.append("￻")
                 tok_of.append(-1)
@@ -322,8 +325,8 @@ def emit_window(tokens: np.ndarray, codes: np.ndarray
             out.append("\n")
             tok_of.append(t)
             continue
-        is_base = fl[t, TK_RBASE] > 0
-        is_ruby = fl[t, TK_RUBY] > 0
+        is_base = base_flag > 0
+        is_ruby = ruby_flag > 0
         if state == 0 and is_base:
             out.append("￹")
             tok_of.append(-1)
@@ -345,7 +348,7 @@ def emit_window(tokens: np.ndarray, codes: np.ndarray
             state = 0
         cp = next(glyph_codes)
         ch = chr(cp) if 0 < cp <= 0x3FFFF and not (0xD800 <= cp <= 0xDFFF) else "�"
-        if fl[t, TK_SPACE] > 0:
+        if space_flag > 0:
             # F8: ASCII and Hangul text uses ' ', CJK uses '　'
             # (data_transformer.py:53-57,351-356 class tests)
             ascii_like = cp < 0x80 or 0xAC00 <= cp <= 0xD7A3

@@ -41,7 +41,10 @@ O(page) regardless of corpus size. Within a page the cost is Python
 interpretation, not arithmetic: a median page grid is about 200x200 cells
 with about 80 boxes, so the hot loops are written as a few whole-array
 NumPy passes per page, and the scalar walks that remain read box geometry
-from Python lists (``Page.lcx`` ...), not NumPy scalars.
+from Python lists (``Page.lcx`` ...), not NumPy scalars. What the search
+loops ask for again with unchanged inputs (the chain-id map, a chain's
+track knots) is built once per page and kept on the ``Page``
+(``chainid_maps``, ``knots``), keyed on everything it reads.
 """
 
 from __future__ import annotations
@@ -133,6 +136,17 @@ class Page:
         for (y, x1, x2), v in zip(sep_runs, sep_vals):
             self.sepimage[int(y), int(x1):int(x2) + 1] = float(v)
         self.lineblocker = np.zeros((self.H, self.W), dtype=bool)
+        # chain-id maps and track knots already built on this page; the
+        # geometry above never changes, so each is keyed on the chains and
+        # the box state it reads
+        self.chainid_maps: dict = {}
+        self.knots: dict = {}
+
+    def chain_state(self) -> tuple:
+        """The mutable box state the chain-id map and the track knots
+        read (subtype, double_line, direction), as a key."""
+        return (self.subtype.tobytes(), self.double_line.tobytes(),
+                self.direction.tobytes())
 
     def is_ruby(self, i: int) -> bool:
         return (self.subtype.item(i) & 6) == 6
@@ -146,6 +160,11 @@ def mask_cells(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     result, through the flat index (np.nonzero is several times slower
     on page-sized 2-D grids)."""
     return np.divmod(np.flatnonzero(mask), mask.shape[1])
+
+
+def ramp(n: np.ndarray) -> np.ndarray:
+    """0..n[k]-1 for every k, concatenated."""
+    return np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n, n)
 
 
 def _runs_of_mask(mask: np.ndarray) -> list[tuple[int, int, int]]:
@@ -435,28 +454,29 @@ def chain_boxes(P: Page, lineid_count: int, angle_map: np.ndarray,
     each radius, scale-px steps) until a textline cell is hit; attach the
     box to that line and inherit its direction."""
     chains: list[list[int]] = [[] for _ in range(lineid_count)]
-    H, W = P.H, P.W
-    for boxid in range(P.n):
-        if P.is_ruby(boxid):
-            continue
-        cx, cy = P.lcx[boxid], P.lcy[boxid]
-        found = False
-        for di in range(0, int(max(P.lw[boxid], P.lh[boxid]) / 2) + 1,
-                        SCALE):
-            for xi, yi in ((cx - di, cy), (cx + di, cy),
-                           (cx, cy - di), (cx, cy + di)):
-                x, y = int(xi / SCALE), int(yi / SCALE)
-                if not (0 <= x < W and 0 <= y < H):
-                    continue
-                lineid = lineid_map.item(y, x)
-                direction = angle_map.item(y, x)
-                if lineid >= 0 and not math.isnan(direction):
-                    chains[lineid].append(boxid)
-                    P.direction[boxid] = direction
-                    found = True
-                    break
-            if found:
-                break
+    box = np.flatnonzero((P.subtype & 6) != 6)
+    # probe radii 0, SCALE, ... up to half the box size; at each radius
+    # the left, right, up and down probes, in that order
+    reach = (np.maximum(P.w[box], P.h[box]) / 2).astype(np.int64) + 1
+    n_di = np.maximum(-(-reach // SCALE), 0)
+    probe = np.repeat(np.repeat(box, n_di), 4)
+    di = np.repeat(SCALE * ramp(n_di), 4).astype(np.float64)
+    sign = np.tile([-1.0, 1.0], len(di) // 2)
+    along_x = np.tile([True, True, False, False], len(di) // 4)
+    px, py = P.cx[probe], P.cy[probe]
+    x = (np.where(along_x, px + sign * di, px) / SCALE).astype(np.int64)
+    y = (np.where(along_x, py, py + sign * di) / SCALE).astype(np.int64)
+    inb = (x >= 0) & (x < P.W) & (y >= 0) & (y < P.H)
+    x, y = np.where(inb, x, 0), np.where(inb, y, 0)
+    lineid = lineid_map[y, x]
+    angle = angle_map[y, x]
+    hit = np.flatnonzero(inb & (lineid >= 0) & ~np.isnan(angle))
+    # each box attaches to its first hit
+    found, first = np.unique(probe[hit], return_index=True)
+    hit = hit[first]
+    P.direction[found] = angle[hit]
+    for boxid, lid in zip(found.tolist(), lineid[hit].tolist()):
+        chains[lid].append(boxid)
     return chains
 
 
@@ -597,7 +617,15 @@ def _track_knots(P: Page, chain: list[int]):
     half a line-size of the center fit line steer the track. Returns
     ``(horizontal, p, q, direction, w, h)`` with knots along the line axis
     ``p`` and across it ``q`` (x, y for horizontal chains; y, x for
-    vertical), or None when no box steers the track."""
+    vertical), or None when no box steers the track. Built once per
+    chain and chain state on a page (``Page.knots``)."""
+    key = (tuple(chain), P.chain_state())
+    if key not in P.knots:
+        P.knots[key] = _build_track_knots(P, chain)
+    return P.knots[key]
+
+
+def _build_track_knots(P: Page, chain: list[int]):
     sti, dli = P.subtype.item, P.double_line.item
     nonruby = [i for i in chain if (sti(i) & 6) != 6 and dli(i) == 0]
     if not nonruby:
@@ -681,8 +709,7 @@ def _interp_samples(p1, q1, p2, q2):
     ip1 = p1.astype(np.int64)
     n = np.ceil((p2 - ip1) / SCALE).astype(np.int64)
     n = np.where(valid, np.maximum(n, 0), 0)
-    k_idx = np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n, n)
-    p_all = np.repeat(ip1, n) + SCALE * k_idx
+    p_all = np.repeat(ip1, n) + SCALE * ramp(n)
     q_all = ((p_all - np.repeat(p1, n)) * np.repeat(a, n)
              + np.repeat(q1, n)).astype(np.int64)
     return p_all, q_all, n
@@ -756,7 +783,20 @@ def create_chainid_map(P: Page, chains: list[list[int]]) -> np.ndarray:
     Every stamp writes only free cells, so a cell keeps the first chain
     (in chain order) whose band covers it, else the first box rectangle
     (chain order, then box order) covering it: both stages are painted
-    at once over all chains."""
+    at once over all chains.
+
+    The map is built once per chain set and chain state on a page
+    (``Page.chainid_maps``) and returned read-only: a probe pass that
+    attached nothing asks for the same map again."""
+    key = (tuple(map(tuple, chains)), P.chain_state())
+    if key not in P.chainid_maps:
+        cmap = _build_chainid_map(P, chains)
+        cmap.flags.writeable = False
+        P.chainid_maps[key] = cmap
+    return P.chainid_maps[key]
+
+
+def _build_chainid_map(P: Page, chains: list[list[int]]) -> np.ndarray:
     H, W = P.H, P.W
     cmap = np.full(H * W, -1, dtype=np.int32)
     seg: list[list[float]] = [[], [], [], []]
@@ -782,9 +822,7 @@ def create_chainid_map(P: Page, chains: list[list[int]]) -> np.ndarray:
         inb = (xa >= 0) & (xa < W) & (ya >= 0) & (ya < H)
         xa, ya, per, hor = xa[inb], ya[inb], per[inb], hor[inb]
         reps = 2 * band[per]
-        off = (np.arange(int(reps.sum())) - np.repeat(np.cumsum(reps) - reps,
-                                                      reps)
-               - np.repeat(band[per], reps))
+        off = ramp(reps) - np.repeat(band[per], reps)
         hor = np.repeat(hor, reps)
         xx = np.repeat(xa, reps) + np.where(hor, 0, off)
         yy = np.repeat(ya, reps) + np.where(hor, off, 0)
@@ -807,8 +845,7 @@ def create_chainid_map(P: Page, chains: list[list[int]]) -> np.ndarray:
             ((P.cy[bb] + P.h[bb] / 2) / SCALE).astype(np.int64), P.H)
         rw = np.maximum(right - left, 0)
         area = rw * np.maximum(bottom - top, 0)
-        k = np.arange(int(area.sum())) - np.repeat(np.cumsum(area) - area,
-                                                   area)
+        k = ramp(area)
         rw = np.repeat(rw, area)
         _first_writer(cmap, (np.repeat(top, area) + k // rw) * W
                       + np.repeat(left, area) + k % rw,
@@ -2076,73 +2113,10 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
     scanwidth = 0.5 + ALLOWWIDTH_NEXT_BLOCK
     chain_next: list[list[int]] = [[] for _ in range(id_max)]
     chain_prev: list[list[int]] = [[] for _ in range(id_max)]
-    dvals = np.array([lp.d for lp in lineparams], dtype=np.int64)
-    sizes = np.array([lp.size for lp in lineparams], dtype=np.float64)
-    blocker = P.lineblocker
-
-    def _scan(chainid: int, steps: np.ndarray, a: float, c1: float,
-              t1: float, horizontal: bool, K: int, lp_size: float) -> None:
-        """One scan direction over a (K, n) grid: depth k of an outer cell
-        is probed while every shallower cell was in the page and neither
-        blocker nor perpendicular line — a prefix AND down the grid.
-        Accept-candidates are then replayed in exact (outer, depth)
-        order, because whether an acceptance breaks the walk depends on
-        the mutable dedup state (a seen chain lets the reference keep
-        walking). Cell-stride note: the reference steps per PIXEL
-        (make_block.cpp:67,91) but every probe is a cell lookup, so
-        SCALE-strided steps visit the identical cell sequence."""
-        if len(steps) == 0 or K <= 0:
-            return
-        t = a * (steps - c1) + t1
-        if horizontal:
-            xi = (steps / SCALE).astype(np.int64)
-            yi = (t / SCALE).astype(np.int64)
-        else:
-            xi = (t / SCALE).astype(np.int64)
-            yi = (steps / SCALE).astype(np.int64)
-        inb = (xi >= 0) & (xi < P.W) & (yi >= 0) & (yi < P.H)
-        blocked = inb & blocker[np.where(inb, yi, 0), np.where(inb, xi, 0)]
-        nz = np.nonzero(blocked)[0]
-        walk = np.nonzero(inb[:int(nz[0]) if len(nz) else len(steps)])[0]
-        if not len(walk):
-            return
-        depth = np.arange(K)[:, None]
-        if horizontal:
-            rr = yi[walk] + depth
-            cc = np.broadcast_to(xi[walk], rr.shape)
-            inside = rr < P.H
-        else:
-            cc = xi[walk] - depth
-            rr = np.broadcast_to(yi[walk], cc.shape)
-            inside = cc >= 0
-        rr = np.where(inside, rr, 0)
-        cc = np.where(inside, cc, 0)
-        blk = blocker[rr, cc]
-        oc = cmap[rr, cc].astype(np.int64)
-        foreign = inside & ~blk & (oc >= 0) & (oc != chainid)
-        oc_s = np.where(foreign, oc, 0)
-        perp = foreign & (dvals[oc_s] == (1 if horizontal else 2))
-        osz = sizes[oc_s]
-        denom = (np.minimum(lp_size, osz) if horizontal
-                 else np.maximum(lp_size, osz))
-        ratio = np.where(denom > 0,
-                         np.abs(osz - lp_size)
-                         / np.where(denom > 0, denom, 1.0), np.inf)
-        ok = inside & ~blk & ~perp
-        alive = inside.copy()
-        alive[1:] &= np.logical_and.accumulate(ok[:-1], axis=0)
-        accept = alive & foreign & ~perp & (ratio <= ALLOW_SIZEDIFF)
-        jj, kk = np.nonzero(accept.T)
-        done_depth: dict[int, int] = {}
-        for j, k, oc_v in zip(jj.tolist(), kk.tolist(),
-                              oc[kk, jj].tolist()):
-            if j in done_depth and k > done_depth[j]:
-                continue
-            if oc_v not in chain_next[chainid]:
-                chain_next[chainid].append(oc_v)
-                chain_prev[oc_v].append(chainid)
-                done_depth[j] = k
-
+    # one scan per line direction: (chainid, steps, a, c1, t1,
+    # horizontal, K, size), in the reference's chain / forward-backward
+    # order
+    scans: list[tuple] = []
     cx, cy, bw, bh = P.lcx, P.lcy, P.lw, P.lh
     sti, dli = P.subtype.item, P.double_line.item
     for chainid in range(id_max):
@@ -2173,8 +2147,8 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
             mid = int((cx1 + cx2) / 2)
             fwd = np.arange(mid, int(cx2 + s_s), SCALE, dtype=np.float64)
             bwd = np.arange(mid, int(cx1 - s_s), -SCALE, dtype=np.float64)
-            _scan(chainid, fwd, a, cx1, cy1, True, K, lp.size)
-            _scan(chainid, bwd, a, cx1, cy1, True, K, lp.size)
+            scans.append((chainid, fwd, a, cx1, cy1, True, K, lp.size))
+            scans.append((chainid, bwd, a, cx1, cy1, True, K, lp.size))
         else:
             for b in base:
                 if cx1 < 0 and cy1 < 0:
@@ -2186,14 +2160,88 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
                 continue
             a = (cx2 - cx1) / (cy2 - cy1)
             # range(xi, int(xi-c), -1) spans ceil(c) cells (int() truncates
-            # toward zero; out-of-page cells are masked dead in _scan)
+            # toward zero; out-of-page cells are masked dead below)
             c = s_s / SCALE * scanwidth
             K = int(math.ceil(c))
             mid = int((cy1 + cy2) / 2)
             fwd = np.arange(mid, int(cy2 + s_s), SCALE, dtype=np.float64)
             bwd = np.arange(mid, int(cy1 - s_s), -SCALE, dtype=np.float64)
-            _scan(chainid, fwd, a, cy1, cx1, False, K, lp.size)
-            _scan(chainid, bwd, a, cy1, cx1, False, K, lp.size)
+            scans.append((chainid, fwd, a, cy1, cx1, False, K, lp.size))
+            scans.append((chainid, bwd, a, cy1, cx1, False, K, lp.size))
+    if not scans:
+        return chain_next, chain_prev
+
+    # All scans at once. A scan walks its steps up to the first blocker
+    # and probes depth k of an in-page step while every shallower cell
+    # was in the page and neither blocker nor perpendicular line (a
+    # prefix AND down each step's K cells). Cell-stride note: the
+    # reference steps per PIXEL (make_block.cpp:67,91) but every probe is
+    # a cell lookup, so SCALE-strided steps visit the identical cells.
+    chainid, steps, a, c1, t1, hor, K, lp_size = zip(*scans)
+    n = np.array([len(st) for st in steps])
+    steps = np.concatenate(steps)
+    a, c1, t1, hor, lp_size, chainid = (
+        np.repeat(np.array(v), n)
+        for v in (a, c1, t1, hor, lp_size, chainid))
+    K = np.maximum(np.repeat(np.array(K), n), 0)
+    t = a * (steps - c1) + t1
+    along = (steps / SCALE).astype(np.int64)
+    across = (t / SCALE).astype(np.int64)
+    xi = np.where(hor, along, across)
+    yi = np.where(hor, across, along)
+    inb = (xi >= 0) & (xi < P.W) & (yi >= 0) & (yi < P.H)
+    blocked = inb & P.lineblocker[np.where(inb, yi, 0), np.where(inb, xi, 0)]
+    # blocked steps so far, counted from the start of each scan
+    seen = np.concatenate([[0], np.cumsum(blocked)])
+    seen = seen[1:] - np.repeat(seen[np.cumsum(n) - n], n)
+    walk = np.flatnonzero(inb & (seen == 0) & (K > 0))
+    if not len(walk):
+        return chain_next, chain_prev
+    # the grid: every walked step's K depth cells, step by step
+    Kw = K[walk]
+    step = np.repeat(walk, Kw)
+    depth = ramp(Kw)
+    hz = hor[step]
+    rr = yi[step] + np.where(hz, depth, 0)
+    cc = xi[step] - np.where(hz, 0, depth)
+    inside = np.where(hz, rr < P.H, cc >= 0)
+    rr = np.where(inside, rr, 0)
+    cc = np.where(inside, cc, 0)
+    blk = P.lineblocker[rr, cc]
+    oc = cmap[rr, cc].astype(np.int64)
+    cid = chainid[step]
+    foreign = inside & ~blk & (oc >= 0) & (oc != cid)
+    oc_s = np.where(foreign, oc, 0)
+    dvals = np.array([lp.d for lp in lineparams], dtype=np.int64)
+    sizes = np.array([lp.size for lp in lineparams], dtype=np.float64)
+    perp = foreign & (dvals[oc_s] == np.where(hz, 1, 2))
+    osz = sizes[oc_s]
+    own = lp_size[step]
+    denom = np.where(hz, np.minimum(own, osz), np.maximum(own, osz))
+    ratio = np.where(denom > 0,
+                     np.abs(osz - own) / np.where(denom > 0, denom, 1.0),
+                     np.inf)
+    bad = ~(inside & ~blk & ~perp)
+    # shallower bad cells of the same step
+    shallower = np.cumsum(bad) - bad
+    alive = inside & (shallower == np.repeat(
+        shallower[np.cumsum(Kw) - Kw], Kw))
+    accept = np.flatnonzero(alive & foreign & ~perp
+                            & (ratio <= ALLOW_SIZEDIFF))
+    # replay the accept-candidates in (scan, step, depth) order: whether
+    # one ends its step's walk depends on the dedup state (a chain
+    # already linked lets the reference keep walking)
+    done_depth: dict[int, int] = {}
+    for j, k, c_from, c_to in zip(step[accept].tolist(),
+                                  depth[accept].tolist(),
+                                  cid[accept].tolist(),
+                                  oc[accept].tolist()):
+        if j in done_depth and k > done_depth[j]:
+            continue
+        if c_to not in chain_next[c_from]:
+            chain_next[c_from].append(c_to)
+            chain_prev[c_to].append(c_from)
+            done_depth[j] = k
     return chain_next, chain_prev
 
 
@@ -2582,22 +2630,25 @@ def find_lostspace(P: Page, order: list[int]) -> None:
     bottom half: backward walk, then a forward pass
     (space_check.cpp:209-600, incl. the per-pass threshold asymmetries
     0.85/0.75/1.0 of the reference)."""
-    blocks = sorted({int(P.block[i]) for i in order if P.block[i] >= 0})
+    # box state as lists; the flags read below (ruby, vertical) are not
+    # the space bit this function rewrites
+    blk, st, idx = P.block.tolist(), P.subtype.tolist(), P.idx.tolist()
+    blocks = sorted({blk[i] for i in order if blk[i] >= 0})
     for b in blocks:
         lines: dict[int, list[int]] = {}
         s0 = 0.0
         vertical = False
         for i in order:
-            if P.block[i] != b or P.is_ruby(i):
+            if blk[i] != b or (st[i] & 6) == 6:
                 continue
-            vertical = (P.subtype[i] & SUBTYPE_VERTICAL) != 0
-            s0 = max(s0, P.h[i] if vertical else P.w[i])
-            lines.setdefault(int(P.idx[i]), [])
-            if len(lines[int(P.idx[i])]) < 3:
-                lines[int(P.idx[i])].append(i)
-        axis = P.cy if vertical else P.cx
-        size = P.h if vertical else P.w
-        cross = P.cx if vertical else P.cy
+            vertical = (st[i] & SUBTYPE_VERTICAL) != 0
+            s0 = max(s0, P.lh[i] if vertical else P.lw[i])
+            lines.setdefault(idx[i], [])
+            if len(lines[idx[i]]) < 3:
+                lines[idx[i]].append(i)
+        axis = P.lcy if vertical else P.lcx
+        size = P.lh if vertical else P.lw
+        cross = P.lcx if vertical else P.lcy
 
         # drop lines of only-thin chars (space_check.cpp:107-132)
         kept = [ln for ln in sorted(lines)

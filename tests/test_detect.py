@@ -3,8 +3,10 @@
 import re
 from pathlib import Path
 
+import detect_reference as reference
 import numpy as np
 import pandas as pd
+import pytest
 
 from findtextcenternet_spark.config import (
     LINE_VALUETH,
@@ -21,6 +23,7 @@ from findtextcenternet_spark.operators.detect import (
     greedy_nms,
     maxpool3x3,
     parse_layout,
+    render_page_heatmaps,
     tile_origins,
 )
 
@@ -52,6 +55,12 @@ def test_maxpool3x3():
     for b in range(3):
         for c in range(2):
             assert np.array_equal(pooled[b, c], maxpool3x3(batch[b, c]))
+    # every cell is the max of its clipped 3×3 window
+    for h, w in ((1, 1), (1, 6), (5, 1), (9, 13)):
+        q = np.random.default_rng(h * w).normal(size=(h, w))
+        want = np.array([[q[max(0, y - 1):y + 2, max(0, x - 1):x + 2].max()
+                          for x in range(w)] for y in range(h)])
+        assert np.array_equal(maxpool3x3(q), want)
 
 
 def test_greedy_nms_rules():
@@ -140,6 +149,84 @@ def test_greedy_nms_matches_loop_on_dense_page():
         assert np.array_equal(keep, ref)
 
 
+def _lone(boxes):
+    """Candidates whose box overlaps no other candidate's."""
+    x1 = boxes[:, 1] - boxes[:, 3] / 2
+    x2 = boxes[:, 1] + boxes[:, 3] / 2
+    y1 = boxes[:, 2] - boxes[:, 4] / 2
+    y2 = boxes[:, 2] + boxes[:, 4] / 2
+    ix = np.minimum(x2[:, None], x2) - np.maximum(x1[:, None], x1)
+    iy = np.minimum(y2[:, None], y2) - np.maximum(y1[:, None], y1)
+    inter = (np.clip(ix, 0, None) * np.clip(iy, 0, None)) > 0
+    np.fill_diagonal(inter, False)
+    return ~inter.any(axis=1)
+
+
+def _sparse_and_mixed_sets(rng):
+    """Candidate sets like a detected page's: boxes on a glyph grid with
+    room between them, so most are lone (the shortcut's case), then
+    stacked, touching and jittered boxes, zero-area boxes (alone, inside
+    a box, stacked on each other) and enough rows for several chunks."""
+    sets = []
+    for n, jitter, stacked in ((120, 0.0, 0), (300, 2.0, 30),
+                               (700, 6.0, 90)):
+        side = int(np.ceil(np.sqrt(n)))
+        k = np.arange(n)
+        cx = 40.0 * (k % side) + rng.uniform(-jitter, jitter, n)
+        cy = 40.0 * (k // side) + rng.uniform(-jitter, jitter, n)
+        w = rng.uniform(12, 30, n)
+        h = rng.uniform(12, 30, n)
+        w[::17] = 0.0                      # zero width
+        h[5::23] = 0.0                     # zero height
+        w[3::29] = 40.0                    # touches its neighbours' cells
+        src = rng.integers(0, n, stacked)  # on top of another candidate
+        cx[:stacked], cy[:stacked] = cx[src] + 1.5, cy[src] - 1.0
+        p = np.sort(rng.uniform(0.3, 1.0, n))[::-1]
+        sets.append(np.column_stack([p, cx, cy, w, h]))
+    return sets
+
+
+def test_greedy_nms_matches_loop_on_sparse_and_mixed_sets():
+    """Where most candidates overlap nothing, the lone-box shortcut skips
+    their row reads: the keep mask must still be the one-at-a-time
+    loop's and the previous chunked pass's (detect_reference.py), with
+    and without a P6 gate that rejects lone and stacked candidates."""
+    rng = np.random.default_rng(29)
+    for boxes in _sparse_and_mixed_sets(rng):
+        n = len(boxes)
+        assert _lone(boxes).sum() > n // 2
+        hists = rng.uniform(0, 1, n)
+        for args in ((boxes,), (boxes, hists, 0.25)):
+            # zero-area pairs divide 0 by 0 in the IoU (NaN, no hit)
+            with np.errstate(invalid="ignore"):
+                keep = greedy_nms(*args)
+                assert np.array_equal(keep, _greedy_nms_loop(*args))
+                assert np.array_equal(keep, reference.greedy_nms(*args))
+            assert 0 < keep.sum() <= n - (len(args) > 1)
+
+
+def test_greedy_nms_matches_reference_on_detected_pages():
+    """The candidate sets ``detect_page`` hands ``greedy_nms`` (score
+    order, sizes, P6 scores and gate) give the previous chunked pass's
+    keep mask, captured from the surrogate's decode."""
+    seen = []
+
+    def capture(*args):
+        keep = greedy_nms(*args)
+        seen.append((args, keep))
+        return keep
+
+    detect.greedy_nms = capture
+    try:
+        for layout in _raster_layouts(150):
+            detect_page(layout)
+    finally:
+        detect.greedy_nms = greedy_nms
+    assert len(seen) >= 10 and sum(len(k) for _, k in seen) > 1000
+    for args, keep in seen:
+        assert np.array_equal(keep, reference.greedy_nms(*args))
+
+
 def _runs_rows_loop(line_vals, sep_vals):
     """Reference: per-row RLE, split on mask edges and value changes."""
     rows = []
@@ -163,10 +250,13 @@ def test_runs_df_matches_row_loop():
     rng = np.random.default_rng(3)
     for _ in range(20):
         h, w = rng.integers(1, 60, 2)
-        levels = np.array([0.0, 0.03, 0.2, 0.45, 0.7, 0.982],
-                          dtype=np.float32)
-        line = levels[rng.integers(0, 6, (h, w))]
-        sep = np.repeat(levels[rng.integers(0, 6, (h, 1 + w // 4))], 4,
+        # sigmoid outputs carry more than 6 decimals: runs split on the
+        # rounded value
+        levels = np.array([0.0, 0.03, 0.2, 0.45, 0.7, 0.982, 0.98201376,
+                           0.98201382, 0.7310586], dtype=np.float32)
+        line = levels[rng.integers(0, len(levels), (h, w))]
+        sep = np.repeat(levels[rng.integers(0, len(levels),
+                                            (h, 1 + w // 4))], 4,
                         axis=1)[:, :w]
         got = _runs_df(line, sep)
         want = _runs_rows_loop(line, sep)
@@ -216,23 +306,65 @@ def test_one_decode_calls_greedy_nms():
     assert calls == {"operators/detect.py": 1}, calls
 
 
+def _raster_layouts(n):
+    from findtextcenternet_spark.corpus import RASTER_MARKER
+
+    return [parse_layout(bytes(h)) for h in generate_pages(n).html
+            if bytes(h).startswith(RASTER_MARKER)]
+
+
 def test_tiled_merge_equals_direct():
-    """The production direct page render must match the real-model tile
-    geometry (interior-masked overlap-max merge) cell for cell."""
-    import numpy as np
-
-    from findtextcenternet_spark.corpus import RASTER_MARKER, generate_pages
-    from findtextcenternet_spark.operators.detect import (
-        parse_layout,
-        render_page_heatmaps,
-        render_page_heatmaps_tiled,
-    )
-
-    pdf = generate_pages(150)
-    layouts = [parse_layout(bytes(h)) for h in pdf.html
-               if bytes(h).startswith(RASTER_MARKER)]
+    """The production page render must match the real-model tile geometry
+    (the interior-masked overlap-max merge of glyph-by-glyph tile
+    stamps, kept in detect_reference.py) cell for cell."""
+    layouts = _raster_layouts(150)
     assert len(layouts) >= 10
     for layout in layouts:
         direct = render_page_heatmaps(layout)
-        tiled = render_page_heatmaps_tiled(layout)
+        tiled = reference.render_page_heatmaps_tiled(layout)
         assert np.array_equal(direct, tiled)
+
+
+def _glyph(cx, cy, w, h, **flags):
+    g = {"cx": cx, "cy": cy, "w": w, "h": h, "cp": 0x41, "ruby": 0,
+         "rubybase": 0, "emphasis": 0, "space": 0}
+    g.update(flags)
+    return g
+
+
+@pytest.mark.parametrize("chunk", [detect.STAMP_CHUNK, 300, 1])
+def test_page_render_matches_glyph_loop_on_edge_cases(monkeypatch, chunk):
+    """The whole-array stamp equals the glyph-by-glyph render on the cases
+    the corpus rarely makes: glyphs sharing a center cell with different
+    flags (the last one wins), windows clipped at every page edge, glyphs
+    centered off the page, tiny and huge glyphs, and an empty page; with
+    the default window-cell chunk, a few hundred cells, and one glyph a
+    chunk."""
+    monkeypatch.setattr(detect, "STAMP_CHUNK", chunk)
+    rng = np.random.default_rng(11)
+    layouts = [{"page_w": 400, "page_h": 300, "textlines": [], "seps": [],
+                "glyphs": []}]
+    for _ in range(40):
+        n = int(rng.integers(1, 60))
+        glyphs = [_glyph(float(rng.uniform(-60, 460)),
+                         float(rng.uniform(-60, 360)),
+                         float(rng.choice([1.0, 3.0, 20.0, 33.5, 150.0])),
+                         float(rng.choice([1.0, 5.0, 24.0, 80.0])),
+                         ruby=int(rng.integers(0, 2)),
+                         rubybase=int(rng.integers(0, 2)),
+                         emphasis=int(rng.integers(0, 2)),
+                         space=int(rng.integers(0, 2)))
+                  for _ in range(n)]
+        # repeat some centers with other sizes and flags
+        for g in glyphs[:n // 3]:
+            glyphs.append(_glyph(g["cx"] + 0.4, g["cy"] - 0.4, 17.0, 9.0,
+                                 ruby=1 - g["ruby"], space=1))
+        layouts.append({"page_w": 400, "page_h": 300, "glyphs": glyphs,
+                        "textlines": [{"x1": 10, "x2": 390, "y1": 40,
+                                       "y2": 40, "vertical": False}],
+                        "seps": [{"x1": 0, "x2": 400, "y1": 150,
+                                  "y2": 150, "v": 0.6}]})
+    for k, layout in enumerate(layouts):
+        got = render_page_heatmaps(layout)
+        want = reference.render_page_heatmaps(layout)
+        assert got.dtype == want.dtype and np.array_equal(got, want), k

@@ -23,6 +23,7 @@ from findtextcenternet_spark.config import (
     SEP_VALUETH,
     SUBTYPE_ALONE_RUBY,
     SUBTYPE_RUBYBASE,
+    SUBTYPE_SPACE,
     SUBTYPE_VERTICAL,
 )
 from findtextcenternet_spark.operators.textline import (
@@ -36,7 +37,6 @@ from findtextcenternet_spark.operators.textline import (
     _overlap,
     _UnionFind,
     block_chain_search,
-    find_lostspace,
     fix_chain_info,
     fix_shortchain,
     linefind,
@@ -72,6 +72,7 @@ REWRITTEN = (
     "renumber_id",
     "process_line",
     "make_block",
+    "find_lostspace",
     "run_textline_detect",
 )
 
@@ -1543,6 +1544,242 @@ def make_block(P: Page) -> None:
         if P.idx[i] < 0 or P.block[i] < 0:
             continue
         P.idx[i] = idx_in_block[int(P.block[i])].index(int(P.idx[i]))
+
+
+def find_lostspace(P: Page, order: list[int]) -> None:
+    """W6 lost-space detection (find_lostspace space_check.cpp:76-673):
+    per block, take each line's first <=3 non-ruby boxes, reject thin /
+    deeply-indented lines; walk the lines with the amx running-margin
+    estimate (EMA slope delta, space_check.cpp:254-301) deciding per head
+    whether it sits AT the margin or one character IN (indent) — a head
+    that matches neither expectation is skipped; then least-squares fit
+    the margin curve over the trusted heads (the reference uses MINPACK
+    lmdif with n=min(4,m) coefficients — np.polyfit(deg=n-1) is the same
+    fit, space_check.cpp:638-643) using the indent-corrected edge points
+    (sx[0] for indented heads, sx[1] otherwise, space_check.cpp:625-636);
+    finally every line's head space flag is re-derived from
+    cx_head > fitted margin (space_check.cpp:658-671).
+
+    The walk is seeded at the line whose wide head (w >= 0.6*s0) starts
+    furthest toward the margin (space_check.cpp:181-208) — NOT blindly at
+    the first line, so header/ornament lines at the top of a block cannot
+    mis-anchor the margin estimate. Seed in the top half: forward walk
+    from the seed, then a reverse pass over the whole block; seed in the
+    bottom half: backward walk, then a forward pass
+    (space_check.cpp:209-600, incl. the per-pass threshold asymmetries
+    0.85/0.75/1.0 of the reference)."""
+    blocks = sorted({int(P.block[i]) for i in order if P.block[i] >= 0})
+    for b in blocks:
+        lines: dict[int, list[int]] = {}
+        s0 = 0.0
+        vertical = False
+        for i in order:
+            if P.block[i] != b or P.is_ruby(i):
+                continue
+            vertical = (P.subtype[i] & SUBTYPE_VERTICAL) != 0
+            s0 = max(s0, P.h[i] if vertical else P.w[i])
+            lines.setdefault(int(P.idx[i]), [])
+            if len(lines[int(P.idx[i])]) < 3:
+                lines[int(P.idx[i])].append(i)
+        axis = P.cy if vertical else P.cx
+        size = P.h if vertical else P.w
+        cross = P.cx if vertical else P.cy
+
+        # drop lines of only-thin chars (space_check.cpp:107-132)
+        kept = [ln for ln in sorted(lines)
+                if any(s0 - size[i] < s0 * 0.5 for i in lines[ln])]
+        if len(kept) < 2:
+            continue
+        # drop deep indents (space_check.cpp:136-169)
+        x0 = min(axis[lines[ln][0]] - size[lines[ln][0]] / 2 for ln in kept)
+        kept = [ln for ln in kept
+                if axis[lines[ln][0]] - size[lines[ln][0]] / 2 - x0 <= s0 * 2.5]
+        if len(kept) < 2:
+            continue
+        n = len(kept)
+
+        # current head flags, up front (space_check.cpp:172-177)
+        head_indent = [
+            (P.subtype[lines[ln][0]] & SUBTYPE_SPACE) == SUBTYPE_SPACE
+            for ln in kept]
+        head_skip = [False] * n
+        amx = [0.0] * n
+
+        def head_geom(pos: int) -> tuple[float, float] | None:
+            lb = lines[kept[pos]]
+            if len(lb) < 2:
+                return None
+            mx2 = (axis[lb[0]] + size[lb[0]] / 2 +
+                   axis[lb[1]] - size[lb[1]] / 2) / 2
+            mx2 = max(mx2, (axis[lb[0]] + axis[lb[1]]) / 2)
+            return mx2, mx2 - s0
+
+        def base_skip(pos: int, sizesum_th: float, span_hi_inner_only: bool,
+                      span_lo_th: float = 1.0) -> bool:
+            """Per-pass untrustworthy-head rejection
+            (space_check.cpp:219-252 and the pass variants)."""
+            lb = lines[kept[pos]]
+            if axis[lb[1]] - axis[lb[0]] > s0 * 1.15:
+                return True
+            if size[lb[0]] + size[lb[1]] < s0 * sizesum_th:
+                return True
+            if len(lb) == 3:
+                span = axis[lb[2]] - axis[lb[0]]
+                if span < s0 * span_lo_th:
+                    return True
+                if span > s0 * 2.2 and \
+                        (not span_hi_inner_only or 0 < pos < n - 1):
+                    return True
+            return False
+
+        def classify(pos: int, fmx: float | None) -> None:
+            """amx/flag update given the forecast margin (the shared body
+            of every pass, space_check.cpp:260-301)."""
+            geom = head_geom(pos)
+            mx2, sx2 = geom
+            if fmx is not None:
+                if mx2 < fmx and abs(fmx - mx2) > s0 * 0.25:
+                    head_skip[pos] = True
+                elif abs(fmx - mx2) < s0 * 0.6:
+                    head_indent[pos] = False
+                elif abs(fmx - s0 - mx2) < s0 * 0.6:
+                    head_indent[pos] = False
+                elif abs(fmx - sx2) < s0 * 0.6:
+                    head_indent[pos] = True
+                else:
+                    head_skip[pos] = True
+            if not head_skip[pos]:
+                amx[pos] = sx2 if head_indent[pos] else mx2
+
+        def delta_fwd(lo: int, hi: int) -> float:
+            d = 0.0
+            for j in range(lo, hi):
+                if amx[j] != 0 and amx[j - 1] != 0:
+                    d = (amx[j] - amx[j - 1]) * 0.25 + d * 0.75
+            return d
+
+        def delta_bwd(hi: int, lo: int) -> float:
+            d = 0.0
+            for j in range(hi, lo, -1):
+                if amx[j] != 0 and amx[j + 1] != 0:
+                    d = (amx[j] - amx[j + 1]) * 0.25 + d * 0.75
+            return d
+
+        # seed: the line with a wide head (>= 0.6*s0) starting furthest
+        # toward the margin (space_check.cpp:181-208)
+        k = 0
+        minx = math.inf
+        for pos, ln in enumerate(kept):
+            lb = lines[ln]
+            if len(lb) < 2 or size[lb[0]] < s0 * 0.6:
+                continue
+            sx = axis[lb[0]] - size[lb[0]] / 2
+            if sx < minx:
+                minx = sx
+                k = pos
+
+        if k < n / 2:
+            # forward walk from the seed (space_check.cpp:209-301)
+            for i in range(k, n):
+                if len(lines[kept[i]]) < 2:
+                    continue
+                if base_skip(i, 0.85, False):
+                    head_skip[i] = True
+                    if i > 0 and amx[i - 1] != 0:
+                        amx[i] = amx[i - 1] + delta_fwd(k + 1, i)
+                    continue
+                d = delta_fwd(k + 1, i)
+                fmx = amx[i - 1] + d if (i > 0 and amx[i - 1] != 0) else None
+                classify(i, fmx)
+                if head_skip[i] and i > 0 and amx[i - 1] != 0:
+                    amx[i] = amx[i - 1] + d
+            # reverse pass over the whole block (space_check.cpp:303-398)
+            head_skip = [False] * n
+            for i in range(n - 1, -1, -1):
+                if len(lines[kept[i]]) < 2:
+                    continue
+                if base_skip(i, 0.85, True):
+                    head_skip[i] = True
+                    if i < n - 1 and amx[i + 1] != 0 and amx[i] == 0:
+                        amx[i] = amx[i + 1] + delta_bwd(n - 2, i)
+                    continue
+                d = delta_bwd(n - 2, i)
+                if i < n - 1 and amx[i + 1] != 0:
+                    fmx = amx[i] if (amx[i] != 0 and d == 0) \
+                        else amx[i + 1] + d
+                else:
+                    fmx = None
+                classify(i, fmx)
+                if head_skip[i] and i < n - 1 and amx[i + 1] != 0 \
+                        and amx[i] == 0:
+                    amx[i] = amx[i + 1] + d
+        else:
+            # backward walk from the seed (space_check.cpp:400-494)
+            for i in range(k, -1, -1):
+                if len(lines[kept[i]]) < 2:
+                    continue
+                if base_skip(i, 0.75, True):
+                    head_skip[i] = True
+                    if i < n - 1 and amx[i + 1] != 0:
+                        amx[i] = amx[i + 1] + delta_bwd(k - 1, i)
+                    continue
+                d = delta_bwd(k - 1, i)
+                fmx = amx[i + 1] + d if (i < n - 1 and amx[i + 1] != 0) \
+                    else None
+                classify(i, fmx)
+                if head_skip[i] and i < n - 1 and amx[i + 1] != 0:
+                    amx[i] = amx[i + 1] + d
+            # forward pass over the whole block (space_check.cpp:496-600;
+            # note the reference's vertical-family quirks: size-sum < s0
+            # and 3-box span < 0.75*s0)
+            head_skip = [False] * n
+            for i in range(n):
+                if len(lines[kept[i]]) < 2:
+                    continue
+                if vertical:
+                    bs = base_skip(i, 1.0, False, span_lo_th=0.75)
+                else:
+                    bs = base_skip(i, 0.75, False)
+                if bs:
+                    head_skip[i] = True
+                    if i > 0 and amx[i - 1] != 0 and amx[i] == 0:
+                        amx[i] = amx[i - 1] + delta_fwd(1, i)
+                    continue
+                d = delta_fwd(1, i)
+                if i > 0 and amx[i - 1] != 0:
+                    fmx = amx[i] if (amx[i] != 0 and d == 0) \
+                        else amx[i - 1] + d
+                else:
+                    fmx = None
+                classify(i, fmx)
+                if head_skip[i] and i > 0 and amx[i - 1] != 0 \
+                        and amx[i] == 0:
+                    amx[i] = amx[i - 1] + d
+
+        # margin-curve fit over trusted heads (space_check.cpp:602-643):
+        # left edge for indented heads, first box's right edge otherwise
+        fit_pts: list[tuple[float, float]] = []
+        for pos, ln in enumerate(kept):
+            lb = lines[ln]
+            if head_skip[pos]:
+                continue
+            edge = (axis[lb[0]] - size[lb[0]] / 2 if head_indent[pos]
+                    else axis[lb[0]] + size[lb[0]] / 2)
+            fit_pts.append((float(cross[lb[0]]), float(edge)))
+        if len(fit_pts) < 2:
+            continue
+        xs_fit = np.array([p[0] for p in fit_pts])
+        ys_fit = np.array([p[1] for p in fit_pts])
+        deg = min(3, len(fit_pts) - 1)
+        coeffs = np.polyfit(xs_fit, ys_fit, deg)
+
+        for ln in kept:
+            lb = lines[ln]
+            lx = float(np.polyval(coeffs, float(cross[lb[0]])))
+            if axis[lb[0]] > lx:
+                P.subtype[lb[0]] |= SUBTYPE_SPACE
+            else:
+                P.subtype[lb[0]] &= ~SUBTYPE_SPACE
 
 
 def run_textline_detect(boxes: dict, line_runs: np.ndarray,
