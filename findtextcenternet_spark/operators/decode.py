@@ -60,7 +60,25 @@ def sp_token() -> np.ndarray:
 
 
 def tokenize_page(ordered: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    """Ordered box rows → (tokens (n,106) float32, meta (n,9) float64).
+    """``tokenize_boxes`` over an ordered frame (``group.group_page``;
+    feature cells as packed float32 bytes or float sequences)."""
+    feats = ordered["feature"].tolist()
+    cols = {c: ordered[c].to_numpy() for c in _TOKEN_COLS}
+    cols["feature"] = (
+        np.frombuffer(b"".join(feats), np.float32).reshape(-1, FEATURE_DIM)
+        if all(isinstance(f, bytes) for f in feats)
+        else np.stack([np.asarray(f, np.float32) for f in feats]))
+    return tokenize_boxes(cols)
+
+
+_TOKEN_COLS = ("box_id", "block", "idx", "subidx", "subtype",
+               "cx", "cy", "w", "h")
+
+
+def tokenize_boxes(ordered: dict) -> tuple[np.ndarray, np.ndarray]:
+    """Ordered box arrays (``group.order_boxes`` plus each box's
+    (FEATURE_DIM,) float32 ``feature`` row) → (tokens (n,106) float32,
+    meta (n,9) float64).
 
     meta columns: box_id, block, idx, subidx, subtype, cx, cy, w, h
     (box_id = -1 for break tokens). Break-token emission mirrors
@@ -69,12 +87,11 @@ def tokenize_page(ordered: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     of the glyph before it. Whole-array: the breaks before each glyph are
     counted first, which fixes every row's output position.
     """
-    n = len(ordered)
+    n = len(ordered["block"])
     if n == 0:
         return (np.zeros((0, ENCODER_DIM), np.float32), np.zeros((0, 9)))
-    block = ordered["block"].to_numpy()
-    idx = ordered["idx"].to_numpy()
-    subtype = ordered["subtype"].to_numpy().astype(np.int64)
+    block, idx = ordered["block"], ordered["idx"]
+    subtype = ordered["subtype"].astype(np.int64)
     new_block = block != np.r_[0, block[:-1]]
     new_line = idx != np.where(new_block, -1, np.r_[0, idx[:-1]])
     n_breaks = new_block.astype(np.int64) + new_line
@@ -87,11 +104,7 @@ def tokenize_page(ordered: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
         (subtype & SUBTYPE_SPACE) != 0, (subtype & SUBTYPE_EMPHASIS) != 0])
 
     tokens = np.zeros((n + len(brk), ENCODER_DIM), dtype=np.float32)
-    feats = ordered["feature"].tolist()
-    tokens[pos, :FEATURE_DIM] = (
-        np.frombuffer(b"".join(feats), np.float32).reshape(n, FEATURE_DIM)
-        if all(isinstance(f, bytes) for f in feats)
-        else np.stack([np.asarray(f, np.float32) for f in feats]))
+    tokens[pos, :FEATURE_DIM] = ordered["feature"]
     tokens[pos, FEATURE_DIM:FEATURE_DIM + TK_NL] = 5.0 * flags
     prev_vert = np.r_[False, vertical[:-1]]
     tokens[brk, FEATURE_DIM + TK_VERT] = 5.0 * np.r_[
@@ -101,10 +114,9 @@ def tokenize_page(ordered: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
     meta = np.zeros((len(tokens), 9))
     meta[:, :5] = -1
     meta[pos, :5] = np.column_stack(
-        [ordered[c].to_numpy().astype(np.int64)
-         for c in ("box_id", "block", "idx", "subidx")] + [subtype])
-    meta[pos, 5:] = np.column_stack([ordered[c].to_numpy(dtype=np.float64)
-                                     for c in ("cx", "cy", "w", "h")])
+        [ordered[c].astype(np.int64) for c in _TOKEN_COLS[:4]] + [subtype])
+    meta[pos, 5:] = np.column_stack([np.asarray(ordered[c], np.float64)
+                                     for c in _TOKEN_COLS[5:]])
     return tokens, meta
 
 
@@ -286,6 +298,10 @@ def expand_window(tokens: np.ndarray, meta: np.ndarray, head=None
     return emit_window(tokens, codes[1:-1])
 
 
+# what closes an open group: none, a base run (empty ruby), a ruby run
+_CLOSE = ((), ("￺", "￻"), ("￻",))
+
+
 def emit_window(tokens: np.ndarray, codes: np.ndarray
                 ) -> tuple[str, np.ndarray]:
     """Emit one window's characters from its decoded glyph codes
@@ -308,43 +324,34 @@ def emit_window(tokens: np.ndarray, codes: np.ndarray
 
     out: list[str] = []
     tok_of: list[int] = []
+
+    def mark(*chars: str) -> None:  # structural characters: no token
+        out.extend(chars)
+        tok_of.extend([-1] * len(chars))
+
     state = 0  # 0 plain, 1 in base run, 2 in ruby run
     for t, (is_nl, base_flag, ruby_flag, space_flag) in enumerate(
             zip(nl, rbase, ruby, space)):
         if is_nl > 0:
-            if state == 2:
-                out.append("￻")
-                tok_of.append(-1)
-                state = 0
-            elif state == 1:
-                out.append("￺")
-                tok_of.append(-1)
-                out.append("￻")
-                tok_of.append(-1)
-                state = 0
+            mark(*_CLOSE[state])
+            state = 0
             out.append("\n")
             tok_of.append(t)
             continue
         is_base = base_flag > 0
         is_ruby = ruby_flag > 0
         if state == 0 and is_base:
-            out.append("￹")
-            tok_of.append(-1)
+            mark("￹")
             state = 1
         elif state == 1 and is_ruby:
-            out.append("￺")
-            tok_of.append(-1)
+            mark("￺")
             state = 2
         elif state == 2 and not is_ruby:
-            out.append("￻")
-            tok_of.append(-1)
+            mark("￻")
             state = 0
         elif state == 1 and not is_base and not is_ruby:
             # base run with no ruby glyphs — close the group empty
-            out.append("￺")
-            tok_of.append(-1)
-            out.append("￻")
-            tok_of.append(-1)
+            mark(*_CLOSE[1])
             state = 0
         cp = next(glyph_codes)
         ch = chr(cp) if 0 < cp <= 0x3FFFF and not (0xD800 <= cp <= 0xDFFF) else "�"
@@ -352,16 +359,8 @@ def emit_window(tokens: np.ndarray, codes: np.ndarray
             # F8: ASCII and Hangul text uses ' ', CJK uses '　'
             # (data_transformer.py:53-57,351-356 class tests)
             ascii_like = cp < 0x80 or 0xAC00 <= cp <= 0xD7A3
-            out.append(" " if ascii_like else "　")
-            tok_of.append(-1)
+            mark(" " if ascii_like else "　")
         out.append(ch)
         tok_of.append(t)
-    if state == 2:
-        out.append("￻")
-        tok_of.append(-1)
-    elif state == 1:
-        out.append("￺")
-        tok_of.append(-1)
-        out.append("￻")
-        tok_of.append(-1)
+    mark(*_CLOSE[state])
     return "".join(out), np.array(tok_of, dtype=np.int64)

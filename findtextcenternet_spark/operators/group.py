@@ -8,12 +8,13 @@ cluster-prune + hysteresis, textline CC, box→line spatial attach,
 chain-merge fixpoint, unbound-box directional attach, warichu split,
 space chains, ruby band attach + interleave, next-line edges, block DFS,
 section (multi-column) reading order, warichu reorder, and the
-duplicate/lost space checks. This module is the DataFrame adapter, called
-once per page inside the pipeline's one kind-dispatching
-``mapInPandas`` (``pipeline._raster_records``, which batches only the
-decode after it across the Arrow batch's pages) and by
-``golden.extract_raster_page``. Pages never cross executors, so the
-stage scales linearly with page count regardless of cluster size.
+duplicate/lost space checks. This module hands it a page's arrays:
+``order_boxes`` is the array core the pipeline's raster leg
+(``pipeline._raster_records``) calls once per page between the batched
+detect and the batched decode; ``group_page`` is its DataFrame adapter,
+for ``golden.extract_raster_page`` and the tests. Pages never cross
+executors, so the stage scales linearly with page count regardless of
+cluster size.
 """
 
 from __future__ import annotations
@@ -25,17 +26,34 @@ from .textline import run_textline_detect
 
 OUT_COLS = ["box_id", "p", "cx", "cy", "w", "h", "feature",
             "block", "idx", "subidx", "subtype"]
+# what order_boxes hands on besides box_id, from the textline Page
+_ORDERED = ("cx", "cy", "w", "h", "block", "idx", "subidx", "subtype")
+
+
+def order_boxes(boxes: dict, line: np.ndarray, sep: np.ndarray,
+                sep_vals: np.ndarray) -> dict:
+    """Order one page's boxes: the array core of ``group_page``.
+
+    Input: the box columns cx, cy, w, h, code1..code8 as arrays, the line
+    and sep runs as (k, 3) rows of (y, x1, x2) in heatmap cells and each
+    sep run's value. Returns ``box_id`` (the input row of each kept box)
+    with cx, cy, w, h, block, idx, subidx and subtype, in final reading
+    order (W2: block, idx, subidx — main.cpp:156-161). Boxes the
+    reference drops (unreachable chains, block < 0) are excluded, exactly
+    like the reference output filter (make_block.cpp:1739-1745)."""
+    if not len(boxes["cx"]):
+        empty = np.zeros(0, dtype=np.int64)
+        return {c: empty for c in ("box_id", *_ORDERED)}
+    P, order = run_textline_detect(boxes, line, sep, sep_vals)
+    o = np.asarray(order, dtype=np.int64)
+    return {"box_id": o, **{c: getattr(P, c)[o] for c in _ORDERED}}
 
 
 def group_page(boxes: pd.DataFrame, runs: pd.DataFrame) -> pd.DataFrame:
-    """Order one page's boxes into (block, idx, subidx, subtype).
-
-    Input: boxes (box_id, p, cx, cy, w, h, code1..code8, feature), runs
-    (channel 'line'|'sep', y, x1, x2[, v]) in heatmap cells. Returns the
-    carried box columns plus block/idx/subidx/subtype, sorted in final
-    reading order (W2: block, idx, subidx — main.cpp:156-161). Boxes the
-    reference drops (unreachable chains, block < 0) are excluded, exactly
-    like the reference output filter (make_block.cpp:1739-1745)."""
+    """``order_boxes`` over the detect stage's frames (a page of boxes
+    (box_id, p, cx, cy, w, h, code1..code8, feature) and its runs
+    (channel 'line'|'sep', y, x1, x2[, v])): the carried box columns plus
+    block/idx/subidx/subtype, in final reading order."""
     if boxes.empty:
         return pd.DataFrame(columns=OUT_COLS)
     channel = runs["channel"].to_numpy()
@@ -47,16 +65,14 @@ def group_page(boxes: pd.DataFrame, runs: pd.DataFrame) -> pd.DataFrame:
     else:
         sep_vals = np.full(int(sep.sum()), 0.982)
     col = {c: boxes[c].to_numpy() for c in boxes.columns}
-    P, order = run_textline_detect(col, cells[channel == "line"], cells[sep],
-                                   sep_vals)
-
-    if not order:
+    ordered = order_boxes(col, cells[channel == "line"], cells[sep],
+                          sep_vals)
+    o = ordered["box_id"]
+    if not len(o):
         return pd.DataFrame([], columns=OUT_COLS)
-    o = np.asarray(order, dtype=np.int64)
     return pd.DataFrame({
         "box_id": col["box_id"][o].astype(np.int64),
         "p": col["p"][o].astype(np.float64),
-        "cx": P.cx[o], "cy": P.cy[o], "w": P.w[o], "h": P.h[o],
+        **{c: ordered[c] for c in _ORDERED[:4]},
         "feature": col["feature"][o],
-        "block": P.block[o], "idx": P.idx[o], "subidx": P.subidx[o],
-        "subtype": P.subtype[o]})
+        **{c: ordered[c] for c in _ORDERED[4:]}})

@@ -34,8 +34,8 @@ Documented divergences (each deliberate, none observable on clean pages):
   column-major.
 
 Scale note: the pipeline runs this once per page inside its one
-kind-dispatching ``mapInPandas`` (``pipeline._unified_impl`` →
-``golden.extract_raster_page`` → ``group.group_page``). Pages never cross
+kind-dispatching ``mapInPandas`` (``pipeline._raster_records`` →
+``group.order_boxes``, on arrays). Pages never cross
 executors, so the stage is embarrassingly parallel and its cost is
 O(page) regardless of corpus size. Within a page the cost is Python
 interpretation, not arithmetic: a median page grid is about 200x200 cells
@@ -151,9 +151,6 @@ class Page:
     def is_ruby(self, i: int) -> bool:
         return (self.subtype.item(i) & 6) == 6
 
-    def size(self, i: int) -> float:
-        return max(self.w[i], self.h[i])
-
 
 def mask_cells(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Row-major (y, x) of a 2-D mask's true cells: ``np.nonzero``'s
@@ -196,12 +193,15 @@ class _UnionFind:
             self.parent[max(ra, rb)] = min(ra, rb)
 
 
-def _label_components_4(mask: np.ndarray) -> tuple[np.ndarray, int]:
-    """4-neighborhood connected components over a boolean mask, as
-    run-length union-find (A11; search_connection prepare.cpp:6-66
-    semantics — labels renumbered in row-major first-appearance order,
-    which is exactly the scan order the C++ assigns cluster ids in).
-    Returns (label map int[H,W] with -1 background, n_components)."""
+def _label_components(mask: np.ndarray, reach: int = 0
+                      ) -> tuple[np.ndarray, int]:
+    """Connected components of a boolean mask as run-length union-find:
+    ``reach`` 0 is the 4-neighborhood (A11; search_connection
+    prepare.cpp:6-66), ``reach`` r > 0 joins cells up to r apart on
+    both axes (the (2r+1)² window). Labels are renumbered in row-major
+    first-appearance order, which is exactly the scan order the C++
+    assigns cluster ids in. Returns (label map int[H,W] with -1
+    background, n_components)."""
     runs = _runs_of_mask(mask)
     n = len(runs)
     labels = np.full(mask.shape, -1, dtype=np.int32)
@@ -213,12 +213,15 @@ def _label_components_4(mask: np.ndarray) -> tuple[np.ndarray, int]:
     for i, (y, _x1, _x2) in enumerate(runs):
         row_runs.setdefault(y, []).append(i)
     for i, (y, x1, x2) in enumerate(runs):
-        for j in row_runs.get(y + 1, ()):
-            jy, jx1, jx2 = runs[j]
-            if jx1 > x2:
-                break
-            if jx2 >= x1:
-                uf.union(i, j)
+        for dy in range(0 if reach else 1, max(reach, 1) + 1):
+            for j in row_runs.get(y + dy, ()):
+                if dy == 0 and j <= i:
+                    continue
+                jy, jx1, jx2 = runs[j]
+                if jx1 > x2 + reach:
+                    break
+                if jx2 >= x1 - reach:
+                    uf.union(i, j)
     remap: dict[int, int] = {}
     for i, (y, x1, x2) in enumerate(runs):
         r = uf.find(i)
@@ -232,36 +235,52 @@ def _label_components_4(mask: np.ndarray) -> tuple[np.ndarray, int]:
 
 def prepare_id_image(P: Page) -> tuple[np.ndarray, np.ndarray]:
     """Box-id rasters (prepare.cpp:68-97): idimage stamps every box,
-    idimage_main skips ruby glyphs; later box ids overwrite earlier."""
-    idimage = np.full((P.H, P.W), -1, dtype=np.int32)
-    idimage_main = np.full((P.H, P.W), -1, dtype=np.int32)
-    cx, cy, bw, bh = P.lcx, P.lcy, P.lw, P.lh
-    for i in range(P.n):
-        left = int((cx[i] - bw[i] / 2) / SCALE)
-        right = int((cx[i] + bw[i] / 2) / SCALE) + 1
-        top = int((cy[i] - bh[i] / 2) / SCALE)
-        bottom = int((cy[i] + bh[i] / 2) / SCALE) + 1
-        if left < 0 or right >= P.W:
-            continue
-        if top < 0 or bottom >= P.H:
-            continue
-        if not P.is_ruby(i):
-            idimage_main[top:bottom, left:right] = i
-        idimage[top:bottom, left:right] = i
-    return idimage, idimage_main
+    idimage_main skips ruby glyphs; later box ids overwrite earlier, so
+    each cell holds the largest id whose rectangle covers it. A box
+    whose rectangle leaves the grid is not stamped."""
+    left = ((P.cx - P.w / 2) / SCALE).astype(np.int64)
+    right = ((P.cx + P.w / 2) / SCALE).astype(np.int64) + 1
+    top = ((P.cy - P.h / 2) / SCALE).astype(np.int64)
+    bottom = ((P.cy + P.h / 2) / SCALE).astype(np.int64) + 1
+    box = np.flatnonzero((left >= 0) & (right < P.W)
+                         & (top >= 0) & (bottom < P.H))
+    rw = np.maximum(right[box] - left[box], 0)
+    area = rw * np.maximum(bottom[box] - top[box], 0)
+    k = ramp(area)
+    rw = np.repeat(rw, area)
+    flat = ((np.repeat(top[box], area) + k // rw) * P.W
+            + np.repeat(left[box], area) + k % rw)
+    box = np.repeat(box, area).astype(np.int32)
+
+    def paint(keep):
+        img = np.full(P.H * P.W, -1, dtype=np.int32)
+        np.maximum.at(img, flat[keep], box[keep])
+        return img.reshape(P.H, P.W)
+    return paint(slice(None)), paint((P.subtype[box] & 6) != 6)
 
 
 def make_lineblocker(P: Page) -> None:
     """Separator mask -> lineblocker (prepare.cpp:99-170):
     threshold at SEP_VALUETH, 4-CC, erase clusters with value-sum below
     SEP_CLUSTERTH (A12 cluster weight prune), then hysteresis-regrow each
-    surviving cell to 8-neighbors above 0.1x its own value (A13)."""
-    blocker = P.sepimage > SEP_VALUETH
-    labels, n_comp = _label_components_4(blocker)
+    surviving cell to 8-neighbors above 0.1x its own value (A13). Cells
+    with no separator value neither seed nor grow, so all of it runs
+    over the box around the nonzero cells (none on most pages)."""
+    P.lineblocker = np.zeros((P.H, P.W), dtype=bool)
+    rows = np.flatnonzero(P.sepimage.any(axis=1))
+    if len(rows):
+        cols = np.flatnonzero(P.sepimage.any(axis=0))
+        box = np.s_[rows[0]:rows[-1] + 1, cols[0]:cols[-1] + 1]
+        P.lineblocker[box] = _lineblocker(P.sepimage[box])
+
+
+def _lineblocker(sep: np.ndarray) -> np.ndarray:
+    blocker = sep > SEP_VALUETH
+    labels, n_comp = _label_components(blocker)
     if n_comp:
         weights = np.zeros(n_comp)
         on = labels >= 0
-        np.add.at(weights, labels[on], P.sepimage[on])
+        np.add.at(weights, labels[on], sep[on])
         light = weights < SEP_CLUSTERTH
         blocker[on & light[np.clip(labels, 0, None)]] = False
 
@@ -270,8 +289,7 @@ def make_lineblocker(P: Page) -> None:
     # only ever get added, so a seed none of whose neighbours is free and
     # above its threshold at the start never grows: only the others walk.
     ys, xs = mask_cells(blocker)
-    sep = P.sepimage
-    H, W = P.H, P.W
+    H, W = sep.shape
     th = sep[ys, xs].astype(np.float64) * 0.1
     free = np.pad(~blocker, 1)
     vals = np.pad(sep, 1).astype(np.float64)
@@ -296,74 +314,44 @@ def make_lineblocker(P: Page) -> None:
                     if sep.item(yy, xx) < value_th:
                         continue
                     stack.append((yy, xx))
-    P.lineblocker = blocker
+    return blocker
 
 
 # ---------------------------------------------------------------- linefind
 
-def _detect_line_fast(P: Page, on_mask: np.ndarray
-                      ) -> tuple[np.ndarray, int]:
-    """5x5-neighborhood components as run-length union-find — valid only
-    when no blocker cell sits within the 5x5 reach of any line cell (the
-    common page: separators live in block gaps, far from the lines).
-    Components get ids in row-major first-cell order, matching the
-    descending-value scan for our binary line maps."""
-    runs = _runs_of_mask(on_mask)
-    n = len(runs)
-    labels = np.full(on_mask.shape, -1, dtype=np.int32)
-    if n == 0:
-        return labels, 0
-    uf = _UnionFind(n)
-    row_runs: dict[int, list[int]] = {}
-    for i, (y, _x1, _x2) in enumerate(runs):
-        row_runs.setdefault(y, []).append(i)
-    for i, (y, x1, x2) in enumerate(runs):
-        for dy in (0, 1, 2):
-            for j in row_runs.get(y + dy, ()):
-                if dy == 0 and j <= i:
-                    continue
-                jy, jx1, jx2 = runs[j]
-                if jx1 > x2 + 2:
-                    break
-                if jx2 >= x1 - 2:
-                    uf.union(i, j)
-    remap: dict[int, int] = {}
-    for i, (y, x1, x2) in enumerate(runs):
-        r = uf.find(i)
-        if r not in remap:
-            remap[r] = len(remap)
-        labels[y, x1:x2 + 1] = remap[r]
-    return labels, len(remap)
-
-
 def detect_line(P: Page) -> tuple[np.ndarray, int]:
     """Textline components (hough_linefind.cpp:200-255): flood fill with a
     5x5 neighborhood from cells in descending lineimage order, a blocker
-    cell anywhere in the window stops expansion from that cell."""
+    cell anywhere in the window stops expansion from that cell.
+
+    Fast path: if no blocker is within the 5x5 reach of any line cell
+    (the common page: separators live in block gaps), the blocker-barrier
+    rule can never fire, and the 5x5 components over the box around the
+    line cells are the lines: row-major first-cell ids match the
+    descending-value scan for our binary line maps."""
     H, W = P.H, P.W
     lineid_map = np.full((H, W), -1, dtype=np.int32)
-    on = np.nonzero(P.lineimage.ravel() >= LINE_VALUETH)[0]
-    if len(on) == 0:
-        return lineid_map, 0
-
-    # fast path: if no blocker is within the 5x5 reach of any line cell,
-    # the blocker-barrier rule can never fire — use run-length union-find
     on_mask = P.lineimage >= LINE_VALUETH
+    rows = np.flatnonzero(on_mask.any(axis=1))
+    if not len(rows):
+        return lineid_map, 0
+    cols = np.flatnonzero(on_mask.any(axis=0))
+    y0, y1, x0, x1 = rows[0], rows[-1] + 1, cols[0], cols[-1] + 1
+    clear = True
     if P.lineblocker.any():
-        near = np.zeros((H, W), dtype=bool)
-        b = P.lineblocker
-        for dy in (-2, -1, 0, 1, 2):
-            ys_lo, ys_hi = max(0, dy), H + min(0, dy)
-            yd_lo, yd_hi = max(0, -dy), H + min(0, -dy)
-            for dx in (-2, -1, 0, 1, 2):
-                xs_lo, xs_hi = max(0, dx), W + min(0, dx)
-                xd_lo, xd_hi = max(0, -dx), W + min(0, -dx)
-                near[yd_lo:yd_hi, xd_lo:xd_hi] |= b[ys_lo:ys_hi, xs_lo:xs_hi]
-        clear = not (near & on_mask).any()
-    else:
-        clear = True
+        # the blocker cells within reach of each box cell, off-page False
+        b = np.pad(P.lineblocker, 2)[y0:y1 + 4, x0:x1 + 4]
+        h, w = y1 - y0, x1 - x0
+        near = np.zeros((h, w), dtype=bool)
+        for dy in range(5):
+            for dx in range(5):
+                near |= b[dy:dy + h, dx:dx + w]
+        clear = not (near & on_mask[y0:y1, x0:x1]).any()
     if clear:
-        return _detect_line_fast(P, on_mask)
+        labels, count = _label_components(on_mask[y0:y1, x0:x1], 2)
+        lineid_map[y0:y1, x0:x1] = labels
+        return lineid_map, count
+    on = np.flatnonzero(on_mask)
     # descending value, index asc on ties (stable — canonicalizes the
     # unstable std::sort at hough_linefind.cpp:208)
     vals = P.lineimage.ravel()[on]
@@ -514,7 +502,7 @@ def line_grow(P: Page, lineid_count: int, angle_map: np.ndarray,
     lid = lineid_map[ys, xs]
     map2[ys, xs] = lid
     mw = line_width[lid].astype(np.int64)
-    own = np.full(H * W, n, dtype=np.int64)
+    own = np.full(H * W, n, dtype=np.int32)
     own[ys * W + xs] = np.arange(n)
     orig = angle_map[ys, xs]
     hz = np.abs(orig.astype(np.float64)) < M_PI_4
@@ -750,7 +738,8 @@ def make_track_line(P: Page, chains: list[list[int]], chainid: int,
     if knots is None:
         return [], [], 0.0, 0.0, 0.0
     horizontal, p, q, direction, w, h = knots
-    pa, qa, _ = _interp_samples(p[:-1], q[:-1], p[1:], q[1:])
+    pk, qk = np.array(p), np.array(q)
+    pa, qa, _ = _interp_samples(pk[:-1], qk[:-1], pk[1:], qk[1:])
     ps, qs = pa.tolist(), qa.tolist()
     if extra_len > 0:
         reach = extra_len * (w if horizontal else h) * 2
@@ -1047,7 +1036,6 @@ def fix_unbined(P: Page, chains: list[list[int]]) -> bool:
     fix_chain_info(P, chains)
     unbind_count = count_unbind(P, chains)
     while True:
-        fix_chain_info(P, chains)
         chained = {b for c in chains for b in c}
         unbined = [i for i in range(P.n)
                    if i not in chained and not P.is_ruby(i)]
@@ -1144,6 +1132,7 @@ def fix_unbined(P: Page, chains: list[list[int]]) -> bool:
             it += 1
         if success == 0:
             break
+        fix_chain_info(P, chains)
     return unbind_count != count_unbind(P, chains)
 
 
@@ -1492,7 +1481,8 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
     """J4 ruby band attach + interleave (search_ruby ruby_search.cpp:12-713).
 
     Phase 1: probe 1.25x line-size above (horizontal) / right (vertical)
-    of each chain's track line for unclaimed ruby boxes; re-home them.
+    of each chain's track line for ruby boxes no chain holds (idx < 0),
+    each once, and re-home them: nothing is taken out of another chain.
     Phase 2 per chain: split base/ruby; find rubybase runs; assign each
     ruby to the run whose span contains it, resolve strays through
     neighbor-ruby continuity; drop garbage rubies (<13 px); interleave
@@ -1537,27 +1527,24 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
             hit &= ((P.subtype[ids] & 6) == 6) & (P.idx[ids] < 0)
             pt, kk = np.nonzero(hit.T)
             ruby_boxid = list(dict.fromkeys(oid[kk, pt].tolist()))
-        for rid in ruby_boxid:
-            if P.idx[rid] >= 0:
-                if rid in chains[P.idx[rid]]:
-                    chains[P.idx[rid]].remove(rid)
-            else:
-                P.idx[rid] = chainid
-                P.direction[rid] = direction
-            chain.append(rid)
+        P.idx[ruby_boxid] = chainid
+        P.direction[ruby_boxid] = direction
+        chain.extend(ruby_boxid)
 
     fix_chain_info(P, chains)
 
+    # phase 2 reads and writes the box state as lists, stored back at the end
+    st, idx, sub = P.subtype.tolist(), P.idx.tolist(), P.subidx.tolist()
     for chainid, chain in enumerate(chains):
         sort_chain(chain, P)
-        baseid = [b for b in chain if not P.is_ruby(b)]
-        rubyid = [b for b in chain if P.is_ruby(b)]
+        baseid = [b for b in chain if (st[b] & 6) != 6]
+        rubyid = [b for b in chain if (st[b] & 6) == 6]
 
         if not rubyid:
             for subidx, b in enumerate(chain):
-                P.subtype[b] &= ~RUBY_BITS
-                P.idx[b] = chainid
-                P.subidx[b] = subidx
+                st[b] &= ~RUBY_BITS
+                idx[b] = chainid
+                sub[b] = subidx
             continue
 
         horizontal = abs(P.direction.item(chain[0])) < M_PI_4
@@ -1570,7 +1557,7 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
         rubybase_block: list[list[int]] = []
         tmp: list[int] = []
         for b in baseid:
-            if (P.subtype.item(b) & RUBY_BITS) == SUBTYPE_RUBYBASE:
+            if (st[b] & RUBY_BITS) == SUBTYPE_RUBYBASE:
                 tmp.append(b)
             else:
                 if tmp:
@@ -1667,14 +1654,14 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
         for i, rid in enumerate(rubyid):
             if ruby_to_base[i] < 0:
                 if max(P.lw[rid], P.lh[rid]) < 13:
-                    P.subtype[rid] |= SUBTYPE_ALONE_RUBY
-                    P.idx[rid] = -1
+                    st[rid] |= SUBTYPE_ALONE_RUBY
+                    idx[rid] = -1
             elif ruby_count[ruby_to_base[i]] < 2:
                 if max(P.lw[rid], P.lh[rid]) < 13:
-                    P.subtype[rid] |= SUBTYPE_ALONE_RUBY
-                    P.idx[rid] = -1
+                    st[rid] |= SUBTYPE_ALONE_RUBY
+                    idx[rid] = -1
                     for b in rubybase_block[ruby_to_base[i]]:
-                        P.subtype[b] &= ~RUBY_BITS
+                        st[b] &= ~RUBY_BITS
 
         # interleave: each base run's rubies follow the run's last box
         # (ruby_search.cpp:384-400)
@@ -1686,7 +1673,7 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
                 continue
             j = baselast.index(b)
             for i, rid in enumerate(rubyid):
-                if P.idx[rid] < 0:
+                if idx[rid] < 0:
                     continue
                 if ruby_to_base[i] == j:
                     fixlist.append(rid)
@@ -1696,16 +1683,16 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
         for j, blk in enumerate(rubybase_block):
             if j not in ruby_to_base:
                 for b in blk:
-                    P.subtype[b] &= ~RUBY_BITS
+                    st[b] &= ~RUBY_BITS
 
         # orphan rubies re-enter the line as plain glyphs
         # (ruby_search.cpp:411-430)
         for i, rid in enumerate(rubyid):
-            if P.idx[rid] < 0:
+            if idx[rid] < 0:
                 continue
             if ruby_to_base[i] == -1:
-                P.subtype[rid] &= ~RUBY_BITS
-                P.subtype[rid] |= SUBTYPE_ALONE_RUBY
+                st[rid] &= ~RUBY_BITS
+                st[rid] |= SUBTYPE_ALONE_RUBY
                 x = axis[rid]
                 pos = len(fixlist)
                 for k, b in enumerate(fixlist):
@@ -1716,11 +1703,12 @@ def search_ruby(P: Page, chains: list[list[int]], idimage: np.ndarray) -> None:
 
         for subidx, b in enumerate(fixlist):
             if horizontal:
-                P.subtype[b] &= ~SUBTYPE_VERTICAL
+                st[b] &= ~SUBTYPE_VERTICAL
             else:
-                P.subtype[b] |= SUBTYPE_VERTICAL
-            P.idx[b] = chainid
-            P.subidx[b] = subidx
+                st[b] |= SUBTYPE_VERTICAL
+            idx[b] = chainid
+            sub[b] = subidx
+    P.subtype[:], P.idx[:], P.subidx[:] = st, idx, sub
 
     # rubies that never joined a line lose the ruby marking
     # (ruby_search.cpp:707-712)
@@ -2118,7 +2106,7 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
     # order
     scans: list[tuple] = []
     cx, cy, bw, bh = P.lcx, P.lcy, P.lw, P.lh
-    sti, dli = P.subtype.item, P.double_line.item
+    st, dl = P.subtype.tolist(), P.double_line.tolist()
     for chainid in range(id_max):
         chain = chains[chainid]
         if not chain:
@@ -2126,12 +2114,12 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
         lp = lineparams[chainid]
         if lp.d not in (1, 2):
             continue
-        c = np.array(chain)
-        sz = np.maximum(P.w[c], P.h[c])
-        s_s = sz.max()
-        far = (np.abs(sz - s_s) / np.minimum(sz, s_s) > 0.5).tolist()
-        base = [b for b, f in zip(chain, far)
-                if not f and (sti(b) & 6) != 6 and dli(b) <= 0]
+        sz = [bw[b] if bw[b] >= bh[b] else bh[b] for b in chain]
+        s_s = max(sz)
+        # |sz - s_s| / min(sz, s_s) > 0.5, a zero size as NumPy reads it
+        base = [b for b, z in zip(chain, sz)
+                if not ((s_s - z) / z > 0.5 if z else s_s > z)
+                and (st[b] & 6) != 6 and dl[b] <= 0]
         cx1 = cy1 = cx2 = cy2 = -1.0
         if lp.d == 2:
             for b in base:
@@ -2208,9 +2196,15 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
     rr = np.where(inside, rr, 0)
     cc = np.where(inside, cc, 0)
     blk = P.lineblocker[rr, cc]
-    oc = cmap[rr, cc].astype(np.int64)
+    oc = cmap[rr, cc]
     cid = chainid[step]
-    foreign = inside & ~blk & (oc >= 0) & (oc != cid)
+    # only cells off the page, on a blocker or on a foreign chain decide
+    # anything: the walk goes on through every other cell
+    ev = np.flatnonzero(~inside | blk | ((oc >= 0) & (oc != cid)))
+    step, depth, hz, inside, blk, cid = (
+        v[ev] for v in (step, depth, hz, inside, blk, cid))
+    oc = oc[ev].astype(np.int64)
+    foreign = inside & ~blk
     oc_s = np.where(foreign, oc, 0)
     dvals = np.array([lp.d for lp in lineparams], dtype=np.int64)
     sizes = np.array([lp.size for lp in lineparams], dtype=np.float64)
@@ -2222,12 +2216,17 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
                      np.abs(osz - own) / np.where(denom > 0, denom, 1.0),
                      np.inf)
     bad = ~(inside & ~blk & ~perp)
-    # shallower bad cells of the same step
+    # bad cells before each cell, less those before its step's first
     shallower = np.cumsum(bad) - bad
+    first = np.flatnonzero(np.r_[True, step[1:] != step[:-1]][:len(step)])
     alive = inside & (shallower == np.repeat(
-        shallower[np.cumsum(Kw) - Kw], Kw))
+        shallower[first], np.diff(np.r_[first, len(step)])))
     accept = np.flatnonzero(alive & foreign & ~perp
                             & (ratio <= ALLOW_SIZEDIFF))
+    # a step meeting the same chain again one cell deeper changes nothing
+    # (the chain is linked, or the step ended above): drop those repeats
+    key = step[accept] * id_max + oc[accept]
+    accept = accept[np.r_[True, key[1:] != key[:-1]][:len(key)]]
     # replay the accept-candidates in (scan, step, depth) order: whether
     # one ends its step's walk depends on the dedup state (a chain
     # already linked lets the reference keep walking)

@@ -18,8 +18,10 @@ from findtextcenternet_spark.config import (
 from findtextcenternet_spark.corpus import generate_pages, make_layout
 from findtextcenternet_spark.operators import detect
 from findtextcenternet_spark.operators.detect import (
-    _runs_df,
+    _run_parts,
+    _runs_frame,
     detect_page,
+    detect_pages,
     greedy_nms,
     maxpool3x3,
     parse_layout,
@@ -258,11 +260,11 @@ def test_runs_df_matches_row_loop():
         sep = np.repeat(levels[rng.integers(0, len(levels),
                                             (h, 1 + w // 4))], 4,
                         axis=1)[:, :w]
-        got = _runs_df(line, sep)
+        got = _runs_frame(_run_parts(line, sep))
         want = _runs_rows_loop(line, sep)
         assert len(want)
         pd.testing.assert_frame_equal(got, want, check_exact=True)
-    empty = _runs_df(np.zeros((4, 5)), np.zeros((4, 5)))
+    empty = _runs_frame(_run_parts(np.zeros((4, 5)), np.zeros((4, 5))))
     assert empty.empty
     assert list(empty.dtypes) == [object, np.int64, np.int64, np.int64,
                                   np.float64]
@@ -283,6 +285,35 @@ def test_detect_recovers_every_glyph():
         want = {(int(g["cx"]), int(g["cy"])) for g in real}
         assert got == want
         assert (runs["channel"] == "line").sum() > 0
+
+
+@pytest.mark.parametrize("cells", [1, detect.CANVAS_CELLS, 1 << 22])
+def test_batched_front_half_equals_one_page_at_a_time(monkeypatch, cells):
+    """``detect_pages`` stacks pages into canvases of about
+    ``CANVAS_CELLS`` cells (one page each, the default, all in one): every
+    page's boxes and runs equal its own ``detect_page`` frames; a
+    malformed record gets the exception ``detect_page`` raises for it,
+    in its place, and costs the others nothing."""
+    layouts = _raster_layouts(120)
+    layouts[2:2] = [{}, []]
+    layouts.append({"page_w": -8, "page_h": 64, "glyphs": []})
+    monkeypatch.setattr(detect, "CANVAS_CELLS", cells)
+    got = detect_pages(layouts)
+    assert len(layouts) > 12
+    for layout, res in zip(layouts, got):
+        try:
+            boxes, runs = detect_page(layout)
+        except Exception as e:  # noqa: BLE001
+            assert type(res) is type(e) and str(res) == str(e)
+            continue
+        assert not isinstance(res, Exception)
+        got_boxes, got_runs = res
+        for c in boxes.columns[1:-1]:
+            assert np.array_equal(got_boxes[c], boxes[c].to_numpy()), c
+        assert got_boxes["feature"].tobytes() == b"".join(boxes["feature"])
+        pd.testing.assert_frame_equal(_runs_frame(got_runs), runs,
+                                      check_exact=True)
+    assert sum(isinstance(r, Exception) for r in got) == 3
 
 
 def test_multi_tile_page_consistent():

@@ -8,13 +8,19 @@ batched must equal golden for every clean page: text, ruby variants,
 spans, lines and blocks, value for value. One batch holds pages from
 the smallest to the largest layouts, a page long enough for several
 windows, pages whose space-flagged glyphs re-mask in decode round 0, a
-page with no glyphs, and a poison page in the middle; only the poison
-page may come back as an error row.
+page with no glyphs, pages whose content reaches past, and exactly to,
+the group stage's 192-cell grid floor, a page with separators only, and
+a poison page in the middle; only the poison page may come back as an
+error row. The frozen benchmark's traced replay
+(``perfbench/layers.replay_raster``) must read the same text off the
+detect, group and decode frames.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import json
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -50,11 +56,26 @@ FIELDS = ("text", "aozora", "noruby", "spans", "lines", "blocks")
 POISON = "https://raster.example.org/poison"
 BLANK = "https://raster.example.org/blank"
 LONG = "https://raster.example.org/long"
+SEPS = "https://raster.example.org/seps"
 SNOWMAN = 0x2603
 
 
 def _page(layout: dict) -> bytes:
     return RASTER_MARKER + json.dumps(layout).encode()
+
+
+def _row_page(right: float, page_w: int) -> dict:
+    """One horizontal line of 20 px glyphs on a 32 px pitch whose last
+    glyph ends at ``right`` px: the group stage's grid covers
+    ceil(right / 4) cells across, floored at 192."""
+    xs = np.arange(right - 10.0, 40.0, -32.0)[::-1]
+    glyphs = [{"cx": float(x), "cy": 100.0, "w": 20.0, "h": 20.0,
+               "cp": 0x61 + k % 26, "ruby": 0, "rubybase": 0,
+               "emphasis": 0, "space": 0} for k, x in enumerate(xs)]
+    return {"page_w": page_w, "page_h": 400, "vertical": 0,
+            "glyphs": glyphs, "seps": [],
+            "textlines": [{"x1": float(xs[0]), "x2": float(xs[-1]),
+                           "y1": 100.0, "y2": 100.0, "vertical": 0}]}
 
 
 @pytest.fixture(scope="module")
@@ -76,6 +97,15 @@ def batch() -> pd.DataFrame:
     long_page = make_layout([["word " * 30] * 6 for _ in range(4)],
                             vertical=False)
     rows.append((LONG, _page(long_page)))
+    # content past the grid floor (243 cells), then exactly at it
+    rows.append(("https://raster.example.org/wide", _page(
+        _row_page(970.0, 1000))))
+    rows.append(("https://raster.example.org/at192", _page(
+        _row_page(766.0, 800))))
+    seps = dict(blank, seps=[
+        {"x1": 40, "x2": 700, "y1": 300, "y2": 300},
+        {"x1": 380, "x2": 380, "y1": 20, "y2": 740, "v": 0.6}])
+    rows.append((SEPS, _page(seps)))
     rows.append((BLANK, _page(blank)))
     return pd.DataFrame(rows, columns=["url", "html"])
 
@@ -129,8 +159,30 @@ def test_batched_decode_equals_golden_per_page(batch, monkeypatch):
     recs = _records(batch)
     assert len(sizes) == 1  # one decode for every window of the batch
     _assert_golden(recs, batch, {POISON})
-    assert recs[BLANK]["text"] == ""
+    assert recs[BLANK]["text"] == "" == recs[SEPS]["text"]
     assert len(recs[LONG]["text"]) > MAX_ENCODERLEN
+    for url, cells in (("wide", 243), ("at192", 192)):
+        boxes, _ = detect_page(parse_layout(
+            batch.set_index("url").at[f"https://raster.example.org/{url}",
+                                      "html"]))
+        assert int(np.ceil((boxes.cx + boxes.w / 2).max() / 4)) == cells
+        assert recs[f"https://raster.example.org/{url}"]["text"]
+
+
+def test_traced_replay_reads_golden_text(batch):
+    """``perfbench/layers.replay_raster`` (the benchmark's ``--trace 1``
+    kernel replay, which calls ``detect_page``, ``group_page`` and
+    ``tokenize_page`` and counts lines off the ordered frame) returns
+    the golden's text for every clean page."""
+    path = Path(__file__).resolve().parents[1] / "perfbench" / "layers.py"
+    spec = importlib.util.spec_from_file_location("perfbench_layers", path)
+    layers = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(layers)
+    pages = [(u, h) for u, h in zip(batch["url"], batch["html"])
+             if u != POISON]
+    totals, texts = layers.replay_raster(pages)
+    assert totals["pages"] == len(pages) and totals["lines"] > 0
+    assert texts == {u: extract_raster_page(h)["text"] for u, h in pages}
 
 
 def test_space_glyphs_remask_in_round_zero(batch):

@@ -18,6 +18,7 @@ import numpy as np
 from findtextcenternet_spark.config import (
     ALLOW_SIZEDIFF,
     ALLOWWIDTH_NEXT_BLOCK,
+    LINE_VALUETH,
     SCALE,
     SEP_CLUSTERTH,
     SEP_VALUETH,
@@ -32,11 +33,11 @@ from findtextcenternet_spark.operators.textline import (
     M_PI_4,
     RUBY_BITS,
     Page,
-    _label_components_4,
     _LineParam,
     _overlap,
     _UnionFind,
     block_chain_search,
+    count_unbind,
     fix_chain_info,
     fix_shortchain,
     linefind,
@@ -53,6 +54,8 @@ REWRITTEN = (
     "_runs_of_mask",
     "prepare_id_image",
     "make_lineblocker",
+    "_detect_line_fast",
+    "detect_line",
     "set_angle",
     "chain_boxes",
     "line_grow",
@@ -67,6 +70,7 @@ REWRITTEN = (
     "_ema_toward_back",
     "_mean_gap",
     "combine_chains",
+    "fix_unbined",
     "renumber_chain",
     "search_ruby",
     "renumber_id",
@@ -75,6 +79,38 @@ REWRITTEN = (
     "find_lostspace",
     "run_textline_detect",
 )
+
+
+def _label_components_4(mask: np.ndarray) -> tuple[np.ndarray, int]:
+    """4-neighborhood connected components over a boolean mask, as
+    run-length union-find (A11; search_connection prepare.cpp:6-66
+    semantics — labels renumbered in row-major first-appearance order,
+    which is exactly the scan order the C++ assigns cluster ids in).
+    Returns (label map int[H,W] with -1 background, n_components)."""
+    runs = _runs_of_mask(mask)
+    n = len(runs)
+    labels = np.full(mask.shape, -1, dtype=np.int32)
+    if n == 0:
+        return labels, 0
+    uf = _UnionFind(n)
+    # index runs by row for vertical adjacency
+    row_runs: dict[int, list[int]] = {}
+    for i, (y, _x1, _x2) in enumerate(runs):
+        row_runs.setdefault(y, []).append(i)
+    for i, (y, x1, x2) in enumerate(runs):
+        for j in row_runs.get(y + 1, ()):
+            jy, jx1, jx2 = runs[j]
+            if jx1 > x2:
+                break
+            if jx2 >= x1:
+                uf.union(i, j)
+    remap: dict[int, int] = {}
+    for i, (y, x1, x2) in enumerate(runs):
+        r = uf.find(i)
+        if r not in remap:
+            remap[r] = len(remap)
+        labels[y, x1:x2 + 1] = remap[r]
+    return labels, len(remap)
 
 
 def _runs_of_mask(mask: np.ndarray) -> list[tuple[int, int, int]]:
@@ -153,6 +189,117 @@ def make_lineblocker(P: Page) -> None:
                         continue
                     stack.append((yy, xx))
     P.lineblocker = blocker
+
+
+def _detect_line_fast(P: Page, on_mask: np.ndarray
+                      ) -> tuple[np.ndarray, int]:
+    """5x5-neighborhood components as run-length union-find — valid only
+    when no blocker cell sits within the 5x5 reach of any line cell (the
+    common page: separators live in block gaps, far from the lines).
+    Components get ids in row-major first-cell order, matching the
+    descending-value scan for our binary line maps."""
+    runs = _runs_of_mask(on_mask)
+    n = len(runs)
+    labels = np.full(on_mask.shape, -1, dtype=np.int32)
+    if n == 0:
+        return labels, 0
+    uf = _UnionFind(n)
+    row_runs: dict[int, list[int]] = {}
+    for i, (y, _x1, _x2) in enumerate(runs):
+        row_runs.setdefault(y, []).append(i)
+    for i, (y, x1, x2) in enumerate(runs):
+        for dy in (0, 1, 2):
+            for j in row_runs.get(y + dy, ()):
+                if dy == 0 and j <= i:
+                    continue
+                jy, jx1, jx2 = runs[j]
+                if jx1 > x2 + 2:
+                    break
+                if jx2 >= x1 - 2:
+                    uf.union(i, j)
+    remap: dict[int, int] = {}
+    for i, (y, x1, x2) in enumerate(runs):
+        r = uf.find(i)
+        if r not in remap:
+            remap[r] = len(remap)
+        labels[y, x1:x2 + 1] = remap[r]
+    return labels, len(remap)
+
+
+def detect_line(P: Page) -> tuple[np.ndarray, int]:
+    """Textline components (hough_linefind.cpp:200-255): flood fill with a
+    5x5 neighborhood from cells in descending lineimage order, a blocker
+    cell anywhere in the window stops expansion from that cell."""
+    H, W = P.H, P.W
+    lineid_map = np.full((H, W), -1, dtype=np.int32)
+    on = np.nonzero(P.lineimage.ravel() >= LINE_VALUETH)[0]
+    if len(on) == 0:
+        return lineid_map, 0
+
+    # fast path: if no blocker is within the 5x5 reach of any line cell,
+    # the blocker-barrier rule can never fire — use run-length union-find
+    on_mask = P.lineimage >= LINE_VALUETH
+    if P.lineblocker.any():
+        near = np.zeros((H, W), dtype=bool)
+        b = P.lineblocker
+        for dy in (-2, -1, 0, 1, 2):
+            ys_lo, ys_hi = max(0, dy), H + min(0, dy)
+            yd_lo, yd_hi = max(0, -dy), H + min(0, -dy)
+            for dx in (-2, -1, 0, 1, 2):
+                xs_lo, xs_hi = max(0, dx), W + min(0, dx)
+                xd_lo, xd_hi = max(0, -dx), W + min(0, -dx)
+                near[yd_lo:yd_hi, xd_lo:xd_hi] |= b[ys_lo:ys_hi, xs_lo:xs_hi]
+        clear = not (near & on_mask).any()
+    else:
+        clear = True
+    if clear:
+        return _detect_line_fast(P, on_mask)
+    # descending value, index asc on ties (stable — canonicalizes the
+    # unstable std::sort at hough_linefind.cpp:208)
+    vals = P.lineimage.ravel()[on]
+    order = on[np.argsort(-vals, kind="stable")]
+    flat_line = P.lineimage.ravel()
+    flat_block = P.lineblocker.ravel()
+    flat_id = lineid_map.ravel()
+    lineid_count = 0
+    for i in order.tolist():
+        if flat_id.item(i) >= 0:
+            continue
+        if flat_block[i]:
+            continue
+        stack = [i]
+        while stack:
+            i2 = stack.pop()
+            if flat_id.item(i2) >= 0:
+                continue
+            if flat_block[i2]:
+                continue
+            if flat_line.item(i2) < LINE_VALUETH:
+                continue
+            flat_id[i2] = lineid_count
+            x0 = i2 % W
+            y0 = i2 // W
+            tmp = []
+            hit_blocker = False
+            for y in range(y0 - 2, y0 + 3):
+                for x in range(x0 - 2, x0 + 3):
+                    if x < 0 or x >= W or y < 0 or y >= H:
+                        continue
+                    i3 = y * W + x
+                    if flat_id.item(i3) >= 0:
+                        continue
+                    if flat_block[i3]:
+                        hit_blocker = True
+                        break
+                    if flat_line.item(i3) < LINE_VALUETH:
+                        continue
+                    tmp.append(i3)
+                if hit_blocker:
+                    break
+            if not hit_blocker:
+                stack.extend(tmp)
+        lineid_count += 1
+    return lineid_map, lineid_count
 
 
 def set_angle(P: Page, lineid_map: np.ndarray, lineid_count: int
@@ -772,6 +919,115 @@ def combine_chains(P: Page, chains: list[list[int]]) -> None:
         if all(m == -1 for m in merge_chain):
             break
         process_merge(chains, merge_chain)
+
+
+def fix_unbined(P: Page, chains: list[list[int]]) -> bool:
+    """J3 unbound-box attach (fix_unbined search_loop.cpp:904-1088):
+    9-point probe of each unattached non-ruby box against the chain-id
+    raster; then directional searches 1.5x the box size (right, left for
+    horizontal chains; down, up for vertical). Loops until no attach
+    succeeds. Returns True if the unbound count changed."""
+    fix_chain_info(P, chains)
+    unbind_count = count_unbind(P, chains)
+    while True:
+        fix_chain_info(P, chains)
+        chained = {b for c in chains for b in c}
+        unbined = [i for i in range(P.n)
+                   if i not in chained and not P.is_ruby(i)]
+        success = 0
+        it = 0
+        cmap = None  # rebuilt lazily: the map only changes after an attach
+        # (the reference rebuilds per box, search_loop.cpp:938 — identical
+        # result, attaches are the only mutation between rebuilds)
+        while it < len(unbined):
+            boxid = unbined[it]
+            if cmap is None:
+                cmap = create_chainid_map(P, chains)
+            cx, cy = P.cx[boxid], P.cy[boxid]
+            w2, h2 = P.w[boxid] / 2, P.h[boxid] / 2
+            probes = [
+                (cx, cy),
+                (cx - w2, cy - h2), (cx - w2 / 2, cy - h2 / 2),
+                (cx + w2, cy - h2), (cx + w2 / 2, cy - h2 / 2),
+                (cx - w2, cy + h2), (cx - w2 / 2, cy + h2 / 2),
+                (cx + w2, cy + h2), (cx + w2 / 2, cy + h2 / 2),
+            ]
+            attached = False
+            for px, py in probes:
+                x, y = int(px / SCALE), int(py / SCALE)
+                if not (0 <= x < P.W and 0 <= y < P.H):
+                    continue
+                oc = cmap.item(y, x)
+                if oc >= 0 and chains[oc]:
+                    chains[oc].append(boxid)
+                    P.direction[boxid] = P.direction[chains[oc][0]]
+                    success += 1
+                    del unbined[it]
+                    attached = True
+                    break
+            if attached:
+                cmap = None
+                continue
+
+            def _directional(horiz_first: bool, sign: int) -> bool:
+                # horizontal probes scan a w*1.5 strip right/left of the
+                # box; vertical probes h*1.5 above/below; reject on blocker
+                if horiz_first:
+                    xi = cx + sign * w2
+                    limit = cx + sign * P.w[boxid] * 1.5
+                    while (xi < limit) if sign > 0 else (xi > limit):
+                        x1 = int(xi / SCALE)
+                        if x1 < 0 or x1 >= P.W:
+                            break
+                        yi = cy - h2
+                        while yi < cy + h2:
+                            y1 = int(yi / SCALE)
+                            yi += SCALE
+                            if y1 < 0 or y1 >= P.H:
+                                continue
+                            if P.lineblocker[y1, x1]:
+                                return False
+                            oc2 = cmap.item(y1, x1)
+                            if oc2 >= 0 and chains[oc2] and \
+                                    abs(P.direction[chains[oc2][0]]) < M_PI_4:
+                                chains[oc2].append(boxid)
+                                P.direction[boxid] = P.direction[chains[oc2][0]]
+                                return True
+                        xi += sign * SCALE
+                else:
+                    yi = cy + sign * h2
+                    limit = cy + sign * P.h[boxid] * 1.5
+                    while (yi < limit) if sign > 0 else (yi > limit):
+                        y1 = int(yi / SCALE)
+                        if y1 < 0 or y1 >= P.H:
+                            break
+                        xi = cx - w2
+                        while xi < cx + w2:
+                            x1 = int(xi / SCALE)
+                            xi += SCALE
+                            if x1 < 0 or x1 >= P.W:
+                                continue
+                            if P.lineblocker[y1, x1]:
+                                return False
+                            oc2 = cmap.item(y1, x1)
+                            if oc2 >= 0 and chains[oc2] and \
+                                    abs(P.direction[chains[oc2][0]]) > M_PI_4:
+                                chains[oc2].append(boxid)
+                                P.direction[boxid] = P.direction[chains[oc2][0]]
+                                return True
+                        yi += sign * SCALE
+                return False
+
+            if _directional(True, +1) or _directional(True, -1) or \
+                    _directional(False, +1) or _directional(False, -1):
+                success += 1
+                del unbined[it]
+                cmap = None
+                continue
+            it += 1
+        if success == 0:
+            break
+    return unbind_count != count_unbind(P, chains)
 
 
 def renumber_chain(P: Page) -> int:
