@@ -9,25 +9,23 @@ keypoint channel and ``log(size/SIZE_NORM)+SIZE_BIAS`` on the size channels
 (dataset/processer.pyx:133-182) — and the glyph feature map carries a
 deterministic invertible 100-d embedding per codepoint.
 
-``detect_pages`` runs one of two forward passes in front of one decode.
-``_surrogate_forwards`` reads each layout record once (``_plan``), paints
-the key, line and separator maps of many pages into one canvas and finds
-their peaks and runs there; ``_real_forward`` runs the model
-(operators/models.py) over one page's 768px tiles and merges them with
-the interior mask (``tile_windows``). Each gives every page the same
-``_Forward``: its key peaks, a reader for its logits at given cells, its
-line and separator runs, and per-box readers for the P6 contrast score
-and the glyph feature. ``_decode`` does everything else once per page,
-for both: peak ranking, size decode and filter, contrast-gated greedy
-IoU NMS, separator-mask filter and 3×3 code max, into box arrays.
-``detect_page`` is the one-page batch as frames.
+``detect_boxes`` is one of two forward functions in front of one decode.
+``_surrogate_forward`` renders the page maps and max-pools their peaks;
+``_real_forward`` runs the model (operators/models.py) over 768px tiles
+and merges them with the interior mask (``tile_windows``). Each returns
+the same thing: the page maps in CH_* order, the key probability, its
+peak mask, and per-box readers for the P6 contrast score and the glyph
+feature. ``_decode`` does everything else once, for both: peak ranking,
+size decode and filter, contrast-gated greedy IoU NMS, separator-mask
+filter, 3×3 code max, into box arrays and run cells. ``detect_page``
+gives them as frames.
 """
 
 from __future__ import annotations
 
 import json
 import math
-from typing import Callable, Iterator, NamedTuple
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -97,37 +95,14 @@ def sigmoid(x: np.ndarray) -> np.ndarray:
 # --- surrogate forward pass: stamp the page from the layout -------------
 
 STAMP_CHUNK = 1 << 14  # window cells per key-stamp pass
-CANVAS_CELLS = 1 << 17  # cells per batch canvas: 512 KB per float32 map
-
-# the channels written only at glyph center cells, and their background
-_CENTER_CH = (CH_SZX, CH_SZY, CH_C1, CH_C2, CH_C4, CH_C8)
-_CENTER_BG = np.array([0.0, 0.0] + [_OFF_LOGIT] * 4, dtype=np.float32)
 
 
-class _Plan(NamedTuple):
-    """One layout record's surrogate maps, in page cells, before any
-    painting: the page size, the stamped glyphs' key windows, the center
-    cells of the size and code channels with their values, the line and
-    separator strokes, and what a box reads of the glyph centered on its
-    cell."""
-    hc: int
-    wc: int
-    win: tuple            # gx, gy, sx, sy, x0, y0, nx, ny per stamped glyph
-    cells: np.ndarray     # sorted flat cells of the center-cell writers
-    vals: np.ndarray      # (6, cells) float32, in _CENTER_CH order
-    lines: list           # (y_lo, y_hi, x_lo, x_hi) inclusive
-    seps: list            # (y_lo, y_hi, x_lo, x_hi, logit) inclusive
-    at: dict              # (cell y, cell x) -> the last glyph centered there
-    glyphs: list
-    cps: np.ndarray
-
-
-def _stamp_key(key: np.ndarray, w_cells: int, base, gx, gy, sx, sy,
+def _stamp_key(key: np.ndarray, w_cells: int, gx, gy, sx, sy,
                x0, y0, nx, ny) -> None:
     """Fold the Gaussian key stamps of some glyphs into the flat key
-    channel at ``base`` (each glyph's page offset in it): each window
-    cell's squared distance is the sum of its column's and row's, every
-    window flattened glyph by glyph in row-major order."""
+    channel: each window cell's squared distance is the sum of its
+    column's and row's, every window flattened glyph by glyph in
+    row-major order."""
     col = x0.repeat(nx) + ramp(nx)
     row = y0.repeat(ny) + ramp(ny)
     dx2 = ((col.astype(np.float64) - gx.repeat(nx)) / sx.repeat(nx)) ** 2
@@ -138,23 +113,28 @@ def _stamp_key(key: np.ndarray, w_cells: int, base, gx, gy, sx, sy,
     ci = (np.cumsum(nx) - nx).repeat(area) + c
     d2 = dy2[ri] + dx2[ci]
     stamp = (_PEAK_LOGIT - _BG_KEY_LOGIT) * np.exp(-d2 / 2.0) + _BG_KEY_LOGIT
-    np.maximum.at(key, base.repeat(area) + row[ri] * w_cells + col[ci],
-                  stamp.astype(np.float32))
+    np.maximum.at(key, row[ri] * w_cells + col[ci], stamp.astype(np.float32))
 
 
-def _plan(layout: dict) -> _Plan:
-    """Read one layout record into its ``_Plan``. Every key a render
-    needs is read here, so a malformed record raises before any page of
-    its batch is painted."""
-    wc = int(math.ceil(layout["page_w"] / SCALE))
-    hc = int(math.ceil(layout["page_h"] / SCALE))
-    if hc < 0 or wc < 0:
-        raise ValueError("negative dimensions are not allowed")
+def _stamp_maps(layout: dict, h_cells: int, w_cells: int) -> np.ndarray:
+    """Render the page's (N_CH, h_cells, w_cells) logit maps from the
+    layout record.
+
+    The glyphs' Gaussian key stamps are written in whole-array passes
+    (``_stamp_key``): each glyph contributes the outer sum of its squared
+    row and column distances over its ±4σ window, the windows of up to
+    ``STAMP_CHUNK`` cells are flattened into one array, and
+    ``np.maximum.at`` folds them into the key channel (a max is
+    order-free, so the result is the glyph-by-glyph fold's). The
+    center cells of the size and code channels are assigned in glyph
+    order, so where two glyphs share a center cell the last one wins."""
+    hm = np.zeros((N_CH, h_cells, w_cells), dtype=np.float32)
+    hm[CH_KEY] = _BG_KEY_LOGIT
+    hm[CH_C1:CH_C8 + 1] = _OFF_LOGIT
+    hm[CH_LINE] = _OFF_LOGIT
+    hm[CH_SEP] = _OFF_LOGIT
+
     gl = layout["glyphs"]
-    win = tuple(np.zeros(0, np.float64) for _ in range(4)) + tuple(
-        np.zeros(0, np.int64) for _ in range(4))
-    cells = np.zeros(0, np.int64)
-    vals = np.zeros((len(_CENTER_CH), 0), np.float32)
     if gl:
         gx = np.array([g["cx"] for g in gl], dtype=np.float64) / SCALE
         gy = np.array([g["cy"] for g in gl], dtype=np.float64) / SCALE
@@ -163,50 +143,61 @@ def _plan(layout: dict) -> _Plan:
         sy = np.maximum(np.array([g["h"] for g in gl], dtype=np.float64)
                         / SCALE / 4.0, 1.0)
         x0 = np.maximum(0, (gx - 4 * sx).astype(np.int64))
-        x1 = np.minimum(wc, (gx + 4 * sx).astype(np.int64) + 1)
+        x1 = np.minimum(w_cells, (gx + 4 * sx).astype(np.int64) + 1)
         y0 = np.maximum(0, (gy - 4 * sy).astype(np.int64))
-        y1 = np.minimum(hc, (gy + 4 * sy).astype(np.int64) + 1)
-        ok = ((gx >= -8) & (gx < wc + 8) & (gy >= -8)
-              & (gy < hc + 8) & (x0 < x1) & (y0 < y1))
+        y1 = np.minimum(h_cells, (gy + 4 * sy).astype(np.int64) + 1)
+        ok = ((gx >= -8) & (gx < w_cells + 8) & (gy >= -8)
+              & (gy < h_cells + 8) & (x0 < x1) & (y0 < y1))
         kept = np.flatnonzero(ok)
         gx, gy, sx, sy = gx[ok], gy[ok], sx[ok], sy[ok]
-        x0, y0 = x0[ok], y0[ok]
-        win = (gx, gy, sx, sy, x0, y0, x1[ok] - x0, y1[ok] - y0)
+        x0, x1, y0, y1 = x0[ok], x1[ok], y0[ok], y1[ok]
+
+        # windows go in chunks of about STAMP_CHUNK cells, so the flat
+        # temporaries stay bounded however many glyphs the layout holds
+        nx, ny = x1 - x0, y1 - y0
+        area = nx * ny
+        cuts = np.flatnonzero(np.diff((np.cumsum(area) - area)
+                                      // STAMP_CHUNK)) + 1
+        key = hm[CH_KEY].reshape(-1)
+        for g in np.split(np.arange(len(area)), cuts):
+            _stamp_key(key, w_cells, gx[g], gy[g], sx[g], sy[g],
+                       x0[g], y0[g], nx[g], ny[g])
 
         cix, ciy = np.rint(gx).astype(np.int64), np.rint(gy).astype(np.int64)
-        on = (cix >= 0) & (cix < wc) & (ciy >= 0) & (ciy < hc)
-        cells = ciy[on] * wc + cix[on]
+        on = (cix >= 0) & (cix < w_cells) & (ciy >= 0) & (ciy < h_cells)
+        cells = ciy[on] * w_cells + cix[on]
         # last writer wins: keep each cell's last glyph
         _, last = np.unique(cells[::-1], return_index=True)
         pick = len(cells) - 1 - last
         cells = cells[pick]
         writers = [gl[i] for i in kept[on][pick].tolist()]
         on_off = (_OFF_LOGIT, _ON_LOGIT)
-        vals = np.array([
-            [math.log(g["w"] / SIZE_NORM) + SIZE_BIAS for g in writers],
-            [math.log(g["h"] / SIZE_NORM) + SIZE_BIAS for g in writers],
-            [on_off[bool(g["ruby"])] for g in writers],
-            [on_off[bool(g["rubybase"] or g["ruby"])] for g in writers],
-            [on_off[bool(g["emphasis"])] for g in writers],
-            [on_off[bool(g["space"])] for g in writers]],
-            dtype=np.float64).reshape(len(_CENTER_CH), -1).astype(np.float32)
+        for ch, vals in (
+                (CH_SZX, [math.log(g["w"] / SIZE_NORM) + SIZE_BIAS
+                          for g in writers]),
+                (CH_SZY, [math.log(g["h"] / SIZE_NORM) + SIZE_BIAS
+                          for g in writers]),
+                (CH_C1, [on_off[bool(g["ruby"])] for g in writers]),
+                (CH_C2, [on_off[bool(g["rubybase"] or g["ruby"])]
+                         for g in writers]),
+                (CH_C4, [on_off[bool(g["emphasis"])] for g in writers]),
+                (CH_C8, [on_off[bool(g["space"])] for g in writers])):
+            hm[ch].reshape(-1)[cells] = np.array(vals, dtype=np.float64)
 
-    lines = []
     for tl in layout["textlines"]:
         x0 = int(round(tl["x1"] / SCALE))
         x1 = int(round(tl["x2"] / SCALE))
         y0 = int(round(tl["y1"] / SCALE))
         y1 = int(round(tl["y2"] / SCALE))
         if tl["vertical"]:
-            lo, hi = max(0, min(y0, y1)), min(hc - 1, max(y0, y1))
-            if 0 <= x0 < wc and lo <= hi:
-                lines.append((lo, hi, x0, x0))
+            lo, hi = max(0, min(y0, y1)), min(h_cells - 1, max(y0, y1))
+            if 0 <= x0 < w_cells and lo <= hi:
+                hm[CH_LINE, lo:hi + 1, x0] = _ON_LOGIT
         else:
-            lo, hi = max(0, min(x0, x1)), min(wc - 1, max(x0, x1))
-            if 0 <= y0 < hc and lo <= hi:
-                lines.append((y0, y0, lo, hi))
+            lo, hi = max(0, min(x0, x1)), min(w_cells - 1, max(x0, x1))
+            if 0 <= y0 < h_cells and lo <= hi:
+                hm[CH_LINE, y0, lo:hi + 1] = _ON_LOGIT
 
-    seps = []
     for sp in layout.get("seps", []):
         x0 = int(round(sp["x1"] / SCALE))
         x1 = int(round(sp["x2"] / SCALE))
@@ -221,81 +212,14 @@ def _plan(layout: dict) -> _Plan:
             # below would raise — one bad stroke must not poison the page
         logit = _ON_LOGIT if v >= 0.98 else math.log(v / (1.0 - v))
         if y0 == y1:
-            lo, hi = max(0, min(x0, x1)), min(wc - 1, max(x0, x1))
-            if 0 <= y0 < hc and lo <= hi:
-                seps.append((y0, y0, lo, hi, logit))
+            lo, hi = max(0, min(x0, x1)), min(w_cells - 1, max(x0, x1))
+            if 0 <= y0 < h_cells and lo <= hi:
+                hm[CH_SEP, y0, lo:hi + 1] = logit
         elif x0 == x1:
-            lo, hi = max(0, min(y0, y1)), min(hc - 1, max(y0, y1))
-            if 0 <= x0 < wc and lo <= hi:
-                seps.append((lo, hi, x0, x0, logit))
+            lo, hi = max(0, min(y0, y1)), min(h_cells - 1, max(y0, y1))
+            if 0 <= x0 < w_cells and lo <= hi:
+                hm[CH_SEP, lo:hi + 1, x0] = logit
 
-    gcx = np.array([g["cx"] for g in gl], dtype=np.float64) / SCALE
-    gcy = np.array([g["cy"] for g in gl], dtype=np.float64) / SCALE
-    # a cell holds the last glyph centered on it
-    at = dict(zip(zip(np.rint(gcy).astype(np.int64).tolist(),
-                      np.rint(gcx).astype(np.int64).tolist()),
-                  range(len(gl))))
-    cps = np.array([g["cp"] for g in gl], dtype=np.int64)
-    return _Plan(hc, wc, win, cells, vals, lines, seps, at, gl, cps)
-
-
-def _paint(plans: list[_Plan], rows: np.ndarray, w_cells: int
-           ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The key, line and separator logit maps of ``plans``, page k's
-    cells at rows ``rows[k]`` onward of one map ``w_cells`` wide; every
-    cell no page owns keeps its channel's background. The glyphs' key
-    stamps go in whole-array passes (``_stamp_key``) of up to
-    ``STAMP_CHUNK`` window cells, so the flat temporaries stay bounded
-    however many glyphs the pages hold; ``np.maximum.at`` folds them
-    into the key channel, and a max is order-free, so the result is the
-    glyph-by-glyph fold's."""
-    h_cells = int(rows[-1]) + plans[-1].hc if plans else 0
-    key = np.full((h_cells, w_cells), _BG_KEY_LOGIT, dtype=np.float32)
-    line = np.full((h_cells, w_cells), _OFF_LOGIT, dtype=np.float32)
-    sep = np.full((h_cells, w_cells), _OFF_LOGIT, dtype=np.float32)
-    gx, gy, sx, sy, x0, y0, nx, ny = (
-        np.concatenate(part) for part in zip(*(pl.win for pl in plans)))
-    base = np.repeat(rows * w_cells, [len(pl.win[0]) for pl in plans])
-    area = nx * ny
-    cuts = np.flatnonzero(np.diff((np.cumsum(area) - area)
-                                  // STAMP_CHUNK)) + 1
-    flat = key.reshape(-1)
-    for g in np.split(np.arange(len(area)), cuts):
-        _stamp_key(flat, w_cells, base[g], gx[g], gy[g], sx[g], sy[g],
-                   x0[g], y0[g], nx[g], ny[g])
-    for r, pl in zip(rows.tolist(), plans):
-        for y_lo, y_hi, x_lo, x_hi in pl.lines:
-            line[r + y_lo:r + y_hi + 1, x_lo:x_hi + 1] = _ON_LOGIT
-        for y_lo, y_hi, x_lo, x_hi, logit in pl.seps:
-            sep[r + y_lo:r + y_hi + 1, x_lo:x_hi + 1] = logit
-    return key, line, sep
-
-
-def render_page_heatmaps(layout: dict) -> np.ndarray:
-    """Surrogate forward pass of one page: its (N_CH, h, w) logit maps.
-
-    With the real CNN, tiles are mandatory (fixed 768×768 input) and the
-    page map is the interior-masked overlap-max merge of per-tile outputs
-    (P1+P2+A1, process_ocr_base.py:480-516, ``tile_windows``). For the
-    deterministic surrogate the merge is *provably identical* to stamping
-    the page directly: every stamp's support radius (4σ ≤ 8 cells) is
-    within the tile margin used to skip out-of-tile glyphs, so each cell's
-    interior tile sees exactly the glyphs that can touch it. The
-    equivalence is pinned by tests/test_detect.py::
-    test_tiled_merge_equals_direct against the tile-by-tile render kept
-    in tests/detect_reference.py. The center cells of the size and code
-    channels are assigned in glyph order, so where two glyphs share a
-    center cell the last one wins. The pipeline never builds these
-    maps: ``_surrogate_forwards`` paints the key, line and separator
-    channels of many pages at once and reads the others off the plan.
-    """
-    pl = _plan(layout)
-    hm = np.zeros((N_CH, pl.hc, pl.wc), dtype=np.float32)
-    hm[CH_KEY], hm[CH_LINE], hm[CH_SEP] = _paint([pl], np.zeros(1, np.int64),
-                                                 pl.wc)
-    hm[CH_C1:CH_C8 + 1] = _OFF_LOGIT
-    for ch, v in zip(_CENTER_CH, pl.vals):
-        hm[ch].reshape(-1)[pl.cells] = v
     return hm
 
 
@@ -328,6 +252,25 @@ def tile_windows(hc: int, wc: int
             yield ((oy, ox),
                    np.s_[:, oy + y_lo:oy + y_hi, ox + x_lo:ox + x_hi],
                    np.s_[:, y_lo:y_hi, x_lo:x_hi])
+
+
+def render_page_heatmaps(layout: dict) -> np.ndarray:
+    """Surrogate forward pass: page logit maps in one stamp.
+
+    With the real CNN, tiles are mandatory (fixed 768×768 input) and the
+    page map is the interior-masked overlap-max merge of per-tile outputs
+    (P1+P2+A1, process_ocr_base.py:480-516, ``tile_windows``). For the
+    deterministic surrogate the merge is *provably identical* to stamping
+    the page directly: every stamp's support radius (4σ ≤ 8 cells) is
+    within the tile margin used to skip out-of-tile glyphs, so each cell's
+    interior tile sees exactly the glyphs that can touch it. The
+    equivalence is pinned by tests/test_detect.py::
+    test_tiled_merge_equals_direct against the tile-by-tile render kept
+    in tests/detect_reference.py.
+    """
+    wc = int(math.ceil(layout["page_w"] / SCALE))
+    hc = int(math.ceil(layout["page_h"] / SCALE))
+    return _stamp_maps(layout, hc, wc)
 
 
 def maxpool3x3(p: np.ndarray) -> np.ndarray:
@@ -457,79 +400,40 @@ def greedy_nms(boxes: np.ndarray, hists: np.ndarray | None = None,
     return keep
 
 
-class _Forward(NamedTuple):
-    """What the one decode reads of a page after either forward pass:
-    the page size in cells, the key peaks (cells and probabilities),
-    ``read(ch, ys, xs)`` for the CH_* logits at given cells, the line and
-    separator runs (``_run_parts``), ``contrast(ys, xs, cx, cy, w, h)``
-    for each box's P6 score and ``features(ys, xs)`` for its
-    (n, FEATURE_DIM) float32 features."""
-    shape: tuple[int, int]
-    ys: np.ndarray
-    xs: np.ndarray
-    pv: np.ndarray
-    read: Callable
-    runs: list
-    contrast: Callable
-    features: Callable
-
-
-def detect_pages(layouts: list[dict], model=None) -> list:
-    """The detect stage over many pages: the forward passes, then the one
-    decode (``_decode``) page by page. Returns, per page, its
-    ``(boxes, runs)`` arrays, or the exception that page raised, so a
-    malformed page never costs the others their batch.
+def detect_boxes(layout: dict, model=None) -> tuple[dict, list]:
+    """Full detect stage for one page: a forward pass, then the one
+    decode (``_decode``).
 
     ``model`` comes from model_registry.get_detector_model(): ``None`` for
-    the surrogate (``_surrogate_forwards``: maps rendered from the layout
-    records, many pages a canvas) or a real forward-pass object
-    (``_real_forward`` over operators/models.py, page by page: rasterize,
-    tile, batched CNN forward, interior-mask merge).
+    the surrogate (``_surrogate_forward``: maps rendered from the layout
+    record) or a real forward-pass object (``_real_forward`` over
+    operators/models.py: rasterize, tile, batched CNN forward,
+    interior-mask merge).
 
-    boxes: p, cx, cy, w, h, code1..code8 (n,) float64 and feature
-        (n, FEATURE_DIM) float32, in decode order;
-    runs: ``[(line cells, line values), (sep cells, sep values)]``,
-        cells (k, 3) int64 rows of (y, x1, x2), inclusive heatmap cells.
+    Returns (boxes, runs):
+      boxes: p, cx, cy, w, h, code1..code8 (n,) float64 and feature
+             (n, FEATURE_DIM) float32, in decode order;
+      runs:  ``_run_parts``: ``[(line cells, line values), (sep cells,
+             sep values)]``, cells (k, 3) int64 rows of (y, x1, x2),
+             inclusive heatmap cells.
     """
-    out: list = [None] * len(layouts)
-    plans = {}
-    for k, layout in enumerate(layouts):
-        try:
-            plans[k] = _plan(layout) if model is None else layout
-        except Exception as e:  # noqa: BLE001 — this page only
-            out[k] = e
-    forwards = (_surrogate_forwards(list(plans.values())) if model is None
-                else (_real_forward(lo, model) for lo in plans.values()))
-    # each page is decoded as its forward comes, so the surrogate holds
-    # one canvas at a time; a forward that raises ends the stream, and
-    # the pages left run one at a time
-    todo = list(plans)
-    try:
-        for k, fw in zip(plans, forwards):
-            try:
-                out[k] = _decode(layouts[k], fw)
-            except Exception as e:  # noqa: BLE001 — this page only
-                out[k] = e
-            todo.remove(k)
-    except Exception as e:  # noqa: BLE001 — isolate the failing page
-        for k in todo:
-            out[k] = (e if len(plans) == 1
-                      else detect_pages([layouts[k]], model)[0])
-    return out
+    if model is None:
+        forward = _surrogate_forward(layout)
+    else:
+        forward = _real_forward(layout, model)
+    return _decode(layout, *forward)
 
 
-def detect_page(layout: dict, model=None) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """``detect_pages`` for one page, as frames (a batch of one):
+def detect_page(layout: dict, model=None
+                ) -> tuple[pd.DataFrame, pd.DataFrame]:
+    """``detect_boxes`` as frames:
 
       boxes: box_id, p, cx, cy, w, h, code1..code8, feature (100 float32,
              packed bytes)
       runs:  channel ('line'|'sep'), y (cell row), x1, x2 (inclusive
              cells), v (the rounded value)
     """
-    res = detect_pages([layout], model)[0]
-    if isinstance(res, Exception):
-        raise res
-    boxes, runs = res
+    boxes, runs = detect_boxes(layout, model)
     feats = boxes["feature"]
     return (pd.DataFrame({
         "box_id": np.arange(len(feats), dtype=np.int64),
@@ -540,96 +444,46 @@ def detect_page(layout: dict, model=None) -> tuple[pd.DataFrame, pd.DataFrame]:
         .reshape(-1).tolist()}), _runs_frame(runs))
 
 
-def _surrogate_forwards(plans: list[_Plan]) -> Iterator[_Forward]:
-    """Surrogate forward pass of many pages: the pages' key, line and
-    separator maps stacked into canvases of about ``CANVAS_CELLS`` cells,
-    one background row between pages, so one sigmoid, one 3×3 max-pool,
-    one peak scan at CUT_OFF and one run scan (``_run_parts``) serve
-    every page of a canvas; ``feature_embedding`` runs once over every
-    glyph. Background cells never peak nor run and never raise a
-    neighbour's pool, so each page gets what its own maps give. The
-    size and code channels are set only at glyph center cells: a page
-    reads them off its plan (``_Plan.cells``). A box reads the glyph
-    whose center cell is its own: P6 scores that glyph's two-tone patch
-    (``contrast_score``), the feature is its ``feature_embedding``."""
-    chunk: list[_Plan] = []
-    rows = width = 0
-    for pl in plans:
-        if chunk and (rows + pl.hc) * max(width, pl.wc) > CANVAS_CELLS:
-            yield from _canvas_forwards(chunk)
-            chunk, rows, width = [], 0, 0
-        chunk.append(pl)
-        rows, width = rows + pl.hc + 1, max(width, pl.wc)
-    if chunk:
-        yield from _canvas_forwards(chunk)
+def _surrogate_forward(layout: dict) -> tuple:
+    """Surrogate forward pass: the page maps of ``render_page_heatmaps``,
+    the key probability and its 3×3 max-pooled peaks at CUT_OFF. A box
+    reads the glyph whose center cell is its own: P6 scores that glyph's
+    two-tone patch (``contrast_score``), the feature is its
+    ``feature_embedding``."""
+    maps = render_page_heatmaps(layout)
+    p = sigmoid(maps[CH_KEY])
+    peaks = (p >= maxpool3x3(p)) & (p >= CUT_OFF)
 
-
-def _canvas_forwards(plans: list[_Plan]) -> list[_Forward]:
-    hcs = np.array([pl.hc for pl in plans], dtype=np.int64)
-    rows = np.cumsum(hcs + 1) - hcs - 1
-    w_cells = max(pl.wc for pl in plans)
-    key, line, sep = _paint(plans, rows, w_cells)
-    p = _sigmoid_bg(key, _BG_KEY_LOGIT)
-    ys, xs = mask_cells((p >= maxpool3x3(p)) & (p >= CUT_OFF))
-    runs = _run_parts(_sigmoid_bg(line, _OFF_LOGIT), _sigmoid_bg(sep, _OFF_LOGIT))
-    n_glyphs = [len(pl.cps) for pl in plans]
-    emb = feature_embedding(np.concatenate([pl.cps for pl in plans]))
-    out = []
-    for r, pl, e0 in zip(rows.tolist(), plans,
-                         (np.cumsum(n_glyphs) - n_glyphs).tolist()):
-        lo, hi = np.searchsorted(ys, [r, r + pl.hc])
-        page_runs = []
-        for cells, v in runs:
-            a, b = np.searchsorted(cells[:, 0], [r, r + pl.hc])
-            page_runs.append((cells[a:b] - [r, 0, 0], v[a:b]))
-        out.append(_page_forward(pl, ys[lo:hi] - r, xs[lo:hi],
-                                 p[ys[lo:hi], xs[lo:hi]], sep[r:r + pl.hc],
-                                 page_runs, emb[e0:e0 + len(pl.cps)]))
-    return out
-
-
-def _sigmoid_bg(logits: np.ndarray, bg: float) -> np.ndarray:
-    """``sigmoid(logits)`` of a map that mostly holds ``bg``: the
-    background value once, every other cell's own."""
-    out = np.empty_like(logits)
-    out.fill(sigmoid(np.array([bg], dtype=logits.dtype))[0])
-    m = logits != bg
-    out[m] = sigmoid(logits[m])
-    return out
-
-
-def _page_forward(pl: _Plan, ys, xs, pv, sep, runs, emb) -> _Forward:
-    def read(ch, y, x):
-        if ch == CH_SEP:
-            return sep[y, x]
-        bg = _CENTER_BG[_CENTER_CH.index(ch)]
-        if not len(pl.cells):
-            return np.full(np.shape(y), bg)
-        q = y * pl.wc + x
-        pos = np.minimum(np.searchsorted(pl.cells, q), len(pl.cells) - 1)
-        return np.where(pl.cells[pos] == q,
-                        pl.vals[_CENTER_CH.index(ch)][pos], bg)
+    gl = layout["glyphs"]
+    gcx = np.array([g["cx"] for g in gl], dtype=np.float64) / SCALE
+    gcy = np.array([g["cy"] for g in gl], dtype=np.float64) / SCALE
+    # a cell holds the last glyph centered on it
+    at = dict(zip(zip(np.rint(gcy).astype(np.int64).tolist(),
+                      np.rint(gcx).astype(np.int64).tolist()),
+                  range(len(gl))))
 
     def glyphs(ys, xs):
-        return [pl.at.get(cell, -1) for cell in zip(ys.tolist(), xs.tolist())]
+        return [at.get(cell, -1) for cell in zip(ys.tolist(), xs.tolist())]
 
     def contrast(ys, xs, cx, cy, w, h):
-        tone = [float(pl.glyphs[gi].get("contrast", 1.0)) if gi >= 0
-                else 1.0 for gi in glyphs(ys, xs)]
+        tone = [float(gl[gi].get("contrast", 1.0)) if gi >= 0 else 1.0
+                for gi in glyphs(ys, xs)]
         return np.array([contrast_score(*box) for box in
                          zip(w.tolist(), h.tolist(), tone)], dtype=np.float64)
 
     def features(ys, xs):
+        cps = np.array([g["cp"] for g in gl], dtype=np.int64)
+        emb = (feature_embedding(cps) if len(gl)
+               else np.zeros((0, FEATURE_DIM), np.float32))
         gi = np.array(glyphs(ys, xs), dtype=np.int64)
         feats = np.zeros((len(ys), FEATURE_DIM), dtype=np.float32)
         feats[gi >= 0] = emb[gi[gi >= 0]]
         return feats
 
-    return _Forward((pl.hc, pl.wc), ys, xs, pv, read, runs, contrast,
-                    features)
+    return maps, p, peaks, contrast, features
 
 
-def _real_forward(layout: dict, model) -> _Forward:
+def _real_forward(layout: dict, model) -> tuple:
     """Real-model forward pass: rasterize -> white-pad -> 768px tiles ->
     batched CNN forward (10+100-channel output, models/detector.py:
     203-230) -> interior-mask merge in tile order (``tile_windows``; heat
@@ -664,8 +518,6 @@ def _real_forward(layout: dict, model) -> _Forward:
     page = np.nan_to_num(page[:, :hcp, :wcp], neginf=-30.0)
     fpage = fpage[:, :hcp, :wcp]
     p = sigmoid(page[1])
-    maps = np.delete(page, 1, axis=0)
-    ys, xs = mask_cells(p >= CUT_OFF)
 
     def contrast(ys, xs, cx, cy, w, h):
         hists = np.zeros(len(ys))
@@ -681,21 +533,21 @@ def _real_forward(layout: dict, model) -> _Forward:
     def features(ys, xs):
         return fpage[:, ys, xs].T.astype(np.float32)
 
-    return _Forward(maps.shape[1:], ys, xs, p[ys, xs],
-                    lambda ch, y, x: maps[ch, y, x],
-                    _run_parts(sigmoid(maps[CH_LINE]), sigmoid(maps[CH_SEP])),
-                    contrast, features)
+    return np.delete(page, 1, axis=0), p, p >= CUT_OFF, contrast, features
 
 
 _BOX_COLS = ("p", "cx", "cy", "w", "h", "code1", "code2", "code4", "code8")
 
 
-def _decode(layout: dict, fw: _Forward) -> tuple[dict, list]:
-    """The detect decode after either forward pass (``_Forward``): peak
-    ranking, size decode and filter, contrast-gated greedy IoU NMS,
-    separator-mask filter and 3×3 code max; the boxes as arrays, the
-    runs as the forward pass found them."""
-    ys, xs, pv = fw.ys, fw.xs, fw.pv
+def _decode(layout: dict, maps: np.ndarray, p: np.ndarray,
+            peaks: np.ndarray, contrast, features) -> tuple[dict, list]:
+    """The detect decode after either forward pass: ``maps`` are the
+    (N_CH, h, w) page logits in CH_* order, ``p`` the key probability
+    and ``peaks`` its peak cells; ``contrast(ys, xs, cx, cy, w, h)`` gives
+    each box's P6 score and ``features(ys, xs)`` its (n, FEATURE_DIM)
+    float32 features."""
+    ys, xs = mask_cells(peaks)
+    pv = p[ys, xs]
 
     # W4 peak ranking: score desc, then (y, x) asc for determinism
     order = np.lexsort((xs, ys, -pv))
@@ -703,8 +555,8 @@ def _decode(layout: dict, fw: _Forward) -> tuple[dict, list]:
 
     # P5 size decode (the inverse of the size label, dataset/processer.pyx:
     # 164-165), then drop degenerate / page-exceeding sizes
-    w = np.exp(fw.read(CH_SZX, ys, xs).astype(np.float64) - SIZE_BIAS) * SIZE_NORM
-    h = np.exp(fw.read(CH_SZY, ys, xs).astype(np.float64) - SIZE_BIAS) * SIZE_NORM
+    w = np.exp(maps[CH_SZX, ys, xs].astype(np.float64) - SIZE_BIAS) * SIZE_NORM
+    h = np.exp(maps[CH_SZY, ys, xs].astype(np.float64) - SIZE_BIAS) * SIZE_NORM
     cx = xs.astype(np.float64) * SCALE
     cy = ys.astype(np.float64) * SCALE
     ok = (w > 1.0) & (h > 1.0) & (w < layout["page_w"]) & (h < layout["page_h"])
@@ -713,7 +565,7 @@ def _decode(layout: dict, fw: _Forward) -> tuple[dict, list]:
     # P6: contrast filter — per-box two-cluster histogram distance,
     # threshold median(all)/5 (process_ocr_base.py:543-557); applied
     # inside the greedy NMS loop exactly like the reference
-    hists = fw.contrast(ys, xs, cx, cy, w, h)
+    hists = contrast(ys, xs, cx, cy, w, h)
     th_hist = (float(np.median(hists)) / 5.0) if len(hists) else 0.0
 
     # T3: greedy IoU NMS in score order, P6-gated
@@ -721,22 +573,22 @@ def _decode(layout: dict, fw: _Forward) -> tuple[dict, list]:
     ys, xs, pv, w, h, cx, cy = ys[keep], xs[keep], pv[keep], w[keep], h[keep], cx[keep], cy[keep]
 
     # P7: separator-mask filter — drop boxes centered on separator pixels
-    ok = sigmoid(fw.read(CH_SEP, ys, xs)) <= 0.5
+    ok = sigmoid(maps[CH_SEP, ys, xs]) <= 0.5
     ys, xs, pv, w, h, cx, cy = ys[ok], xs[ok], pv[ok], w[ok], h[ok], cx[ok], cy[ok]
 
     # A2: code flags max-pooled over the 3×3 neighborhood of the center:
-    # one gather per code channel at the 9 clipped neighbours
-    hc, wc = fw.shape
+    # one gather of the 4 code channels at the 9 clipped neighbours
+    hc, wc = maps.shape[1:]
     yy = np.clip(ys + _NEIGHBOUR_DY[:, None], 0, hc - 1)
     xx = np.clip(xs + _NEIGHBOUR_DX[:, None], 0, wc - 1)
-    cmax = np.stack([fw.read(ch, yy, xx) for ch in _CODE_CH]).max(axis=1)
+    cmax = maps[_CODE_CH[:, None, None], yy, xx].max(axis=1)
     codes = sigmoid(cmax.astype(np.float64))
 
     boxes = dict(zip(_BOX_COLS, (pv.astype(np.float64), cx, cy, w, h,
                                  *codes)))
-    boxes["feature"] = np.ascontiguousarray(fw.features(ys, xs),
+    boxes["feature"] = np.ascontiguousarray(features(ys, xs),
                                             dtype=np.float32)
-    return boxes, fw.runs
+    return boxes, _run_parts(sigmoid(maps[CH_LINE]), sigmoid(maps[CH_SEP]))
 
 
 def _run_parts(line_vals: np.ndarray, sep_vals: np.ndarray) -> list:

@@ -36,7 +36,7 @@ def get_detector_model(weights_path: str | None = None):
     """Resolved once per (worker process, weights path) — lru_cache at
     module scope = per-process singleton; Spark reuses workers across
     tasks. ``None`` selects the surrogate forward pass
-    (detect.py:_surrogate_forwards)."""
+    (detect.py:_surrogate_forward)."""
     path = weights_path or os.environ.get(WEIGHTS_ENV) or None
     if path:
         from .models import load_detector

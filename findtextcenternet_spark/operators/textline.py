@@ -2223,10 +2223,6 @@ def process_line(P: Page, id_max: int, chains: list[list[int]],
         shallower[first], np.diff(np.r_[first, len(step)])))
     accept = np.flatnonzero(alive & foreign & ~perp
                             & (ratio <= ALLOW_SIZEDIFF))
-    # a step meeting the same chain again one cell deeper changes nothing
-    # (the chain is linked, or the step ended above): drop those repeats
-    key = step[accept] * id_max + oc[accept]
-    accept = accept[np.r_[True, key[1:] != key[:-1]][:len(key)]]
     # replay the accept-candidates in (scan, step, depth) order: whether
     # one ends its step's walk depends on the dedup state (a chain
     # already linked lets the reference keep walking)

@@ -7,11 +7,11 @@ One plan:
 
 The kernel splits each Arrow batch by magic bytes and runs the HTML
 subset batch-vectorized, the PDF subset per-page, and the raster subset
-through one batched detect front half, page by page up to its windows,
-then ONE mask-predict decode over every window of the batch — the
-distributed form of ``golden.extract_page_golden``, which stays one page
-at a time, so "batched equals golden for each page" is a real
-differential check (tests/test_raster_batch.py). Why one kernel and not a union of
+page by page up to its windows, then ONE mask-predict decode over every
+window of the batch — the distributed form of
+``golden.extract_page_golden``, which stays one page at a time, so
+"batched equals golden for each page" is a real differential check
+(tests/test_raster_batch.py). Why one kernel and not a union of
 per-kind legs over the spread: Catalyst pushes each leg's kind filter
 BELOW its repartition, so such a union executes one source scan, one
 exchange and one Python worker chain per kind.
@@ -50,7 +50,7 @@ from .operators.decode import (
     segment_windows,
     tokenize_boxes,
 )
-from .operators.detect import detect_pages, parse_layout
+from .operators.detect import detect_boxes, parse_layout
 from .operators.group import order_boxes
 from .operators.pdf import PDF_MAGIC, extract_pdf_text
 from .sources import PAGES_SCHEMA
@@ -190,31 +190,22 @@ def _decode_codes(staged: list, head) -> list[list[np.ndarray]]:
 def _raster_records(pages: list[tuple[str, bytes]], model, head
                     ) -> list[dict]:
     """The raster leg over one Arrow batch's raster pages, one record each:
-    ``golden.extract_raster_page``'s steps with the detect front half and
-    the decode batched. Parse page by page, one ``detect_pages`` for the
-    batch, then group → tokenize → segment page by page on arrays (no
-    frames between the stages), then one ``_decode_codes`` for every
-    window of the batch, then emit and assemble page by page. A page
-    that raises in a per-page step, or in its own part of ``detect_pages``,
-    gets its error row; if the batched decode raises, the pages decode one
-    at a time, so only the failing page is quarantined."""
+    parse → detect → group → tokenize → segment page by page on arrays
+    (no frames between the stages), then one ``_decode_codes`` for every
+    window of the batch, then emit and assemble page by page —
+    ``golden.extract_raster_page``'s steps with the decode batched. A
+    page that raises in a per-page step gets its error row; if the
+    batched decode raises, the pages decode one at a time, so only the
+    failing page is quarantined."""
     recs: list[dict] = [{"url": url, "text": None, "aozora": None,
                          "noruby": None, "spans": None, "lines": None,
                          "blocks": None, "path": "raster", "error": None}
                         for url, _ in pages]
-    layouts = {}
+    staged = []  # (k, tokens, meta, windows)
     for k, (_, b) in enumerate(pages):
         try:
-            layouts[k] = parse_layout(b)
-        except Exception as e:  # noqa: BLE001 — quarantine
-            recs[k]["error"] = _error(e)
-    staged = []  # (k, tokens, meta, windows)
-    for k, det in zip(layouts, detect_pages(list(layouts.values()), model)):
-        if isinstance(det, Exception):
-            recs[k]["error"] = _error(det)
-            continue
-        try:
-            boxes, ((line, _), (sep, sep_vals)) = det
+            boxes, ((line, _), (sep, sep_vals)) = detect_boxes(
+                parse_layout(b), model)
             ordered = order_boxes(boxes, line, sep, sep_vals)
             ordered["feature"] = boxes["feature"][ordered["box_id"]]
             tokens, meta = tokenize_boxes(ordered)

@@ -21,7 +21,6 @@ from findtextcenternet_spark.operators.detect import (
     _run_parts,
     _runs_frame,
     detect_page,
-    detect_pages,
     greedy_nms,
     maxpool3x3,
     parse_layout,
@@ -285,35 +284,6 @@ def test_detect_recovers_every_glyph():
         want = {(int(g["cx"]), int(g["cy"])) for g in real}
         assert got == want
         assert (runs["channel"] == "line").sum() > 0
-
-
-@pytest.mark.parametrize("cells", [1, detect.CANVAS_CELLS, 1 << 22])
-def test_batched_front_half_equals_one_page_at_a_time(monkeypatch, cells):
-    """``detect_pages`` stacks pages into canvases of about
-    ``CANVAS_CELLS`` cells (one page each, the default, all in one): every
-    page's boxes and runs equal its own ``detect_page`` frames; a
-    malformed record gets the exception ``detect_page`` raises for it,
-    in its place, and costs the others nothing."""
-    layouts = _raster_layouts(120)
-    layouts[2:2] = [{}, []]
-    layouts.append({"page_w": -8, "page_h": 64, "glyphs": []})
-    monkeypatch.setattr(detect, "CANVAS_CELLS", cells)
-    got = detect_pages(layouts)
-    assert len(layouts) > 12
-    for layout, res in zip(layouts, got):
-        try:
-            boxes, runs = detect_page(layout)
-        except Exception as e:  # noqa: BLE001
-            assert type(res) is type(e) and str(res) == str(e)
-            continue
-        assert not isinstance(res, Exception)
-        got_boxes, got_runs = res
-        for c in boxes.columns[1:-1]:
-            assert np.array_equal(got_boxes[c], boxes[c].to_numpy()), c
-        assert got_boxes["feature"].tobytes() == b"".join(boxes["feature"])
-        pd.testing.assert_frame_equal(_runs_frame(got_runs), runs,
-                                      check_exact=True)
-    assert sum(isinstance(r, Exception) for r in got) == 3
 
 
 def test_multi_tile_page_consistent():
