@@ -40,18 +40,15 @@ def _wrap_documents_as_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _extract_html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML extraction leg over wrapped documents; inverts the wrap, so the
-    DuckDB oracle is simply the original documents table."""
-    from findtextcenternet_spark.pipeline import extract_html_udf
-    from findtextcenternet_spark.plans.relational import spread_input
+    """The extraction plan (``extract_documents``) over wrapped documents;
+    it inverts the wrap, so the DuckDB oracle is simply the original
+    documents table. ``doc_id`` comes back from the url tail."""
+    from findtextcenternet_spark.pipeline import extract_documents
 
-    # the sf documents fixture is a single one-row-group parquet file, so
-    # without the spread the whole pandas-UDF extraction stage runs as ONE
-    # task (optimization guide §2.5); conditional — a no-op on inputs that
-    # already scan wide
-    pages = spread_input(_wrap_documents_as_pages(spark, sf_dir))
-    return pages.select(
-        "doc_id", extract_html_udf(F.col("html")).alias("text"))
+    docs = extract_documents(_wrap_documents_as_pages(spark, sf_dir))
+    return docs.select(
+        F.substring_index("url", "/", -1).cast("long").alias("doc_id"),
+        "text")
 
 
 def _extract_synthetic_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -72,13 +69,13 @@ def _extract_synthetic_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _extract_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poison-pill path: corpus + two injected corrupt pages → the
-    quarantine frame (rows-only check; exact errors asserted in
-    tests/test_lineage.py)."""
+    extraction's error rows, the quarantine (rows-only check; exact
+    errors asserted in tests/test_lineage.py)."""
     import pandas as pd
 
     from findtextcenternet_spark.corpus import RASTER_MARKER, generate_pages
     from findtextcenternet_spark.pipeline import (
-        extract_documents_robust,
+        extract_documents,
         pages_from_pandas,
     )
 
@@ -99,8 +96,8 @@ def _extract_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     pages = pages_from_pandas(
         spark, pd.concat([good, bad], ignore_index=True))
-    docs, quarantine = extract_documents_robust(pages, num_partitions=8)
-    return quarantine.select(
+    docs = extract_documents(pages, num_partitions=8)
+    return docs.filter(F.col("error").isNotNull()).select(
         "url", F.substring("error", 1, 40).alias("error_head"))
 
 

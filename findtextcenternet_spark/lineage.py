@@ -303,7 +303,7 @@ class InMemoryCatalogStore(DocStore):
         return dict(self._compactions)
 
 
-def _settled_urls(store: DocStore, heal: bool) -> DataFrame | None:
+def _settled_urls(store: DocStore) -> DataFrame | None:
     """Urls already settled in the output — extracted OR quarantined (a
     poison page is quarantined exactly once per output directory, never
     re-validated on every resume).
@@ -311,17 +311,16 @@ def _settled_urls(store: DocStore, heal: bool) -> DataFrame | None:
     Reconciles the compact ``_done_urls`` side table against the
     committed docs run_ids: any run committed to docs but not marked
     done (a crash between or during the post-docs appends) contributes
-    its urls from a partition-pruned read — and, with ``heal=True``, is
-    backfilled into ``_done_urls`` (and its error rows into the
-    quarantine mirror) so the NEXT resume is O(done-set) again. Returns
-    None when nothing is settled.
+    its urls from a partition-pruned read and is backfilled into
+    ``_done_urls`` (and its error rows into the quarantine mirror) so
+    the NEXT resume is O(done-set) again. Returns None when nothing is
+    settled.
     """
-    if heal:
-        # a compaction that crashed mid-window can leave the docs table
-        # with BOTH the compacted run and (some of) the runs it replaced
-        # — duplicate rows for every post-pass. Settle it first: marker
-        # present → roll forward; unmarked compact run → roll back.
-        heal_compaction(store)
+    # a compaction that crashed mid-window can leave the docs table with
+    # BOTH the compacted run and (some of) the runs it replaced —
+    # duplicate rows for every post-pass. Settle it first: marker
+    # present → roll forward; unmarked compact run → roll back.
+    heal_compaction(store)
 
     done_any = store.nonempty("done")
     if not done_any and not store.nonempty("docs"):
@@ -339,9 +338,6 @@ def _settled_urls(store: DocStore, heal: bool) -> DataFrame | None:
 
     backfill = functools.reduce(DataFrame.unionByName,
                                 [store.read_run(rid) for rid in missing])
-    if not heal:
-        urls = backfill.select("url")
-        return urls if done is None else urls.unionByName(done)
     # distinct() collapses exact (url, run_id) duplicate rows within this
     # backfill; a url re-extracted under TWO run_ids still lands twice —
     # tolerated, the resume anti-join is set-semantics
@@ -359,13 +355,6 @@ def _settled_urls(store: DocStore, heal: bool) -> DataFrame | None:
         store.append("quarantine", errors)
     store.mark_done(missing)
     return store.read("done").select("url")
-
-
-def extracted_urls(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Read-only view of the settled urls (see ``_settled_urls``): the
-    ``_done_urls`` side table unioned with any committed-but-unrecorded
-    runs. Does not write; ``run_extract`` heals on resume."""
-    return _settled_urls(ParquetDirStore(spark, out_dir), heal=False)
 
 
 def run_extract(pages: DataFrame, out_dir: str,
@@ -396,7 +385,7 @@ def run_extract(pages: DataFrame, out_dir: str,
             f"run_id must not start with {COMPACT_PREFIX!r} "
             "(reserved for compact_docs rewrites)")
 
-    done = _settled_urls(store, heal=True)
+    done = _settled_urls(store)
     todo = pages if done is None else pages.join(done, "url", "left_anti")
 
     t0 = time.time()

@@ -99,13 +99,9 @@ DOC_SCHEMA = T.StructType([
 # ---------------------------------------------------------------- pipeline
 
 
-@F.pandas_udf(T.StringType())
-def extract_html_udf(html: pd.Series) -> pd.Series:
-    return extract_main_text_series(html)
-
-
-# quarantine message for a null page cell: it has no magic bytes, so it
-# settles on the html path
+# quarantine message for a null page cell that carries no reader
+# ``error`` (an archive reader's error row keeps its own text): it has no
+# magic bytes, so it settles on the html path
 NULL_PAGE_ERROR = "NullPage: html column is null"
 
 
@@ -246,15 +242,19 @@ def _unified_impl(it: Iterator[pd.DataFrame], weights_path: str | None
         recs: list[dict | None] = [None] * len(pdf)
         html_idx: list[int] = []
         raster: dict[int, tuple[str, bytes]] = {}
-        for i, (url, blob) in enumerate(zip(pdf["url"], pdf["html"])):
+        reader_errs = (pdf["error"] if "error" in pdf.columns
+                       else [None] * len(pdf))
+        for i, (url, blob, reader_err) in enumerate(
+                zip(pdf["url"], pdf["html"], reader_errs)):
             if blob is None:
                 # a null page cell is malformed input, not a task failure
-                # (ADVICE r4 medium): quarantine it like any poison row.
+                # (ADVICE r4 medium): quarantine it like any poison row,
+                # under the archive reader's own error when it has one.
                 # 'html' path label: a null has no magic bytes, so it
                 # belongs to the catch-all kind.
                 recs[i] = {"url": url, "text": None, "aozora": None,
                            "noruby": None, **empty, "path": "html",
-                           "error": NULL_PAGE_ERROR}
+                           "error": reader_err or NULL_PAGE_ERROR}
                 continue
             b = bytes(blob)
             if b.startswith(RASTER_MARKER):
@@ -307,27 +307,13 @@ def extract_documents(pages: DataFrame,
     url-hash spread → ONE kind-dispatching mapInPandas. ``weights_path``
     routes the raster path through the real-model forward
     (operators/models.py); on a cluster ship the file with
-    ``spark-submit --files`` and pass ``SparkFiles.get(...)`` here."""
-    return (spread_pages(pages, num_partitions).select("url", "html")
+    ``spark-submit --files`` and pass ``SparkFiles.get(...)`` here.
+    An input ``error`` column (the archive readers' row-level error) is
+    carried to the kernel, so a reader's error row is quarantined with
+    the reader's own text."""
+    cols = ["url", "html"] + (["error"] if "error" in pages.columns else [])
+    return (spread_pages(pages, num_partitions).select(*cols)
             .mapInPandas(_make_unified_batches(weights_path), DOC_SCHEMA))
-
-
-def extract_documents_robust(pages: DataFrame,
-                             num_partitions: int | None = None,
-                             ) -> tuple[DataFrame, DataFrame]:
-    """Poison-pill-safe extraction for unbounded corpora.
-
-    The kernel handles its own failures IN-PASS (try/except per page,
-    emitting error rows) — no separate validation probe, so nothing is
-    parsed twice. Returns (docs, quarantine) views over the one combined
-    frame; callers that materialize both should write the combined
-    ``extract_documents`` output once (lineage.py does) instead of
-    executing each view separately."""
-    combined = extract_documents(pages, num_partitions)
-    docs = combined.filter(F.col("error").isNull()).drop("error")
-    quarantine = (combined.filter(F.col("error").isNotNull())
-                  .select("url", "error"))
-    return docs, quarantine
 
 
 def pages_from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:

@@ -27,20 +27,21 @@ def read_pages(spark: SparkSession, path: str, input_format: str, *,
     """The pages frame an extraction run consumes, from any input shape.
 
     ``'parquet'``: a pages parquet. ``'warc'``: a full archive walk; its
-    error rows keep flowing with a null html, so the pipeline
-    quarantines them: an undecodable payload under its own url, a
-    corrupt archive tail under the per-archive
-    ``warc:tail-error:<path>`` url. ``'cdx'``: index-driven — prune by
-    mime/prefix, optionally keep only urls new or changed since the
-    ``cdx_diff_old`` snapshot, collapse re-captures to the newest entry
-    per payload digest (``cdx_dedup``), then range-fetch only the
-    selected records."""
+    error rows keep flowing with a null html and the reader's ``error``
+    text, so the pipeline quarantines them with that text: an
+    undecodable payload under its own url, a corrupt archive tail under
+    the per-archive ``warc:tail-error:<path>`` url. ``'cdx'``:
+    index-driven — prune by mime/prefix, optionally keep only urls new
+    or changed since the ``cdx_diff_old`` snapshot, collapse re-captures
+    to the newest entry per payload digest (``cdx_dedup``), then
+    range-fetch only the selected records (error rows as for
+    ``'warc'``)."""
     from pyspark.sql import functions as F
 
     if input_format == "warc":
         from .warc import read_warc
 
-        return read_warc(spark, path).drop("error")
+        return read_warc(spark, path)
     if input_format != "cdx":
         return spark.read.parquet(path)
 
@@ -67,4 +68,4 @@ def read_pages(spark: SparkSession, path: str, input_format: str, *,
         idx = idx.join(changed, "urlkey", "left_semi")
     if cdx_dedup:
         idx = latest_unique_captures(idx)
-    return fetch_cdx_records(spark, idx).drop("error")
+    return fetch_cdx_records(spark, idx)

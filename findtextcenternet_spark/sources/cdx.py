@@ -9,11 +9,11 @@ ONE record with a byte-range request and decompresses just that member.
 This module builds, publishes, reads, and consumes that index with
 Spark-native grain:
 
-* :func:`build_cdx` — one task per archive (``binaryFile`` +
-  ``mapInPandas``, the same grain as the WARC source); the record walk
-  tracks compressed member offsets, so the index it emits supports
-  range fetches. Corrupt archive tails follow the source's salvage
-  contract (good entries survive, one error row names the archive).
+* :func:`build_cdx` — one task per archive (``warc.per_archive``, the
+  same grain as the WARC source); the record walk tracks compressed
+  member offsets, so the index it emits supports range fetches. Corrupt
+  archive tails follow the source's salvage rule (``warc.salvage``: good
+  entries survive, one error row names the archive).
 * :func:`write_cdxj` / :func:`read_cdxj` — publish the index in the
   crawl's CDXJ text format, range-partitioned by ``urlkey`` and sorted
   within each shard, with a shard manifest carrying first/last keys
@@ -47,11 +47,13 @@ from pyspark.sql import DataFrame, SparkSession
 from . import PAGES_ERROR_SCHEMA, fsutil
 from .fsutil import open_binary
 from .warc import (
-    SALVAGE_ERRORS,
     _PAGES_COLS,
+    archive_files,
     archive_stream,
     iter_responses,
     iter_warc_records,
+    per_archive,
+    salvage,
 )
 
 CDX_SCHEMA = ("urlkey string, warc_ts timestamp, url string, mime string, "
@@ -159,15 +161,14 @@ def iter_cdx_entries(blob: bytes, filename: str) -> list[dict]:
     ``.warc.gz``). When a slice holds several records (whole-file gzip),
     its entries share the slice address and :func:`fetch_cdx_records`
     filters inside it — same result, coarser fetch grain. Corrupt tails
-    stop the walk; the salvaged entries are returned plus one error row
-    naming the archive (``cdx:tail-error:<filename>``), mirroring the
-    WARC source."""
-    rows: list[dict] = []
-    try:
+    stop the walk (``warc.salvage``): the salvaged entries are returned
+    plus one error row naming the archive (``cdx:tail-error:<filename>``),
+    mirroring the WARC source."""
+    def rows() -> Iterator[dict]:
         for offset, length, rec_bytes in _iter_slices(blob):
             for r in iter_responses(io.BytesIO(rec_bytes)):
                 status_line = r.http.get("_status", "").split()
-                rows.append({
+                yield {
                     "urlkey": surt_key(r.url),
                     "warc_ts": r.warc_ts,
                     "url": r.url,
@@ -183,32 +184,23 @@ def iter_cdx_entries(blob: bytes, filename: str) -> list[dict]:
                     "offset": offset,
                     "filename": filename,
                     "error": None,
-                })
-    except SALVAGE_ERRORS as exc:
-        rows.append({"urlkey": f"cdx:tail-error:{filename}",
-                     "warc_ts": None, "url": None, "mime": None,
-                     "status": None, "digest": None, "length": None,
-                     "offset": None, "filename": filename,
-                     "error": f"cdx: {type(exc).__name__}: {exc} "
-                              f"(salvaged {len(rows)} entries)"})
-    return rows
+                }
+    return salvage(rows(), _CDX_COLS,
+                   {"urlkey": f"cdx:tail-error:{filename}",
+                    "filename": filename}, "cdx")
+
+
+def _cdx_frame(blob: bytes, filename: str) -> pd.DataFrame:
+    return pd.DataFrame(iter_cdx_entries(blob, filename), columns=_CDX_COLS)
 
 
 def build_cdx(spark: SparkSession, path: str) -> DataFrame:
-    """WARC files → CDX index DataFrame. One archive per task (the WARC
-    source's grain); output is ~100 bytes/record vs ~50 KB/page, so the
-    index of a 100 TB crawl is ~200 GB — small enough to keep as a
-    regular table and semi-join against every downstream job."""
-    files = spark.read.format("binaryFile").load(path)
-    return files.select("path", "content") \
-        .mapInPandas(_index_kernel, CDX_SCHEMA)
-
-
-def _index_kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for src, blob in zip(pdf["path"], pdf["content"]):
-            yield pd.DataFrame(
-                iter_cdx_entries(bytes(blob), str(src)), columns=_CDX_COLS)
+    """WARC files → CDX index DataFrame. One archive per task
+    (``warc.per_archive``, the WARC source's grain); output is ~100
+    bytes/record vs ~50 KB/page, so the index of a 100 TB crawl is
+    ~200 GB — small enough to keep as a regular table and semi-join
+    against every downstream job."""
+    return per_archive(archive_files(spark, path), _cdx_frame, CDX_SCHEMA)
 
 
 def build_cdx_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -220,8 +212,8 @@ def build_cdx_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     stream appends to the index TABLE; the globally-sorted CDXJ shards
     (:func:`write_cdxj`) are a periodic batch compaction over it, like
     the crawl's own cluster index."""
-    return archive_stream(spark, input_dir) \
-        .mapInPandas(_index_kernel, CDX_SCHEMA)
+    return per_archive(archive_stream(spark, input_dir), _cdx_frame,
+                       CDX_SCHEMA)
 
 
 # --- CDXJ publication (the crawl's text format) -----------------------------
@@ -288,45 +280,32 @@ def read_cdxj(spark: SparkSession, path: str | list[str]) -> DataFrame:
     unparseable shard tails, same salvage contract as every source).
     ``path`` may be a glob or an explicit shard list (the pruned-lookup
     path hands one in)."""
-    files = spark.read.format("binaryFile").load(path)
+    return per_archive(archive_files(spark, path), _cdxj_frame, CDX_SCHEMA)
 
-    def _one(blob: bytes, source: str) -> pd.DataFrame:
-        rows: list[dict] = []
-        try:
-            # decompress INSIDE the salvage try: a truncated shard raises
-            # EOFError/BadGzipFile here, the most common shard corruption
-            text = (gzip.decompress(blob) if blob[:2] == b"\x1f\x8b"
-                    else blob)
-            for line in text.splitlines():
-                if not line.strip():
-                    continue
-                urlkey, ts14, meta_s = line.decode().split(" ", 2)
-                m = json.loads(meta_s)
-                rows.append({
-                    "urlkey": urlkey,
-                    "warc_ts": dt.datetime.strptime(ts14, "%Y%m%d%H%M%S"),
-                    "url": m["url"], "mime": m["mime"],
-                    "status": None if m["status"] == "-"
-                              else int(m["status"]),
-                    "digest": m["digest"],
-                    "length": int(m["length"]), "offset": int(m["offset"]),
-                    "filename": m["filename"], "error": None,
-                })
-        except SALVAGE_ERRORS as exc:
-            rows.append({"urlkey": f"cdx:tail-error:{source}",
-                         "warc_ts": None, "url": None, "mime": None,
-                         "status": None, "digest": None, "length": None,
-                         "offset": None, "filename": source,
-                         "error": f"cdxj: {type(exc).__name__}: {exc} "
-                                  f"(salvaged {len(rows)} entries)"})
-        return pd.DataFrame(rows, columns=_CDX_COLS)
 
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for src, blob in zip(pdf["path"], pdf["content"]):
-                yield _one(bytes(blob), str(src))
-
-    return files.select("path", "content").mapInPandas(_parse, CDX_SCHEMA)
+def _cdxj_frame(blob: bytes, source: str) -> pd.DataFrame:
+    def rows() -> Iterator[dict]:
+        # decompress INSIDE the salvage walk: a truncated shard raises
+        # EOFError/BadGzipFile here, the most common shard corruption
+        text = gzip.decompress(blob) if blob[:2] == b"\x1f\x8b" else blob
+        for line in text.splitlines():
+            if not line.strip():
+                continue
+            urlkey, ts14, meta_s = line.decode().split(" ", 2)
+            m = json.loads(meta_s)
+            yield {"urlkey": urlkey,
+                   "warc_ts": dt.datetime.strptime(ts14, "%Y%m%d%H%M%S"),
+                   "url": m["url"], "mime": m["mime"],
+                   "status": None if m["status"] == "-"
+                             else int(m["status"]),
+                   "digest": m["digest"],
+                   "length": int(m["length"]), "offset": int(m["offset"]),
+                   "filename": m["filename"], "error": None}
+    return pd.DataFrame(
+        salvage(rows(), _CDX_COLS,
+                {"urlkey": f"cdx:tail-error:{source}", "filename": source},
+                "cdxj"),
+        columns=_CDX_COLS)
 
 
 def latest_unique_captures(cdx: DataFrame) -> DataFrame:
@@ -458,6 +437,20 @@ def fetch_cdx_records(spark: SparkSession, cdx: DataFrame,
 
     n = num_partitions or spark.sparkContext.defaultParallelism
 
+    def _records(fname: str, want: dict) -> Iterator[dict]:
+        # local paths via open(); s3/hdfs/gs URIs via pyarrow.fs —
+        # seek+read there IS a ranged GET
+        with open_binary(fname) as f:
+            for (off, ln) in sorted(want):
+                f.seek(off)
+                raw = f.read(ln)
+                if raw[:2] == b"\x1f\x8b":
+                    raw = gzip.decompress(raw)
+                for rec in iter_responses(io.BytesIO(raw)):
+                    if (rec.url, rec.warc_ts.replace(microsecond=0)) \
+                            in want[(off, ln)]:
+                        yield rec.page_row()
+
     def _fetch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows: list[dict] = []
@@ -474,28 +467,9 @@ def fetch_cdx_records(spark: SparkSession, cdx: DataFrame,
                     want.setdefault(
                         (int(r["offset"]), int(r["length"])),
                         set()).add((r["url"], ts))
-                start = len(rows)
-                try:
-                    # local paths via open(); s3/hdfs/gs URIs via
-                    # pyarrow.fs — seek+read there IS a ranged GET
-                    with open_binary(fname) as f:
-                        for (off, ln) in sorted(want):
-                            f.seek(off)
-                            raw = f.read(ln)
-                            if raw[:2] == b"\x1f\x8b":
-                                raw = gzip.decompress(raw)
-                            for rec in iter_responses(io.BytesIO(raw)):
-                                key = (rec.url,
-                                       rec.warc_ts.replace(microsecond=0))
-                                if key in want[(off, ln)]:
-                                    rows.append(rec.page_row())
-                except SALVAGE_ERRORS as exc:
-                    rows.append({
-                        "url": f"cdx-fetch:error:{fname}",
-                        "warc_ts": None, "html": None, "text": None,
-                        "lang": "",
-                        "error": f"cdx-fetch: {type(exc).__name__}: {exc} "
-                                 f"(salvaged {len(rows) - start} rows)"})
+                rows += salvage(_records(fname, want), _PAGES_COLS,
+                                {"url": f"cdx-fetch:error:{fname}",
+                                 "lang": ""}, "cdx-fetch")
             yield pd.DataFrame(rows, columns=_PAGES_COLS)
 
     keep = cdx.filter(cdx.error.isNull()) \

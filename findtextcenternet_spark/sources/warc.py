@@ -25,14 +25,19 @@ HTTP):
 * ``WARC-Target-URI`` → ``url``, ``WARC-Date`` (ISO 8601) → ``warc_ts``,
   decoded HTTP body → ``html``.
 
-One record rule, :func:`iter_responses`, serves every archive walk: the
-pages walk here, and the CDX index and range fetch (``cdx.py``). A
-record whose payload cannot be decoded is a RECORD-level outcome (an
-error row under its own url; the walk goes on). A structurally corrupt
-record poisons only its FILE TAIL, not the task: the walk stops at the
-first unparseable record and reports the rows salvaged before it plus
-an ``error`` marker row, matching the pipeline's row-level quarantine
-convention.
+One seam serves every archive read (the pages walk and the WET reader
+here, the CDX index, CDXJ reader and range fetch in ``cdx.py``):
+
+* :func:`per_archive` — the one-archive-per-task loop over a
+  ``binaryFile`` frame (:func:`archive_files`, :func:`archive_stream`);
+* :func:`iter_responses` — the one record rule: a record whose payload
+  cannot be decoded is a RECORD-level outcome (an error row under its
+  own url; the walk goes on);
+* :func:`salvage` — the one structural-fault rule: a corrupt record
+  poisons only its FILE TAIL, not the task: the walk stops at the first
+  unparseable record and reports the rows salvaged before it plus one
+  ``error`` marker row, matching the pipeline's row-level quarantine
+  convention.
 """
 
 from __future__ import annotations
@@ -42,6 +47,7 @@ import gzip
 import hashlib
 import io
 import zlib
+from functools import partial
 from typing import Iterator, NamedTuple
 
 import pandas as pd
@@ -51,9 +57,10 @@ from . import PAGES_ERROR_SCHEMA
 
 _PAGES_COLS = PAGES_ERROR_SCHEMA.fieldNames()
 
-# the ONE exception tuple every record-walk salvage handler uses:
-# zlib.error is NOT a ValueError/OSError — omitting it lets mid-member
-# deflate corruption escape the salvage and kill the whole Spark task
+# what ends a walk in :func:`salvage` (and marks an undecodable payload
+# in :func:`iter_responses`): zlib.error is NOT a ValueError/OSError —
+# omitting it lets mid-member deflate corruption escape the salvage and
+# kill the whole Spark task; UnicodeDecodeError is a ValueError
 SALVAGE_ERRORS = (ValueError, KeyError, OSError, EOFError, zlib.error)
 
 
@@ -220,54 +227,79 @@ def _open_archive(blob: bytes):
         else io.BufferedReader(raw)
 
 
+def salvage(rows: Iterator[dict], columns: list[str], marker: dict,
+            tag: str) -> list[dict]:
+    """The one structural-fault salvage rule: walk ``rows`` until one of
+    :data:`SALVAGE_ERRORS` ends it, then append ONE error row — null in
+    every column, overlaid with ``marker`` (the per-archive key) and an
+    ``error`` that carries the salvage count. So a corrupt archive tail
+    never fails the Spark task: the rows before it survive and the
+    quarantine names the archive. Every column is set explicitly: a
+    missing one would come back NaN, which Arrow will not cast to a
+    timestamp."""
+    out: list[dict] = []
+    try:
+        for row in rows:
+            out.append(row)
+    except SALVAGE_ERRORS as exc:
+        out.append({**dict.fromkeys(columns), **marker,
+                    "error": f"{tag}: {type(exc).__name__}: {exc} "
+                             f"(salvaged {len(out)} rows)"})
+    return out
+
+
 def pages_from_warc_bytes(blob: bytes, source: str = "",
                           content_types: tuple[str, ...] | None = None,
                           ) -> pd.DataFrame:
     """One WARC archive (plain or gzip) → pages rows, one per
     :func:`iter_responses` record (``content_types`` filters there,
     before the rows enter the Arrow exchange). Corruption stops the walk
-    and lands as ONE error row carrying the salvage count, so a bad
-    archive tail never fails the Spark task (the same row-level
-    quarantine contract as the extraction kernels). The error row's url
-    is ``warc:tail-error:<source>`` — a stable per-archive key, so the
+    (:func:`salvage`). The error row's url is
+    ``warc:tail-error:<source>`` — a stable per-archive key, so the
     lineage quarantine records WHICH archive to re-fetch and a re-run
     over a repaired archive still extracts its pages (their own urls are
     not in the done-set)."""
-    rows: list[dict] = []
-    try:
-        for r in iter_responses(_open_archive(blob), content_types):
-            rows.append(r.page_row())
-    except SALVAGE_ERRORS as exc:
-        rows.append({"url": f"warc:tail-error:{source}", "warc_ts": None,
-                     "html": None, "text": None, "lang": "",
-                     "error": f"warc: {type(exc).__name__}: {exc} "
-                              f"(salvaged {len(rows)} rows)"})
-    return pd.DataFrame(rows, columns=_PAGES_COLS)
+    rows = (r.page_row()
+            for r in iter_responses(_open_archive(blob), content_types))
+    return pd.DataFrame(
+        salvage(rows, _PAGES_COLS,
+                {"url": f"warc:tail-error:{source}", "lang": ""}, "warc"),
+        columns=_PAGES_COLS)
 
 
-def _pages_kernel(content_types: tuple[str, ...] | None):
+def per_archive(files: DataFrame, parse, schema) -> DataFrame:
+    """The one-archive-per-task loop every archive reader shares: each
+    ``(path, content)`` row of a ``binaryFile`` frame
+    (:func:`archive_files` or :func:`archive_stream`) is one archive, and
+    ``parse(blob, path)`` turns it into one pandas frame of ``schema``."""
     def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             for src, blob in zip(pdf["path"], pdf["content"]):
-                yield pages_from_warc_bytes(bytes(blob), source=str(src),
-                                            content_types=content_types)
-    return _parse
+                yield parse(bytes(blob), str(src))
+    return files.select("path", "content").mapInPandas(_parse, schema)
+
+
+def archive_files(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    """The archives at ``path`` (a file, dir, glob or list), one
+    ``binaryFile`` row each: one archive is one task, the right grain for
+    ~1 GB crawl files (Common Crawl's own Spark examples use the same
+    file-per-task layout)."""
+    return spark.read.format("binaryFile").load(path)
 
 
 def read_warc(spark: SparkSession, path: str,
               content_types: tuple[str, ...] | None = None) -> DataFrame:
     """WARC files → pages DataFrame (standard corpus schema + ``error``).
 
-    ``binaryFile`` yields one row per file, so each archive is one task —
-    the right grain for ~1 GB crawl files (Common Crawl's own Spark
-    examples use the same file-per-task layout). The record walk streams
-    the gzip members; peak memory is the compressed file + one record.
+    One archive per task (:func:`per_archive`); the record walk streams
+    the gzip members, so peak memory is the compressed file + one record.
     ``content_types`` (e.g. ``("text/html",)``) drops non-matching HTTP
     payloads inside the record walk — in a real crawl archive that is
     most of the bytes, filtered before they ever cross into Arrow."""
-    files = spark.read.format("binaryFile").load(path)
-    return files.select("path", "content").mapInPandas(
-        _pages_kernel(content_types), PAGES_ERROR_SCHEMA)
+    return per_archive(archive_files(spark, path),
+                       partial(pages_from_warc_bytes,
+                               content_types=content_types),
+                       PAGES_ERROR_SCHEMA)
 
 
 _BINARYFILE_SCHEMA = ("path string, modificationTime timestamp, "
@@ -279,27 +311,26 @@ _FILES_PER_TRIGGER = 4
 
 
 def archive_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """``(path, content)`` stream of the ``*.warc*`` archives landing in
-    ``input_dir`` (the shape of a live Common Crawl segment drop), at
-    most ``_FILES_PER_TRIGGER`` archives a micro-batch. ``binaryFile`` is
-    a file-format source, so the standard file-stream machinery applies
-    — the checkpoint's file log records which archives each micro-batch
+    """Stream of the ``*.warc*`` archives landing in ``input_dir`` (the
+    shape of a live Common Crawl segment drop), at most
+    ``_FILES_PER_TRIGGER`` archives a micro-batch. ``binaryFile`` is a
+    file-format source, so the standard file-stream machinery applies —
+    the checkpoint's file log records which archives each micro-batch
     consumed, and a restarted query resumes after the last committed
     archive. One archive = one task, the batch readers' grain."""
     return (spark.readStream.format("binaryFile")
             .schema(_BINARYFILE_SCHEMA)
             .option("pathGlobFilter", "*.warc*")
             .option("maxFilesPerTrigger", str(_FILES_PER_TRIGGER))
-            .load(input_dir)
-            .select("path", "content"))
+            .load(input_dir))
 
 
 def read_warc_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """Streaming twin of :func:`read_warc`: tail a crawl landing directory
     (:func:`archive_stream`) as new ``.warc``/``.warc.gz`` archives
     arrive."""
-    return archive_stream(spark, input_dir).mapInPandas(
-        _pages_kernel(None), PAGES_ERROR_SCHEMA)
+    return per_archive(archive_stream(spark, input_dir),
+                       pages_from_warc_bytes, PAGES_ERROR_SCHEMA)
 
 
 # --- WET sink/source (crawl-native extracted-text archives) ----------------
@@ -379,39 +410,30 @@ def write_wet(docs: DataFrame, out_dir: str) -> DataFrame:
             .mapInPandas(_write, _WET_MANIFEST))
 
 
+_WET_COLS = ["url", "warc_ts", "text", "error"]
+
+
+def _wet_frame(blob: bytes, source: str) -> pd.DataFrame:
+    def rows() -> Iterator[dict]:
+        for headers, body in iter_warc_records(_open_archive(blob)):
+            if headers.get("warc-type") != "conversion":
+                continue
+            yield {"url": headers.get("warc-target-uri", ""),
+                   "warc_ts": _parse_warc_date(headers["warc-date"]),
+                   "text": body.decode("utf-8"), "error": None}
+    return pd.DataFrame(
+        salvage(rows(), _WET_COLS, {"url": f"wet:tail-error:{source}"},
+                "wet"),
+        columns=_WET_COLS)
+
+
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
     """WET shards → (url, warc_ts, text) DataFrame. Same file-per-task
     grain and corrupt-tail salvage contract as :func:`read_warc`, reading
     ``conversion`` records instead of HTTP responses."""
-    files = spark.read.format("binaryFile").load(path)
-    out_schema = "url string, warc_ts timestamp, text string, error string"
-
-    def _one(blob: bytes, source: str) -> pd.DataFrame:
-        rows: list[dict] = []
-        try:
-            for headers, body in iter_warc_records(_open_archive(blob)):
-                if headers.get("warc-type") != "conversion":
-                    continue
-                rows.append({
-                    "url": headers.get("warc-target-uri", ""),
-                    "warc_ts": _parse_warc_date(headers["warc-date"]),
-                    "text": body.decode("utf-8"),
-                    "error": None,
-                })
-        except SALVAGE_ERRORS + (UnicodeDecodeError,) as exc:
-            rows.append({"url": f"wet:tail-error:{source}",
-                         "warc_ts": None, "text": None,
-                         "error": f"wet: {type(exc).__name__}: {exc} "
-                                  f"(salvaged {len(rows)} rows)"})
-        return pd.DataFrame(rows, columns=["url", "warc_ts", "text",
-                                           "error"])
-
-    def _parse(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for src, blob in zip(pdf["path"], pdf["content"]):
-                yield _one(bytes(blob), str(src))
-
-    return files.select("path", "content").mapInPandas(_parse, out_schema)
+    return per_archive(archive_files(spark, path), _wet_frame,
+                       "url string, warc_ts timestamp, text string, "
+                       "error string")
 
 
 # --- fixture writer (inverse of the parser) --------------------------------

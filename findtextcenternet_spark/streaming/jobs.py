@@ -77,8 +77,8 @@ def stream_extract(pages: DataFrame, out_dir: str, checkpoint_dir: str,
     committed batch.
 
     Error rows of the archive readers (null html) come out as quarantine
-    rows under their own url, so a corrupt archive tail never stalls the
-    stream. With ``quality_gate`` the per-doc gate (word floor +
+    rows under their own url with the reader's own ``error`` text, so a
+    corrupt archive tail never stalls the stream. With ``quality_gate`` the per-doc gate (word floor +
     repetition ceiling, row-local, so micro-batch-safe) marks rejects as
     ``quality:<reason>`` error rows instead of dropping them."""
     from ..crawl import apply_quality_gate

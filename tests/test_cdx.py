@@ -527,6 +527,18 @@ def test_unsupported_content_encoding_is_record_level(spark, tmp_path,
         assert "Content-Encoding 'br'" in bad.iloc[0]["error"]
         assert bad.iloc[0]["html"] is None
 
+    # the extraction's quarantine row keeps the reader's error text
+    from findtextcenternet_spark.pipeline import extract_documents
+    from findtextcenternet_spark.sources import read_pages
+
+    write_cdxj(build_cdx(spark, str(tmp_path / "br.warc")),
+               str(tmp_path / "cdx")).collect()
+    docs = extract_documents(
+        read_pages(spark, str(tmp_path / "cdx"), "cdx")).toPandas()
+    quar = docs[docs["error"].notna()]
+    assert list(quar["url"]) == ["http://br.example.org/x"]
+    assert "Content-Encoding 'br'" in quar.iloc[0]["error"]
+
 
 def test_read_cdxj_truncated_shard_salvages(spark, tmp_path, corpus):
     """Review r6: a truncated .cdx.gz shard yields an error row, not a

@@ -158,6 +158,9 @@ def test_cli_warc_ingest_resume_and_quarantine(spark, tmp_path, corpus):
     assert len(quar) == 1
     assert quar.iloc[0]["url"].startswith("warc:tail-error:")
     assert quar.iloc[0]["url"].endswith("bad.warc")
+    # the reader's own error text, not the null-page fallback
+    assert quar.iloc[0]["error"].startswith("warc: ")
+    assert "salvaged 10 rows" in quar.iloc[0]["error"]
 
     rc = main([str(d), str(out), "--format", "warc", "--run-id", "r2"])
     assert rc == 0
@@ -360,13 +363,16 @@ def test_stream_extract_warc_quality_gate(spark, tmp_path, corpus):
 
 _PKG = pathlib.Path(findtextcenternet_spark.__file__).parent
 _RECORD_RULE = re.compile(
-    r"""["']warc-type["']|split_http_response\(|decode_http_payload\(""")
+    r"""["']warc-type["']|split_http_response\(|decode_http_payload\("""
+    r"""|except SALVAGE_ERRORS|format\(["']binaryFile["']\)""")
 
 
 def test_only_warc_reads_records():
-    """No module but ``sources/warc.py`` reads a record's ``warc-type``
-    or splits/decodes an HTTP response: every archive walk goes through
-    ``iter_responses``, the one record rule."""
+    """No module but ``sources/warc.py`` reads a record's ``warc-type``,
+    splits/decodes an HTTP response, catches ``SALVAGE_ERRORS`` or reads
+    ``binaryFile``: every archive walk goes through ``iter_responses``,
+    the one record rule, every archive read through ``per_archive`` and
+    every structural fault through ``salvage``."""
     hits = [f"{path.relative_to(_PKG)}:{n}"
             for path in sorted(_PKG.rglob("*.py"))
             if path.relative_to(_PKG).as_posix() != "sources/warc.py"
